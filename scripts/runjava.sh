@@ -1,6 +1,6 @@
 #!/bin/bash
 # Run a graft main class directly on the compiled classes (fast iteration,
-# no sbt lock). Usage: scripts/runjava.sh graft.BenchOne q46 [args...]
+# no sbt lock). Usage: SPARK_GRAFT_BENCH_ONLY=q46_column_profile scripts/runjava.sh graft.Bench
 MAIN=$1; shift
 exec java \
   --add-opens=java.base/java.lang=ALL-UNNAMED \

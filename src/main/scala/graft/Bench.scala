@@ -118,19 +118,7 @@ object Bench {
     // unconditionally before foreach ever runs.
     reexecPinned(args).foreach(rc => sys.exit(rc))
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // independent override so a partition-count sweep (P ∈ {8, 64} vs the
-    // standard P = cores) can prove no residual P assumptions without also
-    // changing executor parallelism
-    val shuffleP = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffleP)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.bench()
 
     // Excluded from the HEADLINE set (all stay correctness-gated at sf0.01
     // via Verify):

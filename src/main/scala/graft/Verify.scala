@@ -1,25 +1,29 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (`scripts/check_oracle.py`).
+  *
+  * `Verify <sfDir> <outDir> [name ...]`: with trailing query names, only
+  * those queries are dumped and oracle_sql.json lists only them, so
+  * `scripts/check_oracle.py` runs the compare on just the queries under
+  * development. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    val Array(sfDir, outDir) = args.take(2)
+    val wanted = args.drop(2).toSet
+    def selected(name: String): Boolean = wanted.isEmpty || wanted(name)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Plain int64 micros in result parquet (not INT96) so the driver's
-      // DuckDB read of timestamp columns is loss-free and type-stable.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Plain int64 micros in result parquet (not INT96) so DuckDB's read
+    // of timestamp columns is loss-free and type-stable.
+    val spark = Session.local(cpus, cpus,
+      "spark.sql.parquet.outputTimestampType" -> "TIMESTAMP_MICROS")
     new java.io.File(outDir).mkdirs()
     val failed = scala.collection.mutable.ArrayBuffer.empty[String]
-    SparkEntry.queries.foreach { case (name, fn) =>
+    wanted.diff(SparkEntry.queries.keySet).foreach { w =>
+      failed += w
+      System.err.println(s"[verify] $w: no such query")
+    }
+    SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
@@ -45,7 +49,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -151,34 +151,6 @@ object Components {
     out
   }
 
-  /** EVIDENCE-ONLY (PLANS.md, VERDICT r11 #6): ONE connected-components
-    * round over the minhash-verified edge list as an un-executed DAG —
-    * the repeated unit of q66/q103/q122's cluster collapse. Per-round
-    * plans are O(1)-deep by [[connectedComponents]]'s checkpoint
-    * discipline (each round reads the previous round's pin), so the
-    * round IS the honest plan evidence; the loop only replays it. Shown
-    * UN-PINNED — at runtime `sym` and the label table are checkpoint
-    * pins, so the verified-pair pipeline underneath runs once, not per
-    * round. */
-  private[graft] def q66RoundDag(spark: SparkSession, dir: String)
-      : DataFrame = {
-    val pairs = Dedup.minhashVerifiedPairs(spark, dir, 0.5, 0.7)
-      .select(col("d1").as("src"), col("d2").as("dst"))
-    val sym = pairs
-      .union(pairs.select(col("dst").as("src"), col("src").as("dst")))
-    val labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("comp", col("id"))
-    val fromNbrs = sym
-      .join(labels.select(col("id").as("src"), col("comp")), Seq("src"))
-      .groupBy(col("dst").as("id"))
-      .agg(min(col("comp")).as("nbr_comp"))
-    labels
-      .join(fromNbrs, Seq("id"), "left_outer")
-      .select(col("id"),
-        least(col("comp"), coalesce(col("nbr_comp"), col("comp")))
-          .as("comp"))
-  }
-
   /** q122 — near-dup cluster-SIZE histogram: how much of the corpus is
     * duplicated, and in what shapes — the one-page duplication profile a
     * dedup rollout decision actually reads (a corpus of pairwise twins
@@ -202,8 +174,8 @@ object Components {
     finally pins.foreach(free)
   }
 
-  /** q122's pre-checkpoint evidence DAG + pins (the eager component
-    * labels; PLANS.md / plan hygiene). Caller frees the pins. */
+  /** q122's plan before the result checkpoint, plus the eager component
+    * labels it reads. Caller frees the pins. */
   private[graft] def q122Dag(spark: SparkSession, dir: String)
       : (DataFrame, Seq[DataFrame]) = {
     val pairs = Dedup.minhashVerifiedPairs(spark, dir, 0.5, 0.7)
@@ -248,8 +220,8 @@ object Components {
     finally pins.foreach(free)
   }
 
-  /** q125's pre-checkpoint evidence DAG + pins (the eager component
-    * labels; PLANS.md / plan hygiene). Caller frees the pins. */
+  /** q125's plan before the result checkpoint, plus the eager component
+    * labels it reads. Caller frees the pins. */
   private[graft] def q125Dag(spark: SparkSession, dir: String)
       : (DataFrame, Seq[DataFrame]) = {
     val pairs = Dedup.minhashVerifiedPairs(spark, dir, 0.5, 0.7)

@@ -304,7 +304,7 @@ object Multimodal {
 
   /** The q112 verify plan BEFORE the result checkpoint, plus the pinned
     * feature table it reads (the caller frees the pin once the plan is
-    * materialized — q112 does; PlanDump explains the plan and frees). */
+    * materialized — q112 does). */
   private[graft] def q112Plan(spark: SparkSession, dir: String,
                               side: Int = 16, nDocs: Int = 100,
                               plantEvery: Int = 20, maxHamming: Int = 3,
@@ -712,19 +712,6 @@ object Multimodal {
     } finally {
       org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(feat)
     }
-  }
-
-  /** q168's evidence DAG pre-checkpoint (PlanDump): the banding +
-    * exact-SAD verify tail over the PINNED codec feature table (the one
-    * legitimate mapPartitions pass, run once — the q112 discipline);
-    * the pin returned for the caller to free. */
-  private[graft] def q168Dag(spark: SparkSession, dir: String,
-      frame: Int = 16, nDocs: Int = 100, plantEvery: Int = 20,
-      sr: Int = 8000, maxHamming: Int = 1, maxSad: Long = 1000L)
-      : (DataFrame, Seq[DataFrame]) = {
-    val feat = wavFeatures(spark,
-      audioCorpus(spark, dir, nDocs, plantEvery, sr), frame)
-    (verifiedAudioPairs(feat, frame, maxHamming, maxSad), Seq(feat))
   }
 
   /** (media_id, wav) → PINNED (media_id, n, samples, energy-delta fp)

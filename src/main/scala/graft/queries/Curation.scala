@@ -303,9 +303,9 @@ object Curation {
     finally pins.foreach(graft.dedup.Components.free)
   }
 
-  /** q80's pre-checkpoint evidence DAG + pins (the eager component
-    * labels — eager by Components' contract; PLANS.md / plan hygiene).
-    * Caller frees the pins. */
+  /** q80's plan before the result checkpoint, plus the eager component
+    * labels it reads (eager by Components' contract). Caller frees the
+    * pins. */
   private[graft] def q80Dag(spark: SparkSession, dir: String,
       minShared: Int = 8, maxDocFreq: Int = 20)
       : (DataFrame, Seq[DataFrame]) = {
@@ -410,8 +410,7 @@ object Curation {
     * offsets via a broadcast join. Every task touches ~n/P rows at any
     * corpus size; the single-task q57-style `Window.orderBy` this replaces
     * would funnel the whole corpus through one reducer. Returns a direct
-    * localCheckpoint ([[pack]]'s storage contract; plan evidence via
-    * [[q87Plan]]). */
+    * localCheckpoint ([[pack]]'s storage contract). */
   def q87(spark: SparkSession, dir: String, seqLen: Int = 128): DataFrame =
     pack(spark,
       Tables(spark, dir, "documents")
@@ -449,22 +448,7 @@ object Curation {
     * no error). Materializing the pass once makes the pid correlation
     * structural, the same pinned-model move as q104's bigram table. */
   private[queries] def packPlan(spark: SparkSession, counts: DataFrame,
-                                seqLen: Int): (DataFrame, DataFrame) =
-    packBody(spark, counts, seqLen, pinLocal = true)
-
-  /** EVIDENCE-ONLY form: the identical pack composition as one un-pinned
-    * DAG (no storage, upstream tiers visible in the plan). The plan-shape
-    * sweep and PLANS.md read this so the full range-exchange →
-    * MapPartitions → offset-join machinery (and everything feeding it)
-    * stays inspectable; the SHIPPED engine is [[pack]], which adds the
-    * materialization pin between the local pass and its two consumers. */
-  private[graft] def packDag(spark: SparkSession, counts: DataFrame,
-                             seqLen: Int): DataFrame =
-    packBody(spark, counts, seqLen, pinLocal = false)._1
-
-  private def packBody(spark: SparkSession, counts: DataFrame,
-                       seqLen: Int, pinLocal: Boolean)
-      : (DataFrame, DataFrame) = {
+                                seqLen: Int): (DataFrame, DataFrame) = {
     import spark.implicits._
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val tc = counts
@@ -474,12 +458,11 @@ object Curation {
       .as[(Long, Long)]
     // local pass: per-partition prefix sums, order preserved from the range
     // partitioning; no shuffle — pinned for structural pid consistency
-    val rawLocal = tc.mapPartitions { it =>
+    val local = tc.mapPartitions { it =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
       var acc = 0L
       it.map { case (id, n) => val before = acc; acc += n; (pid, id, n, before) }
-    }.toDF("pid", "doc_id", "n_tok", "local_before")
-    val local = if (pinLocal) rawLocal.localCheckpoint() else rawLocal
+    }.toDF("pid", "doc_id", "n_tok", "local_before").localCheckpoint()
 
     val totals = local.groupBy(col("pid"))
       .agg(sum(col("n_tok")).as("ptok"))
@@ -599,7 +582,7 @@ object Curation {
     * lands in. Every stage is the scale shape it reuses; everything is
     * md5/integer-exact, so the whole composition carries a DuckDB
     * oracle. Returns a direct localCheckpoint ([[pack]]'s storage
-    * contract; plan evidence via [[q100Plan]]). */
+    * contract). */
   def q100(spark: SparkSession, dir: String, seqLen: Int = 128,
            benchMod: Int = 50): DataFrame =
     pack(spark, curatedCounts(spark, dir, benchMod), seqLen)
@@ -678,10 +661,7 @@ object Curation {
 
   /** The q103 manifest plan BEFORE the result checkpoint, plus the pinned
     * state it reads — the label table and pack's range-partitioned pass
-    * (the caller frees both once the plan is materialized — q103 does;
-    * PlanDump explains the plan and frees). Exposed so plan evidence can
-    * show the real semi/anti/pack composition instead of the opaque
-    * checkpoint root q103 returns. */
+    * (the caller frees both once the plan is materialized — q103 does). */
   private[graft] def q103Plan(spark: SparkSession, dir: String,
                               seqLen: Int = 128, benchMod: Int = 50,
                               candidateEst: Double = 0.5,
@@ -691,19 +671,6 @@ object Curation {
       q103Kept(spark, dir, benchMod, candidateEst, exactThreshold)
     val (plan, pin) = packPlan(spark, kept, seqLen)
     (plan, Seq(labels, pin))
-  }
-
-  /** q103 as an un-pinned evidence DAG plus the label table it reads
-    * (labels are eager by nature — iterated propagation — and the caller
-    * frees them; the pack stage itself is the [[packDag]] form). */
-  private[graft] def q103Dag(spark: SparkSession, dir: String,
-                             seqLen: Int = 128, benchMod: Int = 50,
-                             candidateEst: Double = 0.5,
-                             exactThreshold: Double = 0.7)
-      : (DataFrame, DataFrame) = {
-    val (kept, labels) =
-      q103Kept(spark, dir, benchMod, candidateEst, exactThreshold)
-    (packDag(spark, kept, seqLen), labels)
   }
 
   /** q103's kept `(doc_id, n_tok)` frame (curated set minus near-dup
@@ -767,23 +734,6 @@ object Curation {
     (out, Seq(labels, feat, pin))
   }
 
-  /** q159 as an un-pinned evidence DAG plus the eager state it reads
-    * (the label + feature tables — iterated propagation and the codec
-    * pass are eager by nature; caller frees). Plan evidence for the
-    * checkpoint-returning q159. */
-  private[graft] def q159Dag(spark: SparkSession, dir: String,
-                             seqLen: Int = 128, benchMod: Int = 50,
-                             nImg: Int = 100, dupEvery: Int = 10)
-      : (DataFrame, Seq[DataFrame]) = {
-    val (drop, labels, feat) = graft.multimodal.Multimodal
-      .imageNearDupDrop(spark, dir, nImg, dupEvery)
-    val kept = curatedCounts(spark, dir, benchMod)
-      .join(drop, Seq("doc_id"), "left_anti")
-    val dag = packDag(spark, kept, seqLen)
-      .withColumn("has_image", col("doc_id") < nImg)
-    (dag, Seq(labels, feat))
-  }
-
   /** q172 — the TRI-MODAL training manifest: q159's text+image
     * composition with the AUDIO near-dup tier wired in the same way —
     * non-keeper members of audio near-dup clusters
@@ -824,29 +774,6 @@ object Curation {
     out
   }
 
-  /** q172 as an un-pinned evidence DAG (the q159Dag convention): the
-    * pack machinery visible, both media drop tiers' pinned state
-    * returned for the caller to free. */
-  private[graft] def q172Dag(spark: SparkSession, dir: String,
-                             seqLen: Int = 128, benchMod: Int = 50,
-                             nImg: Int = 100, dupEvery: Int = 10,
-                             audioLo: Long = graft.multimodal.Multimodal.AudioLo,
-                             audioHi: Long = graft.multimodal.Multimodal.AudioHi)
-      : (DataFrame, Seq[DataFrame]) = {
-    val (iDrop, iLabels, iFeat) = graft.multimodal.Multimodal
-      .imageNearDupDrop(spark, dir, nImg, dupEvery)
-    val (aDrop, aLabels, aFeat) = graft.multimodal.Multimodal
-      .audioNearDupDrop(spark, dir, audioLo, audioHi)
-    val kept = curatedCounts(spark, dir, benchMod)
-      .join(iDrop, Seq("doc_id"), "left_anti")
-      .join(aDrop, Seq("doc_id"), "left_anti")
-    val dag = packDag(spark, kept, seqLen)
-      .withColumn("has_image", col("doc_id") < nImg)
-      .withColumn("has_audio",
-        col("doc_id") >= audioLo && col("doc_id") < audioHi)
-    (dag, Seq(iLabels, iFeat, aLabels, aFeat))
-  }
-
   /** q175 — LEAK-PROOF SPLIT ASSIGNMENT: train/val/test splits where a
     * near-duplicate CLUSTER can never straddle splits — the constructive
     * closer of q141's leakage DETECTOR (a doc-level hash split puts two
@@ -876,8 +803,8 @@ object Curation {
     finally pins.foreach(graft.dedup.Components.free)
   }
 
-  /** q175's pre-checkpoint evidence DAG + pins (the eager component
-    * labels; PLANS.md / plan hygiene). Caller frees the pins. */
+  /** q175's plan before the result checkpoint, plus the eager component
+    * labels it reads. Caller frees the pins. */
   private[graft] def q175Dag(spark: SparkSession, dir: String)
       : (DataFrame, Seq[DataFrame]) = {
     val docs = Tables(spark, dir, "documents")
@@ -911,24 +838,6 @@ object Curation {
       .otherwise(lit("test"))
   }
 
-  /** q87 as an un-pinned evidence DAG ([[packDag]]) — plan evidence for
-    * the checkpoint-returning q87. */
-  private[graft] def q87Dag(spark: SparkSession, dir: String,
-                            seqLen: Int = 128): DataFrame =
-    packDag(spark,
-      Tables(spark, dir, "documents")
-        .select(col("doc_id").cast(LongType),
-          size(TextAnalysis.toks(col("text"))).cast(LongType).as("n_tok")),
-      seqLen)
-
-  /** q100 as an un-pinned evidence DAG — the full tier composition
-    * (keeper semi join, quality gate, decontamination anti join, pack)
-    * in one inspectable plan. */
-  private[graft] def q100Dag(spark: SparkSession, dir: String,
-                             seqLen: Int = 128, benchMod: Int = 50)
-      : DataFrame =
-    packDag(spark, curatedCounts(spark, dir, benchMod), seqLen)
-
   /** q115 — SHUFFLED sequence packing: q87's concat-then-chunk
     * accounting in deterministic-shuffle order instead of doc_id order.
     * No training run packs its corpus in ingest order — adjacent source
@@ -960,17 +869,7 @@ object Curation {
   /** The q115 packing plan BEFORE the result checkpoint, plus the pinned
     * range-partitioned pass it correlates on ([[packPlan]] rationale). */
   private[graft] def q115Plan(spark: SparkSession, dir: String,
-                              seqLen: Int = 128): (DataFrame, DataFrame) =
-    q115Body(spark, dir, seqLen, pinLocal = true)
-
-  /** q115 as an un-pinned evidence DAG ([[packDag]] rationale). */
-  private[graft] def q115Dag(spark: SparkSession, dir: String,
-                             seqLen: Int = 128): DataFrame =
-    q115Body(spark, dir, seqLen, pinLocal = false)._1
-
-  private def q115Body(spark: SparkSession, dir: String,
-                       seqLen: Int, pinLocal: Boolean)
-      : (DataFrame, DataFrame) = {
+                              seqLen: Int = 128): (DataFrame, DataFrame) = {
     import spark.implicits._
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val keyed = Tables(spark, dir, "documents")
@@ -982,14 +881,14 @@ object Curation {
       .repartitionByRange(p, col("shuffle_key"))
       .sortWithinPartitions(col("shuffle_key"))
       .as[(String, Long, Long)]
-    val rawLocal = keyed.mapPartitions { it =>
+    val local = keyed.mapPartitions { it =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
       var acc = 0L
       it.map { case (k, id, n) =>
         val before = acc; acc += n; (pid, k, id, n, before)
       }
     }.toDF("pid", "shuffle_key", "doc_id", "n_tok", "local_before")
-    val local = if (pinLocal) rawLocal.localCheckpoint() else rawLocal
+      .localCheckpoint()
     val offsets = local.groupBy(col("pid"))
       .agg(sum(col("n_tok")).as("ptok"))
       .select(col("pid"),
@@ -1040,17 +939,6 @@ object Curation {
     org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(pin)
     out
   }
-
-  /** q116 as an un-pinned evidence DAG ([[packDag]] rationale). */
-  private[graft] def q116Dag(spark: SparkSession, dir: String,
-                             seqLen: Int = 128): DataFrame =
-    seqManifest(
-      packDag(spark,
-        Tables(spark, dir, "documents")
-          .select(col("doc_id").cast(LongType),
-            size(TextAnalysis.toks(col("text"))).cast(LongType).as("n_tok")),
-        seqLen),
-      seqLen)
 
   /** The doc-span → per-sequence slice inversion over any [[pack]]
     * output: pure per-row arithmetic + a bounded `sequence` explode
@@ -1106,16 +994,6 @@ object Curation {
     * the pin once the plan is materialized — q107 does). */
   private[graft] def q107Plan(spark: SparkSession, dir: String,
                               budgetTokens: Long = 10000L)
-      : (DataFrame, DataFrame) =
-    q107Body(spark, dir, budgetTokens, pinLocal = true)
-
-  /** q107 as an un-pinned evidence DAG ([[packDag]] rationale). */
-  private[graft] def q107Dag(spark: SparkSession, dir: String,
-                             budgetTokens: Long = 10000L): DataFrame =
-    q107Body(spark, dir, budgetTokens, pinLocal = false)._1
-
-  private def q107Body(spark: SparkSession, dir: String,
-                       budgetTokens: Long, pinLocal: Boolean)
       : (DataFrame, DataFrame) = {
     import spark.implicits._
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
@@ -1125,14 +1003,14 @@ object Curation {
       .repartitionByRange(p, col("nll"), col("doc_id"))
       .sortWithinPartitions(col("nll"), col("doc_id"))
       .as[(Long, Double, Long)]
-    val rawLocal = scored.mapPartitions { it =>
+    val local = scored.mapPartitions { it =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
       var acc = 0L
       it.map { case (id, nll, n) =>
         val before = acc; acc += n; (pid, id, nll, n, before)
       }
     }.toDF("pid", "doc_id", "nll", "n_tok", "local_before")
-    val local = if (pinLocal) rawLocal.localCheckpoint() else rawLocal
+      .localCheckpoint()
     val offsets = local.groupBy(col("pid"))
       .agg(sum(col("n_tok")).as("ptok"))
       .select(col("pid"),
@@ -1179,14 +1057,6 @@ object Curation {
   def q110(spark: SparkSession, dir: String, seqLen: Int = 128,
            benchMod: Int = 50, mod: Int = 10, lt: Int = 7): DataFrame =
     pack(spark, q110Counts(spark, dir, benchMod, mod, lt), seqLen)
-
-  /** q110 as an un-pinned evidence DAG — the full batch-curation
-    * composition (bloom pre-probe, semi/anti joins, pack) in one
-    * inspectable plan (ManifestSpec asserts the bloom probe on it). */
-  private[graft] def q110Dag(spark: SparkSession, dir: String,
-                             seqLen: Int = 128, benchMod: Int = 50,
-                             mod: Int = 10, lt: Int = 7): DataFrame =
-    packDag(spark, q110Counts(spark, dir, benchMod, mod, lt), seqLen)
 
   /** q110's curated batch as a `(doc_id, n_tok)` frame (steps 1–4 of the
     * q110 scaladoc; step 5 is the shared pack engine). */
@@ -1281,8 +1151,7 @@ object Curation {
     out
   }
 
-  /** The q123 efficiency aggregate over any packed frame — shared by the
-    * runtime (over the checkpointed q87) and the evidence DAG. */
+  /** The q123 efficiency aggregate over a packed frame. */
   private def q123Summary(packed: DataFrame, seqLen: Int): DataFrame =
     packed.agg(
         count(lit(1)).as("n_docs"),
@@ -1297,14 +1166,6 @@ object Curation {
           .as("split_rate"),
         round((col("total_tokens") - (col("n_seqs") - 1L) * seqLen)
           .cast(DoubleType) / seqLen, 6).as("tail_fill"))
-
-  /** q123's packing-efficiency aggregate as a fully UN-PINNED evidence
-    * DAG over [[packDag]] (PLANS.md / plan hygiene) — the runtime q123
-    * consumes the checkpointed q87 by the storage contract; the plan is
-    * this one either way. */
-  private[graft] def q123Dag(spark: SparkSession, dir: String,
-      seqLen: Int = 128): DataFrame =
-    q123Summary(q87Dag(spark, dir, seqLen), seqLen)
 
   /** q135 — temperature-weighted mixture SAMPLING: where q88 plans the
     * per-source epoch budget and q118 draws a fixed-k eval slice, this is

@@ -89,14 +89,6 @@ object Erasure {
     finally B.unpersistLocalCheckpoint(ledger)
   }
 
-  /** EVIDENCE-ONLY: q220 as one un-pinned DAG (PLANS.md) — the ledger
-    * lineage stays visible instead of a pinned-RDD scan. */
-  private[graft] def q220Dag(spark: SparkSession, dir: String): DataFrame = {
-    val fp = Dedup.wordSets(spark, dir)
-      .select(col("doc_id"), md5(array_join(col("words"), " ")).as("fp"))
-    q220From(fp.where(col("doc_id") % 10 < 7), fp, 10, 7, 10L)
-  }
-
   private def q220From(ledger: DataFrame, fp: DataFrame, mod: Int,
       lt: Int, modK: Long): DataFrame = {
     val erased = ledger.where(isErased(col("doc_id"), modK))
@@ -161,14 +153,6 @@ object Erasure {
     try q221From(spark, dir, sets, banded, corpusBands, mod, lt, modK,
         exactThreshold).localCheckpoint()
     finally B.unpersistLocalCheckpoint(corpusBands)
-  }
-
-  /** EVIDENCE-ONLY: q221 as one un-pinned DAG (PLANS.md). */
-  private[graft] def q221Dag(spark: SparkSession, dir: String): DataFrame = {
-    val sets = Dedup.shingleHashes(spark, dir)
-    val banded = Dedup.bandedSignatures(Dedup.minhashSignatures(sets))
-    q221From(spark, dir, sets, banded,
-      banded.where(col("doc_id") % 10 < 7), 10, 7, 10L, 0.7)
   }
 
   private def q221From(spark: SparkSession, dir: String, sets: DataFrame,
@@ -313,21 +297,6 @@ object Erasure {
     }
   }
 
-  /** EVIDENCE-ONLY: the erasure Δ as one un-pinned DAG over the
-    * process-pinned standing state (PLANS.md) — the request must enter
-    * as broadcast anti/semi joins and the standing state as pinned
-    * in-memory scans; the only recounts are gram-bounded. */
-  private[graft] def q223EraseDag(spark: SparkSession, dir: String,
-      maxDf: Int = 3, minShared: Int = 3, modK: Long = 7L): DataFrame = {
-    val (basePost, dfBase, basePairs) =
-      GraphRank.graphStanding(spark, dir, maxDf, minShared)
-    val erased = Tables(spark, dir, "documents")
-      .where(col("doc_id") % 10 < 7 && isErased(col("doc_id"), modK))
-      .select(col("doc_id"))
-    eraseStandingPairs(basePost, dfBase, basePairs, erased, maxDf,
-      minShared, pin = false)._3
-  }
-
   /** q223 — ERASE FROM THE STANDING GRAPH + LPA LABELS, then ingest.
     * q218's standing state (pinned posting index, gram df, pair list,
     * converged communities over the base corpus) serves an erasure
@@ -439,39 +408,26 @@ object Erasure {
     * frees. */
   def q248(spark: SparkSession, dir: String, cap: Int = 256,
            modK: Long = 10L): DataFrame = {
-    val (plan, pins) = q248Build(spark, dir, cap, modK, pin = true)
+    val (plan, pins) = q248Build(spark, dir, cap, modK)
     try plan.localCheckpoint()
     finally pins.foreach(B.unpersistLocalCheckpoint(_))
   }
 
-  /** EVIDENCE-ONLY: q248 as one un-pinned DAG (PLANS.md) — the standing
-    * basket/co-matrix lineage stays visible; at runtime they are pins
-    * (in-plan here, durable parquet in a deployment — q247). */
-  private[graft] def q248Dag(spark: SparkSession, dir: String): DataFrame =
-    q248Build(spark, dir, 256, 10L, pin = false)._1
-
   private def q248Build(spark: SparkSession, dir: String, cap: Int,
-      modK: Long, pin: Boolean): (DataFrame, Seq[DataFrame]) = {
+      modK: Long): (DataFrame, Seq[DataFrame]) = {
     // pins created so far — freed on ANY throw during the remaining
     // plan assembly, so a failed build can never leak checkpoints
     // (ADVICE r12; the pre-diff q225 freed its pins in-function)
     val created = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def cp(df: DataFrame, partCols: Seq[String], sortCols: Seq[String])
-        : DataFrame =
-      if (pin) {
-        val c = B.checkpointPartitioned(df, partCols, sortCols)
-        created += c; c
-      } else df
+        : DataFrame = {
+      val c = B.checkpointPartitioned(df, partCols, sortCols)
+      created += c; c
+    }
     try {
     // ---- standing state (q244's registry pins; q247 is the durable
-    //      face) — never freed here; the un-pinned evidence DAG derives
-    //      them in-plan so the lineage stays visible ----
-    val (base, coBase) =
-      if (pin) Recommend.cfStanding(spark, dir, cap)
-      else {
-        val b = Recommend.cappedBaseEdges(spark, dir, cap)
-        (b, Recommend.coMatrixOf(b))
-      }
+    //      face) — never freed here ----
+    val (base, coBase) = Recommend.cfStanding(spark, dir, cap)
     // ---- the erasure round (request-scale) ----
     val erased = base.select(col("c")).distinct()
       .where(isErased(col("c"), modK))
@@ -501,9 +457,7 @@ object Erasure {
         (col("co_base") - coalesce(col("dec"), lit(0L))).as("co_base"))
       .where(col("co_base") > 0)
     // ---- the next ingest over the ERASED state (q244's leg) ----
-    val (ingest, ingestPins) =
-      if (pin) Recommend.ingestDag(spark, dir, eBase, coE, cap)
-      else (Recommend.ingestDagUnpinned(spark, dir, eBase, coE, cap), Nil)
+    val (ingest, ingestPins) = Recommend.ingestDag(spark, dir, eBase, coE, cap)
     created ++= ingestPins
     val ledger = eTouched
       .join(ingest, Seq("p1", "p2"), "full_outer")
@@ -602,20 +556,6 @@ object Erasure {
     }.longValue()
   }
 
-  /** EVIDENCE-ONLY: q259's ingest as an un-pinned DAG over the erased
-    * spill's bare parquet scans (PLANS.md). */
-  private[graft] def q259Dag(spark: SparkSession, dir: String,
-      cap: Int = 256, modK: Long = 10L): DataFrame = {
-    q259(spark, dir, cap, modK) match { case df =>
-      org.apache.spark.sql.graftbridge.Bridge.freeIfDirectCheckpoint(df) }
-    val root = graft.core.DurableState.rootFor(dir)
-    val eKind = s"cf${cap}erased$modK"
-    val v = graft.core.DurableState.latestVersion(root, eKind).get
-    Recommend.ingestDagUnpinned(spark, dir,
-      graft.core.DurableState.load(spark, root, eKind, v, "basket"),
-      graft.core.DurableState.load(spark, root, eKind, v, "co"), cap)
-  }
-
   /** q225 — ERASURE CERTIFICATE across the standing-state tier: the one
     * long-form receipt a data-protection officer signs after an erasure
     * request is served against EVERY standing-state kind — the q180/q200
@@ -638,26 +578,19 @@ object Erasure {
     * process registry already pins; nothing rescans a corpus. */
   def q225(spark: SparkSession, dir: String, m: Int = 8, k: Int = 16,
            iters: Int = 3, cells: Int = 10): DataFrame = {
-    val (plan, pins) = q225Build(spark, dir, m, k, iters, cells, pin = true)
+    val (plan, pins) = q225Build(spark, dir, m, k, iters, cells)
     try plan.localCheckpoint()
     finally pins.foreach(B.unpersistLocalCheckpoint(_))
   }
 
-  /** EVIDENCE-ONLY: the certificate as one un-pinned DAG (PLANS.md) —
-    * the request-side intermediates ([[eraseStandingPairs]]'s Δ, the CF
-    * basket) stay visible as lineage instead of pinned-RDD scans; the
-    * registry-owned standing state (graph, IVF-PQ) enters pinned exactly
-    * as at runtime. */
-  private[graft] def q225Dag(spark: SparkSession, dir: String): DataFrame =
-    q225Build(spark, dir, 8, 16, 3, 10, pin = false)._1
-
   private def q225Build(spark: SparkSession, dir: String, m: Int, k: Int,
-      iters: Int, cells: Int, pin: Boolean): (DataFrame, Seq[DataFrame]) = {
+      iters: Int, cells: Int): (DataFrame, Seq[DataFrame]) = {
     // the q248Build leak guard: free already-created pins on any throw
     // during the remaining assembly (ADVICE r12)
     val created = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def cp(df: DataFrame): DataFrame =
-      if (pin) { val c = df.localCheckpoint(); created += c; c } else df
+    def cp(df: DataFrame): DataFrame = {
+      val c = df.localCheckpoint(); created += c; c
+    }
     try {
     def row(state: String, metric: String, v: Column): Column =
       struct(lit(state).as("state"), lit(metric).as("metric"),
@@ -727,14 +660,10 @@ object Erasure {
     // deriving it IS part of the audit's declared work); the pins are
     // invocation-scoped and freed with the result
     val (ePost, eDf, ePairs) =
-      eraseStandingPairs(basePost, dfBase, basePairs, erased7, 3, 3,
-        pin = pin)
-    if (pin) created ++= Seq(ePost, eDf, ePairs)
-    // registry pin when shipped (the q244/q248 standing basket); the
-    // un-pinned evidence DAG derives it in-plan
-    val cfBase =
-      if (pin) Recommend.cfStanding(spark, dir, 256)._1
-      else Recommend.cappedBaseEdges(spark, dir, 256)
+      eraseStandingPairs(basePost, dfBase, basePairs, erased7, 3, 3)
+    created ++= Seq(ePost, eDf, ePairs)
+    // the registry pin (the q244/q248 standing basket)
+    val (cfBase, cfCoBase) = Recommend.cfStanding(spark, dir, 256)
     locally {
       val endpointErased =
         col("d1") % 7 === 0 || col("d2") % 7 === 0 // all ids here are base
@@ -780,8 +709,7 @@ object Erasure {
           col("a.c") === col("b.c") && col("a.p") < col("b.p"))
         .groupBy(col("a.p").as("p1"), col("b.p").as("p2"))
         .agg(count(lit(1)).as("dec"))
-      val cfCo = (if (pin) Recommend.cfStanding(spark, dir, 256)._2
-          else Recommend.coMatrixOf(cfBase))
+      val cfCo = cfCoBase
         .join(cfDec, Seq("p1", "p2"), "left_outer")
         .select(col("co_base").as("co"),
           coalesce(col("dec"), lit(0L)).as("dec"))
@@ -882,22 +810,6 @@ object Erasure {
     q220Serve(pre, post, fpAll, mod, lt).localCheckpoint()
   }
 
-  /** EVIDENCE-ONLY: q260's serve tail over the BARE reloaded spills
-    * (PLANS.md) — both store faces must enter as parquet scans of the
-    * committed versions, no lineage to any builder (the q247/q259
-    * convention; the shipped engine pins the loads once at boot). */
-  private[graft] def q260Dag(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.core.DurableState.rootFor(dir)
-    val (v0, eV) = ensureFpErased(spark, dir, 10, 7, 10L)
-    q220Serve(
-      graft.core.DurableState.load(spark, root, "fpstore", v0, "ledger"),
-      graft.core.DurableState.load(spark, root, "fpstore-erased10", eV,
-        "ledger"),
-      Dedup.wordSets(spark, dir)
-        .select(col("doc_id"), md5(array_join(col("words"), " ")).as("fp")),
-      10, 7)
-  }
-
   /** Spill the fp-store kind and commit its erased version, once per
     * process each (registry-guarded); returns (v0, erasedVersion). */
   private[graft] def ensureFpErased(spark: SparkSession, dir: String,
@@ -949,21 +861,6 @@ object Erasure {
     }
     q221Serve(spark, dir, sets, banded, preBands, erasedBands, mod, lt,
       exactThreshold).localCheckpoint()
-  }
-
-  /** EVIDENCE-ONLY: q261's serve tail over the BARE reloaded spills
-    * (PLANS.md) — both index faces enter as parquet scans of the
-    * committed versions. */
-  private[graft] def q261Dag(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.core.DurableState.rootFor(dir)
-    val (v0, eV) = ensureBandErased(spark, dir, 10, 7, 10L)
-    val sets = Dedup.shingleHashes(spark, dir)
-    q221Serve(spark, dir, sets,
-      Dedup.bandedSignatures(Dedup.minhashSignatures(sets)),
-      graft.core.DurableState.load(spark, root, "bandindex", v0, "bands"),
-      graft.core.DurableState.load(spark, root, "bandindex-erased10", eV,
-        "bands"),
-      10, 7, 0.7)
   }
 
   /** Spill the banded-index kind and commit its erased version, once
@@ -1138,21 +1035,6 @@ object Erasure {
         .localCheckpoint()
     } finally Seq(labels, fullEdges, batchPost)
       .foreach(B.unpersistLocalCheckpoint(_))
-  }
-
-  /** EVIDENCE-ONLY: q262's ingest Δ over the BARE reloaded ERASED spill
-    * (PLANS.md) — q249's shape with the erased kind's committed parquet
-    * as the standing state. */
-  private[graft] def q262Dag(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.core.DurableState.rootFor(dir)
-    val eV = ensureGraphErased(spark, dir, 5, 3, 3, 7L)._2
-    def ld(t: String): DataFrame = graft.core.DurableState.load(spark,
-      root, "graph3-3-5-erased7", eV, t)
-    val batchPost = Ranking.gramCountsOf(
-        Tables(spark, dir, "documents").where(col("doc_id") % 10 >= 7))
-      .select(col("doc_id"), col("gram"))
-    GraphRank.deltaFullPairs(ld("postings"), ld("df"), ld("pairs"),
-      batchPost, 3, 3)
   }
 
   /** q264 — the ERASE-COMMIT CERTIFICATE: q225's sign-off receipt moved

@@ -335,23 +335,6 @@ object GraphRank {
       (baseRanks, java.lang.Long.valueOf(nBase))
     } match { case (r, n) => (r, n.longValue()) }
 
-  /** EVIDENCE-ONLY: the q160/q218 per-ingest Δ-pair assembly as an
-    * un-executed DAG over the PROCESS-PINNED standing state — the plan
-    * PLANS.md carries for the ingest-leg claim (VERDICT r10 #2): the
-    * only parquet scan is the batch slice (doc_id % 10 ≥ 7 filtering
-    * the documents scan), and the standing posting index / df table /
-    * pair list enter as pinned in-memory scans, never re-derived. */
-  private[graft] def deltaIngestDag(spark: SparkSession, dir: String,
-      maxDf: Int = 50, minShared: Int = 3): DataFrame = {
-    val (basePost, dfBase, basePairs) =
-      graphStanding(spark, dir, maxDf, minShared)
-    val batchPost = Ranking.gramCountsOf(
-        Tables(spark, dir, "documents").where(col("doc_id") % 10 >= 7))
-      .select(col("doc_id"), col("gram"))
-    deltaFullPairs(basePost, dfBase, basePairs, batchPost, maxDf,
-      minShared)
-  }
-
   def q160(spark: SparkSession, dir: String, baseIters: Int = 5,
            incrIters: Int = 3, maxDf: Int = 50, minShared: Int = 3)
       : DataFrame = {
@@ -695,8 +678,8 @@ object GraphRank {
   }
 
   /** Spill the graph tier's standing state once per process and reload
-    * it as lineage-free parquet scans — the restart face q249 (and its
-    * PLANS dump) serves from. */
+    * it as lineage-free parquet scans — the restart face q249 serves
+    * from. */
   private[queries] def ensureGraphSpilled(spark: SparkSession, dir: String,
       baseRounds: Int, maxDf: Int, minShared: Int): Long =
     graft.core.StandingState.of(
@@ -730,26 +713,6 @@ object GraphRank {
           .localCheckpoint()
       (ld("postings"), ld("df"), ld("pairs"), ld("labels"))
     }
-  }
-
-  /** EVIDENCE-ONLY: q249's Δ-pair assembly over the RELOADED durable
-    * spill (PLANS.md) — q218's deltaIngestDag shape with the standing
-    * state entering as bare parquet scans instead of registry pins
-    * (the shipped engine pins the loads once at boot). */
-  private[graft] def q249Dag(spark: SparkSession, dir: String,
-      baseRounds: Int = 5, maxDf: Int = 50, minShared: Int = 3)
-      : DataFrame = {
-    val version =
-      ensureGraphSpilled(spark, dir, baseRounds, maxDf, minShared)
-    val root = graft.core.DurableState.rootFor(dir)
-    val kind = s"graph$maxDf-$minShared-$baseRounds"
-    def ld(t: String): DataFrame =
-      graft.core.DurableState.load(spark, root, kind, version, t)
-    val batchPost = Ranking.gramCountsOf(
-        Tables(spark, dir, "documents").where(col("doc_id") % 10 >= 7))
-      .select(col("doc_id"), col("gram"))
-    deltaFullPairs(ld("postings"), ld("df"), ld("pairs"), batchPost,
-      maxDf, minShared)
   }
 
   /** q226 — HITS hubs & authorities (Kleinberg 1999, "Authoritative
@@ -900,112 +863,5 @@ object GraphRank {
       // edges are registry-owned (fullGraphStanding) — not freed here
       b.unpersistLocalCheckpoint(dist)
     }
-  }
-
-  // -------------------------------------------------------------------
-  // EVIDENCE-ONLY round DAGs (PLANS.md, VERDICT r11 #6): the iterative
-  // queries return direct checkpoints, and their per-round plans are
-  // O(1)-deep BY DESIGN (each round reads the previous round's pin), so
-  // the honest plan evidence is the REPEATED UNIT — one round as an
-  // un-executed DAG over the pinned graph state. The loop only replays
-  // this plan `rounds` times; nothing deeper ever exists at runtime.
-  // Rank/label/distance inputs are seeded with literals (the round's
-  // SHAPE is rank-value-independent), and the standing edge list enters
-  // as the registry pin exactly as at runtime.
-  // -------------------------------------------------------------------
-
-  /** One [[iterateRanks]] round (q129 uniform / q153 seeded / q160 warm
-    * — same physical shape, different teleport content). */
-  private[graft] def rankRoundDag(spark: SparkSession, dir: String,
-      maxDf: Int = 50, minShared: Int = 3): DataFrame = {
-    val edges = fullGraphStanding(spark, dir, maxDf, minShared)
-    val vertices = Tables(spark, dir, "documents")
-      .select(col("doc_id"), lit(Scale / 100L).as("tel"))
-    val ranks = vertices.select(col("doc_id"), lit(Scale).as("r"))
-    val contrib = edges
-      .join(ranks.select(col("doc_id").as("src"), col("r")), Seq("src"))
-      .select(col("dst"), expr("(85 * (r DIV deg)) DIV 100").as("m"))
-      .groupBy(col("dst"))
-      .agg(sum(col("m")).as("m"))
-    vertices
-      .join(contrib, col("doc_id") === col("dst"), "left_outer")
-      .select(col("doc_id"),
-        (col("tel") + coalesce(col("m"), lit(0L))).as("r"))
-  }
-
-  /** One k-core peel round (q163): two survivor semi joins + the
-    * in-core degree aggregate + the threshold filter. */
-  private[graft] def q163PeelRoundDag(spark: SparkSession, dir: String,
-      k: Int = 2, maxDf: Int = 50, minShared: Int = 3): DataFrame = {
-    val edges = fullGraphStanding(spark, dir, maxDf, minShared)
-    val alive = edges.select(col("src").as("doc_id")).distinct()
-    edges
-      .join(alive.select(col("doc_id").as("src")), Seq("src"), "left_semi")
-      .join(alive.select(col("doc_id").as("dst")), Seq("dst"), "left_semi")
-      .groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      .where(col("deg") >= k)
-      .select(col("src").as("doc_id"))
-  }
-
-  /** One synchronous-LPA vote round (q202 from-scratch / q218 warm /
-    * q223 post-erasure — the same arg-max-encode plan). */
-  private[graft] def lpaRoundDag(spark: SparkSession, dir: String,
-      maxDf: Int = 50, minShared: Int = 3): DataFrame = {
-    val edges = fullGraphStanding(spark, dir, maxDf, minShared)
-    val labels = edges.select(col("src").as("doc_id")).distinct()
-      .select(col("doc_id"), col("doc_id").as("label"))
-    edges
-      .join(labels.select(col("doc_id").as("src"), col("label")),
-        Seq("src"))
-      .groupBy(col("dst"), col("label"))
-      .agg(count(lit(1)).as("cnt"))
-      .groupBy(col("dst"))
-      .agg(max(col("cnt") * lit(LpaBase) +
-        (lit(LpaBase - 1L) - col("label"))).as("enc"))
-      .select(col("dst").as("doc_id"),
-        (lit(LpaBase - 1L) - col("enc") % lit(LpaBase)).as("label"))
-  }
-
-  /** One HITS half-round (q226): edge-keyed mass join + aggregate +
-    * the broadcast-total integer renormalization. The L1 total is the
-    * VERTEX-scale identity Σ_k s_k = Σ_v prev_v·deg_v (r14), so the
-    * whole half-round is ONE job — the expensive edge-sum subtree is
-    * consumed exactly once and the total rides as a broadcast subquery
-    * over the previous side's (vertex-sized) scores. */
-  private[graft] def q226HalfRoundDag(spark: SparkSession, dir: String)
-      : DataFrame = {
-    val edges = Tables(spark, dir, "orders")
-      .join(Tables(spark, dir, "lineitem"),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
-      .distinct()
-    val hub = edges.select(col("c")).distinct()
-      .select(col("c"), lit(Scale / 100L).as("v"))
-    val outDeg = edges.groupBy(col("c")).agg(count(lit(1)).as("deg"))
-    val tot = hub.join(outDeg, Seq("c"))
-      .agg(sum(col("v") * col("deg")).as("t"))
-    edges.join(hub, Seq("c"))
-      .groupBy(col("p")).agg(sum(col("v")).as("s"))
-      .crossJoin(broadcast(tot))
-      .select(col("p"), expr(s"s DIV greatest(1L, t DIV $Scale)").as("v"))
-  }
-
-  /** One min-plus BFS round (q227): neighbor-min aggregate + the
-    * sentinel-total least() fold — the whole recurrence's plan. */
-  private[graft] def q227RoundDag(spark: SparkSession, dir: String,
-      seedSource: String = "src0", maxDf: Int = 50, minShared: Int = 3)
-      : DataFrame = {
-    val Unreached = 999
-    val edges = fullGraphStanding(spark, dir, maxDf, minShared)
-    val dist = Tables(spark, dir, "documents")
-      .select(col("doc_id"),
-        when(col("source") === seedSource, 0).otherwise(Unreached).as("d"))
-    val cand = edges
-      .join(dist.select(col("doc_id").as("src"), col("d")), Seq("src"))
-      .groupBy(col("dst")).agg((min(col("d")) + 1).as("cd"))
-    dist
-      .join(cand, col("doc_id") === col("dst"), "left_outer")
-      .select(col("doc_id"),
-        least(col("d"), coalesce(col("cd"), lit(Unreached + 1))).as("d"))
   }
 }

@@ -354,20 +354,11 @@ object Layout {
     * Storage contract: direct localCheckpoint; the local-rank pin is
     * freed before returning. */
   def q173(spark: SparkSession, dir: String, shards: Int = 16): DataFrame =
-    q173Body(spark, dir, shards, pin = true)
+    q173Body(spark, dir, shards)
 
-  /** EVIDENCE-ONLY un-pinned form of the identical composition (the
-    * packDag convention): the range exchange → local-rank MapPartitions
-    * → P-row offset join stays inspectable for the plan sweep and
-    * PLANS.md; the SHIPPED engine is [[q173]], which pins the local
-    * pass for structural pid consistency. */
-  private[graft] def q173Dag(spark: SparkSession, dir: String,
-                             shards: Int = 16): DataFrame =
-    q173Body(spark, dir, shards, pin = false)
-
-  private def q173Body(spark: SparkSession, dir: String, shards: Int,
-                       pin: Boolean): DataFrame = {
-    val (snake, pinDf) = snakeAssign(spark, dir, shards, pin)
+  private def q173Body(spark: SparkSession, dir: String, shards: Int)
+      : DataFrame = {
+    val (snake, pinDf) = snakeAssign(spark, dir, shards, pin = true)
     try {
       val summary = snake.groupBy(col("shard"))
         .agg(count(lit(1)).as("n_docs"),
@@ -375,7 +366,7 @@ object Layout {
           max(col("n_tok")).as("max_tok"),
           min(col("n_tok")).as("min_tok"))
         .orderBy(col("shard"))
-      if (pin) summary.localCheckpoint() else summary
+      summary.localCheckpoint()
     } finally {
       pinDf.foreach(
         org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint)
@@ -452,8 +443,7 @@ object Layout {
       org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint)
   }
 
-  /** The per-shard receipt aggregate over any snake-assigned frame —
-    * shared by the runtime and the evidence DAG. */
+  /** The per-shard receipt aggregate over a snake-assigned frame. */
   private def q187Receipt(snake: DataFrame): DataFrame =
     snake
       .select(col("shard"), col("n_tok"),
@@ -466,12 +456,6 @@ object Layout {
           lit(new java.math.BigDecimal("4611686018427387903")))
           .cast(LongType).as("content_sum"))
       .orderBy(col("shard"))
-
-  /** q187's receipt as a fully UN-PINNED evidence DAG over the un-pinned
-    * snake assignment (PLANS.md / plan hygiene). */
-  private[graft] def q187Dag(spark: SparkSession, dir: String,
-      shards: Int = 16): DataFrame =
-    q187Receipt(snakeAssign(spark, dir, shards, pin = false)._1)
 
   /** The per-doc 60-bit digest and STABLE hash-shard assignment shared
     * by q188's standing, batch, and full paths: shard = first 8 md5 hex
@@ -669,15 +653,7 @@ object Layout {
     * straddles the boundary). Storage contract: direct localCheckpoint;
     * the local-pass pin is freed before returning. */
   def q193(spark: SparkSession, dir: String, capBytes: Long = 4096L): DataFrame =
-    q193Body(spark, dir, capBytes, pin = true)
-
-  /** EVIDENCE-ONLY un-pinned form of the identical composition (the
-    * packDag convention) for PLANS.md and plan specs; the SHIPPED
-    * engine is [[q193]], which pins the local pass for structural pid
-    * consistency between the offsets branch and the join branch. */
-  private[graft] def q193Dag(spark: SparkSession, dir: String,
-      capBytes: Long = 4096L): DataFrame =
-    q193Body(spark, dir, capBytes, pin = false)
+    q193Body(spark, dir, capBytes)
 
   /** The q193/q196 prefix-bin kernel: files (doc_id, bytes) → per-file
     * (doc_id, bytes, strt) running start offsets in doc_id order,
@@ -733,8 +709,8 @@ object Layout {
         max(col("doc_id")).as("last_doc"),
         max(col("strt") + col("bytes")).as("max_end"))
 
-  private def q193Body(spark: SparkSession, dir: String, capBytes: Long,
-      pin: Boolean): DataFrame = {
+  private def q193Body(spark: SparkSession, dir: String, capBytes: Long)
+      : DataFrame = {
     import spark.implicits._
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val files = t(spark, dir, "documents")
@@ -743,14 +719,13 @@ object Layout {
       .repartitionByRange(p, col("doc_id").asc)
       .sortWithinPartitions(col("doc_id").asc)
       .as[(Long, Long)]
-    val rawLocal = files.mapPartitions { it =>
+    val local = files.mapPartitions { it =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
       var acc = 0L
       it.map { case (id, b) =>
         val before = acc; acc += b; (pid, id, b, before)
       }
-    }.toDF("pid", "doc_id", "bytes", "local_before")
-    val local = if (pin) rawLocal.localCheckpoint() else rawLocal
+    }.toDF("pid", "doc_id", "bytes", "local_before").localCheckpoint()
     // P-row partition totals; the window runs over P rows, not the data
     val offsets = local.groupBy(col("pid"))
         .agg(sum(col("bytes")).as("pb"))
@@ -779,11 +754,9 @@ object Layout {
           // a bin overshoots cap iff its last member crosses the boundary
           (col("max_end") > (col("bin") + 1L) * capBytes).as("over_cap"))
         .orderBy(col("bin"))
-    if (pin) {
-      try out.localCheckpoint()
-      finally org.apache.spark.sql.graftbridge.Bridge
-        .unpersistLocalCheckpoint(local)
-    } else out
+    try out.localCheckpoint()
+    finally org.apache.spark.sql.graftbridge.Bridge
+      .unpersistLocalCheckpoint(local)
   }
 
   /** q196 — INCREMENTAL COMPACTION: q193's planner at the daily-ingest
@@ -868,23 +841,6 @@ object Layout {
       binLedger(off, capBytes).orderBy(col("bin")).localCheckpoint()
     } finally pin.foreach(
       org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(_))
-  }
-
-  /** EVIDENCE-ONLY batch path of q196 (un-pinned, standing side absent
-    * by construction) for PLANS.md: the scan must show the batch
-    * predicate filtering documents before any work, with the standing
-    * total arriving only as a 1-row broadcast. */
-  private[graft] def q196BatchDag(spark: SparkSession, dir: String,
-      capBytes: Long = 4096L): DataFrame = {
-    val counts = t(spark, dir, "documents")
-      .select(col("doc_id").cast(LongType),
-        col("n_chars").cast(LongType).as("bytes"))
-    val standingTotal = counts.where(pmod(col("doc_id"), lit(10L)) < 7L)
-      .agg(coalesce(sum(col("bytes")), lit(0L)).as("base"))
-    val (bOff, _) = prefixOffsets(spark,
-      counts.where(pmod(col("doc_id"), lit(10L)) >= 7L),
-      standingTotal, pin = false)
-    binLedger(bOff, capBytes).orderBy(col("bin"))
   }
 
   /** q201 — RUNTIME-FILTERED fact join: the third join lever beside

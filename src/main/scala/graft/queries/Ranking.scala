@@ -157,7 +157,7 @@ object Ranking {
     * per-doc table riding back as a 1-row broadcast, and the score is pure
     * per-row arithmetic — no joins anywhere. Executed plan: one scan, one
     * (doc_id) shuffle reused by both consumers (AQE stage reuse), a 1-row
-    * broadcast, a top-k sink — PLANS.md pins it. */
+    * broadcast, a top-k sink — QueriesSpec pins it. */
   def q74(spark: SparkSession, dir: String,
           terms: Seq[String] = Seq("scan", "data", "merge")): DataFrame = {
     val (perDoc, stats) = queryAgg(spark, dir, terms)
@@ -320,9 +320,7 @@ object Ranking {
 
   /** The q104 scoring plan BEFORE the result checkpoint, plus the pinned
     * bigram model it reads (the caller frees the model once the plan is
-    * materialized — q104 does; PlanDump explains the plan and frees).
-    * Exposed so plan evidence can show the salted-join + algebraic-agg
-    * composition instead of the opaque checkpoint root q104 returns. */
+    * materialized — q104 does). */
   private[graft] def q104Plan(spark: SparkSession, dir: String,
                               vocabSize: Int = 1 << 16, nSalts: Int = 8)
       : (DataFrame, DataFrame) = {
@@ -484,10 +482,10 @@ object Ranking {
     * over undirected degrees), and clustering = 3·T / wedges. */
   def q152(spark: SparkSession, dir: String,
            tau: Double = 0.5, maxDf: Int = 50): DataFrame = {
-    // shipped form reads the registry-owned edge pin (not freed);
-    // q152Plan stays fresh-building for the spec/dump evidence path
-    q152PlanFrom(cosineEdgesStanding(spark, dir, tau, maxDf))
-      .localCheckpoint()
+    // reads the registry-owned edge pin (not freed)
+    val (oriented, deg) =
+      orientedFrom(cosineEdgesStanding(spark, dir, tau, maxDf))
+    q152PlanBody(oriented, deg).localCheckpoint()
   }
 
   /** The tf-idf cosine similarity edge list shared by the triangle
@@ -504,31 +502,11 @@ object Ranking {
         .localCheckpoint()
     }
 
-  /** The q152 counting plan before the result checkpoint, plus the
-    * PINNED edge list it reads (the q104Plan convention: the corpus-scale
-    * q119 subtree runs ONCE into the checkpoint; degrees, orientation,
-    * wedges, and the closing join are all edge-sized derivations — the
-    * un-pinned form re-ran the 4 s pair pipeline per branch, 6.9 s vs
-    * ~4 s at sf0.1). Caller frees the pin once the plan materializes. */
-  /** Shared q152/q154 substrate: the PINNED similarity edge list, the
-    * undirected degrees, and the (deg, id)-lexicographic low→high
+  /** Shared q152/q154 substrate over the pinned similarity edge list:
+    * the undirected degrees and the (deg, id)-lexicographic low→high
     * orientation that bounds wedge fan-out at O(√m) on any degree
     * distribution (Suri–Vassilvitskii). One definition so an orientation
-    * or pinning fix can never reach one triangle query and miss the
-    * other. Returned `e` is a direct localCheckpoint — caller frees it
-    * once the consuming plan materializes. */
-  private def orientedEdges(spark: SparkSession, dir: String,
-                            tau: Double, maxDf: Int)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val e = sparsePairs(spark, dir, maxDf)
-      .where(col("cosine") >= tau)
-      .select(col("d1"), col("d2"))
-      .localCheckpoint()
-    val (o, d) = orientedFrom(e)
-    (o, d, e)
-  }
-
-  /** Orientation + degrees over an already-pinned edge list. */
+    * fix can never reach one triangle query and miss the other. */
   private def orientedFrom(e: DataFrame): (DataFrame, DataFrame) = {
     val deg = e.select(col("d1").as("v")).unionByName(e.select(col("d2").as("v")))
       .groupBy(col("v")).agg(count(lit(1)).as("deg"))
@@ -543,19 +521,6 @@ object Ranking {
           .as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
     (oriented, deg)
-  }
-
-  private[graft] def q152Plan(spark: SparkSession, dir: String,
-                              tau: Double = 0.5, maxDf: Int = 50)
-      : (DataFrame, DataFrame) = {
-    val (oriented, deg, e) = orientedEdges(spark, dir, tau, maxDf)
-    (q152PlanBody(oriented, deg), e)
-  }
-
-  /** q152's counting plan over a given pinned edge list. */
-  private def q152PlanFrom(e: DataFrame): DataFrame = {
-    val (oriented, deg) = orientedFrom(e)
-    q152PlanBody(oriented, deg)
   }
 
   private def q152PlanBody(oriented: DataFrame, deg: DataFrame)
@@ -598,17 +563,10 @@ object Ranking {
     * be credited); integer counting until the one final division. */
   def q154(spark: SparkSession, dir: String,
            tau: Double = 0.5, maxDf: Int = 50): DataFrame = {
-    // registry-owned edge pin (the q152 note); q154Plan stays fresh
+    // registry-owned edge pin (the q152 note)
     val (oriented, deg) =
       orientedFrom(cosineEdgesStanding(spark, dir, tau, maxDf))
     q154PlanBody(oriented, deg).localCheckpoint()
-  }
-
-  private[graft] def q154Plan(spark: SparkSession, dir: String,
-                              tau: Double = 0.5, maxDf: Int = 50)
-      : (DataFrame, DataFrame) = {
-    val (oriented, deg, e) = orientedEdges(spark, dir, tau, maxDf)
-    (q154PlanBody(oriented, deg), e)
   }
 
   private def q154PlanBody(oriented: DataFrame, deg: DataFrame)
@@ -673,8 +631,7 @@ object Ranking {
     * re-planned the whole tokenize→df-window→weight→norm-window pipeline
     * (measured: 6 scans in the executed plan; the model table spans the
     * CORPUS, so at 100 TB that recompute dominates). The caller frees the
-    * model once the labels materialize — q124 does; PlanDump/QueriesSpec
-    * explain this DAG and free. */
+    * model once the labels materialize — q124 does. */
   private[graft] def q124Plan(spark: SparkSession, dir: String,
                               tau: Double = 0.5, maxDf: Int = 50,
                               mod: Int = 10, lt: Int = 7)
@@ -804,8 +761,7 @@ object Ranking {
 
   /** The q146 scoring plan BEFORE the result checkpoint, plus the pinned
     * bigram table it reads (the q104Plan convention: caller frees the
-    * pin once the plan is materialized — q146 does; PlanDump explains
-    * the plan and frees). */
+    * pin once the plan is materialized — q146 does). */
   private[graft] def q146Plan(spark: SparkSession, dir: String,
                               discount: Double = 0.75)
       : (DataFrame, DataFrame) = {

@@ -39,9 +39,8 @@ object Recommend {
       org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(_))
   }
 
-  /** q241's pre-checkpoint evidence DAG + its pinned state (the capped
-    * basket table) — the PlanDump/QueriesSpec accessor convention for
-    * checkpoint-returning queries. Caller frees the pins. */
+  /** q241's plan before the result checkpoint, plus its pinned state
+    * (the capped basket table). Caller frees the pins. */
   private[graft] def q241Dag(spark: SparkSession, dir: String,
       cap: Int = 256, k: Int = 3): (DataFrame, Seq[DataFrame]) = {
     val edges = t(spark, dir, "orders")
@@ -228,16 +227,13 @@ object Recommend {
   }
 
   private[graft] def ingestDag(spark: SparkSession, dir: String,
-      base: DataFrame, coBase: DataFrame, cap: Int, pin: Boolean = true,
+      base: DataFrame, coBase: DataFrame, cap: Int,
       batchFilter: org.apache.spark.sql.Column =
         col("o_orderkey") % 10 >= 7): (DataFrame, Seq[DataFrame]) = {
     // the admitted-novel pin is consumed keyed on c by both pair legs —
     // pin it in that layout (the cfStanding r13 note)
-    def cp(df: DataFrame): DataFrame =
-      if (pin) org.apache.spark.sql.graftbridge.Bridge
-        .checkpointPartitioned(df, Seq("c"), Seq("c", "p"))
-      else df
-    val novel = cp(admittedNovel(spark, dir, base, cap, batchFilter))
+    val novel = org.apache.spark.sql.graftbridge.Bridge.checkpointPartitioned(
+      admittedNovel(spark, dir, base, cap, batchFilter), Seq("c"), Seq("c", "p"))
     try {
       val plan = pairDelta(novel, base)
         .join(coBase, Seq("p1", "p2"), "left_outer")
@@ -245,24 +241,18 @@ object Recommend {
           (coalesce(col("co_base"), lit(0L)) + col("delta_co"))
             .as("co_after"))
         .orderBy(col("p1"), col("p2"))
-      (plan, if (pin) Seq(novel) else Seq.empty)
+      (plan, Seq(novel))
     } catch { case t: Throwable =>
       // a throw during assembly must not leak the pinned novel frame
-      if (pin) org.apache.spark.sql.graftbridge.Bridge
-        .unpersistLocalCheckpoint(novel)
+      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(novel)
       throw t
     }
   }
 
-  /** [[ingestDag]] as one un-pinned evidence DAG (PLANS.md) — the
-    * admitted-novel derivation stays visible as lineage. */
-  private[graft] def ingestDagUnpinned(spark: SparkSession, dir: String,
-      base: DataFrame, coBase: DataFrame, cap: Int): DataFrame =
-    ingestDag(spark, dir, base, coBase, cap, pin = false)._1
-
-  /** q244's pre-checkpoint evidence DAG + pins (the admitted batch-
-    * novel edges; the standing basket/co-matrix are REGISTRY-owned via
-    * [[cfStanding]] and not freed). Caller frees the pins. */
+  /** q244's plan before the result checkpoint, plus its pins (the
+    * admitted batch-novel edges; the standing basket/co-matrix are
+    * REGISTRY-owned via [[cfStanding]] and not freed). Caller frees the
+    * pins. */
   private[graft] def q244Dag(spark: SparkSession, dir: String,
       cap: Int = 256): (DataFrame, Seq[DataFrame]) = {
     // standing state (persisted between ingests at scale; q247 is the
@@ -301,7 +291,7 @@ object Recommend {
 
   /** Spill the CF standing state once per process (the deployment's
     * rebuild+publish path, registry-guarded), then reload it ONCE AT
-    * BOOT and pin — the restart face every consumer (q247, PLANS)
+    * BOOT and pin — the restart face every consumer (q247, q259)
     * serves from. A rebooted deployment pays the reload once, then
     * serves every ingest from the warm state; registry-pinning the
     * loaded frames makes the bench measure exactly that (the spilled
@@ -333,22 +323,6 @@ object Recommend {
         B.checkpointPartitioned(graft.core.DurableState.load(spark, root,
           s"cf$cap", version, "co"), Seq("p1", "p2"), Seq("p1", "p2")))
     }
-  }
-
-  /** EVIDENCE-ONLY: q247's ingest as an un-pinned DAG over the RELOADED
-    * durable parquet (PLANS.md) — the standing state must enter as bare
-    * parquet scans with no lineage back to any builder (the shipped
-    * engine pins the loads once at boot, the q87 evidence-vs-shipped
-    * note). */
-  private[graft] def q247Dag(spark: SparkSession, dir: String,
-      cap: Int = 256): DataFrame = {
-    val version = ensureCfSpilled(spark, dir, cap)
-    val root = graft.core.DurableState.rootFor(dir)
-    ingestDagUnpinned(spark, dir,
-      graft.core.DurableState.load(spark, root, s"cf$cap", version,
-        "basket"),
-      graft.core.DurableState.load(spark, root, s"cf$cap", version, "co"),
-      cap)
   }
 
   /** q250 — MULTI-VERSION DURABLE INGEST CHAIN: the full lifecycle a
@@ -426,21 +400,6 @@ object Recommend {
     val (plan, pins) = ingestDag(spark, dir, base2, co2, cap)
     try plan.localCheckpoint()
     finally pins.foreach(B.unpersistLocalCheckpoint(_))
-  }
-
-  /** EVIDENCE-ONLY: q250's final ingest as an un-pinned DAG over the
-    * chained v2 spill (PLANS.md). */
-  private[graft] def q250Dag(spark: SparkSession, dir: String,
-      cap: Int = 256): DataFrame = {
-    q250(spark, dir, cap) match { case df =>
-      org.apache.spark.sql.graftbridge.Bridge.freeIfDirectCheckpoint(df) }
-    val root = graft.core.DurableState.rootFor(dir)
-    val v2 = graft.core.DurableState.latestVersion(root, s"cfchain$cap").get
-    val base2 = graft.core.DurableState.load(spark, root, s"cfchain$cap",
-      v2, "basket")
-    val co2 = graft.core.DurableState.load(spark, root, s"cfchain$cap",
-      v2, "co")
-    ingestDagUnpinned(spark, dir, base2, co2, cap)
   }
 
   /** q265 — LOST-UPDATE PROTECTION: the CONDITIONAL-COMMIT face of the
@@ -570,17 +529,4 @@ object Recommend {
     finally pins.foreach(B.unpersistLocalCheckpoint(_))
   }
 
-  /** EVIDENCE-ONLY: q265's final ingest as an un-pinned DAG over the
-    * conflict-then-re-derive chain's v3 spill (PLANS.md). */
-  private[graft] def q265Dag(spark: SparkSession, dir: String,
-      cap: Int = 256): DataFrame = {
-    q265(spark, dir, cap) match { case df =>
-      org.apache.spark.sql.graftbridge.Bridge.freeIfDirectCheckpoint(df) }
-    val root = graft.core.DurableState.rootFor(dir)
-    val v3 = graft.core.DurableState.latestVersion(root, s"cfcas$cap").get
-    ingestDagUnpinned(spark, dir,
-      graft.core.DurableState.load(spark, root, s"cfcas$cap", v3, "basket"),
-      graft.core.DurableState.load(spark, root, s"cfcas$cap", v3, "co"),
-      cap)
-  }
 }

@@ -95,24 +95,6 @@ object Takedown {
       .orderBy(col("doc_id"))
   }
 
-  /** q179's evidence DAG pre-checkpoint (PlanDump): the re-election
-    * subtree over PINNED label tables — returns the un-checkpointed
-    * result plus the pins (pair list, both label tables) for the
-    * caller to free. The labels are pinned state by Components'
-    * storage contract, so the dumped plan shows exactly the
-    * takedown-specific work. */
-  private[graft] def q179Dag(spark: SparkSession, dir: String,
-      modK: Long = 60L): (DataFrame, Seq[DataFrame]) = {
-    val pairs = Dedup.minhashVerifiedPairs(spark, dir, 0.5, 0.7)
-      .select(col("d1").as("src"), col("d2").as("dst"))
-      .localCheckpoint()
-    val before = Components.connectedComponents(pairs)
-    val after = Components.connectedComponents(
-      pairs.where(!isTaken(col("src"), modK) &&
-        !isTaken(col("dst"), modK)))
-    (reelect(before, after, modK), Seq(pairs, before, after))
-  }
-
   /** q180 — TAKEDOWN PROPAGATION AUDIT: the one-page ledger a
     * compliance sign-off reads after a takedown runs — per derived
     * artifact, what the post-takedown state must be, plus residual
@@ -128,14 +110,6 @@ object Takedown {
     pins.foreach(Components.free(_))
     out
   }
-
-  /** q180's evidence DAG pre-checkpoint (PlanDump): the audit union over
-    * its eagerly-materialized sub-ledgers (re-pack accounting, component
-    * re-run accounting — pinned by nature, the q105 note) plus those pins
-    * for the caller to free. */
-  private[graft] def q180Dag(spark: SparkSession, dir: String,
-      modK: Long = 60L): (DataFrame, Seq[DataFrame]) =
-    q180Body(spark, dir, modK)
 
   private def q180Body(spark: SparkSession, dir: String, modK: Long)
       : (DataFrame, Seq[DataFrame]) = {
@@ -282,14 +256,6 @@ object Takedown {
     out
   }
 
-  /** q182's evidence DAG pre-checkpoint (PlanDump): the audit union with
-    * the DISCOVERED request set and the eagerly-materialized sub-ledgers
-    * entering pinned (the shipped shape); pins returned for the caller
-    * to free. */
-  private[graft] def q182Dag(spark: SparkSession, dir: String)
-      : (DataFrame, Seq[DataFrame]) =
-    q182Body(spark, dir)
-
   private def q182Body(spark: SparkSession, dir: String)
       : (DataFrame, Seq[DataFrame]) = {
     import graft.text.TextAnalysis
@@ -406,14 +372,6 @@ object Takedown {
     finally Components.free(deadOrders)
   }
 
-  /** q186's evidence DAG pre-checkpoint (PlanDump): the ledger plus the
-    * pinned dead-order key set for the caller to free. */
-  private[graft] def q186Dag(spark: SparkSession, dir: String,
-      modK: Long = 97L, res: Long = 5L): (DataFrame, Seq[DataFrame]) = {
-    val (ledger, deadOrders) = q186Body(spark, dir, modK, res)
-    (ledger, Seq(deadOrders))
-  }
-
   private def q186Body(spark: SparkSession, dir: String, modK: Long,
       res: Long): (DataFrame, DataFrame) = {
     def row(artifact: String, metric: String, v: Column): Column =
@@ -523,8 +481,8 @@ object Takedown {
     finally pins.foreach(Components.free)
   }
 
-  /** q243's pre-checkpoint evidence DAG + pins (the eagerly-computed
-    * cluster labels). Caller frees the pins. */
+  /** q243's plan before the result checkpoint, plus the eagerly-computed
+    * cluster labels it reads. Caller frees the pins. */
   private[graft] def q243Dag(spark: SparkSession, dir: String)
       : (DataFrame, Seq[DataFrame]) = {
     val pairs = Dedup.minhashVerifiedPairs(spark, dir, 0.5, 0.7)

@@ -218,30 +218,6 @@ object Pq {
     }
   }
 
-  /** q164's evidence DAG pre-checkpoint (PlanDump): the ADC pricing +
-    * shortlist-refine + recall tail with the trained codebook and the
-    * normalized corpus entering pinned (training is eager by nature —
-    * the q105 note); pins returned for the caller to free. */
-  private[graft] def q164Dag(spark: SparkSession, dir: String, m: Int = 8,
-      k: Int = 16, iters: Int = 3, kTop: Int = 10, nQueries: Int = 20,
-      shortlistFactor: Int = 10): (DataFrame, Seq[DataFrame]) = {
-    val corpus = vecsNorm(spark, dir).where(col("u").isNotNull)
-      .select(col("vec_id"), col("u")).localCheckpoint()
-    val dim = corpus.select(size(col("u"))).head().getInt(0)
-    val sub = dim / m
-    val codebook = trainCodebook(corpus, m, sub, k, iters)
-    val codes = encodeCodes(corpus, codebook, m, sub)
-    val queries = corpus.where(col("vec_id") < nQueries)
-    val dtable = distTable(queries, codebook, m, sub)
-    val adc = codes.join(broadcast(dtable), Seq("s", "code"))
-      .where(col("vec_id") =!= col("q_id"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum(col("d2")).as("adc"))
-    (refineAndScore(spark, dir, corpus, queries, adc, kTop, nQueries,
-      shortlistFactor * kTop, materialize = false),
-      Seq(codebook, corpus))
-  }
-
   /** q167 — IVF-PQ: the composed production layout. A coarse k-means
     * quantizer (the q50 cosine KMeans) partitions the corpus into
     * `cells`; each query probes its `nprobe` nearest cells and prices
@@ -328,33 +304,6 @@ object Pq {
     } finally {
       org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(corpus)
     }
-  }
-
-  /** q167's evidence DAG pre-checkpoint (PlanDump): the probe→restricted-
-    * ADC→refine tail with the coarse k-means model, the PQ codebook and
-    * the corpus entering pinned (training is eager by nature); pins
-    * returned for the caller to free. */
-  private[graft] def q167Dag(spark: SparkSession, dir: String, m: Int = 8,
-      k: Int = 16, iters: Int = 3, kTop: Int = 10, nQueries: Int = 20,
-      cells: Int = 10, nprobe: Int = 3, shortlistFactor: Int = 10)
-      : (DataFrame, Seq[DataFrame]) = {
-    import graft.queries.EmbeddingQueries.vecs
-    val corpus = vecsNorm(spark, dir).where(col("u").isNotNull)
-      .select(col("vec_id"), col("u")).localCheckpoint()
-    val dim = corpus.select(size(col("u"))).head().getInt(0)
-    val sub = dim / m
-    val v = vecs(spark, dir)
-    val model = KMeans.fit(v, cells, iters)
-    val codebook = trainCodebook(corpus, m, sub, k, iters)
-    val assigned = KMeans
-      .assign(v, model.select(col("cluster"), col("centroid")))
-      .select(col("vec_id"), col("cluster").as("cell"))
-    val codes = encodeCodes(corpus, codebook, m, sub)
-      .join(assigned, Seq("vec_id"))
-    (ivfPqLedger(spark, dir, corpus, codes, model, codebook, m, sub,
-      kTop, nQueries, nprobe, shortlistFactor * kTop,
-      materialize = false),
-      Seq(codebook, model, corpus))
   }
 
   /** q177 — INCREMENTAL IVF-PQ ingest: q167 at the q106/q160 standing-
@@ -445,34 +394,6 @@ object Pq {
     incrementalIvfPq(spark, dir, m, k, iters, kTop, nQueries, cells,
       nprobe, shortlistFactor, monolithic = true)
 
-  /** EVIDENCE-ONLY: q177's per-ingest BATCH path as an un-pinned DAG
-    * reading straight from the parquet scans — the plan PLANS.md carries
-    * must show the batch predicate (vec_id % 10 ≥ 7) filtering the scan
-    * and the frozen codebook/cells arriving only as BROADCAST sides:
-    * nothing in the per-ingest path touches base rows except through
-    * the standing pin (absent here by construction). Returns (dag,
-    * trained state to free). */
-  private[graft] def q177BatchDag(spark: SparkSession, dir: String,
-      m: Int = 8, k: Int = 16, iters: Int = 3, cells: Int = 10)
-      : (DataFrame, Seq[DataFrame]) = {
-    import graft.queries.EmbeddingQueries.vecs
-    val isBase = pmod(col("vec_id"), lit(10L)) < 7L
-    val baseU = vecsNorm(spark, dir).where(col("u").isNotNull && isBase)
-      .select(col("vec_id"), col("u")).localCheckpoint()
-    val dim = baseU.select(size(col("u"))).head().getInt(0)
-    val sub = dim / m
-    val model = KMeans.fit(vecs(spark, dir).where(isBase), cells, iters)
-    val codebook = trainCodebook(baseU, m, sub, k, iters)
-    val batchU = vecsNorm(spark, dir).where(col("u").isNotNull && !isBase)
-      .select(col("vec_id"), col("u"))
-    val dag = encodeCodes(batchU, codebook, m, sub)
-      .join(KMeans.assign(vecs(spark, dir).where(!isBase),
-          model.select(col("cluster"), col("centroid")))
-        .select(col("vec_id"), col("cluster").as("cell")),
-        Seq("vec_id"))
-    (dag, Seq(baseU, codebook, model))
-  }
-
   /** q222 — ERASE FROM THE STANDING IVF-PQ INDEX, then ingest. q177's
     * standing state (frozen coarse cells + product codebook + the pinned
     * encoded index over the base corpus) serves an erasure request —
@@ -561,28 +482,6 @@ object Pq {
     val pinnedMerged =
       if (monolithic) merged.localCheckpoint() else merged
     (pinnedMerged, Seq(pinnedMerged, codebook, model, corpus))
-  }
-
-  /** EVIDENCE-ONLY: q222's per-request index edit as an un-executed DAG
-    * over the process-pinned standing state — PLANS.md must show the
-    * request entering as a BroadcastHashJoin(LeftAnti) against the
-    * pinned standing codes and the batch leg's scans filtered to batch
-    * rows, with the frozen codebook/cells as broadcast sides only. */
-  private[graft] def q222IngestDag(spark: SparkSession, dir: String,
-      m: Int = 8, k: Int = 16, iters: Int = 3, cells: Int = 10,
-      modK: Long = 10L): DataFrame = {
-    import graft.queries.EmbeddingQueries.vecs
-    val isBase = pmod(col("vec_id"), lit(10L)) < 7L
-    val isEr = isBase && pmod(col("vec_id"), lit(modK)) === 0L
-    val st = pqStanding(spark, dir, m, k, iters, cells)
-    val erased = st.corpus.where(isEr).select(col("vec_id"))
-    st.standing.join(broadcast(erased), Seq("vec_id"), "left_anti")
-      .unionByName(
-        encodeCodes(st.corpus.where(!isBase), st.codebook, m, st.sub)
-          .join(KMeans.assign(vecs(spark, dir).where(!isBase),
-              st.model.select(col("cluster"), col("centroid")))
-            .select(col("vec_id"), col("cluster").as("cell")),
-            Seq("vec_id")))
   }
 
   private def erasedIvfPq(spark: SparkSession, dir: String, m: Int,
@@ -733,38 +632,6 @@ object Pq {
             "left_anti"))))
     }.longValue()
     (v0, eV)
-  }
-
-  /** EVIDENCE-ONLY: q263's accounting over BARE reloaded spills
-    * (PLANS.md) — erased codes and the frozen model/codebook enter as
-    * parquet scans of the committed erased version; the batch leg's
-    * scans carry the batch predicate. */
-  private[graft] def q263Dag(spark: SparkSession, dir: String,
-      m: Int = 8, k: Int = 16, iters: Int = 3, cells: Int = 10,
-      modK: Long = 10L): DataFrame = {
-    import graft.queries.EmbeddingQueries.vecs
-    val isBase = pmod(col("vec_id"), lit(10L)) < 7L
-    val root = graft.core.DurableState.rootFor(dir)
-    val eKind = s"pq$m-$k-$iters-$cells-erased$modK"
-    val eV = ensurePqErased(spark, dir, m, k, iters, cells, modK)._2
-    def ld(t: String): DataFrame =
-      graft.core.DurableState.load(spark, root, eKind, eV, t)
-    val batchU = vecsNorm(spark, dir).where(col("u").isNotNull && !isBase)
-      .select(col("vec_id"), col("u"))
-    val dim = batchU.select(size(col("u"))).head().getInt(0)
-    val batch = encodeCodes(batchU, ld("codebook"), m, dim / m)
-      .join(KMeans.assign(vecs(spark, dir).where(!isBase),
-          ld("model").select(col("cluster"), col("centroid")))
-        .select(col("vec_id"), col("cluster").as("cell")),
-        Seq("vec_id"))
-    ld("codes").unionByName(batch)
-      .groupBy(col("vec_id"))
-      .agg(count(lit(1)).as("n_codes"),
-        countDistinct(col("cell")).as("n_cells"))
-      .select(col("vec_id"),
-        when(isBase, "standing").otherwise("ingest").as("origin"),
-        col("n_codes"), col("n_cells"))
-      .orderBy(col("vec_id"))
   }
 
   private[graft] def q263Index(spark: SparkSession, dir: String,

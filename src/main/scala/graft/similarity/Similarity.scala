@@ -238,7 +238,7 @@ object Similarity {
 
   /** The q105 presentation plan BEFORE the result checkpoint, plus the
     * label table it reads (the caller frees the labels once the plan is
-    * materialized — q105 does; PlanDump explains the plan and frees). */
+    * materialized — q105 does). */
   private[graft] def q105Plan(spark: SparkSession, dir: String,
                               threshold: Double = 0.4,
                               candidates: String = "exact")
@@ -558,29 +558,6 @@ object Similarity {
     * (see [[sqdist]]), the seed and all ties are vec_id-keyed, and the
     * output carries selection metadata only (round, id, label) — no
     * floats. Bit-stable under any partitioning; full DuckDB oracle. */
-  /** q204's evidence DAG (PlanDump): ONE k-center round — the repeated
-    * unit (per-round plans are O(1)-deep by the checkpoint discipline):
-    * the farthest-point argmax is a 1-row TakeOrdered over the pinned
-    * distance state, and the distance update is a 1-row-broadcast cross
-    * join + per-row least() fold — never a vector×vector join. Pins
-    * returned for the caller to free. */
-  private[graft] def q204RoundDag(spark: SparkSession, dir: String)
-      : (DataFrame, Seq[DataFrame]) = {
-    val v = vecs(spark, dir).localCheckpoint()
-    val seed = v.orderBy(col("vec_id")).limit(1).localCheckpoint()
-    val state = v
-      .crossJoin(broadcast(seed.select(col("v").as("cv"))))
-      .select(col("vec_id"), col("label"), col("v"),
-        sqdist(col("v"), col("cv")).as("md"))
-      .localCheckpoint()
-    val next = state.orderBy(col("md").desc, col("vec_id")).limit(1)
-      .localCheckpoint()
-    val round = state.as("s")
-      .crossJoin(broadcast(next.select(col("v").as("cv"))))
-      .select(col("s.vec_id"), col("s.label"), col("s.v"),
-        least(col("md"), sqdist(col("s.v"), col("cv"))).as("md"))
-    (round, Seq(next, state, seed, v))
-  }
 
   def q204(spark: SparkSession, dir: String, k: Int = 8): DataFrame = {
     val bridge = org.apache.spark.sql.graftbridge.Bridge

@@ -167,20 +167,6 @@ object Bpe {
     * distinct-token count — both tiny next to tokenization. The greedy
     * sweep is lossless (concat(t) == word, BpeSpec), so `n_chars`
     * derived from the token arrays equals the raw character count. */
-  /** q165's evidence DAG (PlanDump): ONE training round's pair-frequency
-    * aggregate + argmax over the initial (source, word) vocab — the
-    * repeated unit (the q129 round convention: per-round plans are
-    * O(1)-deep by the checkpoint discipline, so nothing deeper exists at
-    * runtime; the argmax collects ONE row per round). Shown un-pinned so
-    * the tokenize→vocab lineage is visible. */
-  private[graft] def q165RoundDag(spark: SparkSession, dir: String)
-      : DataFrame =
-    pairCounts(Tables(spark, dir, "documents")
-      .select(col("source"),
-        explode(TextAnalysis.toks(col("text"))).as("word"))
-      .groupBy(col("source"), col("word")).agg(count(lit(1)).as("cnt"))
-      .withColumn("t", filter(split(col("word"), ""), x => x =!= "")))
-      .orderBy(col("n").desc, col("l"), col("r")).limit(1)
 
   def q165(spark: SparkSession, dir: String, iters: Int = 8): DataFrame = {
     var vocab = Tables(spark, dir, "documents")

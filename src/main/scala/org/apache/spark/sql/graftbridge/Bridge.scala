@@ -20,6 +20,12 @@ object Bridge {
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
 
+  /** Block until every event already posted to the context's listener
+    * bus has been delivered (`listenerBus` is `private[spark]`), so a
+    * [[graft.PlanCapture]] listener has seen every finished action. */
+  def drainListenerBus(spark: org.apache.spark.sql.SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** `QueryExecutionErrors` is `private[sql]`; kernels that reproduce
     * ANSI Divide semantics (CosineSimExpr) raise the real error class
     * through this forwarder (also called from generated code). */

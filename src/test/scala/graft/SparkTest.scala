@@ -13,15 +13,10 @@ import org.apache.spark.sql.SparkSession
   * Registry state (StandingState) keys on applicationId, so a rebuilt
   * session rebuilds its pins rather than touching dead RDDs. */
 object SparkTest {
-  private def build(): SparkSession = SparkSession.builder()
-    // local[4,2]: 4 threads, maxFailures=2 — lets the chaos spec exercise
-    // task retry (the reference's crash-test semantics, test-mr.sh:283-330)
-    .master("local[4,2]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  // local[4,2]: 4 threads, maxFailures=2 — lets the chaos spec exercise
+  // task retry (the reference's crash-test semantics, test-mr.sh:283-330)
+  private def build(): SparkSession =
+    Session.local("4,2", "4", "spark.app.name" -> "graft-test")
 
   @volatile private var current: SparkSession = _
 

@@ -207,7 +207,8 @@ class ManifestSpec extends AnyFunSuite {
         (id, n, start, start / seqLen, (start + n - 1) / seqLen,
           (start + n - 1) / seqLen - start / seqLen + 1)
       }
-    val q110 = Curation.q110(spark, dir)
+    val (q110, q110Plans) =
+      graft.PlanCapture.during(spark)(Curation.q110(spark, dir))
     val got = q110.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getLong(4), r.getLong(5))).toSeq
@@ -221,10 +222,9 @@ class ManifestSpec extends AnyFunSuite {
       "no quality-passing batch doc was a corpus dup — dedup tier vacuous")
     assert(expected.nonEmpty, "empty manifest — fixture too small")
     // the corpus probe rides behind the bloom sketch (q109's plan shape) —
-    // asserted on the evidence DAG (q110 returns a checkpoint root)
-    val plan = Curation.q110Dag(spark, dir)
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("might_contain"), "bloom pre-probe missing from plan")
+    // asserted on the plans q110 executed (it returns a checkpoint root)
+    assert(q110Plans.exists(_.executedPlan.toString.contains("might_contain")),
+      "bloom pre-probe missing from q110's executed plans")
   }
 
   test("q103 output is partition-count invariant (sf0.001)") {
