@@ -39,8 +39,33 @@ object StandingState {
     * nested `of` calls force disjoint cells and never re-enter the
     * map under a lock. */
   def of[T <: AnyRef](key: String)(build: => T): T =
-    reg.computeIfAbsent(key, _ => new Lazy(() => build))
+    reg.computeIfAbsent(key, _ => new Lazy(() => recorded(build)))
       .value.asInstanceOf[T]
+
+  private val owned = java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]()
+
+  /** Ids of the persistent RDDs that registry builds created and still
+    * hold — the pins the registry owns for the process lifetime, which a
+    * leak check must not count against the query that first built them.
+    * Recorded as the persistent-RDD set a build adds on the active
+    * session's context, so pins another thread makes during a build are
+    * attributed to the registry too; the leak check that reads this runs
+    * one query at a time. */
+  def ownedRddIds: Set[Int] = {
+    import scala.jdk.CollectionConverters._
+    owned.asScala.map(_.intValue).toSet
+  }
+
+  private def recorded[T](build: => T): T =
+    org.apache.spark.sql.SparkSession.getActiveSession match {
+      case Some(spark) =>
+        val sc = spark.sparkContext
+        val before = sc.getPersistentRDDs.keySet
+        val out = build
+        sc.getPersistentRDDs.keySet.diff(before).foreach(id => owned.add(id))
+        out
+      case None => build
+    }
 
   private final class Lazy(f: () => AnyRef) {
     lazy val value: AnyRef = f()

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.core.Pins
+
 /** Distributed connected components — the missing half of dedup: the
   * similarity tiers emit near-duplicate PAIRS (edges), but curation keeps
   * one canonical document per GROUP, and groups are the connected
@@ -28,39 +30,27 @@ object Components {
   /** Connected components of an undirected edge list (src, dst).
     * Returns (id, comp) where comp = min vertex id reachable. Isolated
     * vertices (absent from edges) are absent from the output — callers
-    * union them back if needed.
-    *
-    * STORAGE CONTRACT: the returned frame is a DIRECT localCheckpoint
-    * (its plan root is the checkpoint RDD), pinned until the caller
-    * frees it with [[free]] once consumed — an iterated result must
-    * live either as deep lineage or pinned storage, and a derived
-    * return would make that storage unfreeable under the strict Bridge
-    * contract (q66/q80 consume-and-free eagerly; see their shape). */
-  def connectedComponents(edges: DataFrame, maxIters: Int = 25): DataFrame = {
-    // materialize the (possibly expensive) upstream edge pipeline ONCE —
-    // the per-round join would otherwise re-run it every iteration.
-    // (Measured: the union's two branches ride the SAME upstream exchange
-    // via ReusedExchange — pre-checkpointing the edges before the union
-    // only adds a barrier and reads slower, q103 4.7s -> 5.8s.)
-    val sym = edges.select(col("src"), col("dst"))
-      .union(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint()
-    var labels = sym.select(col("src").as("id")).distinct()
-      .withColumn("comp", col("id"))
-      .localCheckpoint()
+    * union them back if needed. The result is a direct checkpoint the
+    * caller owns (an iterated result lives either as deep lineage or as
+    * pinned storage). */
+  def connectedComponents(edges: DataFrame, maxIters: Int = 25): DataFrame =
+    Pins.result { pins =>
+      // materialize the (possibly expensive) upstream edge pipeline ONCE —
+      // the per-round join would otherwise re-run it every iteration.
+      // (Measured: the union's two branches ride the SAME upstream exchange
+      // via ReusedExchange — pre-checkpointing the edges before the union
+      // only adds a barrier and reads slower, q103 4.7s -> 5.8s.)
+      val sym = pins.pin(edges.select(col("src"), col("dst"))
+        .union(edges.select(col("dst").as("src"), col("src").as("dst"))))
+      var prevCk = pins.pin(sym.select(col("src").as("id")).distinct()
+        .withColumn("comp", col("id")))
+      var labels = prevCk
 
-    var it = 0
-    var changed = 1L
-    // superseded per-round checkpoints are freed as soon as the next round
-    // is materialized — otherwise storage grows linearly with the graph
-    // diameter for the life of the session. The try/finally covers the
-    // failure paths (mid-loop exception, non-convergence): the current
-    // round's checkpoint is discarded along with the computation, so it is
-    // freed too — only a successfully converged result keeps its storage
-    // (the caller's to consume).
-    var prevCk: DataFrame = labels
-    var converged = false
-    try {
+      var it = 0
+      var changed = 1L
+      // superseded per-round checkpoints are freed as soon as the next
+      // round is materialized — otherwise storage grows linearly with the
+      // graph diameter
       while (changed > 0 && it < maxIters) {
         // min neighbor label per vertex, via the edge list
         val fromNbrs = sym
@@ -84,8 +74,8 @@ object Components {
           .select(col("id"),
             least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"),
             (col("nbr_comp") < col("comp")).as("chg"))
-        val mat = next.localCheckpoint() // eager: prevCk no longer referenced
-        org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(prevCk)
+        val mat = pins.pin(next) // eager: prevCk no longer referenced
+        pins.release(prevCk)
         prevCk = mat
         changed = mat.where(col("chg")).count()
         labels = mat.select(col("id"), col("comp"))
@@ -97,26 +87,10 @@ object Components {
         s"connectedComponents did not converge in $maxIters rounds " +
           s"($changed labels still changing) — component diameter exceeds " +
           "maxIters; raise it")
-      // re-materialize the clean (id, comp) projection as the RESULT:
-      // a direct checkpoint root the caller CAN free (returning the
-      // derived select would pin the last round's storage forever)
-      val result = labels.localCheckpoint()
-      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(prevCk)
-      prevCk = result
-      converged = true
-      result
-    } finally {
-      // the edge list is only needed during the rounds
-      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(sym)
-      if (!converged)
-        org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(prevCk)
+      // the clean (id, comp) projection is the RESULT checkpoint (returning
+      // the derived select would pin the last round's storage forever)
+      labels
     }
-  }
-
-  /** Free a [[connectedComponents]] result (or any direct-checkpoint
-    * frame) once consumed. */
-  def free(result: DataFrame): Unit =
-    org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(result)
 
   /** q66 — near-duplicate cluster collapse: connected components over the
     * minhash-verified exact near-dup pairs (j ≥ 0.7), one row per
@@ -128,17 +102,14 @@ object Components {
     * pattern); the component partition is additionally spec-proven equal
     * to driver-side union-find on the same edges.
     *
-    * Storage: the corpus-vertex-sized label table is consumed into the
-    * BOUNDED presentation aggregate (one row per cluster), which is
-    * checkpointed eagerly so the labels can be freed before returning —
-    * the only storage the query leaves behind is result-sized, and the
-    * returned frame is itself a direct checkpoint the caller can free
-    * ([[free]]; leak spec pins both properties). */
-  def q66(spark: SparkSession, dir: String): DataFrame = {
+    * The corpus-vertex-sized label table is consumed into the BOUNDED
+    * presentation aggregate (one row per cluster), so the only storage
+    * the query leaves behind is result-sized (leak spec). */
+  def q66(spark: SparkSession, dir: String): DataFrame = Pins.result { pins =>
     val pairs = Dedup.minhashVerifiedPairs(spark, dir, 0.5, 0.7)
       .select(col("d1").as("src"), col("d2").as("dst"))
-    val labels = connectedComponents(pairs)
-    val out = labels
+    val labels = pins.own(connectedComponents(pairs))
+    labels
       .groupBy(col("comp"))
       .agg(
         count(lit(1)).cast(IntegerType).as("n_docs"),
@@ -146,9 +117,6 @@ object Components {
           .as("docs"))
       .select(col("comp").as("keeper_doc"), col("n_docs"), col("docs"))
       .orderBy(col("keeper_doc"))
-      .localCheckpoint()
-    free(labels)
-    out
   }
 
   /** q122 — near-dup cluster-SIZE histogram: how much of the corpus is
@@ -166,38 +134,25 @@ object Components {
     * cluster-count-sized aggregates: labels → per-comp sizes → size
     * counts, with the singleton count derived arithmetically from the
     * 1-row corpus total minus the 1-row clustered total (two broadcast
-    * folds, never a corpus-scale join). Labels freed after the bounded
-    * result checkpoints (q66 storage discipline). */
-  def q122(spark: SparkSession, dir: String): DataFrame = {
-    val (plan, pins) = q122Dag(spark, dir)
-    try plan.localCheckpoint()
-    finally pins.foreach(free)
-  }
-
-  /** q122's plan before the result checkpoint, plus the eager component
-    * labels it reads. Caller frees the pins. */
-  private[graft] def q122Dag(spark: SparkSession, dir: String)
-      : (DataFrame, Seq[DataFrame]) = {
+    * folds, never a corpus-scale join). */
+  def q122(spark: SparkSession, dir: String): DataFrame = Pins.result { pins =>
     val pairs = Dedup.minhashVerifiedPairs(spark, dir, 0.5, 0.7)
       .select(col("d1").as("src"), col("d2").as("dst"))
-    val labels = connectedComponents(pairs)
-    try {
-      val sizes = labels.groupBy(col("comp")).agg(count(lit(1)).as("sz"))
-      val hist = sizes.groupBy(col("sz")).agg(count(lit(1)).as("n_clusters"))
-      val nTotal = graft.core.Tables(spark, dir, "documents")
-        .agg(count(lit(1)).as("n_total"))
-      val nClustered = labels.agg(count(lit(1)).as("n_clustered"))
-      // clusters are >= 2 by construction (every labeled vertex sits in a
-      // verified edge), so the singleton row can never collide with hist
-      val singleton = nTotal.crossJoin(broadcast(nClustered))
-        .select(lit(1L).as("sz"),
-          (col("n_total") - col("n_clustered")).as("n_clusters"))
-      val plan = hist.unionByName(singleton)
-        .select(col("sz").cast(IntegerType).as("cluster_size"),
-          col("n_clusters"))
-        .orderBy(col("cluster_size"))
-      (plan, Seq(labels))
-    } catch { case t: Throwable => free(labels); throw t }
+    val labels = pins.own(connectedComponents(pairs))
+    val sizes = labels.groupBy(col("comp")).agg(count(lit(1)).as("sz"))
+    val hist = sizes.groupBy(col("sz")).agg(count(lit(1)).as("n_clusters"))
+    val nTotal = graft.core.Tables(spark, dir, "documents")
+      .agg(count(lit(1)).as("n_total"))
+    val nClustered = labels.agg(count(lit(1)).as("n_clustered"))
+    // clusters are >= 2 by construction (every labeled vertex sits in a
+    // verified edge), so the singleton row can never collide with hist
+    val singleton = nTotal.crossJoin(broadcast(nClustered))
+      .select(lit(1L).as("sz"),
+        (col("n_total") - col("n_clustered")).as("n_clusters"))
+    hist.unionByName(singleton)
+      .select(col("sz").cast(IntegerType).as("cluster_size"),
+        col("n_clusters"))
+      .orderBy(col("cluster_size"))
   }
 
   /** q125 — EFFECTIVE post-dedup source mixture: what each source
@@ -212,45 +167,32 @@ object Components {
     * drop set (comp ≠ id) anti-filters via ONE doc-keyed left join, the
     * per-source accounting partials map-side, and the kept-corpus token
     * total rides back as a 1-row broadcast for the share division
-    * (exact integers until that one rounded divide). Labels freed after
-    * the bounded result checkpoints. */
-  def q125(spark: SparkSession, dir: String): DataFrame = {
-    val (plan, pins) = q125Dag(spark, dir)
-    try plan.localCheckpoint()
-    finally pins.foreach(free)
-  }
-
-  /** q125's plan before the result checkpoint, plus the eager component
-    * labels it reads. Caller frees the pins. */
-  private[graft] def q125Dag(spark: SparkSession, dir: String)
-      : (DataFrame, Seq[DataFrame]) = {
+    * (exact integers until that one rounded divide). */
+  def q125(spark: SparkSession, dir: String): DataFrame = Pins.result { pins =>
     val pairs = Dedup.minhashVerifiedPairs(spark, dir, 0.5, 0.7)
       .select(col("d1").as("src"), col("d2").as("dst"))
-    val labels = connectedComponents(pairs)
-    try {
-      val drop = labels.where(col("comp") =!= col("id"))
-        .select(col("id").as("doc_id"), lit(1).as("dropped"))
-      val perSource = graft.core.Tables(spark, dir, "documents")
-        .select(col("doc_id"), col("source"),
-          size(graft.text.TextAnalysis.toks(col("text")))
-            .cast(LongType).as("n_tok"))
-        .join(drop, Seq("doc_id"), "left_outer")
-        .groupBy(col("source"))
-        .agg(
-          count(lit(1)).as("n_docs"),
-          sum(when(col("dropped").isNull, 1L).otherwise(0L)).as("n_kept"),
-          sum(col("n_tok")).as("n_tokens"),
-          sum(when(col("dropped").isNull, col("n_tok")).otherwise(0L))
-            .as("n_tokens_kept"))
-      val total = perSource.agg(sum(col("n_tokens_kept")).as("t"))
-      val plan = perSource.crossJoin(broadcast(total))
-        .select(col("source"), col("n_docs"), col("n_kept"),
-          col("n_tokens"), col("n_tokens_kept"),
-          when(col("t") > 0,
-            round(col("n_tokens_kept").cast(DoubleType) / col("t"), 6))
-            .as("mix_share"))
-        .orderBy(col("source"))
-      (plan, Seq(labels))
-    } catch { case t: Throwable => free(labels); throw t }
+    val labels = pins.own(connectedComponents(pairs))
+    val drop = labels.where(col("comp") =!= col("id"))
+      .select(col("id").as("doc_id"), lit(1).as("dropped"))
+    val perSource = graft.core.Tables(spark, dir, "documents")
+      .select(col("doc_id"), col("source"),
+        size(graft.text.TextAnalysis.toks(col("text")))
+          .cast(LongType).as("n_tok"))
+      .join(drop, Seq("doc_id"), "left_outer")
+      .groupBy(col("source"))
+      .agg(
+        count(lit(1)).as("n_docs"),
+        sum(when(col("dropped").isNull, 1L).otherwise(0L)).as("n_kept"),
+        sum(col("n_tok")).as("n_tokens"),
+        sum(when(col("dropped").isNull, col("n_tok")).otherwise(0L))
+          .as("n_tokens_kept"))
+    val total = perSource.agg(sum(col("n_tokens_kept")).as("t"))
+    perSource.crossJoin(broadcast(total))
+      .select(col("source"), col("n_docs"), col("n_kept"),
+        col("n_tokens"), col("n_tokens_kept"),
+        when(col("t") > 0,
+          round(col("n_tokens_kept").cast(DoubleType) / col("t"), 6))
+          .as("mix_share"))
+      .orderBy(col("source"))
   }
 }

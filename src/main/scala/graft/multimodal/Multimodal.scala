@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Tables
+import graft.core.{Pins, Tables}
 
 /** Multimodal-column plumbing: media treated as opaque `binary` payloads
   * with typed metadata, processed per-partition in batches.
@@ -286,30 +286,10 @@ object Multimodal {
     * closed-form synth pixels, so DuckDB recomputes the identical pair
     * set from the formula with no codec — and banding completeness is
     * exact, so no recall premise is even needed (unlike the minhash
-    * tier).
-    *
-    * Storage contract: the result (one slim row per verified pair) is
-    * checkpointed eagerly so the feature pin can be freed before
-    * returning; the returned frame is a DIRECT localCheckpoint the
-    * caller frees once consumed. */
+    * tier). */
   def q112(spark: SparkSession, dir: String, side: Int = 16,
            nDocs: Int = 100, plantEvery: Int = 20, maxHamming: Int = 3,
-           maxDist: Double = 8.0): DataFrame = {
-    val (out, feat) = q112Plan(spark, dir, side, nDocs, plantEvery,
-      maxHamming, maxDist)
-    val res = out.localCheckpoint()
-    org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(feat)
-    res
-  }
-
-  /** The q112 verify plan BEFORE the result checkpoint, plus the pinned
-    * feature table it reads (the caller frees the pin once the plan is
-    * materialized — q112 does). */
-  private[graft] def q112Plan(spark: SparkSession, dir: String,
-                              side: Int = 16, nDocs: Int = 100,
-                              plantEvery: Int = 20, maxHamming: Int = 3,
-                              maxDist: Double = 8.0)
-      : (DataFrame, DataFrame) = {
+           maxDist: Double = 8.0): DataFrame = Pins.result { pins =>
     import spark.implicits._
     val ids = Tables(spark, dir, "documents")
       .select(col("doc_id")).where(col("doc_id") < nDocs).as[Long]
@@ -320,24 +300,24 @@ object Multimodal {
           encodePng(perturbPixel(synthImage(id, side, side)))))
       else Seq(orig)
     }.toDF("media_id", "png")
-    val feat = dHashFeatures(spark, pngs)
-    val out = verifiedImagePairs(feat, side, maxHamming, maxDist)
-    (out, feat)
+    val feat = dHashFeatures(pins, spark, pngs)
+    verifiedImagePairs(feat, side, maxHamming, maxDist)
   }
 
-  /** (media_id, png) → PINNED (media_id, gray grid, dHash) feature
-    * table — the one codec pass both image near-dup consumers (q112 and
-    * the q159 manifest tier) run once and probe. Caller frees. */
-  private def dHashFeatures(spark: SparkSession, pngs: DataFrame): DataFrame = {
+  /** (media_id, png) → (media_id, gray grid, dHash) feature table, pinned
+    * in `pins` — the one codec pass both image near-dup consumers (q112
+    * and the q159 manifest tier) run once and probe. */
+  private def dHashFeatures(pins: Pins, spark: SparkSession,
+                            pngs: DataFrame): DataFrame = {
     import spark.implicits._
-    pngs.as[(Long, Array[Byte])].mapPartitions { it =>
+    pins.pin(pngs.as[(Long, Array[Byte])].mapPartitions { it =>
       it.map { case (id, bytes) =>
         val img = javax.imageio.ImageIO.read(
           new java.io.ByteArrayInputStream(bytes))
         val (gray, dh) = grayDHash(img)
         (id, gray, dh)
       }
-    }.toDF("media_id", "gray", "dhash").localCheckpoint()
+    }.toDF("media_id", "gray", "dhash"))
   }
 
   /** Banding + exact verify over a pinned feature table: 16-bit-block
@@ -391,15 +371,15 @@ object Multimodal {
     * text near-dup tier. Pairs come from the shared q112 kernel (codec
     * once into a pinned feature table, complete 16-bit-block banding,
     * exact integer verify); components from the q66 label-propagation
-    * engine. Returns (drop set, labels-to-free, feature-pin-to-free).
+    * engine; the feature table and labels are pinned in `pins`.
     * Oracle-exact end to end: pixels are closed-form, PNG lossless,
     * banding complete — DuckDB recomputes the identical pair set from
     * the formula and the identical components by recursive CTE. */
-  private[graft] def imageNearDupDrop(spark: SparkSession, dir: String,
+  private[graft] def imageNearDupDrop(pins: Pins, spark: SparkSession,
+                                      dir: String,
                                       nImg: Int = 100, dupEvery: Int = 10,
                                       side: Int = 16, maxHamming: Int = 3,
-                                      maxDist: Double = 8.0)
-      : (DataFrame, DataFrame, DataFrame) = {
+                                      maxDist: Double = 8.0): DataFrame = {
     import spark.implicits._
     val ids = Tables(spark, dir, "documents")
       .select(col("doc_id")).where(col("doc_id") < nImg).as[Long]
@@ -409,14 +389,12 @@ object Multimodal {
       val fin = if (id % dupEvery == 1) perturbPixel(img) else img
       (id, encodePng(fin))
     }.toDF("media_id", "png")
-    val feat = dHashFeatures(spark, pngs)
+    val feat = dHashFeatures(pins, spark, pngs)
     val pairs = verifiedImagePairs(feat, side, maxHamming, maxDist)
       .select(col("d1").as("src"), col("d2").as("dst"))
-    val labels = graft.dedup.Components.connectedComponents(pairs)
-    val drop = labels
+    pins.own(graft.dedup.Components.connectedComponents(pairs))
       .where(col("comp") =!= col("id"))
       .select(col("id").as("doc_id"))
-    (drop, labels, feat)
   }
 
   /** q69 — frame sampling over the binary payload: every `every`-th
@@ -680,9 +658,7 @@ object Multimodal {
     * WAV PCM is lossless and energies/fingerprint/SAD are integer
     * arithmetic on the closed-form samples, so DuckDB recomputes the
     * identical pair set with no codec — banding completeness is a
-    * theorem, so no recall premise is needed.
-    *
-    * Storage contract: direct localCheckpoint result — caller frees. */
+    * theorem, so no recall premise is needed. */
   /** The synthesized WAV corpus q168 dedups: one clip per low doc id
     * plus a one-sample-perturbed twin every `plantEvery` ids. */
   private def audioCorpus(spark: SparkSession, dir: String, nDocs: Int,
@@ -705,23 +681,20 @@ object Multimodal {
            maxHamming: Int = 1, maxSad: Long = 1000L): DataFrame = {
     require(maxHamming <= 1,
       "8-bit banding over >= 2 bands is complete only for hamming <= 1")
-    val feat = wavFeatures(spark,
-      audioCorpus(spark, dir, nDocs, plantEvery, sr), frame)
-    try {
-      verifiedAudioPairs(feat, frame, maxHamming, maxSad).localCheckpoint()
-    } finally {
-      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(feat)
+    Pins.result { pins =>
+      val feat = wavFeatures(pins, spark,
+        audioCorpus(spark, dir, nDocs, plantEvery, sr), frame)
+      verifiedAudioPairs(feat, frame, maxHamming, maxSad)
     }
   }
 
-  /** (media_id, wav) → PINNED (media_id, n, samples, energy-delta fp)
-    * feature table — the one codec pass both audio near-dup consumers
-    * (q168 and the q172 manifest tier) run once and probe. Caller
-    * frees. */
-  private def wavFeatures(spark: SparkSession, wavs: DataFrame,
+  /** (media_id, wav) → (media_id, n, samples, energy-delta fp) feature
+    * table, pinned in `pins` — the one codec pass both audio near-dup
+    * consumers (q168 and the q172 manifest tier) run once and probe. */
+  private def wavFeatures(pins: Pins, spark: SparkSession, wavs: DataFrame,
                           frame: Int): DataFrame = {
     import spark.implicits._
-    wavs.as[(Long, Array[Byte])].mapPartitions { it =>
+    pins.pin(wavs.as[(Long, Array[Byte])].mapPartitions { it =>
       it.map { case (id, bytes) =>
         val (_, s) = decodeWav(bytes)
         val nFrames = s.length / frame
@@ -742,7 +715,7 @@ object Multimodal {
         }
         (id, s.length, s.map(_.toInt), fp)
       }
-    }.toDF("media_id", "n", "samples", "fp").localCheckpoint()
+    }.toDF("media_id", "n", "samples", "fp"))
   }
 
   /** Banding + exact verify over a pinned audio feature table: 8-bit
@@ -788,15 +761,15 @@ object Multimodal {
     * doc `d−1`'s clip (the "same track re-encoded on a mirror" shape),
     * so audio near-dup clusters contain documents and min-doc_id
     * keepers produce a real drop set. Shared q168 kernel; q66
-    * components. Returns (drop set, labels-to-free, feature-pin).
+    * components; the feature table and labels are pinned in `pins`.
     * Oracle-exact end to end (closed-form samples, lossless PCM,
     * complete banding, recursive-CTE components). */
-  private[graft] def audioNearDupDrop(spark: SparkSession, dir: String,
+  private[graft] def audioNearDupDrop(pins: Pins, spark: SparkSession,
+                                      dir: String,
                                       lo: Long = AudioLo, hi: Long = AudioHi,
                                       dupEvery: Int = 10, frame: Int = 16,
                                       sr: Int = 8000, maxHamming: Int = 1,
-                                      maxSad: Long = 1000L)
-      : (DataFrame, DataFrame, DataFrame) = {
+                                      maxSad: Long = 1000L): DataFrame = {
     import spark.implicits._
     val ids = Tables(spark, dir, "documents")
       .select(col("doc_id"))
@@ -807,14 +780,12 @@ object Multimodal {
       val s = synthPcm(base, n)
       (id, encodeWav(if (id % dupEvery == 6) perturbPcm(s) else s, sr))
     }.toDF("media_id", "wav")
-    val feat = wavFeatures(spark, wavs, frame)
+    val feat = wavFeatures(pins, spark, wavs, frame)
     val pairs = verifiedAudioPairs(feat, frame, maxHamming, maxSad)
       .select(col("d1").as("src"), col("d2").as("dst"))
-    val labels = graft.dedup.Components.connectedComponents(pairs)
-    val drop = labels
+    pins.own(graft.dedup.Components.connectedComponents(pairs))
       .where(col("comp") =!= col("id"))
       .select(col("id").as("doc_id"))
-    (drop, labels, feat)
   }
 
   /** q194 — CAPTION–IMAGE ALIGNMENT GATE (the CLIP-score curation shape,

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Tables
+import graft.core.{Pins, Tables}
 import graft.dedup.Dedup
 import graft.text.TextAnalysis
 
@@ -294,32 +294,21 @@ object Curation {
     * the keep/drop partition is spec-proven equal to driver-side
     * union-find over the same pairs. */
   def q80(spark: SparkSession, dir: String,
-          minShared: Int = 8, maxDocFreq: Int = 20): DataFrame = {
-    val (plan, pins) = q80Dag(spark, dir, minShared, maxDocFreq)
+          minShared: Int = 8, maxDocFreq: Int = 20): DataFrame =
     // consume the vertex-sized label table into the bounded per-source
     // aggregate, checkpoint THAT (one row per source), free the labels —
     // same storage discipline as q66
-    try plan.localCheckpoint()
-    finally pins.foreach(graft.dedup.Components.free)
-  }
-
-  /** q80's plan before the result checkpoint, plus the eager component
-    * labels it reads (eager by Components' contract). Caller frees the
-    * pins. */
-  private[graft] def q80Dag(spark: SparkSession, dir: String,
-      minShared: Int = 8, maxDocFreq: Int = 20)
-      : (DataFrame, Seq[DataFrame]) = {
-    val docs = Tables(spark, dir, "documents")
-    val pairs = Dedup.winnowPairs(spark, dir, minShared, maxDocFreq)
-      .select(col("d1").as("src"), col("d2").as("dst"))
-    // members whose component label differs from their id are dropped;
-    // isolated documents never enter the edge list and are kept
-    val labels = graft.dedup.Components.connectedComponents(pairs)
-    try {
+    Pins.result { pins =>
+      val docs = Tables(spark, dir, "documents")
+      val pairs = Dedup.winnowPairs(spark, dir, minShared, maxDocFreq)
+        .select(col("d1").as("src"), col("d2").as("dst"))
+      // members whose component label differs from their id are dropped;
+      // isolated documents never enter the edge list and are kept
+      val labels = pins.own(graft.dedup.Components.connectedComponents(pairs))
       val drop = labels
         .where(col("comp") =!= col("id"))
         .select(col("id").as("doc_id"), lit(1).as("dropped"))
-      val plan = docs.join(drop, Seq("doc_id"), "left_outer")
+      docs.join(drop, Seq("doc_id"), "left_outer")
         .groupBy(col("source"))
         .agg(
           count(lit(1)).as("n_docs"),
@@ -328,10 +317,7 @@ object Curation {
           (count(lit(1)) - sum(coalesce(col("dropped"), lit(0))))
             .cast(IntegerType).as("n_kept"))
         .orderBy(col("source"))
-      (plan, Seq(labels))
-    } catch { case t: Throwable =>
-      graft.dedup.Components.free(labels); throw t }
-  }
+    }
 
   /** q113 — LINE-level boilerplate removal: the CCNet/RefinedWeb-style
     * dedup stage word-set and passage-fingerprint dedup both miss —
@@ -409,8 +395,7 @@ object Curation {
     * P-row offset table (the only global structure) shifts them to global
     * offsets via a broadcast join. Every task touches ~n/P rows at any
     * corpus size; the single-task q57-style `Window.orderBy` this replaces
-    * would funnel the whole corpus through one reducer. Returns a direct
-    * localCheckpoint ([[pack]]'s storage contract). */
+    * would funnel the whole corpus through one reducer. */
   def q87(spark: SparkSession, dir: String, seqLen: Int = 128): DataFrame =
     pack(spark,
       Tables(spark, dir, "documents")
@@ -420,23 +405,15 @@ object Curation {
 
   /** The q87 packing engine over any `(doc_id, n_tok)` frame (q100 runs
     * it over the CURATED subset): range partition on doc_id, local prefix
-    * sums, P-row broadcast offsets, arithmetic sequence spans.
-    *
-    * Storage contract: the manifest is returned as a DIRECT
-    * localCheckpoint (the caller frees once consumed —
-    * Bridge.freeIfDirectCheckpoint); the internal range-partitioned pass
-    * is pinned only while the manifest materializes, then freed. */
+    * sums, P-row broadcast offsets, arithmetic sequence spans. The
+    * internal range-partitioned pass is pinned only while the manifest
+    * materializes. */
   private[graft] def pack(spark: SparkSession, counts: DataFrame,
-                            seqLen: Int): DataFrame = {
-    val (plan, pin) = packPlan(spark, counts, seqLen)
-    val out = plan.localCheckpoint()
-    org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(pin)
-    out
-  }
+                            seqLen: Int): DataFrame =
+    Pins.result(pins => packPlan(pins, spark, counts, seqLen))
 
-  /** The pack plan BEFORE the result checkpoint, plus the pinned
-    * range-partitioned local pass it correlates on (the caller frees the
-    * pin once the plan is materialized — [[pack]] does).
+  /** The pack plan BEFORE the result checkpoint, over a range-partitioned
+    * local pass pinned in `pins`.
     *
     * The local pass is PINNED (localCheckpoint) because the offsets
     * branch and the join branch both consume it keyed on the physical
@@ -447,8 +424,8 @@ object Curation {
     * divergence between the two branches, start_tok would be wrong with
     * no error). Materializing the pass once makes the pid correlation
     * structural, the same pinned-model move as q104's bigram table. */
-  private[queries] def packPlan(spark: SparkSession, counts: DataFrame,
-                                seqLen: Int): (DataFrame, DataFrame) = {
+  private[queries] def packPlan(pins: Pins, spark: SparkSession,
+                                counts: DataFrame, seqLen: Int): DataFrame = {
     import spark.implicits._
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val tc = counts
@@ -458,11 +435,11 @@ object Curation {
       .as[(Long, Long)]
     // local pass: per-partition prefix sums, order preserved from the range
     // partitioning; no shuffle — pinned for structural pid consistency
-    val local = tc.mapPartitions { it =>
+    val local = pins.pin(tc.mapPartitions { it =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
       var acc = 0L
       it.map { case (id, n) => val before = acc; acc += n; (pid, id, n, before) }
-    }.toDF("pid", "doc_id", "n_tok", "local_before").localCheckpoint()
+    }.toDF("pid", "doc_id", "n_tok", "local_before"))
 
     val totals = local.groupBy(col("pid"))
       .agg(sum(col("n_tok")).as("ptok"))
@@ -474,7 +451,7 @@ object Curation {
             .rowsBetween(Window.unboundedPreceding, -1)),
         lit(0L)).as("offset"))
 
-    val packed = local
+    local
       .join(broadcast(offsets), Seq("pid"))
       .select(col("doc_id"), col("n_tok"),
         (col("offset") + col("local_before")).as("start_tok"))
@@ -487,7 +464,6 @@ object Curation {
       .withColumn("n_seqs",
         (col("last_seq") - col("first_seq") + 1L).cast(LongType))
       .orderBy(col("doc_id"))
-    (packed, local)
   }
 
   /** q88 — source-mix design: per-source token accounting turned into
@@ -581,8 +557,7 @@ object Curation {
     * document: token count, global offset, and the sequence span it
     * lands in. Every stage is the scale shape it reuses; everything is
     * md5/integer-exact, so the whole composition carries a DuckDB
-    * oracle. Returns a direct localCheckpoint ([[pack]]'s storage
-    * contract). */
+    * oracle. */
   def q100(spark: SparkSession, dir: String, seqLen: Int = 128,
            benchMod: Int = 50): DataFrame =
     pack(spark, curatedCounts(spark, dir, benchMod), seqLen)
@@ -634,12 +609,9 @@ object Curation {
     *
     * Scale shape: every stage is the reused 100 TB form — bucketed LSH
     * pair generation, iterated label propagation, one doc_id anti join
-    * folded into the manifest plan. Storage contract: the label table is
-    * consumed into the manifest (slim numeric rows, no text — the
-    * artifact a training run persists anyway), which is checkpointed
-    * eagerly so the labels can be freed before returning; the returned
-    * frame is a DIRECT localCheckpoint the caller frees once consumed
-    * (Bench/Verify do via Bridge.freeIfDirectCheckpoint).
+    * folded into the manifest plan. The label table is consumed into the
+    * manifest (slim numeric rows, no text — the artifact a training run
+    * persists anyway).
     *
     * Oracle-checkable END-TO-END like q100: the verified pair set equals
     * the exact all-pairs shingle-Jaccard pairs whenever LSH recall is 1
@@ -650,44 +622,17 @@ object Curation {
     * min — md5/integer-exact the rest of the way. */
   def q103(spark: SparkSession, dir: String, seqLen: Int = 128,
            benchMod: Int = 50, candidateEst: Double = 0.5,
-           exactThreshold: Double = 0.7): DataFrame = {
-    val (plan, pins) = q103Plan(spark, dir, seqLen, benchMod,
-      candidateEst, exactThreshold)
-    // materialize the manifest BEFORE freeing the state its plan reads
-    val out = plan.localCheckpoint()
-    pins.foreach(graft.dedup.Components.free)
-    out
-  }
-
-  /** The q103 manifest plan BEFORE the result checkpoint, plus the pinned
-    * state it reads — the label table and pack's range-partitioned pass
-    * (the caller frees both once the plan is materialized — q103 does). */
-  private[graft] def q103Plan(spark: SparkSession, dir: String,
-                              seqLen: Int = 128, benchMod: Int = 50,
-                              candidateEst: Double = 0.5,
-                              exactThreshold: Double = 0.7)
-      : (DataFrame, Seq[DataFrame]) = {
-    val (kept, labels) =
-      q103Kept(spark, dir, benchMod, candidateEst, exactThreshold)
-    val (plan, pin) = packPlan(spark, kept, seqLen)
-    (plan, Seq(labels, pin))
-  }
-
-  /** q103's kept `(doc_id, n_tok)` frame (curated set minus near-dup
-    * cluster non-keepers), plus the label table the anti join reads. */
-  private def q103Kept(spark: SparkSession, dir: String, benchMod: Int,
-                       candidateEst: Double, exactThreshold: Double)
-      : (DataFrame, DataFrame) = {
+           exactThreshold: Double = 0.7): DataFrame = Pins.result { pins =>
+    // curated set minus near-dup cluster non-keepers
     val pairs = Dedup
       .minhashVerifiedPairs(spark, dir, candidateEst, exactThreshold)
       .select(col("d1").as("src"), col("d2").as("dst"))
-    val labels = graft.dedup.Components.connectedComponents(pairs)
-    val nearDrop = labels
+    val nearDrop = pins.own(graft.dedup.Components.connectedComponents(pairs))
       .where(col("comp") =!= col("id"))
       .select(col("id").as("doc_id"))
     val kept = curatedCounts(spark, dir, benchMod)
       .join(nearDrop, Seq("doc_id"), "left_anti")
-    (kept, labels)
+    packPlan(pins, spark, kept, seqLen)
   }
 
   /** q159 — the MULTIMODAL training manifest: q100's text curation
@@ -707,31 +652,16 @@ object Curation {
     * integer/md5-exact and banding is pigeonhole-complete, so the WHOLE
     * composition carries a DuckDB oracle (pixels from the closed-form
     * synth formula, components by recursive CTE — no codec, no recall
-    * premise). Storage contract: direct localCheckpoint result; labels,
-    * feature pin, and pack pass freed once it materializes. */
+    * premise). */
   def q159(spark: SparkSession, dir: String, seqLen: Int = 128,
            benchMod: Int = 50, nImg: Int = 100, dupEvery: Int = 10)
-      : DataFrame = {
-    val (plan, pins) = q159Plan(spark, dir, seqLen, benchMod, nImg, dupEvery)
-    val out = plan.localCheckpoint()
-    pins.foreach(graft.dedup.Components.free)
-    out
-  }
-
-  /** The q159 manifest plan BEFORE the result checkpoint, plus the
-    * pinned state it reads (image feature table, label table, pack
-    * pass — caller frees once the plan materializes; q159 does). */
-  private[graft] def q159Plan(spark: SparkSession, dir: String,
-                              seqLen: Int = 128, benchMod: Int = 50,
-                              nImg: Int = 100, dupEvery: Int = 10)
-      : (DataFrame, Seq[DataFrame]) = {
-    val (drop, labels, feat) = graft.multimodal.Multimodal
-      .imageNearDupDrop(spark, dir, nImg, dupEvery)
+      : DataFrame = Pins.result { pins =>
+    val drop = graft.multimodal.Multimodal
+      .imageNearDupDrop(pins, spark, dir, nImg, dupEvery)
     val kept = curatedCounts(spark, dir, benchMod)
       .join(drop, Seq("doc_id"), "left_anti")
-    val (plan, pin) = packPlan(spark, kept, seqLen)
-    val out = plan.withColumn("has_image", col("doc_id") < nImg)
-    (out, Seq(labels, feat, pin))
+    packPlan(pins, spark, kept, seqLen)
+      .withColumn("has_image", col("doc_id") < nImg)
   }
 
   /** q172 — the TRI-MODAL training manifest: q159's text+image
@@ -748,30 +678,24 @@ object Curation {
     * Scale shape: q159's, plus one more doc_id-slim anti join; both
     * codec passes are pinned once and freed. Every tier is
     * integer/md5-exact with complete banding, so the WHOLE tri-modal
-    * composition carries a DuckDB oracle. Storage contract: direct
-    * localCheckpoint result; labels, feature pins, pack pass freed. */
+    * composition carries a DuckDB oracle. */
   def q172(spark: SparkSession, dir: String, seqLen: Int = 128,
            benchMod: Int = 50, nImg: Int = 100, dupEvery: Int = 10,
            audioLo: Long = graft.multimodal.Multimodal.AudioLo,
            audioHi: Long = graft.multimodal.Multimodal.AudioHi)
-      : DataFrame = {
-    val (iDrop, iLabels, iFeat) = graft.multimodal.Multimodal
-      .imageNearDupDrop(spark, dir, nImg, dupEvery)
-    val (aDrop, aLabels, aFeat) = graft.multimodal.Multimodal
-      .audioNearDupDrop(spark, dir, audioLo, audioHi)
+      : DataFrame = Pins.result { pins =>
+    val iDrop = graft.multimodal.Multimodal
+      .imageNearDupDrop(pins, spark, dir, nImg, dupEvery)
+    val aDrop = graft.multimodal.Multimodal
+      .audioNearDupDrop(pins, spark, dir, audioLo, audioHi)
     val kept = curatedCounts(spark, dir, benchMod)
       .join(iDrop, Seq("doc_id"), "left_anti")
       .join(aDrop, Seq("doc_id"), "left_anti")
-    val (plan, pin) = packPlan(spark, kept, seqLen)
-    val out = plan
+    packPlan(pins, spark, kept, seqLen)
       .withColumn("has_image", col("doc_id") < nImg)
       // same lo/hi the drop tier actually used — one definition
       .withColumn("has_audio",
         col("doc_id") >= audioLo && col("doc_id") < audioHi)
-      .localCheckpoint()
-    Seq(iLabels, iFeat, aLabels, aFeat, pin)
-      .foreach(graft.dedup.Components.free)
-    out
   }
 
   /** q175 — LEAK-PROOF SPLIT ASSIGNMENT: train/val/test splits where a
@@ -795,38 +719,24 @@ object Curation {
     * the spec-asserted LSH-recall-1 premise (the q66 oracle), then the
     * identical md5 rule. SplitSpec proves the leak-proof property AND
     * its non-vacuity: on this fixture a doc-level md5 split DOES
-    * straddle at least one real cluster. Storage: direct checkpoint,
-    * labels freed. */
-  def q175(spark: SparkSession, dir: String): DataFrame = {
-    val (plan, pins) = q175Dag(spark, dir)
-    try plan.localCheckpoint()
-    finally pins.foreach(graft.dedup.Components.free)
-  }
-
-  /** q175's plan before the result checkpoint, plus the eager component
-    * labels it reads. Caller frees the pins. */
-  private[graft] def q175Dag(spark: SparkSession, dir: String)
-      : (DataFrame, Seq[DataFrame]) = {
+    * straddle at least one real cluster. */
+  def q175(spark: SparkSession, dir: String): DataFrame = Pins.result { pins =>
     val docs = Tables(spark, dir, "documents")
       .select(col("doc_id").cast(LongType),
         size(TextAnalysis.toks(col("text"))).cast(LongType).as("n_tok"))
     val pairs = Dedup.minhashVerifiedPairs(spark, dir, 0.5, 0.7)
       .select(col("d1").as("src"), col("d2").as("dst"))
-    val labels = graft.dedup.Components.connectedComponents(pairs)
-    try {
-      val withComp = docs
-        .join(labels.select(col("id").as("doc_id"), col("comp")),
-          Seq("doc_id"), "left_outer")
-        .withColumn("comp", coalesce(col("comp"), col("doc_id")))
-      val plan = withComp.withColumn("split", splitOfComp(col("comp")))
-        .groupBy(col("split"))
-        .agg(countDistinct(col("comp")).cast(LongType).as("n_clusters"),
-          count(lit(1)).as("n_docs"),
-          sum(col("n_tok")).cast(LongType).as("tot_tok"))
-        .orderBy(col("split"))
-      (plan, Seq(labels))
-    } catch { case t: Throwable =>
-      graft.dedup.Components.free(labels); throw t }
+    val labels = pins.own(graft.dedup.Components.connectedComponents(pairs))
+    val withComp = docs
+      .join(labels.select(col("id").as("doc_id"), col("comp")),
+        Seq("doc_id"), "left_outer")
+      .withColumn("comp", coalesce(col("comp"), col("doc_id")))
+    withComp.withColumn("split", splitOfComp(col("comp")))
+      .groupBy(col("split"))
+      .agg(countDistinct(col("comp")).cast(LongType).as("n_clusters"),
+        count(lit(1)).as("n_docs"),
+        sum(col("n_tok")).cast(LongType).as("tot_tok"))
+      .orderBy(col("split"))
   }
 
   /** The q175 split rule for a cluster-representative (or doc) id:
@@ -855,62 +765,49 @@ object Curation {
     * BY CONSTRUCTION, so the range partitions are balanced regardless of
     * doc_id clustering — per-partition linear accumulation, P-row
     * broadcast offset table. No partition-less data window at any
-    * corpus size.
-    *
-    * Storage contract: direct localCheckpoint result, internal pass
-    * pinned only until the result materializes ([[pack]] note). */
-  def q115(spark: SparkSession, dir: String, seqLen: Int = 128): DataFrame = {
-    val (plan, pin) = q115Plan(spark, dir, seqLen)
-    val out = plan.localCheckpoint()
-    org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(pin)
-    out
-  }
-
-  /** The q115 packing plan BEFORE the result checkpoint, plus the pinned
-    * range-partitioned pass it correlates on ([[packPlan]] rationale). */
-  private[graft] def q115Plan(spark: SparkSession, dir: String,
-                              seqLen: Int = 128): (DataFrame, DataFrame) = {
-    import spark.implicits._
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val keyed = Tables(spark, dir, "documents")
-      .select(col("doc_id").cast(LongType),
-        size(TextAnalysis.toks(col("text"))).cast(LongType).as("n_tok"))
-      .where(col("n_tok") > 0)
-      .select(md5(col("doc_id").cast(StringType)).as("shuffle_key"),
-        col("doc_id"), col("n_tok"))
-      .repartitionByRange(p, col("shuffle_key"))
-      .sortWithinPartitions(col("shuffle_key"))
-      .as[(String, Long, Long)]
-    val local = keyed.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      var acc = 0L
-      it.map { case (k, id, n) =>
-        val before = acc; acc += n; (pid, k, id, n, before)
-      }
-    }.toDF("pid", "shuffle_key", "doc_id", "n_tok", "local_before")
-      .localCheckpoint()
-    val offsets = local.groupBy(col("pid"))
-      .agg(sum(col("n_tok")).as("ptok"))
-      .select(col("pid"),
-        coalesce(
-          sum(col("ptok")).over(
-            Window.orderBy(col("pid"))
-              .rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)).as("offset"))
-    val packed = local
-      .join(broadcast(offsets), Seq("pid"))
-      .select(col("doc_id"), col("n_tok"), col("shuffle_key"),
-        (col("offset") + col("local_before")).as("start_tok"))
-      .select(
-        col("doc_id"), col("n_tok"), col("shuffle_key"), col("start_tok"),
-        expr(s"start_tok div $seqLen").cast(LongType).as("first_seq"),
-        expr(s"(start_tok + n_tok - 1) div $seqLen").cast(LongType)
-          .as("last_seq"))
-      .withColumn("n_seqs",
-        (col("last_seq") - col("first_seq") + 1L).cast(LongType))
-      .orderBy(col("shuffle_key"))
-    (packed, local)
-  }
+    * corpus size. The local pass is pinned for the [[packPlan]]
+    * reason. */
+  def q115(spark: SparkSession, dir: String, seqLen: Int = 128): DataFrame =
+    Pins.result { pins =>
+      import spark.implicits._
+      val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      val keyed = Tables(spark, dir, "documents")
+        .select(col("doc_id").cast(LongType),
+          size(TextAnalysis.toks(col("text"))).cast(LongType).as("n_tok"))
+        .where(col("n_tok") > 0)
+        .select(md5(col("doc_id").cast(StringType)).as("shuffle_key"),
+          col("doc_id"), col("n_tok"))
+        .repartitionByRange(p, col("shuffle_key"))
+        .sortWithinPartitions(col("shuffle_key"))
+        .as[(String, Long, Long)]
+      val local = pins.pin(keyed.mapPartitions { it =>
+        val pid = org.apache.spark.TaskContext.getPartitionId()
+        var acc = 0L
+        it.map { case (k, id, n) =>
+          val before = acc; acc += n; (pid, k, id, n, before)
+        }
+      }.toDF("pid", "shuffle_key", "doc_id", "n_tok", "local_before"))
+      val offsets = local.groupBy(col("pid"))
+        .agg(sum(col("n_tok")).as("ptok"))
+        .select(col("pid"),
+          coalesce(
+            sum(col("ptok")).over(
+              Window.orderBy(col("pid"))
+                .rowsBetween(Window.unboundedPreceding, -1)),
+            lit(0L)).as("offset"))
+      local
+        .join(broadcast(offsets), Seq("pid"))
+        .select(col("doc_id"), col("n_tok"), col("shuffle_key"),
+          (col("offset") + col("local_before")).as("start_tok"))
+        .select(
+          col("doc_id"), col("n_tok"), col("shuffle_key"), col("start_tok"),
+          expr(s"start_tok div $seqLen").cast(LongType).as("first_seq"),
+          expr(s"(start_tok + n_tok - 1) div $seqLen").cast(LongType)
+            .as("last_seq"))
+        .withColumn("n_seqs",
+          (col("last_seq") - col("first_seq") + 1L).cast(LongType))
+        .orderBy(col("shuffle_key"))
+    }
 
   /** q116 — SEQUENCE COMPOSITION MANIFEST: the data-loader index a
     * training run actually reads. q87 accounts per DOCUMENT (which
@@ -927,18 +824,15 @@ object Curation {
     * offsets (no partition-less window at any corpus size); the
     * slice explosion is a map-only `sequence`/`explode` whose output is
     * ~(total_tokens/seqLen + n_docs) rows — the artifact itself, not a
-    * blow-up. Storage contract: direct localCheckpoint result, internal
-    * pass freed once the result materializes ([[pack]] note). */
-  def q116(spark: SparkSession, dir: String, seqLen: Int = 128): DataFrame = {
-    val (plan, pin) = packPlan(spark,
-      Tables(spark, dir, "documents")
-        .select(col("doc_id").cast(LongType),
-          size(TextAnalysis.toks(col("text"))).cast(LongType).as("n_tok")),
-      seqLen)
-    val out = seqManifest(plan, seqLen).localCheckpoint()
-    org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(pin)
-    out
-  }
+    * blow-up. */
+  def q116(spark: SparkSession, dir: String, seqLen: Int = 128): DataFrame =
+    Pins.result { pins =>
+      seqManifest(packPlan(pins, spark,
+        Tables(spark, dir, "documents")
+          .select(col("doc_id").cast(LongType),
+            size(TextAnalysis.toks(col("text"))).cast(LongType).as("n_tok")),
+        seqLen), seqLen)
+    }
 
   /** The doc-span → per-sequence slice inversion over any [[pack]]
     * output: pure per-row arithmetic + a bounded `sequence` explode
@@ -974,27 +868,14 @@ object Curation {
     * every scored doc has `n_tok = n_bigrams + 1` — no second tokenize.
     * Unscoreable (< 2 token) docs are not selectable, by design.
     *
-    * Storage contract: the selected set (budget-bounded) is returned as
-    * a DIRECT localCheckpoint the caller frees; the range-partitioned
-    * local pass is pinned while it materializes, then freed — the same
-    * structural pid-consistency move as [[packPlan]] (the offsets branch
+    * The range-partitioned local pass is pinned while the budget-bounded
+    * selection materializes — the same structural pid-consistency move
+    * as [[packPlan]] (the offsets branch
     * and the join branch must see ONE physical partitioning, not two
     * independently-sampled range exchanges held together by
     * ReusedExchange). */
   def q107(spark: SparkSession, dir: String,
-           budgetTokens: Long = 10000L): DataFrame = {
-    val (plan, pin) = q107Plan(spark, dir, budgetTokens)
-    val out = plan.localCheckpoint()
-    org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(pin)
-    out
-  }
-
-  /** The q107 selection plan BEFORE the result checkpoint, plus the
-    * pinned range-partitioned pass it correlates on (the caller frees
-    * the pin once the plan is materialized — q107 does). */
-  private[graft] def q107Plan(spark: SparkSession, dir: String,
-                              budgetTokens: Long = 10000L)
-      : (DataFrame, DataFrame) = {
+           budgetTokens: Long = 10000L): DataFrame = Pins.result { pins =>
     import spark.implicits._
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val scored = Ranking.q94(spark, dir)
@@ -1003,14 +884,13 @@ object Curation {
       .repartitionByRange(p, col("nll"), col("doc_id"))
       .sortWithinPartitions(col("nll"), col("doc_id"))
       .as[(Long, Double, Long)]
-    val local = scored.mapPartitions { it =>
+    val local = pins.pin(scored.mapPartitions { it =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
       var acc = 0L
       it.map { case (id, nll, n) =>
         val before = acc; acc += n; (pid, id, nll, n, before)
       }
-    }.toDF("pid", "doc_id", "nll", "n_tok", "local_before")
-      .localCheckpoint()
+    }.toDF("pid", "doc_id", "nll", "n_tok", "local_before"))
     val offsets = local.groupBy(col("pid"))
       .agg(sum(col("n_tok")).as("ptok"))
       .select(col("pid"),
@@ -1019,13 +899,12 @@ object Curation {
             Window.orderBy(col("pid"))
               .rowsBetween(Window.unboundedPreceding, -1)),
           lit(0L)).as("offset"))
-    val selected = local
+    local
       .join(broadcast(offsets), Seq("pid"))
       .select(col("doc_id"), col("nll"), col("n_tok"),
         (col("offset") + col("local_before")).as("start_tok"))
       .where(col("start_tok") < budgetTokens)
       .orderBy(col("nll"), col("doc_id"))
-    (selected, local)
   }
 
   /** q110 — the INCREMENTAL training-set manifest: what an ingest batch
@@ -1052,8 +931,7 @@ object Curation {
     * the two probes (bloom-pruned fp join, n-gram contamination join),
     * each keyed on small fixed-width values. md5/integer-exact end to
     * end, so the whole composition carries a DuckDB oracle; the kept set
-    * is spec-proven equal to q90's `new` ∩ quality ∩ decontaminated.
-    * Returns a direct localCheckpoint ([[pack]]'s storage contract). */
+    * is spec-proven equal to q90's `new` ∩ quality ∩ decontaminated. */
   def q110(spark: SparkSession, dir: String, seqLen: Int = 128,
            benchMod: Int = 50, mod: Int = 10, lt: Int = 7): DataFrame =
     pack(spark, q110Counts(spark, dir, benchMod, mod, lt), seqLen)
@@ -1142,14 +1020,9 @@ object Curation {
     * corpus-scale shuffle: ONE bounded aggregate over the doc-count-sized
     * layout table); the two ratios are final divisions with the q101
     * zero-denominator guard, rounded to 6. Consumes q87's direct
-    * checkpoint and frees it once the 1-row card is checkpointed (the
-    * q80 storage pattern). */
-  def q123(spark: SparkSession, dir: String, seqLen: Int = 128): DataFrame = {
-    val packed = q87(spark, dir, seqLen)
-    val out = q123Summary(packed, seqLen).localCheckpoint()
-    org.apache.spark.sql.graftbridge.Bridge.freeIfDirectCheckpoint(packed)
-    out
-  }
+    * checkpoint, freed once the 1-row card is checkpointed. */
+  def q123(spark: SparkSession, dir: String, seqLen: Int = 128): DataFrame =
+    Pins.result(pins => q123Summary(pins.own(q87(spark, dir, seqLen)), seqLen))
 
   /** The q123 efficiency aggregate over a packed frame. */
   private def q123Summary(packed: DataFrame, seqLen: Int): DataFrame =
@@ -1334,82 +1207,78 @@ object Curation {
     *
     * Output: the per-source receipt (size, quota, picked count, boundary
     * hash). n_sampled ≡ quota by construction — asserted, not assumed,
-    * in SampleSpec. STORAGE CONTRACT: direct localCheckpoint result —
-    * caller frees; the internal local pass is pinned while both its
-    * consumers materialize, then freed. */
-  def q208(spark: SparkSession, dir: String, pct: Int = 10): DataFrame = {
-    import spark.implicits._
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val docs = Tables(spark, dir, "documents")
-      .select(col("source"), col("doc_id"),
-        md5(col("doc_id").cast(StringType)).as("h"))
+    * in SampleSpec. The internal local pass is pinned while both its
+    * consumers materialize. */
+  def q208(spark: SparkSession, dir: String, pct: Int = 10): DataFrame =
+    Pins.result { pins =>
+      import spark.implicits._
+      val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      val docs = Tables(spark, dir, "documents")
+        .select(col("source"), col("doc_id"),
+          md5(col("doc_id").cast(StringType)).as("h"))
 
-    // 1. Hamilton apportionment over the (bounded) stratum ledger
-    val sizes = docs.groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
-    val tot = sizes.agg(sum(col("n_docs")).as("n_total"),
-      expr(s"(SUM(n_docs) * $pct) DIV 100").as("target"))
-    val alloc = sizes.crossJoin(broadcast(tot))
-      .select(col("source"), col("n_docs"), col("target"),
-        expr("(target * n_docs) DIV n_total").as("base"),
-        expr("(target * n_docs) % n_total").as("rem"))
-    val wRem = Window.orderBy(col("rem").desc, col("source"))
-    val wAll = Window.partitionBy(lit(1))
-    val quotas = alloc
-      .select(col("source"), col("n_docs"), col("base"),
-        row_number().over(wRem).as("seat"),
-        (col("target") - sum(col("base")).over(wAll)).as("extra"))
-      .select(col("source"), col("n_docs"),
-        (col("base") + when(col("seat") <= col("extra"), 1L).otherwise(0L))
-          .as("quota"))
+      // 1. Hamilton apportionment over the (bounded) stratum ledger
+      val sizes = docs.groupBy(col("source")).agg(count(lit(1)).as("n_docs"))
+      val tot = sizes.agg(sum(col("n_docs")).as("n_total"),
+        expr(s"(SUM(n_docs) * $pct) DIV 100").as("target"))
+      val alloc = sizes.crossJoin(broadcast(tot))
+        .select(col("source"), col("n_docs"), col("target"),
+          expr("(target * n_docs) DIV n_total").as("base"),
+          expr("(target * n_docs) % n_total").as("rem"))
+      val wRem = Window.orderBy(col("rem").desc, col("source"))
+      val wAll = Window.partitionBy(lit(1))
+      val quotas = alloc
+        .select(col("source"), col("n_docs"), col("base"),
+          row_number().over(wRem).as("seat"),
+          (col("target") - sum(col("base")).over(wAll)).as("extra"))
+        .select(col("source"), col("n_docs"),
+          (col("base") + when(col("seat") <= col("extra"), 1L).otherwise(0L))
+            .as("quota"))
 
-    // 2. two-pass within-stratum rank (no per-stratum global window).
-    // The local pass is PINNED before branching: the offsets aggregate
-    // and the rank join both consume it keyed on the physical partition
-    // id, and two independently-executed range exchanges could sample
-    // different boundaries — materializing once makes the pid
-    // correlation structural (the q87/q193 prefix-engine move) instead
-    // of a ReuseExchange reliance (ADVICE r10).
-    val local = docs
-      .repartitionByRange(p, col("source"), col("h"), col("doc_id"))
-      .sortWithinPartitions(col("source"), col("h"), col("doc_id"))
-      .as[(String, Long, String)]
-      .mapPartitions { it =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        var cur: String = null
-        var idx = 0L
-        it.map { case (src, id, h) =>
-          if (src != cur) { cur = src; idx = 0L }
-          val out = (pid, src, id, h, idx)
-          idx += 1L
-          out
-        }
-      }.toDF("pid", "source", "doc_id", "h", "local_idx")
-      .localCheckpoint()
-    val offsets = local.groupBy(col("pid"), col("source"))
-      .agg(count(lit(1)).as("c"))
-      .select(col("pid"), col("source"),
-        coalesce(
-          sum(col("c")).over(Window.partitionBy(col("source"))
-            .orderBy(col("pid"))
-            .rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)).as("offset"))
-    val sampled = local
-      .join(broadcast(offsets), Seq("pid", "source"))
-      .select(col("source"), col("h"),
-        (col("offset") + col("local_idx")).as("rk"))
-      .join(broadcast(quotas.select(col("source"), col("quota"))),
-        Seq("source"))
-      .where(col("rk") < col("quota"))
+      // 2. two-pass within-stratum rank (no per-stratum global window).
+      // The local pass is PINNED before branching: the offsets aggregate
+      // and the rank join both consume it keyed on the physical partition
+      // id, and two independently-executed range exchanges could sample
+      // different boundaries — materializing once makes the pid
+      // correlation structural (the q87/q193 prefix-engine move) instead
+      // of a ReuseExchange reliance (ADVICE r10).
+      val local = pins.pin(docs
+        .repartitionByRange(p, col("source"), col("h"), col("doc_id"))
+        .sortWithinPartitions(col("source"), col("h"), col("doc_id"))
+        .as[(String, Long, String)]
+        .mapPartitions { it =>
+          val pid = org.apache.spark.TaskContext.getPartitionId()
+          var cur: String = null
+          var idx = 0L
+          it.map { case (src, id, h) =>
+            if (src != cur) { cur = src; idx = 0L }
+            val out = (pid, src, id, h, idx)
+            idx += 1L
+            out
+          }
+        }.toDF("pid", "source", "doc_id", "h", "local_idx"))
+      val offsets = local.groupBy(col("pid"), col("source"))
+        .agg(count(lit(1)).as("c"))
+        .select(col("pid"), col("source"),
+          coalesce(
+            sum(col("c")).over(Window.partitionBy(col("source"))
+              .orderBy(col("pid"))
+              .rowsBetween(Window.unboundedPreceding, -1)),
+            lit(0L)).as("offset"))
+      val sampled = local
+        .join(broadcast(offsets), Seq("pid", "source"))
+        .select(col("source"), col("h"),
+          (col("offset") + col("local_idx")).as("rk"))
+        .join(broadcast(quotas.select(col("source"), col("quota"))),
+          Seq("source"))
+        .where(col("rk") < col("quota"))
 
-    val receipt = sampled.groupBy(col("source"))
-      .agg(count(lit(1)).as("n_sampled"), max(col("h")).as("last_hash"))
-    val out = quotas.join(receipt, Seq("source"), "left_outer")
-      .select(col("source"), col("n_docs"), col("quota"),
-        coalesce(col("n_sampled"), lit(0L)).as("n_sampled"),
-        col("last_hash"))
-      .orderBy(col("source"))
-      .localCheckpoint() // direct-checkpoint contract; caller frees
-    org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(local)
-    out
-  }
+      val receipt = sampled.groupBy(col("source"))
+        .agg(count(lit(1)).as("n_sampled"), max(col("h")).as("last_hash"))
+      quotas.join(receipt, Seq("source"), "left_outer")
+        .select(col("source"), col("n_docs"), col("quota"),
+          coalesce(col("n_sampled"), lit(0L)).as("n_sampled"),
+          col("last_hash"))
+        .orderBy(col("source"))
+    }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Tables
+import graft.core.{Pins, Tables}
 import graft.dedup.Dedup
 
 /** Erasure against STANDING INCREMENTAL STATE — the capability gap between
@@ -77,20 +77,13 @@ object Erasure {
     * the observable face of the right to be forgotten (a re-submission
     * of forgotten content is new content). Scale shape: q90's — one
     * fp-keyed shuffle probe of the store, batch-scale everything else;
-    * the erasure itself is a broadcast anti-join on the request.
-    * STORAGE CONTRACT: direct localCheckpoint result — caller frees. */
+    * the erasure itself is a broadcast anti-join on the request. */
   def q220(spark: SparkSession, dir: String, mod: Int = 10, lt: Int = 7,
-           modK: Long = 10L): DataFrame = {
+           modK: Long = 10L): DataFrame = Pins.result { pins =>
     val fp = Dedup.wordSets(spark, dir)
       .select(col("doc_id"), md5(array_join(col("words"), " ")).as("fp"))
     // the standing HOLDER-KEYED store — pinned, as a deployment persists it
-    val ledger = fp.where(col("doc_id") % mod < lt).localCheckpoint()
-    try q220From(ledger, fp, mod, lt, modK).localCheckpoint()
-    finally B.unpersistLocalCheckpoint(ledger)
-  }
-
-  private def q220From(ledger: DataFrame, fp: DataFrame, mod: Int,
-      lt: Int, modK: Long): DataFrame = {
+    val ledger = pins.pin(fp.where(col("doc_id") % mod < lt))
     val erased = ledger.where(isErased(col("doc_id"), modK))
       .select(col("doc_id"))
     q220Serve(ledger,
@@ -141,19 +134,18 @@ object Erasure {
     * second corpus pass. Batch-face labeling (`neardup_batch`) is
     * erasure-independent. Scale shape: q106's — banded candidates,
     * exact per-candidate verify, never all-pairs; the erasure adds one
-    * broadcast anti-join. STORAGE CONTRACT: direct localCheckpoint
-    * result — caller frees. */
+    * broadcast anti-join. */
   def q221(spark: SparkSession, dir: String, mod: Int = 10, lt: Int = 7,
-           modK: Long = 10L, exactThreshold: Double = 0.7): DataFrame = {
-    val isCorpus = col("doc_id") % mod < lt
-    val sets = Dedup.shingleHashes(spark, dir)
-    val banded = Dedup.bandedSignatures(Dedup.minhashSignatures(sets))
-    // the standing bucket table a deployment persists between ingests
-    val corpusBands = banded.where(isCorpus).localCheckpoint()
-    try q221From(spark, dir, sets, banded, corpusBands, mod, lt, modK,
-        exactThreshold).localCheckpoint()
-    finally B.unpersistLocalCheckpoint(corpusBands)
-  }
+           modK: Long = 10L, exactThreshold: Double = 0.7): DataFrame =
+    Pins.result { pins =>
+      val isCorpus = col("doc_id") % mod < lt
+      val sets = Dedup.shingleHashes(spark, dir)
+      val banded = Dedup.bandedSignatures(Dedup.minhashSignatures(sets))
+      // the standing bucket table a deployment persists between ingests
+      val corpusBands = pins.pin(banded.where(isCorpus))
+      q221From(spark, dir, sets, banded, corpusBands, mod, lt, modK,
+        exactThreshold)
+    }
 
   private def q221From(spark: SparkSession, dir: String, sets: DataFrame,
       banded: DataFrame, corpusBands: DataFrame, mod: Int, lt: Int,
@@ -234,25 +226,20 @@ object Erasure {
     *    cap, always under).
     *
     * Returns (postings, df, pairs) for the erased standing state, each
-    * PINNED — the caller frees all three. EraseStateSpec proves pairs
+    * materialized by `pin` (a scope's `pins.pin`, or `identity` for a
+    * plan that is written out once). EraseStateSpec proves pairs
     * equals the from-scratch [[GraphRank.rarePairsOf]] on the surviving
     * postings, shared-counts included. */
   private[queries] def eraseStandingPairs(basePost: DataFrame,
       dfBase: DataFrame, basePairs: DataFrame, erased: DataFrame,
-      maxDf: Int, minShared: Int, pin: Boolean = true)
+      maxDf: Int, minShared: Int, pin: DataFrame => DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
-    // a throw between the ePost/eDf/ePairs pins must not leak the ones
-    // already created (the q248Build leak guard, ADVICE r12)
-    val created = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def cp(df: DataFrame): DataFrame =
-      if (pin) { val c = df.localCheckpoint(); created += c; c } else df
-    try {
-    val ePost = cp(basePost
+    val ePost = pin(basePost
       .join(broadcast(erased), Seq("doc_id"), "left_anti"))
     val touched = basePost
       .join(broadcast(erased), Seq("doc_id"), "left_semi")
       .groupBy(col("gram")).agg(count(lit(1)).as("n_gone"))
-    val eDf = cp(dfBase.join(touched, Seq("gram"), "left_outer")
+    val eDf = pin(dfBase.join(touched, Seq("gram"), "left_outer")
       .select(col("gram"),
         (col("df_base") - coalesce(col("n_gone"), lit(0L))).as("df_base"))
       .where(col("df_base") > 0L))
@@ -290,11 +277,8 @@ object Erasure {
       .select(col("d1"), col("d2"),
         (col("gain") + coalesce(col("old_shared"), lit(0L))).as("shared"))
       .where(col("shared") >= minShared)
-    val ePairs = cp(keptUpd.unionByName(newPairs))
+    val ePairs = pin(keptUpd.unionByName(newPairs))
     (ePost, eDf, ePairs)
-    } catch { case t: Throwable =>
-      created.foreach(B.unpersistLocalCheckpoint(_)); throw t
-    }
   }
 
   /** q223 — ERASE FROM THE STANDING GRAPH + LPA LABELS, then ingest.
@@ -323,14 +307,11 @@ object Erasure {
     * procedure (warm start ≠ re-seeding, the q218 convention) and the
     * DuckDB oracle replays it from scratch — legitimate because
     * EraseStateSpec proves the erased graph equals the from-scratch
-    * build. STORAGE CONTRACT: direct localCheckpoint result — caller
-    * frees. */
+    * build. */
   def q223(spark: SparkSession, dir: String, baseRounds: Int = 5,
            incrRounds: Int = 3, maxDf: Int = 3, minShared: Int = 3,
-           modK: Long = 7L): DataFrame = {
-    val docs = Tables(spark, dir, "documents")
-    val base = docs.where(col("doc_id") % 10 < 7)
-    val batch = docs.where(col("doc_id") % 10 >= 7)
+           modK: Long = 7L): DataFrame = Pins.scope { pins =>
+    val base = Tables(spark, dir, "documents").where(col("doc_id") % 10 < 7)
     // ---- standing state (persists between ingests; the q218 shape,
     //      process-pinned via the StandingState registry — never freed) ----
     val (basePost, dfBase, basePairs) =
@@ -338,11 +319,11 @@ object Erasure {
     val baseLabels =
       GraphRank.lpaStanding(spark, dir, baseRounds, maxDf, minShared)
     // ---- the erasure round (request-scale) ----
-    val erased = base.select(col("doc_id"))
-      .where(isErased(col("doc_id"), modK)).localCheckpoint()
+    val erased = pins.pin(base.select(col("doc_id"))
+      .where(isErased(col("doc_id"), modK)))
     val (ePost, eDf, ePairs) =
       eraseStandingPairs(basePost, dfBase, basePairs, erased, maxDf,
-        minShared)
+        minShared, pins.pin)
     val eLabels = baseLabels
       .join(broadcast(erased), Seq("doc_id"), "left_anti")
       .join(broadcast(erased.select(col("doc_id").as("label"))
@@ -350,32 +331,10 @@ object Erasure {
       .select(col("doc_id"),
         when(col("lbl_gone").isNotNull, col("doc_id"))
           .otherwise(col("label")).as("label"))
-    // ---- the next ingest over the ERASED state (the q218 leg) ----
-    val batchPost = Ranking.gramCountsOf(batch)
-      .select(col("doc_id"), col("gram")).localCheckpoint()
-    val fullEdges = GraphRank.edgesFromPairs(
-      GraphRank.deltaFullPairs(ePost, eDf, ePairs, batchPost, maxDf,
-        minShared))
-    val warm = fullEdges.select(col("src").as("doc_id")).distinct()
-      .join(eLabels.select(col("doc_id"), col("label").as("bl")),
-        Seq("doc_id"), "left_outer")
-      .select(col("doc_id"), coalesce(col("bl"), col("doc_id")).as("label"))
-    val labels = GraphRank.lpaIterate(fullEdges, warm, incrRounds)
-    try {
-      val sizes = labels.groupBy(col("label").as("community"))
-        .agg(count(lit(1)).as("csize"))
-      labels
-        .join(sizes, col("label") === col("community"))
-        .select(col("doc_id"), col("community"), col("csize"),
-          (col("doc_id") % 10 >= 7).as("is_batch"))
-        .orderBy(col("doc_id"))
-        .localCheckpoint()
-    } finally {
-      // standing pins (basePost/dfBase/basePairs/baseLabels) are registry-
-      // owned; only the per-invocation erasure + ingest pins are freed
-      Seq(labels, fullEdges, batchPost, ePairs, eDf, ePost, erased)
-        .foreach(B.unpersistLocalCheckpoint(_))
-    }
+    // ---- the next ingest over the ERASED state (the q218 leg; the
+    //      erasure pins above live until its result materializes) ----
+    GraphRank.lpaIngestFrom(spark, dir, ePost, eDf, ePairs, eLabels,
+      incrRounds, maxDf, minShared)
   }
 
   /** q248 — ERASE FROM THE CF STANDING STATE (VERDICT r11 #3), then
@@ -393,7 +352,7 @@ object Erasure {
     *  - the basket table drops the subjects' rows (broadcast anti).
     *
     * Then the NEXT batch ingests against the ERASED state — q244's leg
-    * verbatim ([[Recommend.ingestDag]]), which yields the CF tier's
+    * verbatim ([[Recommend.ingestLedger]]), which yields the CF tier's
     * resurrection face: an erased customer's new purchases are all
     * novel with full admission room, and a pair erased to 0 can be
     * RE-BORN with co_after = its ingest delta alone (the q220
@@ -404,27 +363,9 @@ object Erasure {
     * baskets and that the decrement identity is non-vacuous both ways
     * (pairs gone AND pairs surviving a decrement); the oracle is the
     * independent monolithic form (pair counts over the erased∪admitted
-    * sets). STORAGE CONTRACT: direct localCheckpoint result — caller
-    * frees. */
+    * sets). */
   def q248(spark: SparkSession, dir: String, cap: Int = 256,
-           modK: Long = 10L): DataFrame = {
-    val (plan, pins) = q248Build(spark, dir, cap, modK)
-    try plan.localCheckpoint()
-    finally pins.foreach(B.unpersistLocalCheckpoint(_))
-  }
-
-  private def q248Build(spark: SparkSession, dir: String, cap: Int,
-      modK: Long): (DataFrame, Seq[DataFrame]) = {
-    // pins created so far — freed on ANY throw during the remaining
-    // plan assembly, so a failed build can never leak checkpoints
-    // (ADVICE r12; the pre-diff q225 freed its pins in-function)
-    val created = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def cp(df: DataFrame, partCols: Seq[String], sortCols: Seq[String])
-        : DataFrame = {
-      val c = B.checkpointPartitioned(df, partCols, sortCols)
-      created += c; c
-    }
-    try {
+           modK: Long = 10L): DataFrame = Pins.result { pins =>
     // ---- standing state (q244's registry pins; q247 is the durable
     //      face) — never freed here ----
     val (base, coBase) = Recommend.cfStanding(spark, dir, cap)
@@ -436,10 +377,11 @@ object Erasure {
         col("a.c") === col("b.c") && col("a.p") < col("b.p"))
       .groupBy(col("a.p").as("p1"), col("b.p").as("p2"))
       .agg(count(lit(1)).as("dec"))
-    val eTouched = cp(coBase.join(dec, Seq("p1", "p2"))
-      .select(col("p1"), col("p2"), col("co_base").as("eb"),
-        (col("co_base") - col("dec")).as("ee")),
-      Seq("p1", "p2"), Seq("p1", "p2"))
+    val eTouched = pins.own(B.checkpointPartitioned(
+      coBase.join(dec, Seq("p1", "p2"))
+        .select(col("p1"), col("p2"), col("co_base").as("eb"),
+          (col("co_base") - col("dec")).as("ee")),
+      Seq("p1", "p2"), Seq("p1", "p2")))
     // the erased standing state the ingest runs against — eBase stays
     // an UN-pinned broadcast-anti filter over the pinned base scan
     // (each of its three consumers re-runs a map-side filter, cheaper
@@ -457,9 +399,8 @@ object Erasure {
         (col("co_base") - coalesce(col("dec"), lit(0L))).as("co_base"))
       .where(col("co_base") > 0)
     // ---- the next ingest over the ERASED state (q244's leg) ----
-    val (ingest, ingestPins) = Recommend.ingestDag(spark, dir, eBase, coE, cap)
-    created ++= ingestPins
-    val ledger = eTouched
+    val ingest = Recommend.ingestLedger(pins, spark, dir, eBase, coE, cap)
+    eTouched
       .join(ingest, Seq("p1", "p2"), "full_outer")
       .join(coBase, Seq("p1", "p2"), "left_outer")
       .select(col("p1"), col("p2"),
@@ -469,10 +410,6 @@ object Erasure {
         coalesce(col("co_after"), col("ee"), col("co_base"), lit(0L))
           .as("co_after"))
       .orderBy(col("p1"), col("p2"))
-    (ledger, created.toSeq)
-    } catch { case t: Throwable =>
-      created.foreach(B.unpersistLocalCheckpoint(_)); throw t
-    }
   }
 
   /** q259 — ERASURE AS A DURABLE COMMIT: the right-to-be-forgotten
@@ -494,8 +431,7 @@ object Erasure {
     * surviving-basket ∪ room-capped-admission, delta = novel-touched);
     * EraseStateSpec proves the erased SPILL equals the from-scratch
     * erased state frame-for-frame and that both erased versions sit
-    * committed on disk. STORAGE CONTRACT: direct localCheckpoint
-    * result — caller frees. */
+    * committed on disk. */
   def q259(spark: SparkSession, dir: String, cap: Int = 256,
            modK: Long = 10L): DataFrame = {
     val B2 = org.apache.spark.sql.graftbridge.Bridge
@@ -512,9 +448,7 @@ object Erasure {
         B2.checkpointPartitioned(graft.core.DurableState.load(spark, root,
           eKind, eVersion, "co"), Seq("p1", "p2"), Seq("p1", "p2")))
     }
-    val (plan, pins) = Recommend.ingestDag(spark, dir, eBase, eCo, cap)
-    try plan.localCheckpoint()
-    finally pins.foreach(B2.unpersistLocalCheckpoint(_))
+    Pins.result(pins => Recommend.ingestLedger(pins, spark, dir, eBase, eCo, cap))
   }
 
   /** Commit the CF kind's erased version against the reloaded spill,
@@ -522,7 +456,6 @@ object Erasure {
     * version. */
   private[graft] def ensureCfErased(spark: SparkSession, dir: String,
       cap: Int, modK: Long): Long = {
-    val B2 = org.apache.spark.sql.graftbridge.Bridge
     val root = graft.core.DurableState.rootFor(dir)
     val eKind = s"cf${cap}erased$modK"
     graft.core.StandingState.of(
@@ -533,9 +466,9 @@ object Erasure {
         "basket")
       val coBase = graft.core.DurableState.load(spark, root, s"cf$cap",
         v0, "co")
-      val erased = base.select(col("c")).distinct()
-        .where(isErased(col("c"), modK)).localCheckpoint()
-      try {
+      Pins.scope { pins =>
+        val erased = pins.pin(base.select(col("c")).distinct()
+          .where(isErased(col("c"), modK)))
         val eBasket = base.join(broadcast(erased), Seq("c"), "left_semi")
         val dec = eBasket.as("a").join(eBasket.as("b"),
             col("a.c") === col("b.c") && col("a.p") < col("b.p"))
@@ -552,7 +485,7 @@ object Erasure {
         // version; a reader never sees a half-erased spill
         java.lang.Long.valueOf(graft.core.DurableState.persistAll(root,
           eKind, Seq("basket" -> basketErased, "co" -> coErased)))
-      } finally B2.unpersistLocalCheckpoint(erased)
+      }
     }.longValue()
   }
 
@@ -577,21 +510,7 @@ object Erasure {
     * broadcast-anti/semi join plus a partial-agged count over state the
     * process registry already pins; nothing rescans a corpus. */
   def q225(spark: SparkSession, dir: String, m: Int = 8, k: Int = 16,
-           iters: Int = 3, cells: Int = 10): DataFrame = {
-    val (plan, pins) = q225Build(spark, dir, m, k, iters, cells)
-    try plan.localCheckpoint()
-    finally pins.foreach(B.unpersistLocalCheckpoint(_))
-  }
-
-  private def q225Build(spark: SparkSession, dir: String, m: Int, k: Int,
-      iters: Int, cells: Int): (DataFrame, Seq[DataFrame]) = {
-    // the q248Build leak guard: free already-created pins on any throw
-    // during the remaining assembly (ADVICE r12)
-    val created = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def cp(df: DataFrame): DataFrame = {
-      val c = df.localCheckpoint(); created += c; c
-    }
-    try {
+           iters: Int = 3, cells: Int = 10): DataFrame = Pins.result { pins =>
     def row(state: String, metric: String, v: Column): Column =
       struct(lit(state).as("state"), lit(metric).as("metric"),
         v.cast(LongType).as("value"))
@@ -606,10 +525,10 @@ object Erasure {
     // wordSets+md5 derivation fed three branches — the row metrics, the
     // erased-id broadcast and the residual probe — so the corpus was
     // tokenized three times per certificate; one materialization now
-    // feeds all three, freed with the result like every cp() pin)
+    // feeds all three, freed with the result like every other pin)
     val fp = Dedup.wordSets(spark, dir)
       .select(col("doc_id"), md5(array_join(col("words"), " ")).as("fp"))
-    val ledger = cp(fp.where(col("doc_id") % 10 < 7))
+    val ledger = pins.pin(fp.where(col("doc_id") % 10 < 7))
     val er10 = isErased(col("doc_id"), 10L)
     // row metrics and holder kinds fused into ONE aggregate over the
     // holder rollup (r13): rows_before = Σ(gone+kept) — count(*) of the
@@ -636,7 +555,7 @@ object Erasure {
     // pinned for the invocation like the ledger (r13: the minhash
     // pipeline fed the row metrics, the erased-id broadcast and the
     // residual probe — three corpus-scale recomputes per certificate)
-    val bands = cp(Dedup.bandedSignatures(
+    val bands = pins.pin(Dedup.bandedSignatures(
         Dedup.minhashSignatures(Dedup.shingleHashes(spark, dir)))
       .where(col("doc_id") % 10 < 7))
     val bandRows = rows(bands.select(er10.as("e")),
@@ -652,7 +571,7 @@ object Erasure {
     // ---- rare-gram graph (q223: maxDf=3, minShared=3, modK=7)
     val (basePost, dfBase, basePairs) =
       GraphRank.graphStanding(spark, dir, 3, 3)
-    val erased7 = cp(Tables(spark, dir, "documents")
+    val erased7 = pins.pin(Tables(spark, dir, "documents")
       .where(col("doc_id") % 10 < 7 && isErased(col("doc_id"), 7L))
       .select(col("doc_id")))
     // the certificate derives the erased-graph Δ PER INVOCATION (r14:
@@ -660,8 +579,7 @@ object Erasure {
     // deriving it IS part of the audit's declared work); the pins are
     // invocation-scoped and freed with the result
     val (ePost, eDf, ePairs) =
-      eraseStandingPairs(basePost, dfBase, basePairs, erased7, 3, 3)
-    created ++= Seq(ePost, eDf, ePairs)
+      eraseStandingPairs(basePost, dfBase, basePairs, erased7, 3, 3, pins.pin)
     // the registry pin (the q244/q248 standing basket)
     val (cfBase, cfCoBase) = Recommend.cfStanding(spark, dir, 256)
     locally {
@@ -745,7 +663,7 @@ object Erasure {
           .join(broadcast(erasedVecs), Seq("vec_id"), "left_semi"),
         row("ivfpq_codes", "residual_subject_rows", count(lit(1))))
 
-      val plan = fpRows.unionByName(fpResidual)
+      fpRows.unionByName(fpResidual)
         .unionByName(bandRows).unionByName(bandResidual)
         .unionByName(graphBefore).unionByName(graphAdded)
         .unionByName(graphAfter).unionByName(newly)
@@ -755,11 +673,6 @@ object Erasure {
         .select(col("r.state").as("state"), col("r.metric").as("metric"),
           col("r.value").as("value"))
         .orderBy(col("state"), col("metric"))
-      // cfBase is registry-owned (cfStanding) — not freed here
-      (plan, created.toSeq)
-    }
-    } catch { case t: Throwable =>
-      created.foreach(B.unpersistLocalCheckpoint(_)); throw t
     }
   }
 
@@ -792,8 +705,7 @@ object Erasure {
     * it, drops subject rows by broadcast anti, and commits the erased
     * ledger as kind `fpstore-erased<modK>`; the ingest labeling then
     * probes the RELOADED erased spill (post face) and the reloaded
-    * pre-erasure spill (the `resurrected` witness). STORAGE CONTRACT:
-    * direct localCheckpoint result — caller frees. */
+    * pre-erasure spill (the `resurrected` witness). */
   def q260(spark: SparkSession, dir: String, mod: Int = 10, lt: Int = 7,
            modK: Long = 10L): DataFrame = {
     val root = graft.core.DurableState.rootFor(dir)
@@ -844,8 +756,7 @@ object Erasure {
     * witness (two bucket-keyed probes — the durable variant pays the
     * second probe q221's one-probe trick avoids, priced here as its own
     * query). Banding is per-doc deterministic, so the output equals
-    * q221's. STORAGE CONTRACT: direct localCheckpoint result — caller
-    * frees. */
+    * q221's. */
   def q261(spark: SparkSession, dir: String, mod: Int = 10, lt: Int = 7,
            modK: Long = 10L, exactThreshold: Double = 0.7): DataFrame = {
     val root = graft.core.DurableState.rootFor(dir)
@@ -951,8 +862,7 @@ object Erasure {
     * marker-committed version; the NEXT ingest (q218's deltaFullPairs +
     * warm LPA) then runs from a fresh scan of the ERASED spill. Output
     * equals q223's (restart ≡ continuous — EraseStateSpec binds the
-    * reloaded erased spill to the from-scratch erased state). STORAGE
-    * CONTRACT: direct localCheckpoint result — caller frees. */
+    * reloaded erased spill to the from-scratch erased state). */
   /** Spill the graph kind (via [[GraphRank.ensureGraphSpilled]]) and
     * commit its erased version (postings/df/pairs/labels after
     * [[eraseStandingPairs]] + the q223 label relabel), once per process
@@ -969,15 +879,15 @@ object Erasure {
     val eV = graft.core.StandingState.of(
       s"durablegrapherase|${appOf(spark)}|$dir|$maxDf|$minShared|" +
         s"$baseRounds|$modK") {
-      val erased = Tables(spark, dir, "documents")
-        .where(col("doc_id") % 10 < 7 && isErased(col("doc_id"), modK))
-        .select(col("doc_id")).localCheckpoint()
-      try {
+      Pins.scope { pins =>
+        val erased = pins.pin(Tables(spark, dir, "documents")
+          .where(col("doc_id") % 10 < 7 && isErased(col("doc_id"), modK))
+          .select(col("doc_id")))
         // un-pinned Δ: persistAll executes the DAG straight into the
-        // committed version — no intermediate pins to free
+        // committed version
         val (ePost, eDf, ePairs) = eraseStandingPairs(
           ld("postings"), ld("df"), ld("pairs"), erased, maxDf,
-          minShared, pin = false)
+          minShared, identity)
         val eLabels = ld("labels")
           .join(broadcast(erased), Seq("doc_id"), "left_anti")
           .join(broadcast(erased.select(col("doc_id").as("label"))
@@ -988,7 +898,7 @@ object Erasure {
         java.lang.Long.valueOf(graft.core.DurableState.persistAll(root,
           s"$kind-erased$modK", Seq("postings" -> ePost, "df" -> eDf,
             "pairs" -> ePairs, "labels" -> eLabels)))
-      } finally B.unpersistLocalCheckpoint(erased)
+      }
     }.longValue()
     (v0, eV)
   }
@@ -1013,28 +923,8 @@ object Erasure {
         ld(eKind, eV, "labels").localCheckpoint())
     }
     // ---- the next ingest over the ERASED spill (q223's q218 leg) ----
-    val batchPost = Ranking.gramCountsOf(
-        Tables(spark, dir, "documents").where(col("doc_id") % 10 >= 7))
-      .select(col("doc_id"), col("gram")).localCheckpoint()
-    val fullEdges = GraphRank.edgesFromPairs(
-      GraphRank.deltaFullPairs(ePost, eDf, ePairs, batchPost, maxDf,
-        minShared))
-    val warm = fullEdges.select(col("src").as("doc_id")).distinct()
-      .join(eLabels.select(col("doc_id"), col("label").as("bl")),
-        Seq("doc_id"), "left_outer")
-      .select(col("doc_id"), coalesce(col("bl"), col("doc_id")).as("label"))
-    val labels = GraphRank.lpaIterate(fullEdges, warm, incrRounds)
-    try {
-      val sizes = labels.groupBy(col("label").as("community"))
-        .agg(count(lit(1)).as("csize"))
-      labels
-        .join(sizes, col("label") === col("community"))
-        .select(col("doc_id"), col("community"), col("csize"),
-          (col("doc_id") % 10 >= 7).as("is_batch"))
-        .orderBy(col("doc_id"))
-        .localCheckpoint()
-    } finally Seq(labels, fullEdges, batchPost)
-      .foreach(B.unpersistLocalCheckpoint(_))
+    GraphRank.lpaIngestFrom(spark, dir, ePost, eDf, ePairs, eLabels,
+      incrRounds, maxDf, minShared)
   }
 
   /** q264 — the ERASE-COMMIT CERTIFICATE: q225's sign-off receipt moved

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Tables
+import graft.core.{Pins, Tables}
 
 /** Iterative numeric graph ranking — the operator class the dedup tier's
   * label propagation (boolean min-label) doesn't cover: PAGERANK over the
@@ -45,12 +45,12 @@ object GraphRank {
 
   /** q129 — 5-iteration integer PageRank (damping 0.85) over the
     * shared-rare-trigram graph. Output: every document's final rank
-    * mass and its link degree. STORAGE CONTRACT: direct localCheckpoint
-    * result (the Components convention) — caller frees once consumed. */
+    * mass and its link degree. */
   /** Shared-rare-trigram symmetric edge list with out-degree folded in
     * (src, dst, deg), materialized ONCE via localCheckpoint: the edge
     * pipeline must not re-run per iteration, and carrying deg on the
-    * edge row saves a deg join in EVERY iteration. Caller frees. */
+    * edge row saves a deg join in EVERY iteration. The edge list is a
+    * direct checkpoint the caller owns. */
   private[queries] def rareTrigramEdges(docs: DataFrame, maxDf: Int,
                                         minShared: Int): DataFrame =
     edgesFromPairs(rarePairsOf(
@@ -92,7 +92,7 @@ object GraphRank {
 
   /** Symmetrize a `(d1, d2, …)` pair list and fold the out-degree onto
     * each edge row, PINNED (localCheckpoint — the edge list must not
-    * re-derive per iteration). Caller frees. */
+    * re-derive per iteration), returned unowned to the caller. */
   private[queries] def edgesFromPairs(pairs: DataFrame): DataFrame = {
     val sym = pairs.select(col("d1").as("src"), col("d2").as("dst"))
       .union(pairs.select(col("d2").as("src"), col("d1").as("dst")))
@@ -109,30 +109,29 @@ object GraphRank {
     * q129 (uniform teleport), q153 (seed-restricted teleport) and q160
     * (warm start) — per-round localCheckpoint keeps the plan O(1) deep,
     * superseded rounds freed as the next materializes. Returns the
-    * final PINNED rank vector; caller frees. */
+    * final rank vector as a direct checkpoint the caller owns. */
   private[queries] def iterateRanks(vertices: DataFrame, edges: DataFrame,
-                                    start: DataFrame, iters: Int): DataFrame = {
-    var ranks = start.select(col("doc_id"), col("r")).localCheckpoint()
-    var prev = ranks
-    for (_ <- 1 to iters) {
-      val contrib = edges
-        .join(ranks.select(col("doc_id").as("src"), col("r")), Seq("src"))
-        .select(col("dst"), expr("(85 * (r DIV deg)) DIV 100").as("m"))
-        .groupBy(col("dst"))
-        .agg(sum(col("m")).as("m"))
-      ranks = vertices
-        .join(contrib, col("doc_id") === col("dst"), "left_outer")
-        .select(col("doc_id"),
-          (col("tel") + coalesce(col("m"), lit(0L))).as("r"))
-        .localCheckpoint()
-      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(prev)
-      prev = ranks
+                                    start: DataFrame, iters: Int): DataFrame =
+    Pins.scope { pins =>
+      var ranks = pins.pin(start.select(col("doc_id"), col("r")))
+      for (_ <- 1 to iters) {
+        val contrib = edges
+          .join(ranks.select(col("doc_id").as("src"), col("r")), Seq("src"))
+          .select(col("dst"), expr("(85 * (r DIV deg)) DIV 100").as("m"))
+          .groupBy(col("dst"))
+          .agg(sum(col("m")).as("m"))
+        val next = pins.pin(vertices
+          .join(contrib, col("doc_id") === col("dst"), "left_outer")
+          .select(col("doc_id"),
+            (col("tel") + coalesce(col("m"), lit(0L))).as("r")))
+        pins.release(ranks)
+        ranks = next
+      }
+      pins.disown(ranks)
     }
-    ranks
-  }
 
   def q129(spark: SparkSession, dir: String, iters: Int = 5,
-           maxDf: Int = 50, minShared: Int = 3): DataFrame = {
+           maxDf: Int = 50, minShared: Int = 3): DataFrame = Pins.result { pins =>
     val docs = Tables(spark, dir, "documents")
     val edges = fullGraphStanding(spark, dir, maxDf, minShared)
 
@@ -140,25 +139,16 @@ object GraphRank {
     val r0 = Scale / nDocs               // uniform initial mass
     val base = (15L * r0) / 100L         // teleport term, exact floor
 
-    val vertices = docs
-      .select(col("doc_id"), lit(base).as("tel")).localCheckpoint()
-    val ranks = iterateRanks(vertices, edges,
-      vertices.select(col("doc_id"), lit(r0).as("r")), iters)
-    try {
-      val out = ranks
-        .join(edges.select(col("src").as("doc_id"), col("deg"))
-          .dropDuplicates("doc_id"),
-          Seq("doc_id"), "left_outer")
-        .select(col("doc_id"), col("r").as("pagerank"),
-          coalesce(col("deg"), lit(0L)).cast(IntegerType).as("n_links"))
-        .orderBy(col("doc_id"))
-        .localCheckpoint()
-      out
-    } finally {
-      // edges are registry-owned (fullGraphStanding) — not freed here
-      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(ranks)
-      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(vertices)
-    }
+    val vertices = pins.pin(docs.select(col("doc_id"), lit(base).as("tel")))
+    val ranks = pins.own(iterateRanks(vertices, edges,
+      vertices.select(col("doc_id"), lit(r0).as("r")), iters))
+    ranks
+      .join(edges.select(col("src").as("doc_id"), col("deg"))
+        .dropDuplicates("doc_id"),
+        Seq("doc_id"), "left_outer")
+      .select(col("doc_id"), col("r").as("pagerank"),
+        coalesce(col("deg"), lit(0L)).cast(IntegerType).as("n_links"))
+      .orderBy(col("doc_id"))
   }
 
   /** q153 — TRUSTRANK-style seeded propagation (Gyöngyi et al. 2004,
@@ -176,41 +166,32 @@ object GraphRank {
     * partitioning and replayed exactly by the DuckDB oracle; same
     * per-iteration shape (edge-keyed join + vertex aggregate + vertex
     * left join, O(1)-deep plans via per-round localCheckpoint). The
-    * only deltas: r0 and the teleport term are nonzero ONLY on seeds.
-    * STORAGE CONTRACT: direct localCheckpoint result — caller frees. */
+    * only deltas: r0 and the teleport term are nonzero ONLY on seeds. */
   def q153(spark: SparkSession, dir: String, seedSource: String = "src0",
-           iters: Int = 5, maxDf: Int = 50, minShared: Int = 3): DataFrame = {
-    val docs = Tables(spark, dir, "documents")
+           iters: Int = 5, maxDf: Int = 50, minShared: Int = 3): DataFrame =
+    Pins.result { pins =>
+      val docs = Tables(spark, dir, "documents")
 
-    // An empty seed set would mean Scale/0 AFTER the expensive edge
-    // pipeline ran — fail fast on the cheap scan instead.
-    val nSeeds = docs.where(col("source") === seedSource).count()
-    require(nSeeds > 0, s"q153: no documents for seed source '$seedSource'")
-    val edges = fullGraphStanding(spark, dir, maxDf, minShared)
-    val r0 = Scale / nSeeds
-    val base = (15L * r0) / 100L
+      // An empty seed set would mean Scale/0 AFTER the expensive edge
+      // pipeline ran — fail fast on the cheap scan instead.
+      val nSeeds = docs.where(col("source") === seedSource).count()
+      require(nSeeds > 0, s"q153: no documents for seed source '$seedSource'")
+      val edges = fullGraphStanding(spark, dir, maxDf, minShared)
+      val r0 = Scale / nSeeds
+      val base = (15L * r0) / 100L
 
-    val vertices = docs
-      .select(col("doc_id"), (col("source") === seedSource).as("seed"),
-        when(col("source") === seedSource, base).otherwise(0L).as("tel"))
-      .localCheckpoint()
-    val ranks = iterateRanks(vertices, edges,
-      vertices.select(col("doc_id"),
-        when(col("seed"), r0).otherwise(0L).as("r")), iters)
-    try {
-      val out = ranks
+      val vertices = pins.pin(docs
+        .select(col("doc_id"), (col("source") === seedSource).as("seed"),
+          when(col("source") === seedSource, base).otherwise(0L).as("tel")))
+      val ranks = pins.own(iterateRanks(vertices, edges,
+        vertices.select(col("doc_id"),
+          when(col("seed"), r0).otherwise(0L).as("r")), iters))
+      ranks
         .join(vertices, Seq("doc_id"))
         .select(col("doc_id"), col("seed"), col("r").as("trust"))
         .where(col("trust") > 0)
         .orderBy(col("doc_id"))
-        .localCheckpoint()
-      out
-    } finally {
-      // edges are registry-owned (fullGraphStanding) — not freed here
-      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(ranks)
-      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(vertices)
     }
-  }
 
   /** q163 — k-CORE decomposition (fixed-round peeling) over the
     * shared-rare-trigram graph: iteratively remove vertices whose degree
@@ -232,34 +213,26 @@ object GraphRank {
     * edge-keyed, never all-pairs; per-round localCheckpoint keeps the
     * plan O(1) deep (the iterateRanks discipline), superseded rounds
     * freed immediately. Output: (doc_id, core_deg) for the survivors,
-    * degree measured WITHIN the final core. STORAGE CONTRACT: direct
-    * localCheckpoint result — caller frees. */
+    * degree measured WITHIN the final core. */
   def q163(spark: SparkSession, dir: String, k: Int = 2, rounds: Int = 10,
-           maxDf: Int = 50, minShared: Int = 3): DataFrame = {
+           maxDf: Int = 50, minShared: Int = 3): DataFrame = Pins.result { pins =>
     val edges = fullGraphStanding(spark, dir, maxDf, minShared)
     def inCoreDeg(alive: DataFrame): DataFrame = edges
       .join(alive.select(col("doc_id").as("src")), Seq("src"), "left_semi")
       .join(alive.select(col("doc_id").as("dst")), Seq("dst"), "left_semi")
       .groupBy(col("src")).agg(count(lit(1)).as("deg"))
-    var alive = edges.select(col("src").as("doc_id")).distinct()
-      .localCheckpoint()
-    try {
-      for (_ <- 1 to rounds) {
-        val next = inCoreDeg(alive).where(col("deg") >= k)
-          .select(col("src").as("doc_id")).localCheckpoint()
-        org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(alive)
-        alive = next
-      }
-      alive
-        .join(inCoreDeg(alive), col("doc_id") === col("src"), "left_outer")
-        .select(col("doc_id"),
-          coalesce(col("deg"), lit(0L)).cast(IntegerType).as("core_deg"))
-        .orderBy(col("doc_id"))
-        .localCheckpoint()
-    } finally {
-      // edges are registry-owned (fullGraphStanding) — not freed here
-      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(alive)
+    var alive = pins.pin(edges.select(col("src").as("doc_id")).distinct())
+    for (_ <- 1 to rounds) {
+      val next = pins.pin(inCoreDeg(alive).where(col("deg") >= k)
+        .select(col("src").as("doc_id")))
+      pins.release(alive)
+      alive = next
     }
+    alive
+      .join(inCoreDeg(alive), col("doc_id") === col("src"), "left_outer")
+      .select(col("doc_id"),
+        coalesce(col("deg"), lit(0L)).cast(IntegerType).as("core_deg"))
+      .orderBy(col("doc_id"))
   }
 
   /** q160 — INCREMENTAL PageRank: q129 at the q106/q110 ingest posture.
@@ -288,8 +261,7 @@ object GraphRank {
     * shared-over-eligible ≥ minShared are corpus-order-free facts), so
     * the DuckDB oracle replays the from-scratch construction plus the
     * two-stage recurrence exactly: integer arithmetic end to end.
-    * Output: (doc_id, pagerank, n_links, is_batch). STORAGE CONTRACT:
-    * direct localCheckpoint result — caller frees. */
+    * Output: (doc_id, pagerank, n_links, is_batch). */
   /** The STANDING graph state shared by the incremental tier — pinned
     * ONCE PER PROCESS via [[graft.core.StandingState]] (the VERDICT r10
     * #2 bench-fidelity move: a deployment persists this between ingests;
@@ -322,22 +294,21 @@ object GraphRank {
         .where(col("doc_id") % 10 < 7)
       val nBase = base.count()
       require(nBase > 0, s"q160: empty standing corpus")
-      val baseEdges = edgesFromPairs(basePairs)
-      val r0b = Scale / nBase
-      val baseVerts = base
-        .select(col("doc_id"), lit((15L * r0b) / 100L).as("tel"))
-        .localCheckpoint()
-      val baseRanks = iterateRanks(baseVerts, baseEdges,
-        baseVerts.select(col("doc_id"), lit(r0b).as("r")), baseIters)
-      val b = org.apache.spark.sql.graftbridge.Bridge
-      b.unpersistLocalCheckpoint(baseVerts)
-      b.unpersistLocalCheckpoint(baseEdges)
+      // build-local pins; the rank vector is the registry's
+      val baseRanks = Pins.scope { pins =>
+        val baseEdges = pins.own(edgesFromPairs(basePairs))
+        val r0b = Scale / nBase
+        val baseVerts = pins.pin(base
+          .select(col("doc_id"), lit((15L * r0b) / 100L).as("tel")))
+        iterateRanks(baseVerts, baseEdges,
+          baseVerts.select(col("doc_id"), lit(r0b).as("r")), baseIters)
+      }
       (baseRanks, java.lang.Long.valueOf(nBase))
     } match { case (r, n) => (r, n.longValue()) }
 
   def q160(spark: SparkSession, dir: String, baseIters: Int = 5,
            incrIters: Int = 3, maxDf: Int = 50, minShared: Int = 3)
-      : DataFrame = {
+      : DataFrame = Pins.result { pins =>
     val (basePost, dfBase, basePairs) =
       graphStanding(spark, dir, maxDf, minShared)
     val (baseRanks, nBase) =
@@ -347,47 +318,39 @@ object GraphRank {
     val batch = docs.where(col("doc_id") % 10 >= 7)
     val nFull = docs.count()
     require(nFull > nBase, s"q160: degenerate base/batch split")
-    val batchPost = Ranking.gramCountsOf(batch)
-      .select(col("doc_id"), col("gram")).localCheckpoint()
-    val fullEdges = edgesFromPairs(
+    val batchPost = pins.pin(Ranking.gramCountsOf(batch)
+      .select(col("doc_id"), col("gram")))
+    val fullEdges = pins.own(edgesFromPairs(
       deltaFullPairs(basePost, dfBase, basePairs, batchPost, maxDf,
-        minShared))
+        minShared)))
     val r0f = Scale / nFull
-    val fullVerts = docs
-      .select(col("doc_id"), lit((15L * r0f) / 100L).as("tel"))
-      .localCheckpoint()
+    val fullVerts = pins.pin(docs
+      .select(col("doc_id"), lit((15L * r0f) / 100L).as("tel")))
     val warm = fullVerts
       .join(baseRanks.select(col("doc_id"), col("r").as("rb")),
         Seq("doc_id"), "left_outer")
       .select(col("doc_id"), coalesce(col("rb"), lit(r0f)).as("r"))
-    val ranks = iterateRanks(fullVerts, fullEdges, warm, incrIters)
-    try {
-      ranks
-        .join(fullEdges.select(col("src").as("doc_id"), col("deg"))
-          .dropDuplicates("doc_id"),
-          Seq("doc_id"), "left_outer")
-        .select(col("doc_id"), col("r").as("pagerank"),
-          coalesce(col("deg"), lit(0L)).cast(IntegerType).as("n_links"),
-          (col("doc_id") % 10 >= 7).as("is_batch"))
-        .orderBy(col("doc_id"))
-        .localCheckpoint()
-    } finally {
-      val b = org.apache.spark.sql.graftbridge.Bridge
-      Seq(ranks, fullVerts, fullEdges, batchPost)
-        .foreach(b.unpersistLocalCheckpoint(_))
-    }
+    val ranks = pins.own(iterateRanks(fullVerts, fullEdges, warm, incrIters))
+    ranks
+      .join(fullEdges.select(col("src").as("doc_id"), col("deg"))
+        .dropDuplicates("doc_id"),
+        Seq("doc_id"), "left_outer")
+      .select(col("doc_id"), col("r").as("pagerank"),
+        coalesce(col("deg"), lit(0L)).cast(IntegerType).as("n_links"),
+        (col("doc_id") % 10 >= 7).as("is_batch"))
+      .orderBy(col("doc_id"))
   }
 
   /** q160's state after the ingest round, BEFORE the warm iterations:
     * the incrementally-assembled full edge list, the warm-start vector,
-    * the full vertex/teleport table, and every pin to free. Exposed so
-    * IncrementalPageRankSpec can assert the Δ-graph equals a
+    * and the full vertex/teleport table, all pinned in `pins`. Exposed
+    * so IncrementalPageRankSpec can assert the Δ-graph equals a
     * from-scratch [[rareTrigramEdges]] build and drive the iteration
-    * engine itself. Caller frees fullVerts, fullEdges and pins. */
-  private[queries] def q160Internals(spark: SparkSession, dir: String,
-                                     baseIters: Int = 5, maxDf: Int = 50,
-                                     minShared: Int = 3)
-      : (DataFrame, DataFrame, DataFrame, Seq[DataFrame]) = {
+    * engine itself. */
+  private[queries] def q160Internals(pins: Pins, spark: SparkSession,
+                                     dir: String, baseIters: Int = 5,
+                                     maxDf: Int = 50, minShared: Int = 3)
+      : (DataFrame, DataFrame, DataFrame) = {
     val docs = Tables(spark, dir, "documents")
     val base = docs.where(col("doc_id") % 10 < 7)
     val batch = docs.where(col("doc_id") % 10 >= 7)
@@ -397,37 +360,33 @@ object GraphRank {
       s"q160: degenerate base/batch split ($nBase of $nFull)")
 
     // ---- standing state (persists between ingests) ----
-    val basePost = Ranking.gramCountsOf(base)
-      .select(col("doc_id"), col("gram")).localCheckpoint()
-    val dfBase = basePost.groupBy(col("gram"))
-      .agg(count(lit(1)).as("df_base")).localCheckpoint()
-    val basePairs = rarePairsOf(basePost, maxDf, minShared).localCheckpoint()
-    val baseEdges = edgesFromPairs(basePairs)
+    val basePost = pins.pin(Ranking.gramCountsOf(base)
+      .select(col("doc_id"), col("gram")))
+    val dfBase = pins.pin(basePost.groupBy(col("gram"))
+      .agg(count(lit(1)).as("df_base")))
+    val basePairs = pins.pin(rarePairsOf(basePost, maxDf, minShared))
+    val baseEdges = pins.own(edgesFromPairs(basePairs))
     val r0b = Scale / nBase
-    val baseVerts = base
-      .select(col("doc_id"), lit((15L * r0b) / 100L).as("tel"))
-      .localCheckpoint()
-    val baseRanks = iterateRanks(baseVerts, baseEdges,
-      baseVerts.select(col("doc_id"), lit(r0b).as("r")), baseIters)
+    val baseVerts = pins.pin(base
+      .select(col("doc_id"), lit((15L * r0b) / 100L).as("tel")))
+    val baseRanks = pins.own(iterateRanks(baseVerts, baseEdges,
+      baseVerts.select(col("doc_id"), lit(r0b).as("r")), baseIters))
 
     // ---- the ingest round (batch-scale from here on) ----
-    val batchPost = Ranking.gramCountsOf(batch)
-      .select(col("doc_id"), col("gram")).localCheckpoint()
-    val fullEdges = edgesFromPairs(
+    val batchPost = pins.pin(Ranking.gramCountsOf(batch)
+      .select(col("doc_id"), col("gram")))
+    val fullEdges = pins.own(edgesFromPairs(
       deltaFullPairs(basePost, dfBase, basePairs, batchPost, maxDf,
-        minShared))
+        minShared)))
     // warm start: standing vector on base docs, uniform share on batch
     val r0f = Scale / nFull
-    val fullVerts = docs
-      .select(col("doc_id"), lit((15L * r0f) / 100L).as("tel"))
-      .localCheckpoint()
+    val fullVerts = pins.pin(docs
+      .select(col("doc_id"), lit((15L * r0f) / 100L).as("tel")))
     val warm = fullVerts
       .join(baseRanks.select(col("doc_id"), col("r").as("rb")),
         Seq("doc_id"), "left_outer")
       .select(col("doc_id"), coalesce(col("rb"), lit(r0f)).as("r"))
-    (fullEdges, warm, fullVerts,
-      Seq(batchPost, baseRanks, baseVerts, baseEdges, basePairs, dfBase,
-        basePost))
+    (fullEdges, warm, fullVerts)
   }
 
   /** The batch-scale Δ-graph pair assembly shared by q160 and q218:
@@ -516,26 +475,19 @@ object GraphRank {
     * with an arg-max in place of the sum; per-round localCheckpoint
     * keeps the plan O(1) deep, superseded rounds freed immediately.
     * Output: every linked document's final community plus the community
-    * size. STORAGE CONTRACT: direct localCheckpoint result — caller
-    * frees. */
+    * size. */
   def q202(spark: SparkSession, dir: String, rounds: Int = 5,
-           maxDf: Int = 50, minShared: Int = 3): DataFrame = {
+           maxDf: Int = 50, minShared: Int = 3): DataFrame = Pins.result { pins =>
     val edges = fullGraphStanding(spark, dir, maxDf, minShared)
-    val labels = lpaIterate(edges,
+    val labels = pins.own(lpaIterate(edges,
       edges.select(col("src").as("doc_id")).distinct()
-        .select(col("doc_id"), col("doc_id").as("label")), rounds)
-    try {
-      val sizes = labels.groupBy(col("label").as("community"))
-        .agg(count(lit(1)).as("csize"))
-      labels
-        .join(sizes, col("label") === col("community"))
-        .select(col("doc_id"), col("community"), col("csize"))
-        .orderBy(col("doc_id"))
-        .localCheckpoint()
-    } finally {
-      // edges are registry-owned (fullGraphStanding) — not freed here
-      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(labels)
-    }
+        .select(col("doc_id"), col("doc_id").as("label")), rounds))
+    val sizes = labels.groupBy(col("label").as("community"))
+      .agg(count(lit(1)).as("csize"))
+    labels
+      .join(sizes, col("label") === col("community"))
+      .select(col("doc_id"), col("community"), col("csize"))
+      .orderBy(col("doc_id"))
   }
 
   /** The shared synchronous-LPA iteration engine: from `start`
@@ -545,13 +497,13 @@ object GraphRank {
     * postures. Symmetric edges mean every linked vertex has ≥ 1
     * neighbor, so the inner join covers the vertex set each round.
     * Per-round localCheckpoint keeps the plan O(1) deep, superseded
-    * rounds freed immediately. Returns the final PINNED label table;
-    * caller frees. */
+    * rounds freed immediately. Returns the final label table as a
+    * direct checkpoint the caller owns. */
   private[queries] def lpaIterate(edges: DataFrame, start: DataFrame,
-                         rounds: Int): DataFrame = {
-    var labels = start.localCheckpoint()
+                         rounds: Int): DataFrame = Pins.scope { pins =>
+    var labels = pins.pin(start)
     for (_ <- 1 to rounds) {
-      val next = edges
+      val next = pins.pin(edges
         .join(labels.select(col("doc_id").as("src"), col("label")),
           Seq("src"))
         .groupBy(col("dst"), col("label"))
@@ -560,12 +512,11 @@ object GraphRank {
         .agg(max(col("cnt") * lit(LpaBase) +
           (lit(LpaBase - 1L) - col("label"))).as("enc"))
         .select(col("dst").as("doc_id"),
-          (lit(LpaBase - 1L) - col("enc") % lit(LpaBase)).as("label"))
-        .localCheckpoint()
-      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(labels)
+          (lit(LpaBase - 1L) - col("enc") % lit(LpaBase)).as("label")))
+      pins.release(labels)
       labels = next
     }
-    labels
+    pins.disown(labels)
   }
 
   /** q218 — INCREMENTAL label propagation: q202 at the q160 ingest
@@ -586,8 +537,7 @@ object GraphRank {
     * two-stage procedure, and the DuckDB oracle replays it exactly
     * (base graph → base rounds → warm start over the full graph →
     * incr rounds), the q160 convention. Output adds the community
-    * size and the is_batch flag. STORAGE CONTRACT: direct
-    * localCheckpoint result — caller frees. */
+    * size and the is_batch flag. */
   /** q218/q223's standing community labels (the converged base LPA) —
     * process-pinned like [[graphStanding]]; never freed. */
   private[queries] def lpaStanding(spark: SparkSession, dir: String,
@@ -595,13 +545,13 @@ object GraphRank {
     graft.core.StandingState.of(
       s"lpa|${spark.sparkContext.applicationId}|$dir|$baseRounds|$maxDf|$minShared") {
       val (_, _, basePairs) = graphStanding(spark, dir, maxDf, minShared)
-      val baseEdges = edgesFromPairs(basePairs)
-      val baseLabels = lpaIterate(baseEdges,
-        baseEdges.select(col("src").as("doc_id")).distinct()
-          .select(col("doc_id"), col("doc_id").as("label")), baseRounds)
-      org.apache.spark.sql.graftbridge.Bridge
-        .unpersistLocalCheckpoint(baseEdges)
-      baseLabels
+      // build-local edge pin; the labels are the registry's
+      Pins.scope { pins =>
+        val baseEdges = pins.own(edgesFromPairs(basePairs))
+        lpaIterate(baseEdges,
+          baseEdges.select(col("src").as("doc_id")).distinct()
+            .select(col("doc_id"), col("doc_id").as("label")), baseRounds)
+      }
     }
 
   def q218(spark: SparkSession, dir: String, baseRounds: Int = 5,
@@ -619,40 +569,31 @@ object GraphRank {
     * assembly, warm start, and `incrRounds` synchronous rounds. The
     * frames may be process pins (q218) or reloaded durable parquet
     * (q249) — the output is identical, which is the graph tier's
-    * restart ≡ continuous claim. STORAGE CONTRACT: direct
-    * localCheckpoint result — caller frees; per-invocation
-    * intermediates are freed here. */
+    * restart ≡ continuous claim. */
   private[queries] def lpaIngestFrom(spark: SparkSession, dir: String,
       basePost: DataFrame, dfBase: DataFrame, basePairs: DataFrame,
       baseLabels: DataFrame, incrRounds: Int, maxDf: Int, minShared: Int)
-      : DataFrame = {
-    val b = org.apache.spark.sql.graftbridge.Bridge
+      : DataFrame = Pins.result { pins =>
     // the ingest round (batch-scale — the per-invocation cost)
     val batch = Tables(spark, dir, "documents")
       .where(col("doc_id") % 10 >= 7)
-    val batchPost = Ranking.gramCountsOf(batch)
-      .select(col("doc_id"), col("gram")).localCheckpoint()
-    val fullEdges = edgesFromPairs(
+    val batchPost = pins.pin(Ranking.gramCountsOf(batch)
+      .select(col("doc_id"), col("gram")))
+    val fullEdges = pins.own(edgesFromPairs(
       deltaFullPairs(basePost, dfBase, basePairs, batchPost, maxDf,
-        minShared))
+        minShared)))
     val warm = fullEdges.select(col("src").as("doc_id")).distinct()
       .join(baseLabels.select(col("doc_id"), col("label").as("bl")),
         Seq("doc_id"), "left_outer")
       .select(col("doc_id"), coalesce(col("bl"), col("doc_id")).as("label"))
-    val labels = lpaIterate(fullEdges, warm, incrRounds)
-    try {
-      val sizes = labels.groupBy(col("label").as("community"))
-        .agg(count(lit(1)).as("csize"))
-      labels
-        .join(sizes, col("label") === col("community"))
-        .select(col("doc_id"), col("community"), col("csize"),
-          (col("doc_id") % 10 >= 7).as("is_batch"))
-        .orderBy(col("doc_id"))
-        .localCheckpoint()
-    } finally {
-      Seq(labels, fullEdges, batchPost)
-        .foreach(b.unpersistLocalCheckpoint(_))
-    }
+    val labels = pins.own(lpaIterate(fullEdges, warm, incrRounds))
+    val sizes = labels.groupBy(col("label").as("community"))
+      .agg(count(lit(1)).as("csize"))
+    labels
+      .join(sizes, col("label") === col("community"))
+      .select(col("doc_id"), col("community"), col("csize"),
+        (col("doc_id") % 10 >= 7).as("is_batch"))
+      .orderBy(col("doc_id"))
   }
 
   /** q249 — the GRAPH tier's DURABLE RESTART face (q247's move on
@@ -739,55 +680,49 @@ object GraphRank {
     * Scale shape: the edge list (distinct cust→part) materializes once,
     * pinned; each half-round is one edge-keyed join + one aggregate +
     * a 1-row L1 total attached via broadcast — no driver loop state
-    * beyond the round counter, no collect. STORAGE CONTRACT: direct
-    * localCheckpoint result — caller frees. */
+    * beyond the round counter, no collect. */
   def q226(spark: SparkSession, dir: String, rounds: Int = 4): DataFrame = {
     // fail-fast (the q153/q227 convention): rounds < 1 would otherwise
-    // leave `auth` null and NPE at the final union/unpersist
+    // leave `auth` null and NPE at the final union
     require(rounds >= 1, "q226: rounds must be >= 1")
-    val b = org.apache.spark.sql.graftbridge.Bridge
-    val edges = Tables(spark, dir, "orders")
-      .join(Tables(spark, dir, "lineitem"),
-        col("o_orderkey") === col("l_orderkey"))
-      .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
-      .distinct()
-      .localCheckpoint()
-    // per-side degree tables, pinned once: consumed by every half-round's
-    // renormalization total AND the final presentation joins
-    val outDeg = edges.groupBy(col("c")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    val inDeg = edges.groupBy(col("p")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    // One half-round = ONE materialized job (r14; was two): the L1 total
-    // of the raw edge-sum is computed VERTEX-scale on the previous
-    // side's pinned scores — Σ_k s_k = Σ_v prev_v · deg_v exactly (every
-    // edge contributes prev_v to exactly one group), so the total rides
-    // as a broadcast subquery inside the same job instead of forcing the
-    // raw edge-sum to pin first and be re-read for the division. Exact
-    // integer identity — same value, same overflow bound as summing the
-    // grouped sums (it IS that sum, reassociated per vertex).
-    def halfRound(prev: DataFrame, joinKey: String, groupKey: String,
-        deg: DataFrame): DataFrame = {
-      val tot = prev.join(deg, Seq(joinKey))
-        .agg(sum(col("v") * col("deg")).as("t"))
-      edges.join(prev, Seq(joinKey))
-        .groupBy(col(groupKey)).agg(sum(col("v")).as("s"))
-        .crossJoin(broadcast(tot))
-        .select(col(groupKey),
-          expr(s"s DIV greatest(1L, t DIV $Scale)").as("v"))
-        .localCheckpoint()
-    }
-    val nC = edges.select(col("c")).distinct().count()
-    var hub = edges.select(col("c")).distinct()
-      .select(col("c"), lit(Scale / nC).as("v")).localCheckpoint()
-    var auth: DataFrame = null
-    try {
+    Pins.result { pins =>
+      val edges = pins.pin(Tables(spark, dir, "orders")
+        .join(Tables(spark, dir, "lineitem"),
+          col("o_orderkey") === col("l_orderkey"))
+        .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
+        .distinct())
+      // per-side degree tables, pinned once: consumed by every half-round's
+      // renormalization total AND the final presentation joins
+      val outDeg = pins.pin(edges.groupBy(col("c")).agg(count(lit(1)).as("deg")))
+      val inDeg = pins.pin(edges.groupBy(col("p")).agg(count(lit(1)).as("deg")))
+      // One half-round = ONE materialized job (r14; was two): the L1 total
+      // of the raw edge-sum is computed VERTEX-scale on the previous
+      // side's pinned scores — Σ_k s_k = Σ_v prev_v · deg_v exactly (every
+      // edge contributes prev_v to exactly one group), so the total rides
+      // as a broadcast subquery inside the same job instead of forcing the
+      // raw edge-sum to pin first and be re-read for the division. Exact
+      // integer identity — same value, same overflow bound as summing the
+      // grouped sums (it IS that sum, reassociated per vertex).
+      def halfRound(prev: DataFrame, joinKey: String, groupKey: String,
+          deg: DataFrame): DataFrame = {
+        val tot = prev.join(deg, Seq(joinKey))
+          .agg(sum(col("v") * col("deg")).as("t"))
+        pins.pin(edges.join(prev, Seq(joinKey))
+          .groupBy(col(groupKey)).agg(sum(col("v")).as("s"))
+          .crossJoin(broadcast(tot))
+          .select(col(groupKey),
+            expr(s"s DIV greatest(1L, t DIV $Scale)").as("v")))
+      }
+      val nC = edges.select(col("c")).distinct().count()
+      var hub = pins.pin(edges.select(col("c")).distinct()
+        .select(col("c"), lit(Scale / nC).as("v")))
+      var auth: DataFrame = null
       for (_ <- 1 to rounds) {
         val aNext = halfRound(hub, "c", "p", outDeg)
-        if (auth != null) b.unpersistLocalCheckpoint(auth)
+        if (auth != null) pins.release(auth)
         auth = aNext
         val hNext = halfRound(auth, "p", "c", inDeg)
-        b.unpersistLocalCheckpoint(hub)
+        pins.release(hub)
         hub = hNext
       }
       hub.join(outDeg, Seq("c"))
@@ -797,11 +732,6 @@ object GraphRank {
           .select(lit("auth").as("kind"), col("p").as("id"),
             col("v").as("score"), col("deg")))
         .orderBy(col("kind"), col("id"))
-        .localCheckpoint()
-    } finally {
-      Seq(Option(hub), Option(auth), Some(edges), Some(outDeg),
-        Some(inDeg)).flatten
-        .foreach(b.unpersistLocalCheckpoint(_))
     }
   }
 
@@ -825,43 +755,33 @@ object GraphRank {
     * Scale shape: per round one edge-keyed join + one min-aggregate +
     * one vertex left join (the iterateRanks shape), per-round
     * localCheckpoint, superseded rounds freed. Edge list is the
-    * process-pinned standing graph shared with q129/q153/q163/q202.
-    * STORAGE CONTRACT: direct localCheckpoint result — caller frees. */
+    * process-pinned standing graph shared with q129/q153/q163/q202. */
   def q227(spark: SparkSession, dir: String, seedSource: String = "src0",
            rounds: Int = 4, maxDf: Int = 50, minShared: Int = 3)
-      : DataFrame = {
-    val b = org.apache.spark.sql.graftbridge.Bridge
+      : DataFrame = Pins.result { pins =>
     val Unreached = 999
     val docs = Tables(spark, dir, "documents")
     val nSeeds = docs.where(col("source") === seedSource).count()
     require(nSeeds > 0, s"q227: no documents for seed source '$seedSource'")
     val edges = fullGraphStanding(spark, dir, maxDf, minShared)
-    var dist = docs
+    var dist = pins.pin(docs
       .select(col("doc_id"),
-        when(col("source") === seedSource, 0).otherwise(Unreached).as("d"))
-      .localCheckpoint()
-    try {
-      for (_ <- 1 to rounds) {
-        val cand = edges
-          .join(dist.select(col("doc_id").as("src"), col("d")), Seq("src"))
-          .groupBy(col("dst")).agg((min(col("d")) + 1).as("cd"))
-        val next = dist
-          .join(cand, col("doc_id") === col("dst"), "left_outer")
-          .select(col("doc_id"),
-            least(col("d"), coalesce(col("cd"), lit(Unreached + 1))).as("d"))
-          .localCheckpoint()
-        b.unpersistLocalCheckpoint(dist)
-        dist = next
-      }
-      dist
+        when(col("source") === seedSource, 0).otherwise(Unreached).as("d")))
+    for (_ <- 1 to rounds) {
+      val cand = edges
+        .join(dist.select(col("doc_id").as("src"), col("d")), Seq("src"))
+        .groupBy(col("dst")).agg((min(col("d")) + 1).as("cd"))
+      val next = pins.pin(dist
+        .join(cand, col("doc_id") === col("dst"), "left_outer")
         .select(col("doc_id"),
-          when(col("d") >= Unreached, -1).otherwise(col("d"))
-            .cast(IntegerType).as("hops"))
-        .orderBy(col("doc_id"))
-        .localCheckpoint()
-    } finally {
-      // edges are registry-owned (fullGraphStanding) — not freed here
-      b.unpersistLocalCheckpoint(dist)
+          least(col("d"), coalesce(col("cd"), lit(Unreached + 1))).as("d")))
+      pins.release(dist)
+      dist = next
     }
+    dist
+      .select(col("doc_id"),
+        when(col("d") >= Unreached, -1).otherwise(col("d"))
+          .cast(IntegerType).as("hops"))
+      .orderBy(col("doc_id"))
   }
 }

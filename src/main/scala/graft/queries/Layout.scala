@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Tables
+import graft.core.{Pins, Tables}
 
 /** Storage-layout and table-maintenance tier: the operations that decide
   * WHERE rows live, not what they compute. The reference engine writes its
@@ -350,38 +350,24 @@ object Layout {
     * global window ever materializes. The per-shard summary is an
     * S-row hash aggregate. Oracle: rank + snake arithmetic + group-by
     * is exactly expressible in DuckDB (ROW_NUMBER over the same total
-    * order — ties broken by doc_id, so the rank is deterministic).
-    * Storage contract: direct localCheckpoint; the local-rank pin is
-    * freed before returning. */
+    * order — ties broken by doc_id, so the rank is deterministic). */
   def q173(spark: SparkSession, dir: String, shards: Int = 16): DataFrame =
-    q173Body(spark, dir, shards)
-
-  private def q173Body(spark: SparkSession, dir: String, shards: Int)
-      : DataFrame = {
-    val (snake, pinDf) = snakeAssign(spark, dir, shards, pin = true)
-    try {
-      val summary = snake.groupBy(col("shard"))
+    Pins.result { pins =>
+      snakeAssign(pins, spark, dir, shards).groupBy(col("shard"))
         .agg(count(lit(1)).as("n_docs"),
           sum(col("n_tok")).as("tot_tok"),
           max(col("n_tok")).as("max_tok"),
           min(col("n_tok")).as("min_tok"))
         .orderBy(col("shard"))
-      summary.localCheckpoint()
-    } finally {
-      pinDf.foreach(
-        org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint)
     }
-  }
 
   /** The per-document serpentine assignment (doc_id, n_tok, shard) —
     * q173's engine before its summary aggregate, exposed so q178 can
-    * WRITE the assignment into a physical layout. Returns (snake, pin):
-    * `pin` (defined iff `pin = true`) is the range-partitioned local
-    * pass both the offsets branch and the join branch consume — the
-    * caller frees it only after everything derived from `snake` has
-    * materialized (the packPlan pin discipline). */
-  private[queries] def snakeAssign(spark: SparkSession, dir: String,
-      shards: Int, pin: Boolean): (DataFrame, Option[DataFrame]) = {
+    * WRITE the assignment into a physical layout. The range-partitioned
+    * local pass both the offsets branch and the join branch consume is
+    * pinned in `pins` (the packPlan pin discipline). */
+  private[queries] def snakeAssign(pins: Pins, spark: SparkSession,
+      dir: String, shards: Int): DataFrame = {
     import spark.implicits._
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val counts = t(spark, dir, "documents")
@@ -394,12 +380,11 @@ object Layout {
       .repartitionByRange(p, col("n_tok").desc, col("doc_id").asc)
       .sortWithinPartitions(col("n_tok").desc, col("doc_id").asc)
       .as[(Long, Long)]
-    val rawLocal = tc.mapPartitions { it =>
+    val local = pins.pin(tc.mapPartitions { it =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
       var i = 0L
       it.map { case (id, n) => i += 1; (pid, id, n, i) }
-    }.toDF("pid", "doc_id", "n_tok", "local_rank")
-    val local = if (pin) rawLocal.localCheckpoint() else rawLocal
+    }.toDF("pid", "doc_id", "n_tok", "local_rank"))
     val offsets = local.groupBy(col("pid"))
       .agg(count(lit(1)).as("pn"))
       .select(col("pid"), coalesce(
@@ -409,7 +394,7 @@ object Layout {
               org.apache.spark.sql.expressions.Window.unboundedPreceding,
               -1)),
         lit(0L)).as("before"))
-    val snake = local
+    local
       .join(broadcast(offsets), Seq("pid"))
       .select(col("doc_id"), col("n_tok"),
         pmod(col("before") + col("local_rank") - 1L, lit(2L * shards))
@@ -418,7 +403,6 @@ object Layout {
         when(col("rr") < shards, col("rr"))
           .otherwise(lit(2L * shards - 1) - col("rr"))
           .cast(IntegerType).as("shard"))
-    (snake, if (pin) Some(local) else None)
   }
 
   /** q187 — SHARD CONTENT CHECKSUMS: the reproducibility receipt a
@@ -436,12 +420,8 @@ object Layout {
     * would need an order and a collect). Cross-engine exact: md5 and
     * the decimal modulus are engine-neutral; the DuckDB twin re-parses
     * the hex digest with integer arithmetic. */
-  def q187(spark: SparkSession, dir: String, shards: Int = 16): DataFrame = {
-    val (snake, pinDf) = snakeAssign(spark, dir, shards, pin = true)
-    try q187Receipt(snake).localCheckpoint()
-    finally pinDf.foreach(
-      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint)
-  }
+  def q187(spark: SparkSession, dir: String, shards: Int = 16): DataFrame =
+    Pins.result(pins => q187Receipt(snakeAssign(pins, spark, dir, shards)))
 
   /** The per-shard receipt aggregate over a snake-assigned frame. */
   private def q187Receipt(snake: DataFrame): DataFrame =
@@ -552,9 +532,9 @@ object Layout {
     // serpentine shard and BUCKETED on doc_id
     val tman = writtenTables.computeIfAbsent(s"manifest|$tag|$seqLen|$shards", { _ =>
       val name = s"graft_m_manifest_$tag"
-      val man = Curation.q87(spark, dir, seqLen) // direct checkpoint
-      val (snake, pin) = snakeAssign(spark, dir, shards, pin = true)
-      try {
+      Pins.scope { pins =>
+        val man = pins.own(Curation.q87(spark, dir, seqLen))
+        val snake = snakeAssign(pins, spark, dir, shards)
         spark.sql(s"DROP TABLE IF EXISTS $name")
         man.join(snake.select(col("doc_id"), col("shard")), Seq("doc_id"))
           .select(col("doc_id"), col("n_tok"), col("start_tok"),
@@ -565,10 +545,6 @@ object Layout {
           .bucketBy(Q161Buckets, "doc_id").sortBy("doc_id")
           .option("path", new java.io.File(base, "manifest").getAbsolutePath)
           .mode("overwrite").saveAsTable(name)
-      } finally {
-        org.apache.spark.sql.graftbridge.Bridge.freeIfDirectCheckpoint(man)
-        pin.foreach(
-          org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint)
       }
       name
     })
@@ -584,15 +560,14 @@ object Layout {
     // trainer rank owns") selects a subset at RUNTIME
     val tdim = writtenTables.computeIfAbsent(s"sharddir|$tag|$shards", { _ =>
       val name = s"graft_m_sharddir_$tag"
-      val df = q173(spark, dir, shards)
-      try {
+      Pins.scope { pins =>
+        val df = pins.own(q173(spark, dir, shards))
         spark.sql(s"DROP TABLE IF EXISTS $name")
         df.select(col("shard").as("d_shard"), col("n_docs"), col("tot_tok"))
           .write.format("parquet")
           .option("path", new java.io.File(base, "sharddir").getAbsolutePath)
           .mode("overwrite").saveAsTable(name)
-      } finally org.apache.spark.sql.graftbridge.Bridge
-        .freeIfDirectCheckpoint(df)
+      }
       name
     })
     val focus = spark.table(tdim)
@@ -650,10 +625,53 @@ object Layout {
     * S-row hash aggregate; a 10⁹-file manifest costs the same three
     * stages. Output: per planned output file — member count, bytes,
     * doc_id span, fill ratio, and the over-cap flag (true iff a member
-    * straddles the boundary). Storage contract: direct localCheckpoint;
-    * the local-pass pin is freed before returning. */
+    * straddles the boundary). */
   def q193(spark: SparkSession, dir: String, capBytes: Long = 4096L): DataFrame =
-    q193Body(spark, dir, capBytes)
+    Pins.result { pins =>
+      import spark.implicits._
+      val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
+      val files = t(spark, dir, "documents")
+        .select(col("doc_id").cast(LongType),
+          col("n_chars").cast(LongType).as("bytes"))
+        .repartitionByRange(p, col("doc_id").asc)
+        .sortWithinPartitions(col("doc_id").asc)
+        .as[(Long, Long)]
+      val local = pins.pin(files.mapPartitions { it =>
+        val pid = org.apache.spark.TaskContext.getPartitionId()
+        var acc = 0L
+        it.map { case (id, b) =>
+          val before = acc; acc += b; (pid, id, b, before)
+        }
+      }.toDF("pid", "doc_id", "bytes", "local_before"))
+      // P-row partition totals; the window runs over P rows, not the data
+      val offsets = local.groupBy(col("pid"))
+          .agg(sum(col("bytes")).as("pb"))
+          .select(col("pid"), coalesce(
+            sum(col("pb")).over(
+              org.apache.spark.sql.expressions.Window.orderBy(col("pid"))
+                .rowsBetween(
+                  org.apache.spark.sql.expressions.Window.unboundedPreceding,
+                  -1)),
+            lit(0L)).as("part_before"))
+      val binned = local.join(broadcast(offsets), Seq("pid"))
+          .select(col("doc_id"), col("bytes"),
+            (col("part_before") + col("local_before")).as("strt"))
+          // integer DIV: exact at any corpus size (no double rounding)
+          .withColumn("bin", expr(s"strt DIV ${capBytes}L"))
+      binned.groupBy(col("bin"))
+          .agg(count(lit(1)).as("n_files"),
+            sum(col("bytes")).as("bytes"),
+            min(col("doc_id")).as("first_doc"),
+            max(col("doc_id")).as("last_doc"),
+            max(col("strt") + col("bytes")).as("max_end"))
+          .select(col("bin"), col("n_files"), col("bytes"),
+            col("first_doc"), col("last_doc"),
+            round(col("bytes").cast(DoubleType) / capBytes.toDouble, 6)
+              .as("fill"),
+            // a bin overshoots cap iff its last member crosses the boundary
+            (col("max_end") > (col("bin") + 1L) * capBytes).as("over_cap"))
+          .orderBy(col("bin"))
+    }
 
   /** The q193/q196 prefix-bin kernel: files (doc_id, bytes) → per-file
     * (doc_id, bytes, strt) running start offsets in doc_id order,
@@ -661,10 +679,9 @@ object Layout {
     * for a from-scratch plan, the standing corpus's byte total for an
     * incremental one). The q87/q173 two-pass prefix discipline: range
     * partition, per-partition local sums, P-row broadcast offsets.
-    * Returns (offsets DF, pin to free after materialization — None when
-    * un-pinned). */
-  private def prefixOffsets(spark: SparkSession, files: DataFrame,
-      base: DataFrame, pin: Boolean): (DataFrame, Option[DataFrame]) = {
+    * The local pass is pinned in `pins`. */
+  private def prefixOffsets(pins: Pins, spark: SparkSession,
+      files: DataFrame, base: DataFrame): DataFrame = {
     import spark.implicits._
     val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val sorted = files
@@ -672,14 +689,13 @@ object Layout {
       .repartitionByRange(p, col("doc_id").asc)
       .sortWithinPartitions(col("doc_id").asc)
       .as[(Long, Long)]
-    val rawLocal = sorted.mapPartitions { it =>
+    val local = pins.pin(sorted.mapPartitions { it =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
       var acc = 0L
       it.map { case (id, b) =>
         val before = acc; acc += b; (pid, id, b, before)
       }
-    }.toDF("pid", "doc_id", "bytes", "local_before")
-    val local = if (pin) rawLocal.localCheckpoint() else rawLocal
+    }.toDF("pid", "doc_id", "bytes", "local_before"))
     val offsets = local.groupBy(col("pid"))
       .agg(sum(col("bytes")).as("pb"))
       .select(col("pid"), coalesce(
@@ -689,11 +705,10 @@ object Layout {
               org.apache.spark.sql.expressions.Window.unboundedPreceding,
               -1)),
         lit(0L)).as("part_before"))
-    val out = local.join(broadcast(offsets), Seq("pid"))
+    local.join(broadcast(offsets), Seq("pid"))
       .crossJoin(broadcast(base))
       .select(col("doc_id"), col("bytes"),
         (col("base") + col("part_before") + col("local_before")).as("strt"))
-    (out, if (pin) Some(local) else None)
   }
 
   /** Per-bin ledger over prefix offsets: bin = strt DIV cap (integer
@@ -708,56 +723,6 @@ object Layout {
         min(col("doc_id")).as("first_doc"),
         max(col("doc_id")).as("last_doc"),
         max(col("strt") + col("bytes")).as("max_end"))
-
-  private def q193Body(spark: SparkSession, dir: String, capBytes: Long)
-      : DataFrame = {
-    import spark.implicits._
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val files = t(spark, dir, "documents")
-      .select(col("doc_id").cast(LongType),
-        col("n_chars").cast(LongType).as("bytes"))
-      .repartitionByRange(p, col("doc_id").asc)
-      .sortWithinPartitions(col("doc_id").asc)
-      .as[(Long, Long)]
-    val local = files.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      var acc = 0L
-      it.map { case (id, b) =>
-        val before = acc; acc += b; (pid, id, b, before)
-      }
-    }.toDF("pid", "doc_id", "bytes", "local_before").localCheckpoint()
-    // P-row partition totals; the window runs over P rows, not the data
-    val offsets = local.groupBy(col("pid"))
-        .agg(sum(col("bytes")).as("pb"))
-        .select(col("pid"), coalesce(
-          sum(col("pb")).over(
-            org.apache.spark.sql.expressions.Window.orderBy(col("pid"))
-              .rowsBetween(
-                org.apache.spark.sql.expressions.Window.unboundedPreceding,
-                -1)),
-          lit(0L)).as("part_before"))
-    val binned = local.join(broadcast(offsets), Seq("pid"))
-        .select(col("doc_id"), col("bytes"),
-          (col("part_before") + col("local_before")).as("strt"))
-        // integer DIV: exact at any corpus size (no double rounding)
-        .withColumn("bin", expr(s"strt DIV ${capBytes}L"))
-    val out = binned.groupBy(col("bin"))
-        .agg(count(lit(1)).as("n_files"),
-          sum(col("bytes")).as("bytes"),
-          min(col("doc_id")).as("first_doc"),
-          max(col("doc_id")).as("last_doc"),
-          max(col("strt") + col("bytes")).as("max_end"))
-        .select(col("bin"), col("n_files"), col("bytes"),
-          col("first_doc"), col("last_doc"),
-          round(col("bytes").cast(DoubleType) / capBytes.toDouble, 6)
-            .as("fill"),
-          // a bin overshoots cap iff its last member crosses the boundary
-          (col("max_end") > (col("bin") + 1L) * capBytes).as("over_cap"))
-        .orderBy(col("bin"))
-    try out.localCheckpoint()
-    finally org.apache.spark.sql.graftbridge.Bridge
-      .unpersistLocalCheckpoint(local)
-  }
 
   /** q196 — INCREMENTAL COMPACTION: q193's planner at the daily-ingest
     * posture (the incremental trio's layout member, beside q188's
@@ -780,28 +745,27 @@ object Layout {
     * below the straddle point are byte-identical to the standing-only
     * ledger (the "never re-bins the corpus" claim, checked). Output:
     * q193's ledger columns + `batch_files` (the delta accounting). */
-  def q196(spark: SparkSession, dir: String, capBytes: Long = 4096L): DataFrame = {
-    val counts = t(spark, dir, "documents")
-      .select(col("doc_id").cast(LongType),
-        col("n_chars").cast(LongType).as("bytes"))
-    val standing = counts.where(pmod(col("doc_id"), lit(10L)) < 7L)
-    val batch = counts.where(pmod(col("doc_id"), lit(10L)) >= 7L)
-    val zero = standing.sparkSession.range(1).select(lit(0L).as("base"))
-    val (sOff, sPin) = prefixOffsets(spark, standing, zero, pin = true)
-    val sLedger = binLedger(sOff, capBytes)
-      .select(col("bin"), col("n_files").as("s_files"),
-        col("bytes").as("s_bytes"), col("first_doc").as("s_first"),
-        col("last_doc").as("s_last"), col("max_end").as("s_end"))
-    // the per-ingest work: ONE prefix pass over the BATCH, offset by
-    // the standing total (a 1-row broadcast — at scale, a catalog stat)
-    val standingTotal = standing.agg(
-      coalesce(sum(col("bytes")), lit(0L)).as("base"))
-    val (bOff, bPin) = prefixOffsets(spark, batch, standingTotal, pin = true)
-    val bLedger = binLedger(bOff, capBytes)
-      .select(col("bin"), col("n_files").as("b_files"),
-        col("bytes").as("b_bytes"), col("first_doc").as("b_first"),
-        col("last_doc").as("b_last"), col("max_end").as("b_end"))
-    try {
+  def q196(spark: SparkSession, dir: String, capBytes: Long = 4096L): DataFrame =
+    Pins.result { pins =>
+      val counts = t(spark, dir, "documents")
+        .select(col("doc_id").cast(LongType),
+          col("n_chars").cast(LongType).as("bytes"))
+      val standing = counts.where(pmod(col("doc_id"), lit(10L)) < 7L)
+      val batch = counts.where(pmod(col("doc_id"), lit(10L)) >= 7L)
+      val zero = standing.sparkSession.range(1).select(lit(0L).as("base"))
+      val sLedger = binLedger(prefixOffsets(pins, spark, standing, zero), capBytes)
+        .select(col("bin"), col("n_files").as("s_files"),
+          col("bytes").as("s_bytes"), col("first_doc").as("s_first"),
+          col("last_doc").as("s_last"), col("max_end").as("s_end"))
+      // the per-ingest work: ONE prefix pass over the BATCH, offset by
+      // the standing total (a 1-row broadcast — at scale, a catalog stat)
+      val standingTotal = standing.agg(
+        coalesce(sum(col("bytes")), lit(0L)).as("base"))
+      val bLedger =
+        binLedger(prefixOffsets(pins, spark, batch, standingTotal), capBytes)
+          .select(col("bin"), col("n_files").as("b_files"),
+            col("bytes").as("b_bytes"), col("first_doc").as("b_first"),
+            col("last_doc").as("b_last"), col("max_end").as("b_end"))
       sLedger.join(bLedger, Seq("bin"), "full_outer")
         .select(col("bin"),
           (coalesce(col("s_files"), lit(0L)) + coalesce(col("b_files"), lit(0L)))
@@ -819,13 +783,7 @@ object Layout {
           (col("max_end") > (col("bin") + 1L) * capBytes).as("over_cap"),
           col("batch_files"))
         .orderBy(col("bin"))
-        .localCheckpoint()
-    } finally {
-      val bridge = org.apache.spark.sql.graftbridge.Bridge
-      sPin.foreach(bridge.unpersistLocalCheckpoint(_))
-      bPin.foreach(bridge.unpersistLocalCheckpoint(_))
     }
-  }
 
   /** The standing-only ledger (q196's persisted-state stand-in) and the
     * monolithic full-order replay, exposed for IncrCompactionSpec. */
@@ -836,11 +794,9 @@ object Layout {
       .select(col("doc_id").cast(LongType),
         col("n_chars").cast(LongType).as("bytes"))
     val zero = spark.range(1).select(lit(0L).as("base"))
-    val (off, pin) = prefixOffsets(spark, standing, zero, pin = true)
-    try {
-      binLedger(off, capBytes).orderBy(col("bin")).localCheckpoint()
-    } finally pin.foreach(
-      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(_))
+    Pins.result(pins =>
+      binLedger(prefixOffsets(pins, spark, standing, zero), capBytes)
+        .orderBy(col("bin")))
   }
 
   /** q201 — RUNTIME-FILTERED fact join: the third join lever beside

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.core.Pins
+
 /** Term-weighting / relevance-ranking operators over `documents` — the
   * retrieval side of a training-data pipeline (dedup picks what to drop,
   * ranking picks what to keep / surface). The reference has no scoring of
@@ -305,40 +307,25 @@ object Ranking {
     * spreads a hot context over `nSalts` shuffle partitions while the
     * vocabulary-sized count tables replicate ×nSalts. Same arithmetic,
     * same output as q94 (spec-proven equal, SkewSpec; same oracle SQL).
-    *
-    * Storage contract: the scored result (one slim row per doc) is
-    * checkpointed eagerly so the bigram model's storage can be freed
-    * before returning; the returned frame is a DIRECT localCheckpoint
-    * the caller frees once consumed. */
+    * The scored result (one slim row per doc) is the checkpoint; the
+    * bigram model is freed once it materializes. */
   def q104(spark: SparkSession, dir: String,
-           vocabSize: Int = 1 << 16, nSalts: Int = 8): DataFrame = {
-    val (scored, bg) = q104Plan(spark, dir, vocabSize, nSalts)
-    val out = scored.localCheckpoint()
-    org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(bg)
-    out
-  }
-
-  /** The q104 scoring plan BEFORE the result checkpoint, plus the pinned
-    * bigram model it reads (the caller frees the model once the plan is
-    * materialized — q104 does). */
-  private[graft] def q104Plan(spark: SparkSession, dir: String,
-                              vocabSize: Int = 1 << 16, nSalts: Int = 8)
-      : (DataFrame, DataFrame) = {
-    val bg = bigramCounts(spark, dir).localCheckpoint()
-    val cb = bg.groupBy(col("w1"), col("w2")).agg(sum(col("c_d")).as("c_b"))
-    val cu = bg.groupBy(col("w1")).agg(sum(col("c_d")).as("c_u"))
-    val scored = graft.core.SkewUtils.saltedJoin(
-      graft.core.SkewUtils.saltedJoin(bg, cb, Seq("w1", "w2"), nSalts),
-      cu, Seq("w1"), nSalts)
-      .select(col("doc_id"), col("c_d"), nllTerm(vocabSize).as("term"))
-      .groupBy(col("doc_id"))
-      .agg(
-        sum(col("c_d")).cast(LongType).as("n_bigrams"),
-        round(sum(col("term")).cast(DoubleType) /
-          sum(col("c_d")).cast(DoubleType), 6).as("nll"))
-      .orderBy(col("doc_id"))
-    (scored, bg)
-  }
+           vocabSize: Int = 1 << 16, nSalts: Int = 8): DataFrame =
+    Pins.result { pins =>
+      val bg = pins.pin(bigramCounts(spark, dir))
+      val cb = bg.groupBy(col("w1"), col("w2")).agg(sum(col("c_d")).as("c_b"))
+      val cu = bg.groupBy(col("w1")).agg(sum(col("c_d")).as("c_u"))
+      graft.core.SkewUtils.saltedJoin(
+        graft.core.SkewUtils.saltedJoin(bg, cb, Seq("w1", "w2"), nSalts),
+        cu, Seq("w1"), nSalts)
+        .select(col("doc_id"), col("c_d"), nllTerm(vocabSize).as("term"))
+        .groupBy(col("doc_id"))
+        .agg(
+          sum(col("c_d")).cast(LongType).as("n_bigrams"),
+          round(sum(col("term")).cast(DoubleType) /
+            sum(col("c_d")).cast(DoubleType), 6).as("nll"))
+        .orderBy(col("doc_id"))
+    }
 
   /** q119 — SPARSE tf-idf cosine near-dup pairs via inverted-index join:
     * the hashing-free sibling of the minhash (q29) and embedding (q31)
@@ -618,68 +605,55 @@ object Ranking {
     * and both probes share the one weighted subtree. Determinism: the
     * q119 int64 weight quantization end-to-end. */
   def q124(spark: SparkSession, dir: String, tau: Double = 0.5,
-           maxDf: Int = 50, mod: Int = 10, lt: Int = 7): DataFrame = {
-    val (labels, weighted) = q124Plan(spark, dir, tau, maxDf, mod, lt)
-    val out = labels.localCheckpoint()
-    org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(weighted)
-    out
-  }
-
-  /** The q124 labeling plan BEFORE the result checkpoint, plus the pinned
-    * weighted-vector model it probes three ways (batch×corpus,
-    * batch×earlier-batch twice-sided) — without the pin each probe branch
-    * re-planned the whole tokenize→df-window→weight→norm-window pipeline
-    * (measured: 6 scans in the executed plan; the model table spans the
-    * CORPUS, so at 100 TB that recompute dominates). The caller frees the
-    * model once the labels materialize — q124 does. */
-  private[graft] def q124Plan(spark: SparkSession, dir: String,
-                              tau: Double = 0.5, maxDf: Int = 50,
-                              mod: Int = 10, lt: Int = 7)
-      : (DataFrame, DataFrame) = {
-    val isCorpus = col("doc_id") % mod < lt
-    val nDocs = graft.core.Tables(spark, dir, "documents")
-      .where(isCorpus).agg(count(lit(1)).as("n_docs"))
-    val weighted = gramCounts(spark, dir)
-      .withColumn("corpus", isCorpus)
-      .withColumn("df", sum(when(col("corpus"), 1L).otherwise(0L))
-        .over(Window.partitionBy(col("gram"))))
-      .where(col("df") <= maxDf)
-      .crossJoin(broadcast(nDocs))
-      .select(col("doc_id"), col("gram"), col("corpus"),
-        sparseWeight(col("tfv"), col("df"), col("n_docs")).as("wi"))
-      .withColumn("n2",
-        sum(col("wi") * col("wi")).over(Window.partitionBy(col("doc_id"))))
-      .localCheckpoint()
-    val batch = weighted.where(!col("corpus"))
-    def matchedIds(other: DataFrame, earlierOnly: Boolean): DataFrame = {
-      val joined = batch.as("a").join(other.as("b"),
-        col("a.gram") === col("b.gram") &&
-          (if (earlierOnly) col("b.doc_id") < col("a.doc_id") else lit(true)))
-      joined
-        .groupBy(col("a.doc_id").as("in_id"), col("b.doc_id").as("other_id"),
-          col("a.n2").as("na"), col("b.n2").as("nb"))
-        .agg(sum(col("a.wi") * col("b.wi")).as("dot"))
-        .where(round(col("dot").cast(DoubleType) /
-          (sqrt(col("na").cast(DoubleType)) * sqrt(col("nb").cast(DoubleType))),
-          6) >= tau)
-        .select(col("in_id")).distinct()
+           maxDf: Int = 50, mod: Int = 10, lt: Int = 7): DataFrame =
+    Pins.result { pins =>
+      // The weighted-vector model is pinned: it is probed three ways
+      // (batch×corpus, batch×earlier-batch twice-sided) — without the pin
+      // each probe branch re-planned the whole tokenize→df-window→weight→
+      // norm-window pipeline (measured: 6 scans in the executed plan; the
+      // model table spans the CORPUS, so at 100 TB that recompute dominates).
+      val isCorpus = col("doc_id") % mod < lt
+      val nDocs = graft.core.Tables(spark, dir, "documents")
+        .where(isCorpus).agg(count(lit(1)).as("n_docs"))
+      val weighted = pins.pin(gramCounts(spark, dir)
+        .withColumn("corpus", isCorpus)
+        .withColumn("df", sum(when(col("corpus"), 1L).otherwise(0L))
+          .over(Window.partitionBy(col("gram"))))
+        .where(col("df") <= maxDf)
+        .crossJoin(broadcast(nDocs))
+        .select(col("doc_id"), col("gram"), col("corpus"),
+          sparseWeight(col("tfv"), col("df"), col("n_docs")).as("wi"))
+        .withColumn("n2",
+          sum(col("wi") * col("wi")).over(Window.partitionBy(col("doc_id")))))
+      val batch = weighted.where(!col("corpus"))
+      def matchedIds(other: DataFrame, earlierOnly: Boolean): DataFrame = {
+        val joined = batch.as("a").join(other.as("b"),
+          col("a.gram") === col("b.gram") &&
+            (if (earlierOnly) col("b.doc_id") < col("a.doc_id") else lit(true)))
+        joined
+          .groupBy(col("a.doc_id").as("in_id"), col("b.doc_id").as("other_id"),
+            col("a.n2").as("na"), col("b.n2").as("nb"))
+          .agg(sum(col("a.wi") * col("b.wi")).as("dot"))
+          .where(round(col("dot").cast(DoubleType) /
+            (sqrt(col("na").cast(DoubleType)) * sqrt(col("nb").cast(DoubleType))),
+            6) >= tau)
+          .select(col("in_id")).distinct()
+      }
+      val dupCorpus = matchedIds(weighted.where(col("corpus")), earlierOnly = false)
+        .withColumn("dc", lit(1))
+      val dupBatch = matchedIds(batch, earlierOnly = true)
+        .withColumn("db", lit(1))
+      graft.core.Tables(spark, dir, "documents")
+        .where(!isCorpus)
+        .select(col("doc_id"))
+        .join(dupCorpus.withColumnRenamed("in_id", "doc_id"), Seq("doc_id"), "left_outer")
+        .join(dupBatch.withColumnRenamed("in_id", "doc_id"), Seq("doc_id"), "left_outer")
+        .select(col("doc_id"),
+          when(col("dc").isNotNull, "neardup_corpus")
+            .when(col("db").isNotNull, "neardup_batch")
+            .otherwise("new").as("status"))
+        .orderBy(col("doc_id"))
     }
-    val dupCorpus = matchedIds(weighted.where(col("corpus")), earlierOnly = false)
-      .withColumn("dc", lit(1))
-    val dupBatch = matchedIds(batch, earlierOnly = true)
-      .withColumn("db", lit(1))
-    val labels = graft.core.Tables(spark, dir, "documents")
-      .where(!isCorpus)
-      .select(col("doc_id"))
-      .join(dupCorpus.withColumnRenamed("in_id", "doc_id"), Seq("doc_id"), "left_outer")
-      .join(dupBatch.withColumnRenamed("in_id", "doc_id"), Seq("doc_id"), "left_outer")
-      .select(col("doc_id"),
-        when(col("dc").isNotNull, "neardup_corpus")
-          .when(col("db").isNotNull, "neardup_batch")
-          .otherwise("new").as("status"))
-      .orderBy(col("doc_id"))
-    (labels, weighted)
-  }
 
   /** q138 — interpolated Kneser–Ney bigram model TRAINING: where
     * q94/q104 SCORE documents under an add-one model, this ships the
@@ -745,27 +719,11 @@ object Ranking {
     * vocabulary-scale aggregates OF the pinned table (map-side partials
     * all the way down, 1-row type total broadcast); scoring is one
     * (w1, w2)-keyed join of the pinned table against the model and a
-    * doc-keyed final aggregate.
-    *
-    * Storage contract (q104's): the scored result (one slim row per
-    * doc) is checkpointed eagerly so the bigram model's storage can be
-    * freed before returning; the returned frame is a DIRECT
-    * localCheckpoint the caller frees once consumed. */
+    * doc-keyed final aggregate. The scored result is the checkpoint; the
+    * bigram table is freed once it materializes (q104's shape). */
   def q146(spark: SparkSession, dir: String,
-           discount: Double = 0.75): DataFrame = {
-    val (scored, db) = q146Plan(spark, dir, discount)
-    val out = scored.localCheckpoint()
-    org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(db)
-    out
-  }
-
-  /** The q146 scoring plan BEFORE the result checkpoint, plus the pinned
-    * bigram table it reads (the q104Plan convention: caller frees the
-    * pin once the plan is materialized — q146 does). */
-  private[graft] def q146Plan(spark: SparkSession, dir: String,
-                              discount: Double = 0.75)
-      : (DataFrame, DataFrame) = {
-    val db = bigramCounts(spark, dir).localCheckpoint()
+           discount: Double = 0.75): DataFrame = Pins.result { pins =>
+    val db = pins.pin(bigramCounts(spark, dir))
     val bg = db.groupBy(col("w1"), col("w2"))
       .agg(sum(col("c_d")).cast(LongType).as("cnt"))
     val follow = bg.groupBy(col("w1")).agg(
@@ -782,7 +740,7 @@ object Ranking {
     val model = bg.join(follow, Seq("w1")).join(prec, Seq("w2"))
       .crossJoin(broadcast(types))
       .select(col("w1"), col("w2"), pkn.as("pkn"))
-    val scored = db.join(model, Seq("w1", "w2"))
+    db.join(model, Seq("w1", "w2"))
       .select(col("doc_id"), col("c_d"),
         round(col("c_d").cast(DoubleType) * -log(col("pkn")), 8)
           .cast(DecimalType(18, 8)).as("term"))
@@ -791,7 +749,6 @@ object Ranking {
         round(sum(col("term")).cast(DoubleType) /
           sum(col("c_d")).cast(DoubleType), 6).as("kn_nll"))
       .orderBy(col("doc_id"))
-    (scored, db)
   }
 
   /** q210 — PMI COLLOCATIONS (Church & Hanks 1990): the corpus's most
@@ -809,31 +766,24 @@ object Ranking {
     * Scale shape: the bigram table derives once (pinned, freed after
     * the result materializes); left/right marginals are vocab-keyed
     * partial-aggregable groupBys joined back on vocab-sized keys; N is
-    * a 1-row broadcast; the top-k is TakeOrderedAndProject. STORAGE
-    * CONTRACT: direct localCheckpoint result — caller frees. */
+    * a 1-row broadcast; the top-k is TakeOrderedAndProject. */
   def q210(spark: SparkSession, dir: String, minCount: Long = 5L,
-           topK: Int = 30): DataFrame = {
-    val b = bigramCounts(spark, dir)
-      .groupBy(col("w1"), col("w2")).agg(sum(col("c_d")).as("c12"))
-      .localCheckpoint()
-    try {
-      val left = b.groupBy(col("w1")).agg(sum(col("c12")).as("c1"))
-      val right = b.groupBy(col("w2")).agg(sum(col("c12")).as("c2"))
-      val n = b.agg(sum(col("c12")).as("nb"))
-      b.where(col("c12") >= minCount)
-        .join(left, Seq("w1"))
-        .join(right, Seq("w2"))
-        .crossJoin(broadcast(n))
-        .select(col("w1"), col("w2"), col("c12"),
-          round(log(
-            (col("c12").cast(DoubleType) * col("nb").cast(DoubleType)) /
-              (col("c1").cast(DoubleType) * col("c2").cast(DoubleType))), 6)
-            .as("pmi"))
-        .orderBy(col("c12").desc, col("w1"), col("w2"))
-        .limit(topK)
-        .localCheckpoint()
-    } finally {
-      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(b)
-    }
+           topK: Int = 30): DataFrame = Pins.result { pins =>
+    val b = pins.pin(bigramCounts(spark, dir)
+      .groupBy(col("w1"), col("w2")).agg(sum(col("c_d")).as("c12")))
+    val left = b.groupBy(col("w1")).agg(sum(col("c12")).as("c1"))
+    val right = b.groupBy(col("w2")).agg(sum(col("c12")).as("c2"))
+    val n = b.agg(sum(col("c12")).as("nb"))
+    b.where(col("c12") >= minCount)
+      .join(left, Seq("w1"))
+      .join(right, Seq("w2"))
+      .crossJoin(broadcast(n))
+      .select(col("w1"), col("w2"), col("c12"),
+        round(log(
+          (col("c12").cast(DoubleType) * col("nb").cast(DoubleType)) /
+            (col("c1").cast(DoubleType) * col("c2").cast(DoubleType))), 6)
+          .as("pmi"))
+      .orderBy(col("c12").desc, col("w1"), col("w2"))
+      .limit(topK)
   }
 }

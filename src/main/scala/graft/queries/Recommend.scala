@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType}
 
-import graft.core.Tables
+import graft.core.{Pins, Tables}
 
 /** Recommendation / affinity operators over the retail star schema —
   * the workload class (item-item collaborative filtering, Sarwar et al.
@@ -32,30 +32,20 @@ object Recommend {
     * once per pair; the per-part top-3 is a rank window PARTITIONED by
     * part (never global). */
   def q241(spark: SparkSession, dir: String, cap: Int = 256, k: Int = 3)
-      : DataFrame = {
-    val (plan, pins) = q241Dag(spark, dir, cap, k)
-    try plan.localCheckpoint()
-    finally pins.foreach(
-      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(_))
-  }
-
-  /** q241's plan before the result checkpoint, plus its pinned state
-    * (the capped basket table). Caller frees the pins. */
-  private[graft] def q241Dag(spark: SparkSession, dir: String,
-      cap: Int = 256, k: Int = 3): (DataFrame, Seq[DataFrame]) = {
+      : DataFrame = Pins.result { pins =>
     val edges = t(spark, dir, "orders")
       .join(t(spark, dir, "lineitem"),
         col("o_orderkey") === col("l_orderkey"))
       .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
       .distinct()
-    val capped = org.apache.spark.sql.graftbridge.Bridge
+    val capped = pins.own(org.apache.spark.sql.graftbridge.Bridge
       .checkpointPartitioned(edges
         .withColumn("rn", row_number().over(
           Window.partitionBy(col("c")).orderBy(col("p"))))
         .where(col("rn") <= cap)
         .select(col("c"), col("p")),
-        Seq("c"), Seq("c", "p")) // pair join + part counts share one
-                                 // derivation, pinned in self-join layout
+        Seq("c"), Seq("c", "p"))) // pair join + part counts share one
+                                  // derivation, pinned in self-join layout
     val n = capped.groupBy(col("p")).agg(count(lit(1)).as("n"))
     val co = capped.as("a").join(capped.as("b"),
         col("a.c") === col("b.c") && col("a.p") < col("b.p"))
@@ -72,7 +62,7 @@ object Recommend {
         round(col("co").cast(DoubleType) /
           sqrt(col("n1").cast(DoubleType) * col("n2").cast(DoubleType)),
           6).as("cosine"))
-    val plan = scored
+    scored
       .withColumn("rank", row_number().over(
         Window.partitionBy(col("part"))
           .orderBy(col("cosine").desc, col("co").desc, col("other"))))
@@ -80,7 +70,6 @@ object Recommend {
       .select(col("part"), col("rank").cast(IntegerType), col("other"),
         col("co"), col("cosine"))
       .orderBy(col("part"), col("rank"))
-    (plan, Seq(capped))
   }
 
   /** q244 — INCREMENTAL item-CF ingest (the q106/q160/q177 standing-
@@ -126,10 +115,10 @@ object Recommend {
     * semantics — the estimator's declared behavior, not just its slack
     * case. */
   def q244(spark: SparkSession, dir: String, cap: Int = 256): DataFrame = {
-    val (plan, pins) = q244Dag(spark, dir, cap)
-    try plan.localCheckpoint()
-    finally pins.foreach(
-      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(_))
+    // standing state (persisted between ingests at scale; q247 is the
+    // durable face of exactly these two frames) — process-pinned
+    val (base, coBase) = cfStanding(spark, dir, cap)
+    Pins.result(pins => ingestLedger(pins, spark, dir, base, coBase, cap))
   }
 
   /** The distinct (customer, part) purchase edges of an orders slice. */
@@ -187,14 +176,6 @@ object Recommend {
       .groupBy(col("a.p").as("p1"), col("b.p").as("p2"))
       .agg(count(lit(1)).as("co_base"))
 
-  /** q244's INGEST LEG against explicit standing frames — batch-scale
-    * from here down. Novelty is judged against the CAPPED standing set
-    * (all the state a deployment holds); admission fills each basket's
-    * remaining room, lowest novel part keys first, so no customer's
-    * basket ever exceeds cap. `base`/`coBase` may be process pins (q244)
-    * or reloaded durable parquet (q247) — the ledger is identical, which
-    * is exactly the restart≡continuous claim. Returns (plan, pins);
-    * caller frees the pins. */
   /** The batch's ADMITTED novel edges against a standing basket frame:
     * anti-probe for novelty, then room-capped admission (per customer,
     * lowest novel part keys fill `cap − |basket|` slots). */
@@ -226,39 +207,29 @@ object Recommend {
       .groupBy(col("p1"), col("p2")).agg(count(lit(1)).as("delta_co"))
   }
 
-  private[graft] def ingestDag(spark: SparkSession, dir: String,
-      base: DataFrame, coBase: DataFrame, cap: Int,
+  /** q244's INGEST LEG against explicit standing frames — batch-scale
+    * from here down: the change ledger over the admitted novel edges,
+    * pinned in `pins`. Novelty is judged against the CAPPED standing set
+    * (all the state a deployment holds); admission fills each basket's
+    * remaining room, lowest novel part keys first, so no customer's
+    * basket ever exceeds cap. `base`/`coBase` may be process pins (q244)
+    * or reloaded durable parquet (q247) — the ledger is identical, which
+    * is exactly the restart≡continuous claim. */
+  private[graft] def ingestLedger(pins: Pins, spark: SparkSession,
+      dir: String, base: DataFrame, coBase: DataFrame, cap: Int,
       batchFilter: org.apache.spark.sql.Column =
-        col("o_orderkey") % 10 >= 7): (DataFrame, Seq[DataFrame]) = {
+        col("o_orderkey") % 10 >= 7): DataFrame = {
     // the admitted-novel pin is consumed keyed on c by both pair legs —
     // pin it in that layout (the cfStanding r13 note)
-    val novel = org.apache.spark.sql.graftbridge.Bridge.checkpointPartitioned(
-      admittedNovel(spark, dir, base, cap, batchFilter), Seq("c"), Seq("c", "p"))
-    try {
-      val plan = pairDelta(novel, base)
-        .join(coBase, Seq("p1", "p2"), "left_outer")
-        .select(col("p1"), col("p2"), col("delta_co"),
-          (coalesce(col("co_base"), lit(0L)) + col("delta_co"))
-            .as("co_after"))
-        .orderBy(col("p1"), col("p2"))
-      (plan, Seq(novel))
-    } catch { case t: Throwable =>
-      // a throw during assembly must not leak the pinned novel frame
-      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(novel)
-      throw t
-    }
-  }
-
-  /** q244's plan before the result checkpoint, plus its pins (the
-    * admitted batch-novel edges; the standing basket/co-matrix are
-    * REGISTRY-owned via [[cfStanding]] and not freed). Caller frees the
-    * pins. */
-  private[graft] def q244Dag(spark: SparkSession, dir: String,
-      cap: Int = 256): (DataFrame, Seq[DataFrame]) = {
-    // standing state (persisted between ingests at scale; q247 is the
-    // durable face of exactly these two frames) — process-pinned
-    val (base, coBase) = cfStanding(spark, dir, cap)
-    ingestDag(spark, dir, base, coBase, cap)
+    val novel = pins.own(org.apache.spark.sql.graftbridge.Bridge
+      .checkpointPartitioned(admittedNovel(spark, dir, base, cap, batchFilter),
+        Seq("c"), Seq("c", "p")))
+    pairDelta(novel, base)
+      .join(coBase, Seq("p1", "p2"), "left_outer")
+      .select(col("p1"), col("p2"), col("delta_co"),
+        (coalesce(col("co_base"), lit(0L)) + col("delta_co"))
+          .as("co_after"))
+      .orderBy(col("p1"), col("p2"))
   }
 
   /** q247 — the CF ingest served from DURABLE standing state (VERDICT
@@ -283,10 +254,7 @@ object Recommend {
     * storage and the reload is the boot path every executor already has. */
   def q247(spark: SparkSession, dir: String, cap: Int = 256): DataFrame = {
     val (base, coBase) = reloadedCfState(spark, dir, cap)
-    val (plan, pins) = ingestDag(spark, dir, base, coBase, cap)
-    try plan.localCheckpoint()
-    finally pins.foreach(
-      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(_))
+    Pins.result(pins => ingestLedger(pins, spark, dir, base, coBase, cap))
   }
 
   /** Spill the CF standing state once per process (the deployment's
@@ -302,12 +270,12 @@ object Recommend {
       s"durablecf|${spark.sparkContext.applicationId}|$dir|$cap") {
       // one pinned basket derivation feeds both spilled tables (the
       // q241 share-the-derivation discipline), freed after the write
-      val b = cappedBaseEdges(spark, dir, cap).localCheckpoint()
-      try java.lang.Long.valueOf(graft.core.DurableState.persistAll(
-        graft.core.DurableState.rootFor(dir), s"cf$cap",
-        Seq("basket" -> b, "co" -> coMatrixOf(b))))
-      finally
-        org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(b)
+      Pins.scope { pins =>
+        val b = pins.pin(cappedBaseEdges(spark, dir, cap))
+        java.lang.Long.valueOf(graft.core.DurableState.persistAll(
+          graft.core.DurableState.rootFor(dir), s"cf$cap",
+          Seq("basket" -> b, "co" -> coMatrixOf(b))))
+      }
     }.longValue()
 
   private def reloadedCfState(spark: SparkSession, dir: String, cap: Int)
@@ -349,8 +317,7 @@ object Recommend {
     * cost is the v2 reload + the batch-B ingest. Scale shape: each
     * stage is q244's — anti-probe, room-capped admission window,
     * bounded pair legs; state size O(customers·cap), never corpus-
-    * scale. STORAGE CONTRACT: direct localCheckpoint result — caller
-    * frees. */
+    * scale. */
   def q250(spark: SparkSession, dir: String, cap: Int = 256): DataFrame = {
     val B = org.apache.spark.sql.graftbridge.Bridge
     val root = graft.core.DurableState.rootFor(dir)
@@ -360,19 +327,18 @@ object Recommend {
     val v2 = graft.core.StandingState.of(
       s"durablecfchain|${spark.sparkContext.applicationId}|$dir|$cap") {
       // ---- v1: the old base's state, spilled ----
-      val b0 = cappedBaseEdges(spark, dir, cap,
-        col("o_orderkey") % 10 < 5).localCheckpoint()
-      val v1 =
-        try graft.core.DurableState.persistAll(root, kind,
+      val v1 = Pins.scope { pins =>
+        val b0 = pins.pin(cappedBaseEdges(spark, dir, cap,
+          col("o_orderkey") % 10 < 5))
+        graft.core.DurableState.persistAll(root, kind,
           Seq("basket" -> b0, "co" -> coMatrixOf(b0)))
-        finally B.unpersistLocalCheckpoint(b0)
+      }
       // ---- v2: reload v1, ingest batch A, merge, spill ----
       val base1 = graft.core.DurableState.load(spark, root, kind, v1,
         "basket")
       val co1 = graft.core.DurableState.load(spark, root, kind, v1, "co")
-      val novelA = admittedNovel(spark, dir, base1, cap, filterA)
-        .localCheckpoint()
-      try {
+      Pins.scope { pins =>
+        val novelA = pins.pin(admittedNovel(spark, dir, base1, cap, filterA))
         val basket2 = base1.unionByName(novelA)
         val co2 = co1.join(pairDelta(novelA, base1), Seq("p1", "p2"),
             "full_outer")
@@ -385,7 +351,7 @@ object Recommend {
         // this conflict and proves the retry path)
         java.lang.Long.valueOf(graft.core.DurableState.persistAllIf(root,
           kind, Some(v1), Seq("basket" -> basket2, "co" -> co2)))
-      } finally B.unpersistLocalCheckpoint(novelA)
+      }
     }.longValue()
     // ---- boot: reload v2 once per process and pin; per invocation:
     //      the batch-B ingest only ----
@@ -397,9 +363,7 @@ object Recommend {
         B.checkpointPartitioned(graft.core.DurableState.load(spark, root,
           kind, v2, "co"), Seq("p1", "p2"), Seq("p1", "p2")))
     }
-    val (plan, pins) = ingestDag(spark, dir, base2, co2, cap)
-    try plan.localCheckpoint()
-    finally pins.foreach(B.unpersistLocalCheckpoint(_))
+    Pins.result(pins => ingestLedger(pins, spark, dir, base2, co2, cap))
   }
 
   /** q265 — LOST-UPDATE PROTECTION: the CONDITIONAL-COMMIT face of the
@@ -438,8 +402,7 @@ object Recommend {
     * re-admissions only. Scale shape: each stage is q244's
     * bounded ingest or q248's request-scale decrement; the conditional
     * validate+mark holds the per-kind commit lock for the marker instant
-    * only, never for a spill. STORAGE CONTRACT: direct localCheckpoint
-    * result — caller frees. */
+    * only, never for a spill. */
   def q265(spark: SparkSession, dir: String, cap: Int = 256): DataFrame = {
     val B = org.apache.spark.sql.graftbridge.Bridge
     val root = graft.core.DurableState.rootFor(dir)
@@ -449,20 +412,19 @@ object Recommend {
     val v3 = graft.core.StandingState.of(
       s"durablecfcas|${spark.sparkContext.applicationId}|$dir|$cap") {
       // ---- v1: the old base's state, committed ----
-      val b0 = cappedBaseEdges(spark, dir, cap,
-        col("o_orderkey") % 10 < 5).localCheckpoint()
-      val v1 =
-        try graft.core.DurableState.persistAll(root, kind,
+      val v1 = Pins.scope { pins =>
+        val b0 = pins.pin(cappedBaseEdges(spark, dir, cap,
+          col("o_orderkey") % 10 < 5))
+        graft.core.DurableState.persistAll(root, kind,
           Seq("basket" -> b0, "co" -> coMatrixOf(b0)))
-        finally B.unpersistLocalCheckpoint(b0)
+      }
       // ---- the ingest writer loads v1 and derives its merge (about
       //      to be stale) ----
       val base1 = graft.core.DurableState.load(spark, root, kind, v1,
         "basket")
       val co1 = graft.core.DurableState.load(spark, root, kind, v1, "co")
-      val novelA = admittedNovel(spark, dir, base1, cap, filterA)
-        .localCheckpoint()
-      try {
+      Pins.scope { pins =>
+        val novelA = pins.pin(admittedNovel(spark, dir, base1, cap, filterA))
         val staleBasket = base1.unionByName(novelA)
         val staleCo = co1.join(pairDelta(novelA, base1), Seq("p1", "p2"),
             "full_outer")
@@ -500,19 +462,16 @@ object Recommend {
         val base2 = graft.core.DurableState.load(spark, root, kind, v2,
           "basket")
         val co2 = graft.core.DurableState.load(spark, root, kind, v2, "co")
-        val novelA2 = admittedNovel(spark, dir, base2, cap, filterA)
-          .localCheckpoint()
-        try {
-          val basket3 = base2.unionByName(novelA2)
-          val co3 = co2.join(pairDelta(novelA2, base2), Seq("p1", "p2"),
-              "full_outer")
-            .select(col("p1"), col("p2"),
-              (coalesce(col("co_base"), lit(0L)) +
-                coalesce(col("delta_co"), lit(0L))).as("co_base"))
-          java.lang.Long.valueOf(graft.core.DurableState.persistAllIf(
-            root, kind, Some(v2), Seq("basket" -> basket3, "co" -> co3)))
-        } finally B.unpersistLocalCheckpoint(novelA2)
-      } finally B.unpersistLocalCheckpoint(novelA)
+        val novelA2 = pins.pin(admittedNovel(spark, dir, base2, cap, filterA))
+        val basket3 = base2.unionByName(novelA2)
+        val co3 = co2.join(pairDelta(novelA2, base2), Seq("p1", "p2"),
+            "full_outer")
+          .select(col("p1"), col("p2"),
+            (coalesce(col("co_base"), lit(0L)) +
+              coalesce(col("delta_co"), lit(0L))).as("co_base"))
+        java.lang.Long.valueOf(graft.core.DurableState.persistAllIf(
+          root, kind, Some(v2), Seq("basket" -> basket3, "co" -> co3)))
+      }
     }.longValue()
     // ---- boot: reload v3 once per process and pin; per invocation:
     //      the batch-B ingest only ----
@@ -524,9 +483,7 @@ object Recommend {
         B.checkpointPartitioned(graft.core.DurableState.load(spark, root,
           kind, v3, "co"), Seq("p1", "p2"), Seq("p1", "p2")))
     }
-    val (plan, pins) = ingestDag(spark, dir, base3, co3, cap)
-    try plan.localCheckpoint()
-    finally pins.foreach(B.unpersistLocalCheckpoint(_))
+    Pins.result(pins => ingestLedger(pins, spark, dir, base3, co3, cap))
   }
 
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Tables
+import graft.core.{Pins, Tables}
 import graft.dedup.{Components, Dedup}
 
 /** Takedown / right-to-be-forgotten propagation: what actually happens to
@@ -54,24 +54,18 @@ object Takedown {
     * clusters (a per-cluster min() over survivors would silently merge
     * them). `keeper_removed` flags clusters whose old canonical doc
     * itself was taken down; `rehomed` flags rows whose canonical
-    * assignment changed. STORAGE: direct localCheckpoint result —
-    * caller frees; both label tables and the pinned pair list are
-    * freed before returning. */
-  def q179(spark: SparkSession, dir: String, modK: Long = 60L): DataFrame = {
-    val pairs = Dedup.minhashVerifiedPairs(spark, dir, 0.5, 0.7)
-      .select(col("d1").as("src"), col("d2").as("dst"))
-      .localCheckpoint() // consumed by BOTH component runs — pin once
-    try {
-      val before = Components.connectedComponents(pairs)
-      try {
-        val after = Components.connectedComponents(
-          pairs.where(!isTaken(col("src"), modK) &&
-            !isTaken(col("dst"), modK)))
-        try reelect(before, after, modK).localCheckpoint()
-        finally Components.free(after)
-      } finally Components.free(before)
-    } finally Components.free(pairs)
-  }
+    * assignment changed. */
+  def q179(spark: SparkSession, dir: String, modK: Long = 60L): DataFrame =
+    Pins.result { pins =>
+      // consumed by BOTH component runs — pin once
+      val pairs = pins.pin(Dedup.minhashVerifiedPairs(spark, dir, 0.5, 0.7)
+        .select(col("d1").as("src"), col("d2").as("dst")))
+      val before = pins.own(Components.connectedComponents(pairs))
+      val after = pins.own(Components.connectedComponents(
+        pairs.where(!isTaken(col("src"), modK) &&
+          !isTaken(col("dst"), modK))))
+      reelect(before, after, modK)
+    }
 
   /** The re-election subtree over the two label tables: survivors of
     * clusters that lost at least one member, LEFT OUTER re-homed
@@ -104,78 +98,61 @@ object Takedown {
     * arithmetic on the old manifest; the cluster rows from a real
     * component re-run on the surviving edges. Long-form
     * (artifact, metric, value) like q162's audit. */
-  def q180(spark: SparkSession, dir: String, modK: Long = 60L): DataFrame = {
-    val (plan, pins) = q180Body(spark, dir, modK)
-    val out = plan.localCheckpoint()
-    pins.foreach(Components.free(_))
-    out
-  }
+  def q180(spark: SparkSession, dir: String, modK: Long = 60L): DataFrame =
+    Pins.result { pins =>
+      val taken = isTaken(col("doc_id"), modK)
+      val counts = Tables(spark, dir, "documents")
+        .select(col("doc_id").cast(LongType),
+          size(graft.text.TextAnalysis.toks(col("text")))
+            .cast(LongType).as("n_tok"))
 
-  private def q180Body(spark: SparkSession, dir: String, modK: Long)
-      : (DataFrame, Seq[DataFrame]) = {
-    val taken = isTaken(col("doc_id"), modK)
-    val counts = Tables(spark, dir, "documents")
-      .select(col("doc_id").cast(LongType),
-        size(graft.text.TextAnalysis.toks(col("text")))
-          .cast(LongType).as("n_tok"))
+      def row(artifact: String, metric: String, v: Column): Column =
+        struct(lit(artifact).as("artifact"), lit(metric).as("metric"),
+          v.cast(LongType).as("value"))
 
-    def row(artifact: String, metric: String, v: Column): Column =
-      struct(lit(artifact).as("artifact"), lit(metric).as("metric"),
-        v.cast(LongType).as("value"))
+      // corpus accounting: one pass
+      val docRows = counts.agg(
+        row("documents", "rows_before", count(lit(1))).as("a"),
+        row("documents", "rows_removed", sum(when(taken, 1L).otherwise(0L))).as("b"),
+        row("documents", "rows_after", sum(when(taken, 0L).otherwise(1L))).as("c"))
+        .select(explode(array(col("a"), col("b"), col("c"))).as("r"))
 
-    // corpus accounting: one pass
-    val docRows = counts.agg(
-      row("documents", "rows_before", count(lit(1))).as("a"),
-      row("documents", "rows_removed", sum(when(taken, 1L).otherwise(0L))).as("b"),
-      row("documents", "rows_after", sum(when(taken, 0L).otherwise(1L))).as("c"))
-      .select(explode(array(col("a"), col("b"), col("c"))).as("r"))
-
-    // manifest: the surviving corpus genuinely RE-PACKED
-    val repacked = Curation.pack(spark, counts.where(!taken), 128)
-    val manRows =
-      try repacked.agg(
+      // manifest: the surviving corpus genuinely RE-PACKED
+      val repacked = pins.own(Curation.pack(spark, counts.where(!taken), 128))
+      val manRows = pins.pin(repacked.agg(
           row("manifest", "rows_after", count(lit(1))).as("a"),
           row("manifest", "tot_tok_after", sum(col("n_tok"))).as("b"),
           row("manifest", "last_seq_after", max(col("last_seq"))).as("c"),
           row("residual", "manifest_takedown_refs",
             sum(when(taken, 1L).otherwise(0L))).as("d"))
-        .select(explode(array(col("a"), col("b"), col("c"), col("d"))).as("r"))
-        .localCheckpoint()
-      finally org.apache.spark.sql.graftbridge.Bridge
-        .freeIfDirectCheckpoint(repacked)
+        .select(explode(array(col("a"), col("b"), col("c"), col("d"))).as("r")))
+      pins.release(repacked)
 
-    // clusters: components re-run on the surviving edge set
-    val pairs = Dedup.minhashVerifiedPairs(spark, dir, 0.5, 0.7)
-      .select(col("d1").as("src"), col("d2").as("dst"))
-      .localCheckpoint()
-    val cluRows = try {
-      val before = Components.connectedComponents(pairs)
-      try {
-        val after = Components.connectedComponents(
-          pairs.where(!isTaken(col("src"), modK) &&
-            !isTaken(col("dst"), modK)))
-        try {
-          val b = before.agg(
-            row("clusters", "n_before", countDistinct(col("comp"))).as("a"),
-            row("clusters", "docs_before", count(lit(1))).as("b"))
-            .select(explode(array(col("a"), col("b"))).as("r"))
-          val a = after.agg(
-            row("clusters", "n_after", countDistinct(col("comp"))).as("a"),
-            row("clusters", "docs_after", count(lit(1))).as("b"),
-            row("residual", "cluster_takedown_refs",
-              sum(when(isTaken(col("id"), modK), 1L).otherwise(0L))).as("c"))
-            .select(explode(array(col("a"), col("b"), col("c"))).as("r"))
-          b.unionByName(a).localCheckpoint()
-        } finally Components.free(after)
-      } finally Components.free(before)
-    } finally Components.free(pairs)
+      // clusters: components re-run on the surviving edge set
+      val pairs = pins.pin(Dedup.minhashVerifiedPairs(spark, dir, 0.5, 0.7)
+        .select(col("d1").as("src"), col("d2").as("dst")))
+      val before = pins.own(Components.connectedComponents(pairs))
+      val after = pins.own(Components.connectedComponents(
+        pairs.where(!isTaken(col("src"), modK) &&
+          !isTaken(col("dst"), modK))))
+      val b = before.agg(
+        row("clusters", "n_before", countDistinct(col("comp"))).as("a"),
+        row("clusters", "docs_before", count(lit(1))).as("b"))
+        .select(explode(array(col("a"), col("b"))).as("r"))
+      val a = after.agg(
+        row("clusters", "n_after", countDistinct(col("comp"))).as("a"),
+        row("clusters", "docs_after", count(lit(1))).as("b"),
+        row("residual", "cluster_takedown_refs",
+          sum(when(isTaken(col("id"), modK), 1L).otherwise(0L))).as("c"))
+        .select(explode(array(col("a"), col("b"), col("c"))).as("r"))
+      val cluRows = pins.pin(b.unionByName(a))
+      Seq(after, before, pairs).foreach(pins.release)
 
-    val out = docRows.unionByName(manRows).unionByName(cluRows)
-      .select(col("r.artifact").as("artifact"), col("r.metric").as("metric"),
-        col("r.value").as("value"))
-      .orderBy(col("artifact"), col("metric"))
-    (out, Seq(manRows, cluRows))
-  }
+      docRows.unionByName(manRows).unionByName(cluRows)
+        .select(col("r.artifact").as("artifact"), col("r.metric").as("metric"),
+          col("r.value").as("value"))
+        .orderBy(col("artifact"), col("metric"))
+    }
 
   // ---------------------------------------------------------------------
   // Subject-keyed erasure (q181/q182): a GDPR/CCPA erasure request names
@@ -249,19 +226,11 @@ object Takedown {
     * requested subject (zero by construction of discovery — the check
     * exists to catch a buggy removal, which is what residual checks
     * are for). */
-  def q182(spark: SparkSession, dir: String): DataFrame = {
-    val (plan, pins) = q182Body(spark, dir)
-    val out = plan.localCheckpoint()
-    pins.foreach(Components.free(_))
-    out
-  }
-
-  private def q182Body(spark: SparkSession, dir: String)
-      : (DataFrame, Seq[DataFrame]) = {
+  def q182(spark: SparkSession, dir: String): DataFrame = Pins.result { pins =>
     import graft.text.TextAnalysis
-    val taken = subjectMentions(spark, dir)
-      .select(col("doc_id")).distinct()
-      .localCheckpoint() // discovered ONCE; consumed by every probe below
+    // discovered ONCE; consumed by every probe below
+    val taken = pins.pin(subjectMentions(spark, dir)
+      .select(col("doc_id")).distinct())
 
     def row(artifact: String, metric: String, v: Column): Column =
       struct(lit(artifact).as("artifact"), lit(metric).as("metric"),
@@ -272,79 +241,67 @@ object Takedown {
         Seq("doc_id"), "left_outer")
     val isTk = col("__tk").isNotNull
 
-    try {
-      val counts = Tables(spark, dir, "documents")
-        .select(col("doc_id").cast(LongType),
-          size(TextAnalysis.toks(col("text")))
-            .cast(LongType).as("n_tok"))
+    val counts = Tables(spark, dir, "documents")
+      .select(col("doc_id").cast(LongType),
+        size(TextAnalysis.toks(col("text")))
+          .cast(LongType).as("n_tok"))
 
-      val docRows = flagged(counts).agg(
-        row("documents", "rows_before", count(lit(1))).as("a"),
-        row("documents", "rows_removed",
-          sum(when(isTk, 1L).otherwise(0L))).as("b"),
-        row("documents", "rows_after",
-          sum(when(isTk, 0L).otherwise(1L))).as("c"))
-        .select(explode(array(col("a"), col("b"), col("c"))).as("r"))
+    val docRows = flagged(counts).agg(
+      row("documents", "rows_before", count(lit(1))).as("a"),
+      row("documents", "rows_removed",
+        sum(when(isTk, 1L).otherwise(0L))).as("b"),
+      row("documents", "rows_after",
+        sum(when(isTk, 0L).otherwise(1L))).as("c"))
+      .select(explode(array(col("a"), col("b"), col("c"))).as("r"))
 
-      // manifest: the surviving corpus genuinely RE-PACKED
-      val repacked = Curation.pack(spark,
-        counts.join(broadcast(taken), Seq("doc_id"), "left_anti"), 128)
-      val manRows =
-        try flagged(repacked).agg(
-            row("manifest", "rows_after", count(lit(1))).as("a"),
-            row("manifest", "tot_tok_after", sum(col("n_tok"))).as("b"),
-            row("manifest", "last_seq_after", max(col("last_seq"))).as("c"),
-            row("residual", "manifest_takedown_refs",
-              sum(when(isTk, 1L).otherwise(0L))).as("d"))
-          .select(explode(array(col("a"), col("b"), col("c"), col("d")))
-            .as("r"))
-          .localCheckpoint()
-        finally org.apache.spark.sql.graftbridge.Bridge
-          .freeIfDirectCheckpoint(repacked)
+    // manifest: the surviving corpus genuinely RE-PACKED
+    val repacked = pins.own(Curation.pack(spark,
+      counts.join(broadcast(taken), Seq("doc_id"), "left_anti"), 128))
+    val manRows = pins.pin(flagged(repacked).agg(
+        row("manifest", "rows_after", count(lit(1))).as("a"),
+        row("manifest", "tot_tok_after", sum(col("n_tok"))).as("b"),
+        row("manifest", "last_seq_after", max(col("last_seq"))).as("c"),
+        row("residual", "manifest_takedown_refs",
+          sum(when(isTk, 1L).otherwise(0L))).as("d"))
+      .select(explode(array(col("a"), col("b"), col("c"), col("d")))
+        .as("r")))
+    pins.release(repacked)
 
-      // clusters: components re-run on the surviving edge set
-      val pairs = Dedup.minhashVerifiedPairs(spark, dir, 0.5, 0.7)
-        .select(col("d1").as("src"), col("d2").as("dst"))
-        .localCheckpoint()
-      val cluRows = try {
-        val before = Components.connectedComponents(pairs)
-        try {
-          val surviving = pairs
-            .join(broadcast(taken.select(col("doc_id").as("src"))),
-              Seq("src"), "left_anti")
-            .join(broadcast(taken.select(col("doc_id").as("dst"))),
-              Seq("dst"), "left_anti")
-          val after = Components.connectedComponents(surviving)
-          try {
-            val b = before.agg(
-              row("clusters", "n_before", countDistinct(col("comp"))).as("a"),
-              row("clusters", "docs_before", count(lit(1))).as("b"))
-              .select(explode(array(col("a"), col("b"))).as("r"))
-            val a = flagged(after.withColumnRenamed("id", "doc_id")).agg(
-              row("clusters", "n_after", countDistinct(col("comp"))).as("a"),
-              row("clusters", "docs_after", count(lit(1))).as("b"),
-              row("residual", "cluster_takedown_refs",
-                sum(when(isTk, 1L).otherwise(0L))).as("c"))
-              .select(explode(array(col("a"), col("b"), col("c"))).as("r"))
-            b.unionByName(a).localCheckpoint()
-          } finally Components.free(after)
-        } finally Components.free(before)
-      } finally Components.free(pairs)
+    // clusters: components re-run on the surviving edge set
+    val pairs = pins.pin(Dedup.minhashVerifiedPairs(spark, dir, 0.5, 0.7)
+      .select(col("d1").as("src"), col("d2").as("dst")))
+    val before = pins.own(Components.connectedComponents(pairs))
+    val surviving = pairs
+      .join(broadcast(taken.select(col("doc_id").as("src"))),
+        Seq("src"), "left_anti")
+      .join(broadcast(taken.select(col("doc_id").as("dst"))),
+        Seq("dst"), "left_anti")
+    val after = pins.own(Components.connectedComponents(surviving))
+    val b = before.agg(
+      row("clusters", "n_before", countDistinct(col("comp"))).as("a"),
+      row("clusters", "docs_before", count(lit(1))).as("b"))
+      .select(explode(array(col("a"), col("b"))).as("r"))
+    val a = flagged(after.withColumnRenamed("id", "doc_id")).agg(
+      row("clusters", "n_after", countDistinct(col("comp"))).as("a"),
+      row("clusters", "docs_after", count(lit(1))).as("b"),
+      row("residual", "cluster_takedown_refs",
+        sum(when(isTk, 1L).otherwise(0L))).as("c"))
+      .select(explode(array(col("a"), col("b"), col("c"))).as("r"))
+    val cluRows = pins.pin(b.unionByName(a))
+    Seq(after, before, pairs).foreach(pins.release)
 
-      // the content-level residual: surviving docs mentioning a subject
-      val resRows = subjectMentions(spark, dir)
-        .join(broadcast(taken), Seq("doc_id"), "left_anti")
-        .agg(row("residual", "surviving_subject_refs", count(lit(1)))
-          .as("r"))
-        .select(col("r"))
+    // the content-level residual: surviving docs mentioning a subject
+    val resRows = subjectMentions(spark, dir)
+      .join(broadcast(taken), Seq("doc_id"), "left_anti")
+      .agg(row("residual", "surviving_subject_refs", count(lit(1)))
+        .as("r"))
+      .select(col("r"))
 
-      val out = docRows.unionByName(manRows).unionByName(cluRows)
-        .unionByName(resRows)
-        .select(col("r.artifact").as("artifact"),
-          col("r.metric").as("metric"), col("r.value").as("value"))
-        .orderBy(col("artifact"), col("metric"))
-      (out, Seq(taken, manRows, cluRows))
-    } catch { case t: Throwable => Components.free(taken); throw t }
+    docRows.unionByName(manRows).unionByName(cluRows)
+      .unionByName(resRows)
+      .select(col("r.artifact").as("artifact"),
+        col("r.metric").as("metric"), col("r.value").as("value"))
+      .orderBy(col("artifact"), col("metric"))
   }
 
   /** q186 — CASCADING RELATIONAL ERASURE: the takedown tier on the
@@ -366,14 +323,7 @@ object Takedown {
     * and the key set is pinned once, consumed by the removal count,
     * the lineitem hop, and the residual check. */
   def q186(spark: SparkSession, dir: String, modK: Long = 97L,
-      res: Long = 5L): DataFrame = {
-    val (ledger, deadOrders) = q186Body(spark, dir, modK, res)
-    try ledger.localCheckpoint()
-    finally Components.free(deadOrders)
-  }
-
-  private def q186Body(spark: SparkSession, dir: String, modK: Long,
-      res: Long): (DataFrame, DataFrame) = {
+      res: Long = 5L): DataFrame = Pins.result { pins =>
     def row(artifact: String, metric: String, v: Column): Column =
       struct(lit(artifact).as("artifact"), lit(metric).as("metric"),
         v.cast(LongType).as("value"))
@@ -394,57 +344,55 @@ object Takedown {
       .select(explode(array(col("a"), col("b"), col("c"))).as("r"))
 
     // hop 1: the erased customers' orders (subject keys broadcast)
-    val deadOrders = orders
+    val deadOrders = pins.pin(orders // consumed by 3 probes below
       .join(broadcast(subjKeys),
         col("o_custkey") === col("c_custkey"), "left_semi")
-      .select(col("o_orderkey"))
-      .localCheckpoint() // consumed by 3 probes below
+      .select(col("o_orderkey")))
     val orderRows = orders
-        .join(broadcast(subjKeys),
-          col("o_custkey") === col("c_custkey"), "left_outer")
-        .select(col("o_orderkey"), col("c_custkey").isNotNull.as("tk"))
-        .agg(row("orders", "rows_before", count(lit(1))).as("a"),
-          row("orders", "rows_removed",
-            sum(when(col("tk"), 1L).otherwise(0L))).as("b"),
-          row("orders", "rows_after",
-            sum(when(col("tk"), 0L).otherwise(1L))).as("c"))
-        .select(explode(array(col("a"), col("b"), col("c"))).as("r"))
+      .join(broadcast(subjKeys),
+        col("o_custkey") === col("c_custkey"), "left_outer")
+      .select(col("o_orderkey"), col("c_custkey").isNotNull.as("tk"))
+      .agg(row("orders", "rows_before", count(lit(1))).as("a"),
+        row("orders", "rows_removed",
+          sum(when(col("tk"), 1L).otherwise(0L))).as("b"),
+        row("orders", "rows_after",
+          sum(when(col("tk"), 0L).otherwise(1L))).as("c"))
+      .select(explode(array(col("a"), col("b"), col("c"))).as("r"))
 
-      // hop 2: fact-to-fact — lineitems of dead orders, shuffled on the FK
-      val lineFlag = line
-        .join(deadOrders.withColumn("__dead", lit(1)),
-          line("l_orderkey") === deadOrders("o_orderkey"), "left_outer")
-        .select(col("l_quantity"), col("__dead").isNotNull.as("tk"))
-      val lineRows = lineFlag
-        .agg(row("lineitem", "rows_before", count(lit(1))).as("a"),
-          row("lineitem", "rows_removed",
-            sum(when(col("tk"), 1L).otherwise(0L))).as("b"),
-          row("lineitem", "rows_after",
-            sum(when(col("tk"), 0L).otherwise(1L))).as("c"),
-          row("lineitem", "qty_removed",
-            sum(when(col("tk"), col("l_quantity")).otherwise(0.0d))).as("d"))
-        .select(explode(array(col("a"), col("b"), col("c"), col("d"))).as("r"))
+    // hop 2: fact-to-fact — lineitems of dead orders, shuffled on the FK
+    val lineFlag = line
+      .join(deadOrders.withColumn("__dead", lit(1)),
+        line("l_orderkey") === deadOrders("o_orderkey"), "left_outer")
+      .select(col("l_quantity"), col("__dead").isNotNull.as("tk"))
+    val lineRows = lineFlag
+      .agg(row("lineitem", "rows_before", count(lit(1))).as("a"),
+        row("lineitem", "rows_removed",
+          sum(when(col("tk"), 1L).otherwise(0L))).as("b"),
+        row("lineitem", "rows_after",
+          sum(when(col("tk"), 0L).otherwise(1L))).as("c"),
+        row("lineitem", "qty_removed",
+          sum(when(col("tk"), col("l_quantity")).otherwise(0.0d))).as("d"))
+      .select(explode(array(col("a"), col("b"), col("c"), col("d"))).as("r"))
 
-      // residuals: NO surviving row references an erased one
-      val orphanOrders = orders
-        .join(broadcast(subjKeys),
-          col("o_custkey") === col("c_custkey"), "left_anti")
-        .join(broadcast(subjKeys),
-          col("o_custkey") === col("c_custkey"), "left_semi")
-        .agg(row("residual", "orders_orphaned_refs", count(lit(1))).as("r"))
-        .select(col("r"))
-      val orphanLines = line
-        .join(deadOrders, col("l_orderkey") === col("o_orderkey"), "left_anti")
-        .join(deadOrders, col("l_orderkey") === col("o_orderkey"), "left_semi")
-        .agg(row("residual", "lineitem_orphaned_refs", count(lit(1))).as("r"))
-        .select(col("r"))
+    // residuals: NO surviving row references an erased one
+    val orphanOrders = orders
+      .join(broadcast(subjKeys),
+        col("o_custkey") === col("c_custkey"), "left_anti")
+      .join(broadcast(subjKeys),
+        col("o_custkey") === col("c_custkey"), "left_semi")
+      .agg(row("residual", "orders_orphaned_refs", count(lit(1))).as("r"))
+      .select(col("r"))
+    val orphanLines = line
+      .join(deadOrders, col("l_orderkey") === col("o_orderkey"), "left_anti")
+      .join(deadOrders, col("l_orderkey") === col("o_orderkey"), "left_semi")
+      .agg(row("residual", "lineitem_orphaned_refs", count(lit(1))).as("r"))
+      .select(col("r"))
 
-      val ledger = custRows.unionByName(orderRows).unionByName(lineRows)
-        .unionByName(orphanOrders).unionByName(orphanLines)
-        .select(col("r.artifact").as("artifact"),
-          col("r.metric").as("metric"), col("r.value").as("value"))
-        .orderBy(col("artifact"), col("metric"))
-    (ledger, deadOrders)
+    custRows.unionByName(orderRows).unionByName(lineRows)
+      .unionByName(orphanOrders).unionByName(orphanLines)
+      .select(col("r.artifact").as("artifact"),
+        col("r.metric").as("metric"), col("r.value").as("value"))
+      .orderBy(col("artifact"), col("metric"))
   }
 
   /** The deterministic source→license map for q243: rank 0 (most
@@ -475,19 +423,10 @@ object Takedown {
     * machinery is the standing dedup tier; the contagion itself is one
     * component-keyed max-aggregate and one join back — label-sized,
     * not corpus-quadratic. */
-  def q243(spark: SparkSession, dir: String): DataFrame = {
-    val (plan, pins) = q243Dag(spark, dir)
-    try plan.localCheckpoint()
-    finally pins.foreach(Components.free)
-  }
-
-  /** q243's plan before the result checkpoint, plus the eagerly-computed
-    * cluster labels it reads. Caller frees the pins. */
-  private[graft] def q243Dag(spark: SparkSession, dir: String)
-      : (DataFrame, Seq[DataFrame]) = {
+  def q243(spark: SparkSession, dir: String): DataFrame = Pins.result { pins =>
     val pairs = Dedup.minhashVerifiedPairs(spark, dir, 0.5, 0.7)
       .select(col("d1").as("src"), col("d2").as("dst"))
-    val labels = Components.connectedComponents(pairs)
+    val labels = pins.own(Components.connectedComponents(pairs))
     val docs = Tables(spark, dir, "documents")
       .select(col("doc_id"), col("source"), licenseRank.as("rank"))
     val dl = docs
@@ -495,12 +434,11 @@ object Takedown {
       .select(col("doc_id"), col("source"), col("rank"),
         coalesce(col("comp"), col("doc_id")).as("comp"))
     val eff = dl.groupBy(col("comp")).agg(max(col("rank")).as("er"))
-    val plan = dl.join(eff, Seq("comp"))
+    dl.join(eff, Seq("comp"))
       .select(col("doc_id"), col("source"),
         licenseName(col("rank")).as("own_license"),
         licenseName(col("er")).as("effective_license"),
         (col("rank") < col("er")).as("escalated"))
       .orderBy(col("doc_id"))
-    (plan, Seq(labels))
   }
 }

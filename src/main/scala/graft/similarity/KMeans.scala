@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.core.Pins
 import graft.queries.EmbeddingQueries
 
 /** Spherical k-means (cosine objective) as pure iterated DataFrame graphs —
@@ -44,12 +45,9 @@ object KMeans {
         row_number().over(Window.orderBy(col("vec_id"))).cast(IntegerType) - 1)
       .select(col("cluster"), col("v").as("centroid"))
 
-    // `done` rounds track which `centroids` values are checkpoints (round 0
-    // is an un-checkpointed plan — nothing to free there); the catch frees
-    // the last materialized round on a mid-fit failure, where the partial
-    // model is discarded with the exception
-    var done = 0
-    try {
+    // round 0 is an un-checkpointed plan (nothing pinned); the last round
+    // is the caller's (a direct checkpoint once iters > 0)
+    Pins.scope { pins =>
       (1 to iters).foreach { i =>
         val next = assign(vecs, centroids)
           .select(col("cluster"), posexplode(col("v")))
@@ -61,18 +59,13 @@ object KMeans {
             (col("s").cast(DoubleType) / col("cnt")).as("m")))).as("dims"))
           .select(col("cluster"),
             transform(col("dims"), d => d.getField("m")).as("centroid"))
-        val ck = next.localCheckpoint() // eager: prior round no longer referenced
+        val ck = pins.pin(next) // eager: prior round no longer referenced
         // free the superseded round's checkpoint storage
-        if (done > 0) org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(centroids)
+        if (i > 1) pins.release(centroids)
         centroids = ck
-        done += 1
       }
-    } catch { case t: Throwable =>
-      if (done > 0)
-        org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(centroids)
-      throw t
+      pins.disown(centroids)
     }
-    centroids
   }
 
   /** Nearest-centroid assignment: (vec_id, v, cluster, sim). Map-only:
@@ -107,16 +100,18 @@ object KMeans {
   /** q48 — k-means clustering summary: cluster sizes + mean within-cluster
     * cosine (the spherical k-means objective), rounded. Deterministic
     * (fixed init, exact-decimal reductions) but hash/float-pipeline
-    * dependent — no cross-engine oracle; invariants are spec-tested. */
-  def q48(spark: SparkSession, dir: String, k: Int = 10, iters: Int = 3): DataFrame = {
-    val vecs = EmbeddingQueries.vecs(spark, dir)
-    val model = fit(vecs, k, iters)
-    assign(vecs, model)
-      .groupBy(col("cluster"))
-      .agg(
-        count(lit(1)).as("n"),
-        round(sum(col("sim").cast(DecimalType(20, 8))).cast(DoubleType) /
-          count(lit(1)), 4).as("mean_cos"))
-      .orderBy(col("cluster"))
-  }
+    * dependent — no cross-engine oracle; invariants are spec-tested. The
+    * summary is the result checkpoint, so the fitted model can be freed. */
+  def q48(spark: SparkSession, dir: String, k: Int = 10, iters: Int = 3): DataFrame =
+    Pins.result { pins =>
+      val vecs = EmbeddingQueries.vecs(spark, dir)
+      val model = pins.own(fit(vecs, k, iters))
+      assign(vecs, model)
+        .groupBy(col("cluster"))
+        .agg(
+          count(lit(1)).as("n"),
+          round(sum(col("sim").cast(DecimalType(20, 8))).cast(DoubleType) /
+            count(lit(1)), 4).as("mean_cos"))
+        .orderBy(col("cluster"))
+    }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.core.Pins
 import graft.queries.EmbeddingQueries.vecsNorm
 
 /** Product quantization ANN (Jégou, Douze, Schmid 2011, "Product
@@ -78,36 +79,37 @@ object Pq {
     * the per-subspace sequential form ran m·iters rounds and was the
     * bench's slowest query at m = 8. Deterministic init: each
     * subspace's first k vectors by vec_id (the KMeans.fit convention).
-    * PINNED (localCheckpoint) — caller frees. Returns (s, code, cent). */
+    * Returns (s, code, cent) as a direct checkpoint the caller owns. */
   private def trainCodebook(corpus: DataFrame, m: Int, sub: Int, k: Int,
       iters: Int): DataFrame = {
     val subRows = corpus.select(col("vec_id"),
       posexplode(array((0 until m).map(subCol(_, sub)): _*)))
       .withColumnsRenamed(Map("pos" -> "s", "col" -> "sv"))
     val ws = Window.partitionBy(col("s")).orderBy(col("vec_id"))
-    var cents = subRows
-      .withColumn("rn", row_number().over(ws))
-      .where(col("rn") <= k)
-      .select(col("s"), (col("rn") - 1).cast(IntegerType).as("code"),
-        col("sv").as("cent"))
-      .localCheckpoint()
-    for (_ <- 1 to iters) {
-      val next = subRows.join(broadcast(packPerSubspace(cents)), Seq("s"))
-        .select(col("s"), nearestCode(col("cbs")).as("code"), col("sv"))
-        .select(col("s"), col("code"), posexplode(col("sv")))
-        .groupBy(col("s"), col("code"), col("pos"))
-        .agg(sum(col("col").cast(DecimalType(28, 14))).as("sm"),
-          count(lit(1)).as("cnt"))
-        .groupBy(col("s"), col("code"))
-        .agg(array_sort(collect_list(struct(col("pos"),
-          (col("sm").cast(DoubleType) / col("cnt")).as("v")))).as("dims"))
-        .select(col("s"), col("code"),
-          transform(col("dims"), d => d.getField("v")).as("cent"))
-        .localCheckpoint()
-      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(cents)
-      cents = next
+    Pins.scope { pins =>
+      var cents = pins.pin(subRows
+        .withColumn("rn", row_number().over(ws))
+        .where(col("rn") <= k)
+        .select(col("s"), (col("rn") - 1).cast(IntegerType).as("code"),
+          col("sv").as("cent")))
+      for (_ <- 1 to iters) {
+        val next = pins.pin(
+          subRows.join(broadcast(packPerSubspace(cents)), Seq("s"))
+            .select(col("s"), nearestCode(col("cbs")).as("code"), col("sv"))
+            .select(col("s"), col("code"), posexplode(col("sv")))
+            .groupBy(col("s"), col("code"), col("pos"))
+            .agg(sum(col("col").cast(DecimalType(28, 14))).as("sm"),
+              count(lit(1)).as("cnt"))
+            .groupBy(col("s"), col("code"))
+            .agg(array_sort(collect_list(struct(col("pos"),
+              (col("sm").cast(DoubleType) / col("cnt")).as("v")))).as("dims"))
+            .select(col("s"), col("code"),
+              transform(col("dims"), d => d.getField("v")).as("cent")))
+        pins.release(cents)
+        cents = next
+      }
+      pins.disown(cents)
     }
-    cents
   }
 
   /** Encode `corpus` against the codebook: (vec_id, s, code) — map-only
@@ -192,30 +194,22 @@ object Pq {
     * and the shortlist≥corpus ⇒ recall≡1 exactness anchor. */
   def q164(spark: SparkSession, dir: String, m: Int = 8, k: Int = 16,
            iters: Int = 3, kTop: Int = 10, nQueries: Int = 20,
-           shortlistFactor: Int = 10): DataFrame = {
-    val corpus = vecsNorm(spark, dir).where(col("u").isNotNull)
-      .select(col("vec_id"), col("u")).localCheckpoint()
-    try {
-      val dim = corpus.select(size(col("u"))).head().getInt(0)
-      require(dim % m == 0, s"dim $dim not divisible by m=$m")
-      val sub = dim / m
-      val codebook = trainCodebook(corpus, m, sub, k, iters)
-      try {
-        val codes = encodeCodes(corpus, codebook, m, sub)
-        val queries = corpus.where(col("vec_id") < nQueries)
-        val dtable = distTable(queries, codebook, m, sub)
-        val adc = codes.join(broadcast(dtable), Seq("s", "code"))
-          .where(col("vec_id") =!= col("q_id"))
-          .groupBy(col("q_id"), col("vec_id"))
-          .agg(sum(col("d2")).as("adc"))
-        refineAndScore(spark, dir, corpus, queries, adc, kTop, nQueries,
-          shortlistFactor * kTop)
-      } finally {
-        org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(codebook)
-      }
-    } finally {
-      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(corpus)
-    }
+           shortlistFactor: Int = 10): DataFrame = Pins.scope { pins =>
+    val corpus = pins.pin(vecsNorm(spark, dir).where(col("u").isNotNull)
+      .select(col("vec_id"), col("u")))
+    val dim = corpus.select(size(col("u"))).head().getInt(0)
+    require(dim % m == 0, s"dim $dim not divisible by m=$m")
+    val sub = dim / m
+    val codebook = pins.own(trainCodebook(corpus, m, sub, k, iters))
+    val codes = encodeCodes(corpus, codebook, m, sub)
+    val queries = corpus.where(col("vec_id") < nQueries)
+    val dtable = distTable(queries, codebook, m, sub)
+    val adc = codes.join(broadcast(dtable), Seq("s", "code"))
+      .where(col("vec_id") =!= col("q_id"))
+      .groupBy(col("q_id"), col("vec_id"))
+      .agg(sum(col("d2")).as("adc"))
+    refineAndScore(spark, dir, corpus, queries, adc, kTop, nQueries,
+      shortlistFactor * kTop)
   }
 
   /** q167 — IVF-PQ: the composed production layout. A coarse k-means
@@ -277,33 +271,24 @@ object Pq {
   def q167(spark: SparkSession, dir: String, m: Int = 8, k: Int = 16,
            iters: Int = 3, kTop: Int = 10, nQueries: Int = 20,
            cells: Int = 10, nprobe: Int = 3,
-           shortlistFactor: Int = 10): DataFrame = {
+           shortlistFactor: Int = 10): DataFrame = Pins.scope { pins =>
     import graft.queries.EmbeddingQueries.vecs
-    val corpus = vecsNorm(spark, dir).where(col("u").isNotNull)
-      .select(col("vec_id"), col("u")).localCheckpoint()
-    try {
-      val dim = corpus.select(size(col("u"))).head().getInt(0)
-      require(dim % m == 0, s"dim $dim not divisible by m=$m")
-      val sub = dim / m
-      // coarse quantizer on the raw vectors (the q50 posture)
-      val v = vecs(spark, dir)
-      val model = KMeans.fit(v, cells, iters)
-      val codebook = trainCodebook(corpus, m, sub, k, iters)
-      try {
-        val assigned = KMeans
-          .assign(v, model.select(col("cluster"), col("centroid")))
-          .select(col("vec_id"), col("cluster").as("cell"))
-        val codes = encodeCodes(corpus, codebook, m, sub)
-          .join(assigned, Seq("vec_id"))
-        ivfPqLedger(spark, dir, corpus, codes, model, codebook, m, sub,
-          kTop, nQueries, nprobe, shortlistFactor * kTop)
-      } finally {
-        org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(codebook)
-        org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(model)
-      }
-    } finally {
-      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(corpus)
-    }
+    val corpus = pins.pin(vecsNorm(spark, dir).where(col("u").isNotNull)
+      .select(col("vec_id"), col("u")))
+    val dim = corpus.select(size(col("u"))).head().getInt(0)
+    require(dim % m == 0, s"dim $dim not divisible by m=$m")
+    val sub = dim / m
+    // coarse quantizer on the raw vectors (the q50 posture)
+    val v = vecs(spark, dir)
+    val model = pins.own(KMeans.fit(v, cells, iters))
+    val codebook = pins.own(trainCodebook(corpus, m, sub, k, iters))
+    val assigned = KMeans
+      .assign(v, model.select(col("cluster"), col("centroid")))
+      .select(col("vec_id"), col("cluster").as("cell"))
+    val codes = encodeCodes(corpus, codebook, m, sub)
+      .join(assigned, Seq("vec_id"))
+    ivfPqLedger(spark, dir, corpus, codes, model, codebook, m, sub,
+      kTop, nQueries, nprobe, shortlistFactor * kTop)
   }
 
   /** q177 — INCREMENTAL IVF-PQ ingest: q167 at the q106/q160 standing-
@@ -439,25 +424,26 @@ object Pq {
     erasedIvfPq(spark, dir, m, k, iters, kTop, nQueries, cells, nprobe,
       shortlistFactor, modK, monolithic = true)
 
-  /** The erased merged index (vec_id, s, code, cell) alone, pinned —
-    * EraseStateSpec's residual probe (no erased id may remain) and
-    * equality surface. Returns (index, pins to free — index included). */
-  private[graft] def q222Index(spark: SparkSession, dir: String,
+  /** The frozen model over the erased merged index — `standing` is the
+    * index (vec_id, s, code, cell), pinned in `pins` with the corpus,
+    * model and codebook it was built from. EraseStateSpec's residual probe
+    * (no erased id may remain) and equality surface. */
+  private[graft] def q222Index(pins: Pins, spark: SparkSession, dir: String,
       m: Int = 8, k: Int = 16, iters: Int = 3, cells: Int = 10,
-      modK: Long = 10L, monolithic: Boolean = false)
-      : (DataFrame, Seq[DataFrame]) = {
+      modK: Long = 10L, monolithic: Boolean = false): PqStanding = {
     import graft.queries.EmbeddingQueries.vecs
     val isBase = pmod(col("vec_id"), lit(10L)) < 7L
     val isEr = isBase && pmod(col("vec_id"), lit(modK)) === 0L
-    val corpus = vecsNorm(spark, dir).where(col("u").isNotNull)
-      .select(col("vec_id"), col("u")).localCheckpoint()
+    val corpus = pins.pin(vecsNorm(spark, dir).where(col("u").isNotNull)
+      .select(col("vec_id"), col("u")))
     val dim = corpus.select(size(col("u"))).head().getInt(0)
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val sub = dim / m
     val v = vecs(spark, dir)
     // FROZEN pre-request state: learned on the full standing corpus
-    val model = KMeans.fit(v.where(isBase), cells, iters)
-    val codebook = trainCodebook(corpus.where(isBase), m, sub, k, iters)
+    val model = pins.own(KMeans.fit(v.where(isBase), cells, iters))
+    val codebook =
+      pins.own(trainCodebook(corpus.where(isBase), m, sub, k, iters))
     val cents = model.select(col("cluster"), col("centroid"))
     def index(part: DataFrame, partV: DataFrame): DataFrame =
       encodeCodes(part, codebook, m, sub)
@@ -465,23 +451,18 @@ object Pq {
           .select(col("vec_id"), col("cluster").as("cell")),
           Seq("vec_id"))
     val merged =
-      if (monolithic) index(corpus.where(!isEr), v.where(!isEr))
+      if (monolithic) pins.pin(index(corpus.where(!isEr), v.where(!isEr)))
       else {
-        val standing = index(corpus.where(isBase), v.where(isBase))
-          .localCheckpoint()
+        val standing = pins.pin(index(corpus.where(isBase), v.where(isBase)))
         val erased = corpus.where(isEr).select(col("vec_id"))
         val erasedStanding = standing
           .join(broadcast(erased), Seq("vec_id"), "left_anti")
-        val out = erasedStanding
-          .unionByName(index(corpus.where(!isBase), v.where(!isBase)))
-          .localCheckpoint()
-        org.apache.spark.sql.graftbridge.Bridge
-          .unpersistLocalCheckpoint(standing)
+        val out = pins.pin(erasedStanding
+          .unionByName(index(corpus.where(!isBase), v.where(!isBase))))
+        pins.release(standing)
         out
       }
-    val pinnedMerged =
-      if (monolithic) merged.localCheckpoint() else merged
-    (pinnedMerged, Seq(pinnedMerged, codebook, model, corpus))
+    PqStanding(corpus, model, codebook, merged, sub)
   }
 
   private def erasedIvfPq(spark: SparkSession, dir: String, m: Int,
@@ -491,22 +472,17 @@ object Pq {
     import graft.queries.EmbeddingQueries.vecs
     val isBase = pmod(col("vec_id"), lit(10L)) < 7L
     val isEr = isBase && pmod(col("vec_id"), lit(modK)) === 0L
-    if (monolithic) {
-      // spec twin: fresh one-pass build, own pins, freed here
-      val (merged, pins) =
-        q222Index(spark, dir, m, k, iters, cells, modK, monolithic = true)
-      val Seq(_, codebook, model, corpus) = pins
-      try {
-        val dim = corpus.select(size(col("u"))).head().getInt(0)
-        val truth = Similarity.annTopKOf(
-          corpus.where(!isEr),
-          corpus.where(col("vec_id") < nQueries), kTop)
-          .select(col("q_id"), col("n_id"))
-        ivfPqLedger(spark, dir, corpus, merged, model, codebook, m,
-          dim / m, kTop, nQueries, nprobe, shortlistFactor * kTop,
-          Some(truth))
-      } finally pins.foreach(
-        org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(_))
+    if (monolithic) Pins.scope { pins =>
+      // spec twin: fresh one-pass build in its own scope
+      val ix = q222Index(pins, spark, dir, m, k, iters, cells, modK,
+        monolithic = true)
+      val truth = Similarity.annTopKOf(
+        ix.corpus.where(!isEr),
+        ix.corpus.where(col("vec_id") < nQueries), kTop)
+        .select(col("q_id"), col("n_id"))
+      ivfPqLedger(spark, dir, ix.corpus, ix.standing, ix.model, ix.codebook,
+        m, ix.sub, kTop, nQueries, nprobe, shortlistFactor * kTop,
+        Some(truth))
     } else {
       // the shipped path: erasure + ingest over the PROCESS-PINNED
       // standing state (the q177 registry — shared key, built once)
@@ -533,37 +509,31 @@ object Pq {
 
   /** The spec twin's fresh one-pass build: identical frozen model
     * (trained on the base), index encoded over the FULL corpus in one
-    * pass — own pins, freed here. PqSpec asserts q177 ≡ this. */
+    * pass. PqSpec asserts q177 ≡ this. */
   private def incrementalIvfPq(spark: SparkSession, dir: String, m: Int,
       k: Int, iters: Int, kTop: Int, nQueries: Int, cells: Int,
       nprobe: Int, shortlistFactor: Int, monolithic: Boolean): DataFrame = {
     require(monolithic, "the shipped incremental path is q177 (registry)")
     import graft.queries.EmbeddingQueries.vecs
     val isBase = pmod(col("vec_id"), lit(10L)) < 7L
-    val corpus = vecsNorm(spark, dir).where(col("u").isNotNull)
-      .select(col("vec_id"), col("u")).localCheckpoint()
-    try {
+    Pins.scope { pins =>
+      val corpus = pins.pin(vecsNorm(spark, dir).where(col("u").isNotNull)
+        .select(col("vec_id"), col("u")))
       val dim = corpus.select(size(col("u"))).head().getInt(0)
       require(dim % m == 0, s"dim $dim not divisible by m=$m")
       val sub = dim / m
       val v = vecs(spark, dir)
       // FROZEN state: cells + codebook learned on the standing corpus only
-      val model = KMeans.fit(v.where(isBase), cells, iters)
-      val codebook = trainCodebook(corpus.where(isBase), m, sub, k, iters)
-      try {
-        val codes = encodeCodes(corpus, codebook, m, sub)
-          .join(KMeans.assign(v,
-              model.select(col("cluster"), col("centroid")))
-            .select(col("vec_id"), col("cluster").as("cell")),
-            Seq("vec_id"))
-        ivfPqLedger(spark, dir, corpus, codes, model, codebook, m, sub,
-          kTop, nQueries, nprobe, shortlistFactor * kTop)
-      } finally {
-        org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(codebook)
-        org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(model)
-      }
-    } finally {
-      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(corpus)
+      val model = pins.own(KMeans.fit(v.where(isBase), cells, iters))
+      val codebook =
+        pins.own(trainCodebook(corpus.where(isBase), m, sub, k, iters))
+      val codes = encodeCodes(corpus, codebook, m, sub)
+        .join(KMeans.assign(v,
+            model.select(col("cluster"), col("centroid")))
+          .select(col("vec_id"), col("cluster").as("cell")),
+          Seq("vec_id"))
+      ivfPqLedger(spark, dir, corpus, codes, model, codebook, m, sub,
+        kTop, nQueries, nprobe, shortlistFactor * kTop)
     }
   }
 
@@ -585,8 +555,7 @@ object Pq {
     * argument), and membership is pure id/norm arithmetic the oracle
     * replays. The code VALUES are bound by EraseStateSpec: the reloaded
     * erased+ingested index equals the monolithic one-pass encode of the
-    * surviving corpus, bit for bit. STORAGE CONTRACT: direct
-    * localCheckpoint result — caller frees. */
+    * surviving corpus, bit for bit. */
   def q263(spark: SparkSession, dir: String, m: Int = 8, k: Int = 16,
            iters: Int = 3, cells: Int = 10, modK: Long = 10L): DataFrame = {
     val isBase = pmod(col("vec_id"), lit(10L)) < 7L

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.core.Pins
 import graft.queries.EmbeddingQueries
 
 /** Similarity search over the embedding column (`Array[Float]`).
@@ -160,12 +161,21 @@ object Similarity {
 
   /** IVF over LEARNED cells: k-means centroids (similarity.KMeans) as the
     * coarse quantizer, corpus partitioned by its k-means assignment.
-    * `nprobe` > 1 widens the search to that many nearest cells. */
+    * `nprobe` > 1 widens the search to that many nearest cells. The
+    * neighbor list is the result checkpoint, so the fitted model can be
+    * freed. */
   def annIvfKmeans(spark: SparkSession, dir: String, k: Int = 5,
                    nQueries: Int = 10, cells: Int = 10, iters: Int = 3,
-                   nprobe: Int = 1): DataFrame = {
+                   nprobe: Int = 1): DataFrame =
+    Pins.result(pins => ivfKmeans(pins, spark, dir, k, nQueries, cells,
+      iters, nprobe))
+
+  /** [[annIvfKmeans]]'s search plan over a model pinned in `pins`. */
+  private def ivfKmeans(pins: Pins, spark: SparkSession, dir: String,
+      k: Int, nQueries: Int, cells: Int, iters: Int,
+      nprobe: Int): DataFrame = {
     val v = vecs(spark, dir)
-    val model = KMeans.fit(v, cells, iters)
+    val model = pins.own(KMeans.fit(v, cells, iters))
       .select(col("cluster").as("cell"), col("centroid"))
     val assigned = KMeans.assign(v, model.select(col("cell").as("cluster"), col("centroid")))
       .select(col("vec_id"), col("v"), col("cluster").as("cell"))
@@ -180,23 +190,25 @@ object Similarity {
     * inner join on (query, neighbor) counts the overlap, a left join
     * restores queries with zero hits. Differential by construction, so
     * the driver check is rows-only; RecallSpec pins the bounds (recall
-    * ∈ [0,1], and nprobe = #cells ⇒ recall 1.0). */
+    * ∈ [0,1], and nprobe = #cells ⇒ recall 1.0). The ledger is the
+    * result checkpoint, so the fitted model can be freed. */
   def q76(spark: SparkSession, dir: String, k: Int = 10, nQueries: Int = 20,
-          cells: Int = 10, iters: Int = 3, nprobe: Int = 2): DataFrame = {
-    val brute = annTruthStanding(spark, dir, k, nQueries)
-    val approx = annIvfKmeans(spark, dir, k, nQueries, cells, iters, nprobe)
-      .select(col("q_id"), col("n_id"))
-    val hits = brute.join(approx, Seq("q_id", "n_id"))
-      .groupBy(col("q_id")).agg(count(lit(1)).as("n_hit"))
-    brute.groupBy(col("q_id")).agg(count(lit(1)).as("n_true"))
-      .join(hits, Seq("q_id"), "left_outer")
-      .select(col("q_id"),
-        coalesce(col("n_hit"), lit(0L)).cast(IntegerType).as("n_hit"),
-        col("n_true").cast(IntegerType).as("n_true"),
-        round(coalesce(col("n_hit"), lit(0L)).cast(DoubleType) /
-          col("n_true"), 4).as("recall"))
-      .orderBy(col("q_id"))
-  }
+          cells: Int = 10, iters: Int = 3, nprobe: Int = 2): DataFrame =
+    Pins.result { pins =>
+      val brute = annTruthStanding(spark, dir, k, nQueries)
+      val approx = ivfKmeans(pins, spark, dir, k, nQueries, cells, iters, nprobe)
+        .select(col("q_id"), col("n_id"))
+      val hits = brute.join(approx, Seq("q_id", "n_id"))
+        .groupBy(col("q_id")).agg(count(lit(1)).as("n_hit"))
+      brute.groupBy(col("q_id")).agg(count(lit(1)).as("n_true"))
+        .join(hits, Seq("q_id"), "left_outer")
+        .select(col("q_id"),
+          coalesce(col("n_hit"), lit(0L)).cast(IntegerType).as("n_hit"),
+          col("n_true").cast(IntegerType).as("n_true"),
+          round(coalesce(col("n_hit"), lit(0L)).cast(DoubleType) /
+            col("n_true"), 4).as("recall"))
+        .orderBy(col("q_id"))
+    }
 
   /** q105 — SEMANTIC dedup cluster collapse: the embedding-space
     * counterpart of q66's token-space clusters, completing the dedup
@@ -224,42 +236,26 @@ object Similarity {
     * q111 runs this path non-vacuously on the planted-twin corpus and
     * SimilaritySpec proves the two candidate sources yield identical
     * clusters there). Collapse + presentation are candidate-agnostic —
-    * label propagation and a bounded per-cluster aggregate. Storage
-    * contract: the label table is consumed into the bounded presentation
-    * aggregate; the returned frame is a DIRECT localCheckpoint the
-    * caller frees once consumed. */
+    * label propagation and a bounded per-cluster aggregate; the label
+    * table is consumed into the bounded presentation aggregate. */
   def q105(spark: SparkSession, dir: String, threshold: Double = 0.4,
            candidates: String = "exact"): DataFrame = {
-    val (plan, labels) = q105Plan(spark, dir, threshold, candidates)
-    val out = plan.localCheckpoint()
-    graft.dedup.Components.free(labels)
-    out
-  }
-
-  /** The q105 presentation plan BEFORE the result checkpoint, plus the
-    * label table it reads (the caller frees the labels once the plan is
-    * materialized — q105 does). */
-  private[graft] def q105Plan(spark: SparkSession, dir: String,
-                              threshold: Double = 0.4,
-                              candidates: String = "exact")
-      : (DataFrame, DataFrame) = {
     val pairs = candidates match {
       case "exact" => nearDupPairs(spark, dir, threshold)
       case "lsh"   => lshNearDup(spark, dir, threshold)
       case other => throw new IllegalArgumentException(
         s"unknown candidate source '$other' (expected 'exact' or 'lsh')")
     }
-    collapsePlan(pairs.select(col("d1").as("src"), col("d2").as("dst")))
+    collapse(pairs.select(col("d1").as("src"), col("d2").as("dst")))
   }
 
   /** The shared cluster-collapse presentation over any verified pair
     * frame `(src, dst)`: connected components → one row per cluster with
     * the min-id keeper, size, and sorted member list (q66's presentation
-    * over embedding-space edges). Returns the plan plus the label table
-    * it reads (caller frees once materialized). */
-  private def collapsePlan(pairs: DataFrame): (DataFrame, DataFrame) = {
-    val labels = graft.dedup.Components.connectedComponents(pairs)
-    val plan = labels
+    * over embedding-space edges), checkpointed as the result. */
+  private def collapse(pairs: DataFrame): DataFrame = Pins.result { pins =>
+    val labels = pins.own(graft.dedup.Components.connectedComponents(pairs))
+    labels
       .groupBy(col("comp"))
       .agg(
         count(lit(1)).cast(IntegerType).as("n_vecs"),
@@ -267,7 +263,6 @@ object Similarity {
           .as("vecs"))
       .select(col("comp").as("keeper_vec"), col("n_vecs"), col("vecs"))
       .orderBy(col("keeper_vec"))
-    (plan, labels)
   }
 
   /** Offset separating planted twin ids from every real vec_id — the
@@ -323,25 +318,12 @@ object Similarity {
     * it the verified LSH pair set EQUALS exact all-pairs at τ, so the
     * DuckDB twin derives the same augmented corpus arithmetically and
     * computes the same clusters from exact pairs + recursive-CTE
-    * reachability. Collapse, presentation, and storage contract are
-    * q105's, unchanged. */
+    * reachability. Collapse and presentation are q105's, unchanged. */
   def q111(spark: SparkSession, dir: String, threshold: Double = 0.9,
            plantEvery: Int = 100): DataFrame = {
-    val (plan, labels) = q111Plan(spark, dir, threshold, plantEvery)
-    val out = plan.localCheckpoint()
-    graft.dedup.Components.free(labels)
-    out
-  }
-
-  /** The q111 presentation plan BEFORE the result checkpoint, plus the
-    * label table it reads ([[q105Plan]] contract). */
-  private[graft] def q111Plan(spark: SparkSession, dir: String,
-                              threshold: Double = 0.9,
-                              plantEvery: Int = 100)
-      : (DataFrame, DataFrame) = {
     val aug = augmentedVecs(spark, dir, plantEvery)
     val pairs = lshNearDupOf(aug, normalized(aug), threshold)
-    collapsePlan(pairs.select(col("d1").as("src"), col("d2").as("dst")))
+    collapse(pairs.select(col("d1").as("src"), col("d2").as("dst")))
   }
 
   /** Shared IVF probe: assign each query vector to its `nprobe` nearest
@@ -559,43 +541,31 @@ object Similarity {
     * output carries selection metadata only (round, id, label) — no
     * floats. Bit-stable under any partitioning; full DuckDB oracle. */
 
-  def q204(spark: SparkSession, dir: String, k: Int = 8): DataFrame = {
-    val bridge = org.apache.spark.sql.graftbridge.Bridge
-    val v = vecs(spark, dir).localCheckpoint()
-    val seed = v.orderBy(col("vec_id")).limit(1).localCheckpoint()
-    // the 1-row center frames stay pinned until the output materializes
-    // (the union reads them), then all free together
-    var centerPins = List(seed)
-    var picks = List(seed.select(lit(0).cast(IntegerType).as("sel_round"),
-      col("vec_id"), col("label")))
-    var state = v
-      .crossJoin(broadcast(seed.select(col("v").as("cv"))))
-      .select(col("vec_id"), col("label"), col("v"),
-        sqdist(col("v"), col("cv")).as("md"))
-      .localCheckpoint()
-    try {
+  def q204(spark: SparkSession, dir: String, k: Int = 8): DataFrame =
+    Pins.result { pins =>
+      val v = pins.pin(vecs(spark, dir))
+      // the 1-row center frames stay pinned until the output materializes
+      // (the union reads them)
+      val seed = pins.pin(v.orderBy(col("vec_id")).limit(1))
+      var picks = List(seed.select(lit(0).cast(IntegerType).as("sel_round"),
+        col("vec_id"), col("label")))
+      var state = pins.pin(v
+        .crossJoin(broadcast(seed.select(col("v").as("cv"))))
+        .select(col("vec_id"), col("label"), col("v"),
+          sqdist(col("v"), col("cv")).as("md")))
       for (r <- 1 until k) {
-        val next = state.orderBy(col("md").desc, col("vec_id")).limit(1)
-          .localCheckpoint()
-        centerPins = next :: centerPins
+        val next = pins.pin(state.orderBy(col("md").desc, col("vec_id")).limit(1))
         picks = next.select(lit(r).cast(IntegerType).as("sel_round"),
           col("vec_id"), col("label")) :: picks
         if (r < k - 1) { // the last pick needs no distance update
-          val newState = state.as("s")
+          val newState = pins.pin(state.as("s")
             .crossJoin(broadcast(next.select(col("v").as("cv"))))
             .select(col("s.vec_id"), col("s.label"), col("s.v"),
-              least(col("md"), sqdist(col("s.v"), col("cv"))).as("md"))
-            .localCheckpoint()
-          bridge.unpersistLocalCheckpoint(state)
+              least(col("md"), sqdist(col("s.v"), col("cv"))).as("md")))
+          pins.release(state)
           state = newState
         }
       }
       picks.reduce(_ unionByName _).orderBy(col("sel_round"))
-        .localCheckpoint()
-    } finally {
-      bridge.unpersistLocalCheckpoint(state)
-      centerPins.foreach(bridge.unpersistLocalCheckpoint(_))
-      bridge.unpersistLocalCheckpoint(v)
     }
-  }
 }

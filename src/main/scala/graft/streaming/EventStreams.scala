@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
 
-import graft.core.Tables
+import graft.core.{Pins, Tables}
 
 /** Structured Streaming surface. The reference is strictly batch (hard
   * map→reduce barrier, /root/reference/src/mr/coordinator.go:57-70); this
@@ -432,8 +432,9 @@ object EventStreams {
     * RE-EXECUTED every micro-batch, so without the materialization the
     * full corpus shingle/minhash/band pipeline would rerun per trigger —
     * the checkpoint makes each micro-batch a broadcast of the
-    * already-computed index. The caller frees it when the ingest session
-    * ends (Bridge.unpersistLocalCheckpoint). At true corpus scale this
+    * already-computed index. It lives as long as the ingest session, so
+    * the caller owns it (into a [[graft.core.Pins]] closed when the
+    * session ends). At true corpus scale this
     * rides as TWO standing tables (a bucket-keyed probe, then a
     * c_id-keyed verify join) so the item payload is not replicated ×32;
     * the single broadcast index is the streaming-face simplification,
@@ -733,12 +734,13 @@ object EventStreams {
     // concurrent ingest fails fast instead of probing a moving store
     val storeLock = StoreWriterLock.acquire(fpStorePath)
     // static probe set, materialized once per ingest session (the
-    // corpusNearDupIndex discipline); freed when the query terminates
+    // corpusNearDupIndex discipline); these pins are owned by the query's
+    // termination listener, not by a scope
+    val sessionPins = new Pins
     val contaminated =
-      try graft.text.Decontaminate.q86(session, dir, benchMod)
+      try sessionPins.pin(graft.text.Decontaminate.q86(session, dir, benchMod)
         .where(col("contaminated"))
-        .select(col("doc_id"))
-        .localCheckpoint()
+        .select(col("doc_id")))
       catch { case t: Throwable => storeLock.close(); throw t }
     val tag = BatchStore.tagOf(checkpointPath)
     // driver-side running manifest offset — ONE scalar. Sentinel until
@@ -747,7 +749,7 @@ object EventStreams {
     // the global concat-and-chunk coordinate space survives both a
     // restart and an at-least-once re-delivery.
     var shift = -1L
-    val step: (DataFrame, Long) => Unit = (batch, bid) => {
+    val step: (DataFrame, Long) => Unit = (batch, bid) => Pins.scope { pins =>
       val sp = batch.sparkSession
       if (shift < 0L) {
         val prior = BatchStore.readExceptOrEmpty(sp, sinkPath, tag, bid,
@@ -788,7 +790,7 @@ object EventStreams {
         .join(contaminated, Seq("doc_id"), "left_anti")
         .select(col("doc_id").cast(LongType),
           size(col("tk")).cast(LongType).as("n_tok"))
-      val manifest = graft.queries.Curation.pack(sp, counts, seqLen)
+      val manifest = pins.own(graft.queries.Curation.pack(sp, counts, seqLen))
       // shift this batch's local offsets into the global coordinate
       // space and re-derive the sequence span from the shifted start;
       // the batch dir overwrite makes a re-delivery rewrite the SAME
@@ -805,7 +807,7 @@ object EventStreams {
         sinkPath, tag, bid)
       val batchTokens = manifest.agg(sum(col("n_tok"))).collect()(0)
       shift += (if (batchTokens.isNullAt(0)) 0L else batchTokens.getLong(0))
-      org.apache.spark.sql.graftbridge.Bridge.freeIfDirectCheckpoint(manifest)
+      pins.release(manifest)
       // grow the standing store AFTER the probes: this batch's docs must
       // not suppress each other through the store (the keeper aggregate
       // owns within-batch dedup). Holder-keyed rows, so a later erasure
@@ -821,8 +823,7 @@ object EventStreams {
         .start()
       catch { case t: Throwable =>
         storeLock.close()
-        org.apache.spark.sql.graftbridge.Bridge
-          .unpersistLocalCheckpoint(contaminated)
+        sessionPins.close()
         throw t
       }
     // storage contract: the pinned static probe is freed AND the store's
@@ -835,8 +836,7 @@ object EventStreams {
       override def onQueryTerminated(event: QueryTerminatedEvent): Unit =
         if (event.id == q.id) {
           storeLock.close()
-          org.apache.spark.sql.graftbridge.Bridge
-            .unpersistLocalCheckpoint(contaminated)
+          sessionPins.close()
           session.streams.removeListener(this)
         }
     }
@@ -846,7 +846,7 @@ object EventStreams {
 
   /** Static corpus-model tables for [[sparseIngest]] — the sparse tier's
     * standing state, built once per ingest session (the
-    * corpusNearDupIndex discipline, both freed by the caller):
+    * corpusNearDupIndex discipline, both owned by the caller):
     *  - `dfModel` (gram, df): the CORPUS's per-gram document frequency,
     *    vocabulary-sized — batch grams absent from it weight at the
     *    smoothed df = 0, exactly q124's model;
@@ -900,10 +900,10 @@ object EventStreams {
     // the growing posting store is single-writer too (StoreWriterLock)
     val storeLock = StoreWriterLock.acquire(storePath)
     val tag = BatchStore.tagOf(checkpointPath)
-    val step: (DataFrame, Long) => Unit = (batch, bid) => {
+    val step: (DataFrame, Long) => Unit = (batch, bid) => Pins.scope { pins =>
       val sp = batch.sparkSession
       import org.apache.spark.sql.expressions.Window
-      val w = graft.queries.Ranking.gramCountsOf(batch)
+      val w = pins.pin(graft.queries.Ranking.gramCountsOf(batch)
         .join(dfModel, Seq("gram"), "left_outer")
         .select(col("doc_id"), col("gram"), col("tfv"),
           coalesce(col("df"), lit(0L)).as("df"))
@@ -912,8 +912,7 @@ object EventStreams {
           graft.queries.Ranking
             .sparseWeight(col("tfv"), col("df"), lit(nCorpusDocs)).as("wi"))
         .withColumn("n2",
-          sum(col("wi") * col("wi")).over(Window.partitionBy(col("doc_id"))))
-        .localCheckpoint()
+          sum(col("wi") * col("wi")).over(Window.partitionBy(col("doc_id")))))
       def matched(other: DataFrame, earlierOnly: Boolean): DataFrame =
         w.as("a").join(other.as("b"),
             col("a.gram") === col("b.gram") &&
@@ -958,7 +957,6 @@ object EventStreams {
         w.select(col("doc_id").as("c_id"), col("gram"),
           col("wi").as("c_wi"), col("n2").as("c_n2")),
         storePath, tag, bid)
-      org.apache.spark.sql.graftbridge.Bridge.freeIfDirectCheckpoint(w)
     }
     val q =
       try incoming.writeStream

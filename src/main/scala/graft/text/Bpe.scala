@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
-import graft.core.Tables
+import graft.core.{Pins, Tables}
 
 /** BPE merge training (Sennrich et al. 2016, "Neural Machine Translation
   * of Rare Words with Subword Units") — the first iterations of tokenizer
@@ -127,25 +127,21 @@ object Bpe {
     // composing iterations as one lazy expression tree grows it
     // EXPONENTIALLY — the un-checkpointed form pinned one core for 19
     // minutes at iters = 3 where the materialized form takes seconds.
-    var vocab = words
-      .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
-      // filter guards the empty tail some split(-1) semantics emit
-      .withColumn("t", filter(split(col("word"), ""), x => x =!= ""))
-      .select(col("cnt"), col("t"))
-      .localCheckpoint()
-    val merges =
-      try {
-        (1 to iters).iterator.map { rank =>
-          step(vocab).map { case ((l, r, n), next) =>
-            val nextCp = next.localCheckpoint()
-            org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(vocab)
-            vocab = nextCp
-            (rank, l, r, l + r, n)
-          }
-        }.takeWhile(_.isDefined).flatten.toSeq
-      } finally {
-        org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(vocab)
-      }
+    val merges = Pins.scope { pins =>
+      var vocab = pins.pin(words
+        .groupBy(col("word")).agg(count(lit(1)).as("cnt"))
+        // filter guards the empty tail some split(-1) semantics emit
+        .withColumn("t", filter(split(col("word"), ""), x => x =!= ""))
+        .select(col("cnt"), col("t")))
+      (1 to iters).iterator.map { rank =>
+        step(vocab).map { case ((l, r, n), next) =>
+          val nextCp = pins.pin(next)
+          pins.release(vocab)
+          vocab = nextCp
+          (rank, l, r, l + r, n)
+        }
+      }.takeWhile(_.isDefined).flatten.toSeq
+    }
     merges.toDF("rank", "left", "right", "merged", "n")
       .orderBy(col("rank"))
   }
@@ -168,22 +164,20 @@ object Bpe {
     * sweep is lossless (concat(t) == word, BpeSpec), so `n_chars`
     * derived from the token arrays equals the raw character count. */
 
-  def q165(spark: SparkSession, dir: String, iters: Int = 8): DataFrame = {
-    var vocab = Tables(spark, dir, "documents")
-      .select(col("source"),
-        explode(TextAnalysis.toks(col("text"))).as("word"))
-      .groupBy(col("source"), col("word")).agg(count(lit(1)).as("cnt"))
-      .withColumn("t", filter(split(col("word"), ""), x => x =!= ""))
-      .localCheckpoint()
-    try {
+  def q165(spark: SparkSession, dir: String, iters: Int = 8): DataFrame =
+    Pins.result { pins =>
+      var vocab = pins.pin(Tables(spark, dir, "documents")
+        .select(col("source"),
+          explode(TextAnalysis.toks(col("text"))).as("word"))
+        .groupBy(col("source"), col("word")).agg(count(lit(1)).as("cnt"))
+        .withColumn("t", filter(split(col("word"), ""), x => x =!= "")))
       var rank = 0
       var exhausted = false
       while (rank < iters && !exhausted) {
         step(vocab) match {
           case Some((_, next)) =>
-            val nextCp = next.localCheckpoint()
-            org.apache.spark.sql.graftbridge.Bridge
-              .unpersistLocalCheckpoint(vocab)
+            val nextCp = pins.pin(next)
+            pins.release(vocab)
             vocab = nextCp
             rank += 1
           case None => exhausted = true
@@ -207,9 +201,5 @@ object Bpe {
           round(col("n_tokens").cast(DoubleType) / col("n_chars"), 4)
             .as("tokens_per_char"))
         .orderBy(col("source"))
-        .localCheckpoint()
-    } finally {
-      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(vocab)
     }
-  }
 }

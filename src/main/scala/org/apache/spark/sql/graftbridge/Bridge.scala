@@ -64,6 +64,30 @@ object Bridge {
       new org.apache.spark.sql.catalyst.expressions.XxHash64(
         Seq(expression(c)))))
 
+  /** localCheckpoint a frame WITH a declared hash layout: explicitly
+    * `repartition(P, partCols)` (REPARTITION_BY_NUM — AQE never coalesces
+    * a user-numbered repartition, which is what makes the declaration
+    * structurally true; an implicit ENSURE_REQUIREMENTS exchange can be
+    * AQE-coalesced into a layout no HashPartitioning describes), then
+    * optionally sort within partitions, checkpoint, and re-declare the
+    * layout on the returned LogicalRDD via [[declareHashPartitioned]].
+    * P defaults to the session's shuffle-partition count — the same
+    * scale-adaptive knob every other exchange uses (the launch settings'
+    * `SPARK_GRAFT_CPUS`/`SPARK_GRAFT_SHUFFLE_PARTITIONS`), so nothing
+    * here is tuned to a fixed core count. The result is a direct
+    * checkpoint, owned (`graft.core.Pins.own`) like a plain one. */
+  def checkpointPartitioned(df: org.apache.spark.sql.DataFrame,
+      partCols: Seq[String],
+      sortCols: Seq[String] = Nil): org.apache.spark.sql.DataFrame = {
+    val spark = df.sparkSession
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val parted = df.repartition(n, partCols.map(df.col): _*)
+    val laid =
+      if (sortCols.isEmpty) parted
+      else parted.sortWithinPartitions(sortCols.map(df.col): _*)
+    declareHashPartitioned(laid.localCheckpoint(), partCols, n, sortCols)
+  }
+
   /** Re-declare the physical layout of a `localCheckpoint()`ed Dataset.
     *
     * `Dataset.localCheckpoint` returns a LogicalRDD whose partitioning is
@@ -86,37 +110,6 @@ object Bridge {
     * on them) and, when `sortCols` is given, whose partitions were sorted
     * by those columns. A false claim silently mis-joins, exactly like a
     * lying bucketed table. */
-  /** localCheckpoint a frame WITH a declared hash layout: explicitly
-    * `repartition(P, partCols)` (REPARTITION_BY_NUM — AQE never coalesces
-    * a user-numbered repartition, which is what makes the declaration
-    * structurally true; an implicit ENSURE_REQUIREMENTS exchange can be
-    * AQE-coalesced into a layout no HashPartitioning describes), then
-    * optionally sort within partitions, checkpoint, and re-declare the
-    * layout on the returned LogicalRDD via [[declareHashPartitioned]].
-    * P defaults to the session's shuffle-partition count — the same
-    * scale-adaptive knob every other exchange uses (the driver contract's
-    * `SPARK_GRAFT_CPUS`/`SPARK_GRAFT_SHUFFLE_PARTITIONS`), so nothing
-    * here is tuned to a fixed core count. Free with
-    * [[unpersistLocalCheckpoint]] exactly like a plain checkpoint. */
-  def checkpointPartitioned(df: org.apache.spark.sql.DataFrame,
-      partCols: Seq[String],
-      sortCols: Seq[String] = Nil): org.apache.spark.sql.DataFrame = {
-    val spark = df.sparkSession
-    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val parted = df.repartition(n, partCols.map(df.col): _*)
-    val laid =
-      if (sortCols.isEmpty) parted
-      else parted.sortWithinPartitions(sortCols.map(df.col): _*)
-    val ck = laid.localCheckpoint()
-    // Dev A/B knob (r14, VERDICT r13 #2): same pin, same bytes, same
-    // repartition+sort — but WITHOUT the layout declaration, so every
-    // consumer re-exchanges and AQE keeps its runtime re-planning
-    // points. Lets a full bench isolate what the declaration itself
-    // costs/saves. Never set in the official protocol.
-    if (sys.env.contains("SPARK_GRAFT_NO_LAYOUT_DECLARE")) ck
-    else declareHashPartitioned(ck, partCols, n, sortCols)
-  }
-
   def declareHashPartitioned(df: org.apache.spark.sql.Dataset[_],
       partCols: Seq[String], n: Int,
       sortCols: Seq[String] = Nil): org.apache.spark.sql.DataFrame = {

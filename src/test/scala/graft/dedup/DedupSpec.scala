@@ -81,7 +81,7 @@ class DedupSpec extends AnyFunSuite {
     val labels = Components.connectedComponents(edges.toSeq.toDF("src", "dst"))
     val got = labels.collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    Components.free(labels) // storage contract: caller frees once consumed
+    org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(labels)
     assert(got == want)
     // min-label canonical keeper: every component label is its own member
     assert(got.forall { case (_, c) => got(c) == c })
@@ -90,7 +90,7 @@ class DedupSpec extends AnyFunSuite {
   test("q66/q80 leave only their bounded result checkpoint, freeable to zero") {
     // the corpus-vertex-sized label table must be freed inside the query;
     // what remains is the direct checkpoint of the presentation aggregate
-    // (one row per cluster / per source), which Components.free releases
+    // (one row per cluster / per source), which the caller releases
     val sc = spark.sparkContext
     for (q <- Seq(
         (s: org.apache.spark.sql.SparkSession, d: String) => Components.q66(s, d),
@@ -105,7 +105,7 @@ class DedupSpec extends AnyFunSuite {
         val rdd = sc.getPersistentRDDs(id)
         assert(rdd.count() == rows, "pinned RDD is not the bounded result")
       }
-      Components.free(out)
+      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(out)
       assert(sc.getPersistentRDDs.keySet.diff(before).isEmpty,
         "result checkpoint not freeable")
     }

@@ -129,9 +129,9 @@ class EraseStateSpec extends AnyFunSuite {
 
   test("q222 erased-then-ingested index equals the monolithic encode of " +
       "the surviving corpus, with no residual erased ids") {
-    val (merged, pins) = similarityIndex(monolithic = false)
-    val (mono, pins2) = similarityIndex(monolithic = true)
-    try {
+    graft.core.Pins.scope { pins =>
+      val merged = similarityIndex(pins, monolithic = false)
+      val mono = similarityIndex(pins, monolithic = true)
       val a = merged.collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3)))
         .toSet
@@ -143,7 +143,7 @@ class EraseStateSpec extends AnyFunSuite {
       assert(!a.exists(t => t._1 % 10 == 0 && t._1 % 10 < 7),
         "erased vec_id survives in the index")
       assert(a.nonEmpty)
-    } finally (pins ++ pins2).foreach(B.unpersistLocalCheckpoint(_))
+    }
     // the full ledgers agree bit-for-bit too
     val l1 = graft.similarity.Pq.q222(spark, dir)
     val l2 = graft.similarity.Pq.q222Monolithic(spark, dir)
@@ -153,9 +153,10 @@ class EraseStateSpec extends AnyFunSuite {
     } finally { B.unpersistLocalCheckpoint(l1); B.unpersistLocalCheckpoint(l2) }
   }
 
-  private def similarityIndex(monolithic: Boolean)
-      : (DataFrame, Seq[DataFrame]) =
-    graft.similarity.Pq.q222Index(spark, dir, monolithic = monolithic)
+  private def similarityIndex(pins: graft.core.Pins, monolithic: Boolean)
+      : DataFrame =
+    graft.similarity.Pq.q222Index(pins, spark, dir, monolithic = monolithic)
+      .standing
 
   // ---- q223: the rare-gram graph + LPA labels ----
 
@@ -164,17 +165,16 @@ class EraseStateSpec extends AnyFunSuite {
     val maxDf = 3; val minShared = 3; val modK = 7L
     val docs = graft.core.Tables(spark, dir, "documents")
     val base = docs.where(col("doc_id") % 10 < 7)
-    val basePost = Ranking.gramCountsOf(base)
-      .select(col("doc_id"), col("gram")).localCheckpoint()
-    val dfBase = basePost.groupBy(col("gram"))
-      .agg(count(lit(1)).as("df_base")).localCheckpoint()
-    val basePairs = GraphRank.rarePairsOf(basePost, maxDf, minShared)
-      .localCheckpoint()
-    val erased = base.select(col("doc_id"))
-      .where(pmod(col("doc_id"), lit(modK)) === 0L).localCheckpoint()
-    val (ePost, eDf, ePairs) = Erasure.eraseStandingPairs(
-      basePost, dfBase, basePairs, erased, maxDf, minShared)
-    try {
+    graft.core.Pins.scope { pins =>
+      val basePost = pins.pin(Ranking.gramCountsOf(base)
+        .select(col("doc_id"), col("gram")))
+      val dfBase = pins.pin(basePost.groupBy(col("gram"))
+        .agg(count(lit(1)).as("df_base")))
+      val basePairs = pins.pin(GraphRank.rarePairsOf(basePost, maxDf, minShared))
+      val erased = pins.pin(base.select(col("doc_id"))
+        .where(pmod(col("doc_id"), lit(modK)) === 0L))
+      val (ePost, eDf, ePairs) = Erasure.eraseStandingPairs(
+        basePost, dfBase, basePairs, erased, maxDf, minShared, pins.pin)
       val got = ePairs.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       val want = GraphRank.rarePairsOf(ePost, maxDf, minShared).collect()
@@ -196,9 +196,7 @@ class EraseStateSpec extends AnyFunSuite {
         .agg(count(lit(1)).as("df")).collect()
         .map(r => (r.getString(0), r.getLong(1))).toSet
       assert(gotDf == wantDf, "erased df table diverges")
-    } finally
-      Seq(ePairs, eDf, ePost, erased, basePairs, dfBase, basePost)
-        .foreach(B.unpersistLocalCheckpoint(_))
+    }
   }
 
   test("q223 output carries surviving communities only") {
@@ -398,10 +396,8 @@ class EraseStateSpec extends AnyFunSuite {
   test("q263 erased+re-ingested index from the committed spills equals " +
       "the monolithic one-pass encode of the surviving corpus") {
     val got = rows(graft.similarity.Pq.q263Index(spark, dir))
-    val (merged, pins) =
-      graft.similarity.Pq.q222Index(spark, dir, monolithic = true)
-    val want = try rows(merged)
-      finally pins.foreach(B.unpersistLocalCheckpoint(_))
+    val want = graft.core.Pins.scope(pins =>
+      rows(similarityIndex(pins, monolithic = true)))
     assert(got.nonEmpty && got == want,
       s"q263 index ${got.size} rows vs monolithic ${want.size}")
     assert(!got.exists(r => r.head.asInstanceOf[Long] % 10 == 0),

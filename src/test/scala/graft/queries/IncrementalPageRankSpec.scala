@@ -26,17 +26,16 @@ class IncrementalPageRankSpec extends AnyFunSuite {
   private val dir = SparkTest.sf0001
 
   test("incremental edge list equals the from-scratch full-corpus build") {
-    val (fullEdges, _, fullVerts, pins) =
-      GraphRank.q160Internals(spark, dir)
-    val incr = fullEdges.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val scratch = GraphRank.rareTrigramEdges(
-      graft.core.Tables(spark, dir, "documents"), 50, 3)
-    val want = scratch.collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val (incr, want) = graft.core.Pins.scope { pins =>
+      val (fullEdges, _, _) = GraphRank.q160Internals(pins, spark, dir)
+      val scratch = pins.own(GraphRank.rareTrigramEdges(
+        graft.core.Tables(spark, dir, "documents"), 50, 3))
+      (fullEdges.collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet,
+        scratch.collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet)
+    }
     val b = org.apache.spark.sql.graftbridge.Bridge
-    (scratch +: fullVerts +: fullEdges +: pins)
-      .foreach(b.unpersistLocalCheckpoint(_))
     assert(incr.nonEmpty, "incremental graph is empty — fixture degenerate")
     assert((incr diff want).isEmpty,
       s"incremental edges not in rebuild: ${(incr diff want).take(5)}")
@@ -54,16 +53,15 @@ class IncrementalPageRankSpec extends AnyFunSuite {
   }
 
   test("cold start over the incremental graph reproduces q129 exactly") {
-    val (fullEdges, _, fullVerts, pins) =
-      GraphRank.q160Internals(spark, dir)
     val b = org.apache.spark.sql.graftbridge.Bridge
-    val nFull = graft.core.Tables(spark, dir, "documents").count()
-    val r0 = GraphRank.Scale / nFull
-    val cold = GraphRank.iterateRanks(fullVerts, fullEdges,
-      fullVerts.select(col("doc_id"), lit(r0).as("r")), 5)
-    val got = cold.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    (cold +: fullVerts +: fullEdges +: pins)
-      .foreach(b.unpersistLocalCheckpoint(_))
+    val got = graft.core.Pins.scope { pins =>
+      val (fullEdges, _, fullVerts) = GraphRank.q160Internals(pins, spark, dir)
+      val nFull = graft.core.Tables(spark, dir, "documents").count()
+      val r0 = GraphRank.Scale / nFull
+      val cold = pins.own(GraphRank.iterateRanks(fullVerts, fullEdges,
+        fullVerts.select(col("doc_id"), lit(r0).as("r")), 5))
+      cold.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    }
     val q129 = GraphRank.q129(spark, dir)
     val want = q129.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     b.unpersistLocalCheckpoint(q129)

@@ -190,11 +190,10 @@ class LayoutSpec extends AnyFunSuite {
     // content sums equal a fully independent JVM recomputation of the
     // digest arithmetic over the same assignment
     val M = BigInt("4611686018427387903")
-    val (snake, pin) = Layout.snakeAssign(spark, dir, 16, pin = true)
-    val rows = snake.select(col("doc_id"), col("n_tok"), col("shard"))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-    pin.foreach(
-      org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint)
+    val rows = graft.core.Pins.scope(pins =>
+      Layout.snakeAssign(pins, spark, dir, 16)
+        .select(col("doc_id"), col("n_tok"), col("shard"))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))))
     val md = java.security.MessageDigest.getInstance("MD5")
     val expect = rows.groupBy(_._3).map { case (s, rs) =>
       s -> rs.map { case (id, n, _) =>

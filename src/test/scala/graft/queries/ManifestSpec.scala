@@ -130,11 +130,9 @@ class ManifestSpec extends AnyFunSuite {
   test("q159 drops exactly the image near-dup non-keepers from q100, flags images") {
     val seqLen = 128
     // engine-side drop set, then free its state
-    val (dropDf, labels, feat) =
-      graft.multimodal.Multimodal.imageNearDupDrop(spark, dir)
-    val drop = dropDf.collect().map(_.getLong(0)).toSet
-    graft.dedup.Components.free(labels)
-    graft.dedup.Components.free(feat)
+    val drop = graft.core.Pins.scope(pins =>
+      graft.multimodal.Multimodal.imageNearDupDrop(pins, spark, dir)
+        .collect().map(_.getLong(0)).toSet)
     // closed-form ground truth: the drop set is exactly the perturbed
     // twin members (d % 10 == 1 whose base d-1 exists) — one-pixel
     // perturbation keeps hamming <= 1 and SAD <= 4·256, and distinct

@@ -16,17 +16,24 @@ class QueriesSpec extends AnyFunSuite {
 
   /** The single smoke pass over the whole inventory: every query built,
     * written to the noop sink and freed, with the plans of every action it
-    * ran (its eager checkpoints as well as the final write). Both inventory
-    * tests below assert over this one pass. */
+    * ran (its eager checkpoints as well as the final write) and the
+    * persistent RDDs it left behind. The inventory tests below assert
+    * over this one pass. */
   private lazy val shipped: Seq[(String, scala.util.Try[QueriesSpec.Shipped])] =
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
       name -> scala.util.Try {
+        val sc = spark.sparkContext
+        val before = sc.getPersistentRDDs.keySet.toSet
         val ((columns, ck), plans) = PlanCapture.during(spark) {
           val df = fn(spark, dir)
           df.write.format("noop").mode("overwrite").save()
           (df.columns.length, Bridge.freeIfDirectCheckpoint(df))
         }
-        QueriesSpec.Shipped(columns, ck, plans)
+        // registry builds a query triggered own their pins for the
+        // process; anything else still persistent is the query's leak
+        val leaked = sc.getPersistentRDDs.keySet.toSet -- before --
+          graft.core.StandingState.ownedRddIds
+        QueriesSpec.Shipped(columns, ck, plans, leaked)
       }
     }
 
@@ -51,6 +58,15 @@ class QueriesSpec extends AnyFunSuite {
     assert(unseen.isEmpty,
       s"checkpoint-returning queries with no captured checkpoint job: " +
         unseen.mkString(", "))
+  }
+
+  test("every declared query frees its pins: after the result is written " +
+      "and freed, only standing-registry pins remain") {
+    val ok = shipped.collect { case (n, scala.util.Success(s)) => n -> s }
+    assert(ok.size == SparkEntry.queries.size, "smoke pass had failures")
+    val leaks = ok.collect { case (name, s) if s.leaked.nonEmpty =>
+      s"$name: ${s.leaked.toSeq.sorted.mkString(",")}" }
+    assert(leaks.isEmpty, s"queries left persistent RDDs: ${leaks.mkString("; ")}")
   }
 
   test("entry flagship returns rows") {
@@ -306,5 +322,5 @@ object QueriesSpec {
   /** One query's smoke-pass record: result width, whether it returned a
     * direct checkpoint, and the plans of every action it ran. */
   final case class Shipped(columns: Int, checkpointReturner: Boolean,
-                           plans: Seq[PlanCapture.Plan])
+                           plans: Seq[PlanCapture.Plan], leaked: Set[Int])
 }

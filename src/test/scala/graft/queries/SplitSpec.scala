@@ -45,6 +45,6 @@ class SplitSpec extends AnyFunSuite {
       assert(rows.map(_.getLong(2)).sum === nDocs)
       assert(rows.map(_.getString(0)).toSet.subsetOf(
         Set("train", "val", "test")))
-    } finally Components.free(labels)
+    } finally org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(labels)
   }
 }
