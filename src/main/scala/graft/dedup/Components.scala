@@ -1,29 +1,42 @@
 package graft.dedup
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.network.util.JavaUtils
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 
 import graft.core.Pins
 
-/** Distributed connected components — the missing half of dedup: the
+/** Connected components — the missing half of dedup: the
   * similarity tiers emit near-duplicate PAIRS (edges), but curation keeps
   * one canonical document per GROUP, and groups are the connected
   * components of the pair graph (A~B, B~C must collapse to one keeper
   * even when A~C was never emitted).
   *
-  * Algorithm: iterated min-label propagation as pure DataFrame graphs —
-  * each round every vertex adopts the minimum component label in its
-  * closed neighborhood (one edge-keyed join + one vertex-keyed aggregate
-  * per round, both ordinary shuffles that AQE can re-plan). Rounds needed
-  * = component diameter — tiny for near-clique dedup graphs (2–3), up to
-  * ~17 on the chain-shaped sf0.1 cosine graph; pointer jumping was
-  * measured and rejected for this workload (see the loop note).
-  * Convergence is DETECTED (changed-label count == 0), with a
-  * maxIters safety valve; per-round localCheckpoint keeps the plan O(1)
-  * deep exactly like KMeans.fit. At 100 TB nothing here is driver-side:
-  * labels and edges stay partitioned; the only driver value is the
-  * per-round changed-count.
+  * Algorithm: iterated synchronous min-label propagation — each round
+  * every vertex adopts the minimum component label in its closed
+  * neighborhood. Rounds needed = component diameter — tiny for
+  * near-clique dedup graphs (2–3), up to ~17 on the chain-shaped sf0.1
+  * cosine graph; pointer jumping was measured and rejected for this
+  * workload (see the loop note). Convergence is DETECTED (changed-label
+  * count == 0), with a maxIters safety valve.
+  *
+  * Where the rounds run is chosen by MEASURED size: the symmetric edge
+  * list is pinned first, and if the block manager holds no more bytes
+  * for that pin than the session's `spark.sql.autoBroadcastJoinThreshold`
+  * (the bound under which Spark already collects a relation to the
+  * driver to broadcast it; −1 disables), the edges are collected and the
+  * same rounds run in driver memory — one collect in place of ~9 small
+  * jobs per round. Larger edge lists run the rounds as DataFrame graphs
+  * (one edge-keyed join + one vertex-keyed aggregate per round, both
+  * ordinary shuffles AQE can re-plan; per-round localCheckpoint keeps the
+  * plan O(1) deep exactly like KMeans.fit), labels and edges stay
+  * partitioned and the only driver value is the per-round changed-count.
+  * So at 100 TB the driver holds at most a broadcast-threshold-sized edge
+  * list, and only when the measured pin is that small.
   */
 object Components {
 
@@ -42,54 +55,124 @@ object Components {
       // only adds a barrier and reads slower, q103 4.7s -> 5.8s.)
       val sym = pins.pin(edges.select(col("src"), col("dst"))
         .union(edges.select(col("dst").as("src"), col("src").as("dst"))))
-      var prevCk = pins.pin(sym.select(col("src").as("id")).distinct()
-        .withColumn("comp", col("id")))
-      var labels = prevCk
+      val init = sym.select(col("src").as("id")).distinct()
+        .withColumn("comp", col("id"))
+      val spark = sym.sparkSession
+      if (inMemory(sym) && Bridge.pinnedBytes(sym) <=
+          bytes(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))) {
+        // the distributed result's schema, from its (unexecuted) plan
+        val schema = labelRound(sym, init).select(col("id"), col("comp")).schema
+        spark.createDataFrame(
+          propagate(sym.collect(), maxIters).asJava, schema)
+      } else distributed(pins, sym, init, maxIters)
+    }
 
-      var it = 0
-      var changed = 1L
-      // superseded per-round checkpoints are freed as soon as the next
-      // round is materialized — otherwise storage grows linearly with the
-      // graph diameter
-      while (changed > 0 && it < maxIters) {
-        // min neighbor label per vertex, via the edge list
-        val fromNbrs = sym
-          .join(labels.select(col("id").as("src"), col("comp")), Seq("src"))
-          .groupBy(col("dst").as("id"))
-          .agg(min(col("comp")).as("nbr_comp"))
-        // (Two round-reduction schemes were measured and REJECTED:
-        //  * pointer jumping — label-of-label self-joins, O(log d)
-        //    rounds — saved ~0.5 s on the diameter-17 cosine graph
-        //    (q105) but cost +0.7/+0.2 s on the near-clique minhash
-        //    graphs that converge in 2–3 rounds: the extra shuffle per
-        //    round outweighs the rounds saved;
-        //  * batching K lazy rounds per materialized job — each round
-        //    references the previous round's frame TWICE (fromNbrs +
-        //    the outer join) and plans are trees, so the shared subtree
-        //    duplicates per round: 2^K re-evaluation, measured q66
-        //    2.44 s -> 3.15 s at K=3. The per-round barrier below is
-        //    load-bearing, not overhead.)
-        val next = labels
-          .join(fromNbrs, Seq("id"), "left_outer")
-          .select(col("id"),
-            least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"),
-            (col("nbr_comp") < col("comp")).as("chg"))
-        val mat = pins.pin(next) // eager: prevCk no longer referenced
-        pins.release(prevCk)
-        prevCk = mat
-        changed = mat.where(col("chg")).count()
-        labels = mat.select(col("id"), col("comp"))
-        it += 1
+  /** One synchronous round: each vertex's label becomes the min over its
+    * closed neighborhood; `chg` marks the vertices whose label fell. */
+  private def labelRound(sym: DataFrame, labels: DataFrame): DataFrame = {
+    // min neighbor label per vertex, via the edge list
+    val fromNbrs = sym
+      .join(labels.select(col("id").as("src"), col("comp")), Seq("src"))
+      .groupBy(col("dst").as("id"))
+      .agg(min(col("comp")).as("nbr_comp"))
+    labels
+      .join(fromNbrs, Seq("id"), "left_outer")
+      .select(col("id"),
+        least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"),
+        (col("nbr_comp") < col("comp")).as("chg"))
+  }
+
+  /** The rounds as DataFrame graphs, one checkpoint job per round. */
+  private def distributed(pins: Pins, sym: DataFrame, init: DataFrame,
+                          maxIters: Int): DataFrame = {
+    var prevCk = pins.pin(init)
+    var labels = prevCk
+    var it = 0
+    var changed = 1L
+    // superseded per-round checkpoints are freed as soon as the next
+    // round is materialized — otherwise storage grows linearly with the
+    // graph diameter
+    while (changed > 0 && it < maxIters) {
+      // (Two round-reduction schemes were measured and REJECTED:
+      //  * pointer jumping — label-of-label self-joins, O(log d)
+      //    rounds — saved ~0.5 s on the diameter-17 cosine graph
+      //    (q105) but cost +0.7/+0.2 s on the near-clique minhash
+      //    graphs that converge in 2–3 rounds: the extra shuffle per
+      //    round outweighs the rounds saved;
+      //  * batching K lazy rounds per materialized job — each round
+      //    references the previous round's frame TWICE (fromNbrs +
+      //    the outer join) and plans are trees, so the shared subtree
+      //    duplicates per round: 2^K re-evaluation, measured q66
+      //    2.44 s -> 3.15 s at K=3. The per-round barrier below is
+      //    load-bearing, not overhead. Edge lists under the broadcast
+      //    threshold skip this loop: see `propagate`.)
+      // eager: prevCk no longer referenced
+      val mat = pins.pin(labelRound(sym, labels))
+      pins.release(prevCk)
+      prevCk = mat
+      changed = mat.where(col("chg")).count()
+      labels = mat.select(col("id"), col("comp"))
+      it += 1
+    }
+    checkConverged(changed, maxIters)
+    // the clean (id, comp) projection is the RESULT checkpoint (returning
+    // the derived select would pin the last round's storage forever)
+    labels
+  }
+
+  /** The distributed rounds over a collected symmetric edge list, round
+    * for round: vertices are numbered in id order, so the min label is
+    * the min index. A null id (it joins nothing) keeps a null label, as
+    * in the distributed plan. */
+  private def propagate(sym: Array[Row], maxIters: Int): Seq[Row] = {
+    val ids = sym.iterator.map(_.get(0)).filter(_ != null).distinct.toArray
+      .sortBy(_.asInstanceOf[Number].longValue)
+    val index = ids.zipWithIndex.toMap
+    val linked = sym.filter(r => !r.isNullAt(0) && !r.isNullAt(1))
+    val src = linked.map(r => index(r.get(0)))
+    val dst = linked.map(r => index(r.get(1)))
+    val comp = Array.range(0, ids.length)
+    var it = 0
+    var changed = 1L
+    while (changed > 0 && it < maxIters) {
+      val nbr = Array.fill(ids.length)(Int.MaxValue)
+      var e = 0
+      while (e < src.length) {
+        if (comp(src(e)) < nbr(dst(e))) nbr(dst(e)) = comp(src(e))
+        e += 1
       }
-      // a silent partial result would be internally inconsistent (labels
-      // pointing at vertices that were themselves relabeled) — refuse
-      if (changed > 0) throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIters rounds " +
-          s"($changed labels still changing) — component diameter exceeds " +
-          "maxIters; raise it")
-      // the clean (id, comp) projection is the RESULT checkpoint (returning
-      // the derived select would pin the last round's storage forever)
-      labels
+      changed = 0L
+      var v = 0
+      while (v < comp.length) {
+        if (nbr(v) < comp(v)) { comp(v) = nbr(v); changed += 1 }
+        v += 1
+      }
+      it += 1
+    }
+    checkConverged(changed, maxIters)
+    val nullId = if (sym.exists(_.isNullAt(0))) Seq(Row(null, null)) else Nil
+    ids.indices.map(v => Row(ids(v), ids(comp(v)))) ++ nullId
+  }
+
+  // a silent partial result would be internally inconsistent (labels
+  // pointing at vertices that were themselves relabeled) — refuse
+  private def checkConverged(changed: Long, maxIters: Int): Unit =
+    if (changed > 0) throw new IllegalStateException(
+      s"connectedComponents did not converge in $maxIters rounds " +
+        s"($changed labels still changing) — component diameter exceeds " +
+        "maxIters; raise it")
+
+  /** A byte-size conf value as Spark reads it ("10MB", "-1"). */
+  private def bytes(v: String): Long =
+    if (v.startsWith("-")) -JavaUtils.byteStringAsBytes(v.drop(1))
+    else JavaUtils.byteStringAsBytes(v)
+
+  /** Integral ids are ranked by value on the driver; other id types keep
+    * the distributed rounds, whose ordering is Spark's. */
+  private def inMemory(sym: DataFrame): Boolean =
+    sym.schema("src").dataType match {
+      case LongType | IntegerType | ShortType | ByteType => true
+      case _ => false
     }
 
   /** q66 — near-duplicate cluster collapse: connected components over the

@@ -234,7 +234,7 @@ object Audit {
           org.apache.spark.sql.expressions.Window.partitionBy(col("fp"))))
       .where(col("doc_id") === col("keeper"))
     val survivors = keepers.where(col("n_chars") >= minChars)
-    val obs = org.apache.spark.sql.Observation()
+    val obs = org.apache.spark.sql.Observation("q195_receipt")
     val observed = survivors.observe(obs,
       count(lit(1)).as("n_docs"),
       sum(col("n_chars")).as("tot_chars"),

@@ -160,6 +160,22 @@ object Bridge {
             s"localCheckpoint(); got plan root ${other.nodeName}")
       }
 
+  /** Bytes the block manager holds (memory + disk) for the storage
+    * behind a `localCheckpoint()`ed Dataset — read from the context's
+    * storage info, no job (the filtered `getRDDStorageInfo` is
+    * `private[spark]`). Same argument contract as
+    * [[unpersistLocalCheckpoint]]. */
+  def pinnedBytes(df: org.apache.spark.sql.Dataset[_]): Long =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+      .queryExecution.analyzed match {
+        case l: org.apache.spark.sql.execution.LogicalRDD =>
+          l.rdd.sparkContext.getRDDStorageInfo(_.id == l.rdd.id)
+            .map(i => i.memSize + i.diskSize).sum
+        case other => throw new IllegalArgumentException(
+          "pinnedBytes expects a Dataset returned directly by " +
+            s"localCheckpoint(); got plan root ${other.nodeName}")
+      }
+
   /** Best-effort harness-side companion: free the frame's storage IFF its
     * plan root is a direct local checkpoint (queries like q66/q80/q103/
     * q104 return one under their storage contract); any other frame is

@@ -1,6 +1,9 @@
 package graft.dedup
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTest
@@ -15,6 +18,39 @@ class DedupSpec extends AnyFunSuite {
     Dedup.jaccardPairs(spark, dir, 1.0)
       .select(col("d1"), col("d2")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  /** Run `body` on the default session (an edge list under the broadcast
+    * threshold finishes in driver memory) and again with the threshold
+    * off (the distributed rounds); the conf is restored after. */
+  private def onBothPaths[T](body: => T): (T, T) = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val inMemory = body
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try (inMemory, body)
+    finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** `body`'s value and the number of Spark jobs started while it ran. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    Bridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      Bridge.drainListenerBus(spark)
+      (out, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def chain(n: Long): DataFrame = {
+    import spark.implicits._
+    (0L until n - 1).map(i => (i, i + 1)).toDF("src", "dst")
+  }
 
   test("winnowing: shared substring of length >= w+k-1 yields a shared fingerprint") {
     import spark.implicits._
@@ -78,13 +114,56 @@ class DedupSpec extends AnyFunSuite {
     }
     val want = parent.keys.map(v => v -> find(v)).toMap
 
-    val labels = Components.connectedComponents(edges.toSeq.toDF("src", "dst"))
-    val got = labels.collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    org.apache.spark.sql.graftbridge.Bridge.unpersistLocalCheckpoint(labels)
-    assert(got == want)
-    // min-label canonical keeper: every component label is its own member
-    assert(got.forall { case (_, c) => got(c) == c })
+    val (inMemory, distributed) = onBothPaths {
+      val labels = Components.connectedComponents(edges.toSeq.toDF("src", "dst"))
+      val got = labels.collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      Bridge.unpersistLocalCheckpoint(labels)
+      got
+    }
+    for (got <- Seq(inMemory, distributed)) {
+      assert(got == want)
+      // min-label canonical keeper: every component label is its own member
+      assert(got.forall { case (_, c) => got(c) == c })
+    }
+  }
+
+  test("connected components: in-memory and distributed paths give identical rows and schema") {
+    // q105's cosine pairs (a chain-shaped graph) and q66's minhash pairs
+    // (near-cliques), held as local frames so only connectedComponents
+    // runs jobs: three in memory (pin, collect, result), several per
+    // round distributed
+    for (pairs <- Seq(
+        graft.similarity.Similarity.nearDupPairs(spark, dir, 0.4),
+        Dedup.minhashVerifiedPairs(spark, dir, 0.5, 0.7))) {
+      val cols = pairs.select(col("d1").as("src"), col("d2").as("dst"))
+      val edges = spark.createDataFrame(
+        java.util.Arrays.asList(cols.collect(): _*), cols.schema)
+      val ((inMemory, inMemoryJobs), (distributed, distributedJobs)) =
+        onBothPaths {
+          val (labels, jobs) = jobsDuring(Components.connectedComponents(edges))
+          val out = (labels.schema, labels.collect().toSet)
+          Bridge.unpersistLocalCheckpoint(labels)
+          (out, jobs)
+        }
+      assert(distributed._2.nonEmpty)
+      assert(inMemory == distributed)
+      assert(inMemoryJobs <= 3 && distributedJobs > 3,
+        s"$inMemoryJobs jobs in memory vs $distributedJobs distributed")
+    }
+  }
+
+  test("connected components on a small edge list runs a constant number of jobs") {
+    // pin the edges, collect them, checkpoint the result: the 5-vertex
+    // chain (4 rounds) and the 9-vertex chain (8 rounds) cost the same
+    for (n <- Seq(5L, 9L)) {
+      val (labels, jobs) = jobsDuring {
+        Components.connectedComponents(chain(n), maxIters = 10)
+      }
+      assert(labels.collect().map(_.getLong(1)).toSet == Set(0L))
+      Bridge.unpersistLocalCheckpoint(labels)
+      assert(jobs <= 3, s"$jobs jobs for the $n-vertex chain")
+    }
   }
 
   test("q66/q80 leave only their bounded result checkpoint, freeable to zero") {
@@ -112,22 +191,25 @@ class DedupSpec extends AnyFunSuite {
   }
 
   test("connected components refuses to return a non-converged partition") {
-    import spark.implicits._
     // a 5-vertex chain needs 4 rounds for label 0 to reach the far end
-    val chain = (0L until 4L).map(i => (i, i + 1)).toDF("src", "dst")
-    val before = spark.sparkContext.getPersistentRDDs.keySet
-    val e = intercept[IllegalStateException] {
-      Components.connectedComponents(chain, maxIters = 2).collect()
+    val (inMemory, distributed) = onBothPaths {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val e = intercept[IllegalStateException] {
+        Components.connectedComponents(chain(5), maxIters = 2).collect()
+      }
+      // the discarded partial result must not pin storage (failure path
+      // frees the edge list AND the current round's checkpoint)
+      val leaked = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
+      assert(leaked.isEmpty, s"non-convergence path leaked RDDs: $leaked")
+      // and with enough rounds the same chain is one component
+      val ok = Components.connectedComponents(chain(5), maxIters = 10)
+      val comps = ok.collect().map(_.getLong(1)).toSet
+      Bridge.unpersistLocalCheckpoint(ok)
+      assert(comps == Set(0L))
+      e.getMessage
     }
-    assert(e.getMessage.contains("did not converge"))
-    // the discarded partial result must not pin storage (failure path
-    // frees the edge list AND the current round's checkpoint)
-    val leaked = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
-    assert(leaked.isEmpty, s"non-convergence path leaked RDDs: $leaked")
-    // and with enough rounds the same chain is one component
-    val ok = Components.connectedComponents(chain, maxIters = 10).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(ok.values.toSet == Set(0L))
+    assert(inMemory.contains("did not converge in 2 rounds"))
+    assert(inMemory == distributed)
   }
 
   test("q80 passage dedup drops exactly the non-keeper members of winnow clusters") {
