@@ -1,5 +1,8 @@
 package graft.mr
 
+import scala.collection.immutable.ArraySeq
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -11,6 +14,10 @@ import org.apache.spark.sql.functions._
   * Stage mapping (reference → here):
   *  - whole-file scan (worker.go:75-87)      → `wholetext` text source + input_file_name
   *  - map apply (worker.go:87)               → flatMap
+  *  - per-call combine (no reference analog) → identical (key, value) pairs
+  *    of one `mapf` call become one `(key, value, n)` record; the hash map
+  *    holds only that call's distinct pairs, next to the file's contents the
+  *    `wholetext` row already holds. Lossless: reduce expands `n` copies.
   *  - ihash(key) % R partition (worker.go:30-44) → repartition(R, key) [Murmur3 —
   *    semantically equivalent co-location; bucket assignment is invisible in
   *    merged output, see test-mr.sh:103]
@@ -18,7 +25,8 @@ import org.apache.spark.sql.functions._
   *    (attempt-scoped files: fixes the reference's append-on-retry bug)
   *  - per-partition sort + adjacent-key group (worker.go:117-131) →
   *    sortWithinPartitions + mapPartitions run-length scan
-  *  - reduce apply (worker.go:131)           → called once per distinct key
+  *  - reduce apply (worker.go:131)           → called once per distinct key,
+  *    with each value repeated its count times
   *  - "key value" text lines (worker.go:133-134) → formatted output Dataset
   *
   * Fault tolerance (10 s watchdog + re-execution, coordinator.go:87-107) is
@@ -26,7 +34,20 @@ import org.apache.spark.sql.functions._
   */
 object MRJob {
   type MapF    = (String, String) => Iterator[(String, String)]
+
+  /** `reducef(key, values)`: `values` is exactly the multiset of values every
+    * `mapf` call emitted for `key`, one element per emitted pair, in
+    * unspecified order (the reference sorts by key only, with the unstable
+    * `sort.Sort`, worker.go:117). */
   type ReduceF = (String, Seq[String]) => String
+
+  /** Counts identical pairs of one `mapf` call: one `(key, value, n)` per
+    * distinct pair, so the shuffle carries counts instead of copies. */
+  private def countPairs(pairs: Iterator[(String, String)]): Iterator[(String, String, Int)] = {
+    val counts = mutable.HashMap.empty[(String, String), Array[Int]]
+    pairs.foreach(p => counts.getOrElseUpdate(p, Array(0))(0) += 1)
+    counts.iterator.map { case ((k, v), n) => (k, v, n(0)) }
+  }
 
   /** Run a MapReduce job, returning the output lines `"key value"` with
     * their reduce-partition id (pid ≙ the reference's mr-out-<r> file id). */
@@ -44,11 +65,12 @@ object MRJob {
       .select(input_file_name().as("filename"), col("value").as("contents"))
       .as[(String, String)]
 
-    // F2: user map. F3/F4/F5: hash shuffle into R buckets.
-    val kv = files.flatMap { case (f, c) => mapf(f, c) }.toDF("key", "value")
+    // F2: user map + per-call combine. F3/F4/F5: hash shuffle into R buckets.
+    val kv = files.flatMap { case (f, c) => countPairs(mapf(f, c)) }
+      .toDF("key", "value", "n")
     val bucketed = kv.repartition(nReduce, col("key"))
       .sortWithinPartitions(col("key"))   // F6: per-partition sort by key
-      .as[(String, String)]
+      .as[(String, String, Int)]
 
     // F7/F8/F9: adjacent-key run scan (worker.go:121-131 semantics) + reduce
     // + output line format "key value" (worker.go:134).
@@ -59,9 +81,13 @@ object MRJob {
         def hasNext: Boolean = buf.hasNext
         def next(): (Int, String) = {
           val key = buf.head._1
-          val values = scala.collection.mutable.ArrayBuffer.empty[String]
-          while (buf.hasNext && buf.head._1 == key) values += buf.next()._2
-          (pid, s"$key ${reducef(key, values.toSeq)}")
+          val values = mutable.ArrayBuilder.make[String]
+          while (buf.hasNext && buf.head._1 == key) {
+            val (_, v, n) = buf.next()
+            var i = 0
+            while (i < n) { values += v; i += 1 }
+          }
+          (pid, s"$key ${reducef(key, ArraySeq.unsafeWrapArray(values.result()))}")
         }
       }
     }

@@ -15,10 +15,12 @@ import graft.SparkTest
   * *execution* happens (crash.go's whole point, verified like jobcount's
   * marker files via an attempt counter) but never duplicate *output*
   * (attempt-scoped shuffle files + commit protocol, fixing the reference's
-  * F4 append bug, worker.go:52).
+  * F4 append bug, worker.go:52). crash.go crashes in Reduce as well as in
+  * Map, so a reduce task fails on its first attempt too.
   */
 object ChaosSpec {
   val mapInvocations = new AtomicInteger(0)
+  val retriedReduces = new AtomicInteger(0)
 }
 
 class ChaosSpec extends AnyFunSuite {
@@ -47,5 +49,32 @@ class ChaosSpec extends AnyFunSuite {
     // duplicate execution DID happen (like jobcount's marker-file count)
     assert(ChaosSpec.mapInvocations.get() > 2,
       s"expected a retried attempt, saw ${ChaosSpec.mapInvocations.get()} invocations")
+  }
+
+  test("reduce task retry: crash on first attempt of partition 0, output equals golden") {
+    val dir = Files.createTempDirectory("mr-chaos-reduce")
+    Files.writeString(dir.resolve("a.txt"), "x y z x y x w v")
+    Files.writeString(dir.resolve("b.txt"), "y z q z z u t s")
+    val glob = Seq(dir.toString + "/*.txt")
+
+    val golden = MRJob.mergedOutput(spark, glob,
+      Apps.WordCount.map, Apps.WordCount.reduce, nReduce = 3)
+
+    ChaosSpec.retriedReduces.set(0)
+    val crashingReduce: MRJob.ReduceF = (k, vs) => {
+      val tc = TaskContext.get()
+      if (tc.partitionId() == 0) {
+        if (tc.attemptNumber() == 0)
+          throw new RuntimeException("injected reduce crash (first attempt)")
+        ChaosSpec.retriedReduces.incrementAndGet()
+      }
+      Apps.WordCount.reduce(k, vs)
+    }
+    val got = MRJob.mergedOutput(spark, glob,
+      Apps.WordCount.map, crashingReduce, nReduce = 3)
+
+    assert(got == golden, "output after reduce crash-retry differs from golden")
+    assert(ChaosSpec.retriedReduces.get() > 0,
+      "expected a retried attempt of reduce partition 0 to call reducef")
   }
 }

@@ -1,7 +1,10 @@
 package graft.mr
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTest
@@ -140,20 +143,25 @@ class MRJobSpec extends AnyFunSuite {
     assert(lines == goldenWordCount)
   }
 
-  test("reference-scale corpus (8 files, ~3.3 MB) beats the reference's 45 s wc bound") {
-    // the reference's wc test: 8 Gutenberg files, 3,301,104 bytes, 3
-    // workers, must finish < 45 s (test-mr.sh:47-51, 87-96)
+  // the reference's wc test corpus shape: 8 Gutenberg files, 3,301,104
+  // bytes (test-mr.sh:47-51), here drawn from a 14-word vocabulary
+  private val vocab = Vector("the", "quick", "brown", "fox", "lazy", "dog", "spark",
+    "shuffle", "reduce", "partition", "word", "count", "alpha", "beta")
+  private lazy val referenceScale: Path = {
     val dir = Files.createTempDirectory("mr-large")
     val rnd = new scala.util.Random(42)
-    val vocab = Vector("the", "quick", "brown", "fox", "lazy", "dog", "spark",
-      "shuffle", "reduce", "partition", "word", "count", "alpha", "beta")
     (1 to 8).foreach { i =>
       val sb = new StringBuilder
       while (sb.length < 412000) { sb.append(vocab(rnd.nextInt(vocab.size))).append(' ') }
       Files.writeString(dir.resolve(s"pg-$i.txt"), sb.toString)
     }
+    dir
+  }
+
+  test("reference-scale corpus (8 files, ~3.3 MB) beats the reference's 45 s wc bound") {
+    // 3 workers must finish < 45 s (test-mr.sh:87-96)
     val t0 = System.nanoTime()
-    val out = MRJob.mergedOutput(spark, Seq(dir.toString + "/*.txt"),
+    val out = MRJob.mergedOutput(spark, Seq(referenceScale.toString + "/*.txt"),
       Apps.WordCount.map, Apps.WordCount.reduce, nReduce = 10)
     val secs = (System.nanoTime() - t0) / 1e9
     assert(out.size == vocab.size)
@@ -170,5 +178,62 @@ class MRJobSpec extends AnyFunSuite {
     val got = MRJob.mergedOutput(spark, Seq(dir.toString + "/*.txt"),
       Apps.WordCount.map, countingReduce, nReduce = 1)
     assert(got == goldenWordCount)
+  }
+
+  test("shuffle carries at most one record per distinct (key, value) per map call") {
+    // wc emits one ("word", "1") per occurrence: ~650k pairs here, but only
+    // 14 distinct ones per file
+    val records = new AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          records.addAndGet(e.taskMetrics.shuffleWriteMetrics.recordsWritten)
+    }
+    val glob = referenceScale.toString + "/*.txt"
+    Bridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    val out = try MRJob.mergedOutput(spark, Seq(glob), Apps.WordCount.map,
+      Apps.WordCount.reduce, nReduce = 10)
+    finally {
+      Bridge.drainListenerBus(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(out.size == vocab.size)
+    assert(records.get <= 8L * vocab.size,
+      s"${records.get} shuffle records for 8 files of ${vocab.size} distinct words")
+  }
+
+  test("reducef gets exactly the multiset mapf emitted per key, for R in {1, 3, 10}") {
+    // each line "key<TAB>value" of a file is one emitted pair
+    val mapf: MRJob.MapF = (_, contents) =>
+      contents.split("\n").iterator.filter(_.nonEmpty).map { line =>
+        val Array(k, v) = line.split("\t", 2); (k, v)
+      }
+    val reducef: MRJob.ReduceF = (_, values) =>
+      s"${values.size} ${values.sorted.mkString("|")}"
+    val files = Seq(
+      // the same pair several times in one file, an empty value, a value
+      // with spaces, several distinct values for one key
+      "m1.txt" -> Seq("a\t1", "a\t1", "a\t1", "b\t", "b\t", "c\tx y", "a\t2",
+        "c\tx y", "d\t1"),
+      // the same pairs again from a second file
+      "m2.txt" -> Seq("a\t1", "c\tx y", "b\t", "e\t  two  spaces ", "a\t3"),
+      "m3.txt" -> Seq("d\t1", "d\t1", "a\t1"))
+      .map { case (n, lines) => n -> lines.mkString("", "\n", "\n") }
+    val dir = Files.createTempDirectory("mr-multiset")
+    files.foreach { case (n, c) => Files.writeString(dir.resolve(n), c) }
+
+    // driver-side replay of mrsequential.go: map every file in order, then
+    // reduce each key's values (its sort-then-scan groups them the same way)
+    val golden = files.flatMap { case (n, c) => mapf(n, c) }
+      .groupBy(_._1).toSeq
+      .map { case (k, kvs) => s"$k ${reducef(k, kvs.map(_._2))}" }.sorted
+    assert(golden.contains("a 7 1|1|1|1|1|2|3"))
+    assert(golden.contains("b 3 ||"))
+
+    Seq(1, 3, 10).foreach { r =>
+      val got = MRJob.mergedOutput(spark, Seq(dir.toString + "/*.txt"), mapf, reducef, r)
+      assert(got == golden, s"R=$r")
+    }
   }
 }
