@@ -362,15 +362,59 @@ object DurableState {
       table: String): DataFrame =
     spark.read.parquet(versionDir(root, kind, version).resolve(table).toString)
 
-  /** Warm-start: reload the latest committed version if one exists,
-    * else build, spill, and reload WHAT WAS WRITTEN. Returning the
-    * re-read frames (never the builder's in-memory ones) makes the
-    * restart path the only path — a round-trip loss cannot hide behind
-    * the warm process. */
-  def loadOrBuild(spark: SparkSession, root: String, kind: String,
-      tableNames: Seq[String])(build: => Seq[(String, DataFrame)])
-      : (Long, Map[String, DataFrame]) = {
-    val v = latestVersion(root, kind).getOrElse(persistAll(root, kind, build))
-    (v, tableNames.map(t => t -> load(spark, root, kind, v, t)).toMap)
+  /** One data dir's durable state at its default root ([[rootFor]]) —
+    * the face the queries use. A spill through [[spillOnce]] /
+    * [[spillOnceOver]] and a boot reload through [[reloadOnce]] each
+    * happen once per SparkContext ([[StandingState]]); [[load]],
+    * [[persistAllIf]] and [[latestVersion]] go straight to the protocol
+    * for multi-commit chains. */
+  final case class Store(spark: SparkSession, dir: String) {
+    private val root = rootFor(dir)
+
+    /** A fresh scan of one table of a committed version of `kind`. */
+    def load(kind: String, version: Long, table: String): DataFrame =
+      DurableState.load(spark, root, kind, version, table)
+
+    def persistAllIf(kind: String, expectedBase: Option[Long],
+        tables: Seq[(String, DataFrame)]): Long =
+      DurableState.persistAllIf(root, kind, expectedBase, tables)
+
+    def latestVersion(kind: String): Option[Long] =
+      DurableState.latestVersion(root, kind)
+
+    /** Spill once: commit the tables `build` derives as the next version
+      * of `kind`, once per SparkContext and (`dir`, `kind`, `params`),
+      * and return the committed version. `params` name whatever else the
+      * build reads that `kind` does not; the build's pins are freed once
+      * the tables are written. */
+    def spillOnce(kind: String, params: Any*)(
+        build: Pins => Seq[(String, DataFrame)]): Long =
+      commitOnce(kind, None, params)(build)
+
+    /** [[spillOnce]] for a version derived from committed `base`: the
+      * commit is conditional ([[DurableState.persistAllIf]]), so it
+      * fails rather than overwrite a version committed since `base`. */
+    def spillOnceOver(kind: String, base: Long, params: Any*)(
+        build: Pins => Seq[(String, DataFrame)]): Long =
+      commitOnce(kind, Some(Some(base)), params)(build)
+
+    private def commitOnce(kind: String, base: Option[Option[Long]],
+        params: Seq[Any])(build: Pins => Seq[(String, DataFrame)]): Long =
+      StandingState.of(spark,
+          ("spill" :: dir :: kind :: base :: params.toList): _*) {
+        Pins.scope(pins => doPersist(root, kind, build(pins), base))
+      }
+
+    /** Boot reload: `pin` reads tables of committed `version` of `kind`
+      * by name and pins them, once per SparkContext — a rebooted
+      * deployment pays the reload once and serves every ingest from the
+      * warm state, while the spilled parquet stays the only lineage.
+      * Registry-owned: callers must not free. Each kind has one pin
+      * shape. */
+    def reloadOnce[T](kind: String, version: Long)(
+        pin: (String => DataFrame) => T): T =
+      StandingState.of(spark, "reload", dir, kind, version) {
+        pin(load(kind, version, _))
+      }
   }
 }

@@ -1,7 +1,11 @@
 package graft.core
 
-/** Per-process registry for the incremental tier's STANDING STATE — the
-  * bench-fidelity fix for q160/q177/q218/q222/q223 (VERDICT r10 #2).
+import org.apache.spark.sql.SparkSession
+
+/** The one registry for process-lifetime state — the incremental tier's
+  * STANDING STATE, the durable tier's once-per-context spills and boot
+  * reloads ([[DurableState.Store]]), and the layout demos' write-once
+  * tables (Layout q161/q171/q178, Formats q205).
   *
   * A production deployment PERSISTS the standing state (posting index,
   * gram df, pair list, converged ranks/labels, frozen ANN model + encoded
@@ -9,65 +13,77 @@ package graft.core
   * replay of the base state belongs to the spec oracle, not to every
   * invocation. Rebuilding it per call made the three incremental queries
   * the most expensive rows of BENCH_r10 while measuring replay-scale,
-  * not ingest-scale. This registry is the Layout.writtenTables move for
-  * pinned DataFrames: the first invocation in a process builds and pins
-  * the standing state (bench warm-up; first Verify run), every later
-  * invocation reuses it, and only the per-call ingest work is timed.
+  * not ingest-scale. So the first invocation in a process builds (and
+  * pins) the state, every later invocation reuses it, and only the
+  * per-call ingest work is timed.
   *
-  * Entries live for the process lifetime (the pins are the state a
-  * deployment would hold in storage — a few MB at test SF). Keys must
-  * include the SparkContext applicationId: pinned RDDs die with their
-  * context, so a restarted session must rebuild rather than reuse dead
-  * pins. State builders are deterministic, so reuse never changes any
-  * query's output — spec-asserted by the incremental tier's
-  * ingest==rebuild equalities. */
+  * An entry lives as long as the SparkContext it was built on, and no
+  * longer: [[of]] keys every entry on its session's applicationId, so a
+  * restarted session rebuilds instead of reusing dead pins or tables of
+  * a dead catalog. Callers name only what their build reads. State
+  * builders are deterministic, so reuse never changes any query's
+  * output — spec-asserted by the incremental tier's ingest==rebuild
+  * equalities. */
 object StandingState {
   private val reg =
-    new java.util.concurrent.ConcurrentHashMap[String, Lazy]()
+    new java.util.concurrent.ConcurrentHashMap[List[Any], Lazy]()
 
-  /** Build-once-per-(key, process), RE-ENTRANT: standing-state builders
-    * nest (lpaStanding builds on graphStanding; the durable tiers'
-    * spill builders call both), and `computeIfAbsent` forbids updating
-    * the map from inside a mapping function — when the outer and inner
-    * keys collide on a hash bin it throws `IllegalStateException:
-    * Recursive update` (intermittent, because the colliding keys embed
-    * the per-process applicationId — caught by the N-trial chaos
-    * harness, round 12 trial 3). So the map only ever stores a LAZY
-    * CELL (inserting one never runs user code), and the build is
-    * forced OUTSIDE the map's bin lock: two threads racing the same
-    * key get the same cell and `lazy val` runs the build exactly once;
-    * nested `of` calls force disjoint cells and never re-enter the
+  /** Build once per (`spark`'s SparkContext, `parts`), RE-ENTRANT:
+    * standing-state builders nest (lpaStanding builds on graphStanding;
+    * the durable tiers' spill builders call both), and `computeIfAbsent`
+    * forbids updating the map from inside a mapping function — when the
+    * outer and inner keys collide on a hash bin it throws
+    * `IllegalStateException: Recursive update` (intermittent, because
+    * the colliding keys embed the per-process applicationId — caught by
+    * the N-trial chaos harness, round 12 trial 3). So the map only ever
+    * stores a LAZY CELL (inserting one never runs user code), and the
+    * build is forced OUTSIDE the map's bin lock: two threads racing the
+    * same key get the same cell and `lazy val` runs the build exactly
+    * once; nested `of` calls force disjoint cells and never re-enter the
     * map under a lock. */
-  def of[T <: AnyRef](key: String)(build: => T): T =
-    reg.computeIfAbsent(key, _ => new Lazy(() => recorded(build)))
+  def of[T](spark: SparkSession, parts: Any*)(build: => T): T = {
+    val key = spark.sparkContext.applicationId :: parts.toList
+    reg.computeIfAbsent(key, _ => new Lazy(() => recorded(spark, build)))
       .value.asInstanceOf[T]
+  }
+
+  /** `dir`'s process-unique file/table tag for the write-once layouts:
+    * two concurrent processes over the same data dir (or two dirs whose
+    * hashCode collides) must never overwrite each other's tables
+    * mid-query. pid + JVM start time is unique across concurrent and
+    * rapidly-recycled processes alike. */
+  def processTag(dir: String): String =
+    java.lang.Long.toHexString(
+      java.lang.Integer.toUnsignedLong(dir.hashCode)) + "_" + ProcNonce
+
+  private val ProcNonce: String = {
+    val rt = java.lang.management.ManagementFactory.getRuntimeMXBean
+    s"${ProcessHandle.current().pid()}_${java.lang.Long.toHexString(rt.getStartTime)}"
+  }
 
   private val owned = java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]()
 
   /** Ids of the persistent RDDs that registry builds created and still
     * hold — the pins the registry owns for the process lifetime, which a
     * leak check must not count against the query that first built them.
-    * Recorded as the persistent-RDD set a build adds on the active
-    * session's context, so pins another thread makes during a build are
-    * attributed to the registry too; the leak check that reads this runs
-    * one query at a time. */
+    * Recorded as the persistent-RDD set a build adds on its session's
+    * context, so pins another thread makes during a build are attributed
+    * to the registry too; the leak check that reads this runs one query
+    * at a time. */
   def ownedRddIds: Set[Int] = {
     import scala.jdk.CollectionConverters._
     owned.asScala.map(_.intValue).toSet
   }
 
-  private def recorded[T](build: => T): T =
-    org.apache.spark.sql.SparkSession.getActiveSession match {
-      case Some(spark) =>
-        val sc = spark.sparkContext
-        val before = sc.getPersistentRDDs.keySet
-        val out = build
-        sc.getPersistentRDDs.keySet.diff(before).foreach(id => owned.add(id))
-        out
-      case None => build
-    }
+  private def recorded[T](spark: SparkSession, build: => T): T = {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val out = build
+    sc.getPersistentRDDs.keySet.diff(before).foreach(id => owned.add(id))
+    out
+  }
 
-  private final class Lazy(f: () => AnyRef) {
-    lazy val value: AnyRef = f()
+  private final class Lazy(f: () => Any) {
+    lazy val value: Any = f()
   }
 }

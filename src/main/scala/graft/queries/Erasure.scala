@@ -372,11 +372,8 @@ object Erasure {
     // ---- the erasure round (request-scale) ----
     val erased = base.select(col("c")).distinct()
       .where(isErased(col("c"), modK))
-    val eBasket = base.join(broadcast(erased), Seq("c"), "left_semi")
-    val dec = eBasket.as("a").join(eBasket.as("b"),
-        col("a.c") === col("b.c") && col("a.p") < col("b.p"))
-      .groupBy(col("a.p").as("p1"), col("b.p").as("p2"))
-      .agg(count(lit(1)).as("dec"))
+    val dec = Recommend.coMatrixOf(
+      base.join(broadcast(erased), Seq("c"), "left_semi"), "dec")
     val eTouched = pins.own(B.checkpointPartitioned(
       coBase.join(dec, Seq("p1", "p2"))
         .select(col("p1"), col("p2"), col("co_base").as("eb"),
@@ -394,10 +391,7 @@ object Erasure {
     // PRESERVES the standing co matrix's declared (p1, p2) layout,
     // which a Union discards, so the ingest's ledger merge downstream
     // plans exchange-free on this side
-    val coE = coBase.join(dec, Seq("p1", "p2"), "left_outer")
-      .select(col("p1"), col("p2"),
-        (col("co_base") - coalesce(col("dec"), lit(0L))).as("co_base"))
-      .where(col("co_base") > 0)
+    val coE = Recommend.decrementedCo(coBase, dec)
     // ---- the next ingest over the ERASED state (q244's leg) ----
     val ingest = Recommend.ingestLedger(pins, spark, dir, eBase, coE, cap)
     eTouched
@@ -434,20 +428,9 @@ object Erasure {
     * committed on disk. */
   def q259(spark: SparkSession, dir: String, cap: Int = 256,
            modK: Long = 10L): DataFrame = {
-    val B2 = org.apache.spark.sql.graftbridge.Bridge
-    val root = graft.core.DurableState.rootFor(dir)
-    val eKind = s"cf${cap}erased$modK"
-    val eVersion = ensureCfErased(spark, dir, cap, modK)
     // the next ingest, served from the ERASED spill (boot-pinned loads)
-    val (eBase, eCo) = graft.core.StandingState.of(
-      s"durablecferaseload|${spark.sparkContext.applicationId}|$dir|" +
-        s"$cap|$modK") {
-      // boot-pinned in the serving layout (the cfStanding r13 note)
-      (B2.checkpointPartitioned(graft.core.DurableState.load(spark, root,
-        eKind, eVersion, "basket"), Seq("c"), Seq("c", "p")),
-        B2.checkpointPartitioned(graft.core.DurableState.load(spark, root,
-          eKind, eVersion, "co"), Seq("p1", "p2"), Seq("p1", "p2")))
-    }
+    val (eBase, eCo) = Recommend.reloadedCf(spark, dir,
+      s"cf${cap}erased$modK", ensureCfErased(spark, dir, cap, modK))
     Pins.result(pins => Recommend.ingestLedger(pins, spark, dir, eBase, eCo, cap))
   }
 
@@ -456,37 +439,20 @@ object Erasure {
     * version. */
   private[graft] def ensureCfErased(spark: SparkSession, dir: String,
       cap: Int, modK: Long): Long = {
-    val root = graft.core.DurableState.rootFor(dir)
-    val eKind = s"cf${cap}erased$modK"
-    graft.core.StandingState.of(
-      s"durablecferase|${spark.sparkContext.applicationId}|$dir|$cap|$modK") {
+    val store = graft.core.DurableState.Store(spark, dir)
+    store.spillOnce(s"cf${cap}erased$modK") { pins =>
       // serve the request against the RELOADED spill, once per process
       val v0 = Recommend.ensureCfSpilled(spark, dir, cap)
-      val base = graft.core.DurableState.load(spark, root, s"cf$cap", v0,
-        "basket")
-      val coBase = graft.core.DurableState.load(spark, root, s"cf$cap",
-        v0, "co")
-      Pins.scope { pins =>
-        val erased = pins.pin(base.select(col("c")).distinct()
-          .where(isErased(col("c"), modK)))
-        val eBasket = base.join(broadcast(erased), Seq("c"), "left_semi")
-        val dec = eBasket.as("a").join(eBasket.as("b"),
-            col("a.c") === col("b.c") && col("a.p") < col("b.p"))
-          .groupBy(col("a.p").as("p1"), col("b.p").as("p2"))
-          .agg(count(lit(1)).as("dec"))
-        val coErased = coBase.join(dec, Seq("p1", "p2"), "left_outer")
-          .select(col("p1"), col("p2"),
-            (col("co_base") - coalesce(col("dec"), lit(0L)))
-              .as("co_base"))
-          .where(col("co_base") > 0)
-        val basketErased = base.join(broadcast(erased), Seq("c"),
-          "left_anti")
-        // atomic publish: the erased state becomes the next committed
-        // version; a reader never sees a half-erased spill
-        java.lang.Long.valueOf(graft.core.DurableState.persistAll(root,
-          eKind, Seq("basket" -> basketErased, "co" -> coErased)))
-      }
-    }.longValue()
+      val base = store.load(s"cf$cap", v0, "basket")
+      val coBase = store.load(s"cf$cap", v0, "co")
+      val erased = pins.pin(base.select(col("c")).distinct()
+        .where(isErased(col("c"), modK)))
+      // atomic publish: the erased state becomes the next committed
+      // version; a reader never sees a half-erased spill
+      Seq("basket" -> base.join(broadcast(erased), Seq("c"), "left_anti"),
+        "co" -> Recommend.decrementedCo(coBase, Recommend.coMatrixOf(
+          base.join(broadcast(erased), Seq("c"), "left_semi"), "dec")))
+    }
   }
 
   /** q225 — ERASURE CERTIFICATE across the standing-state tier: the one
@@ -697,8 +663,12 @@ object Erasure {
   // machinery.)
   // ---------------------------------------------------------------------
 
-  private def appOf(spark: SparkSession): String =
-    spark.sparkContext.applicationId
+  /** One table of a committed spill, reloaded and pinned once per
+    * process (the boot path of q260/q261). Registry-owned. */
+  private def reloadedTable(spark: SparkSession, dir: String, kind: String,
+      version: Long, table: String): DataFrame =
+    graft.core.DurableState.Store(spark, dir).reloadOnce(kind, version)(
+      read => read(table).localCheckpoint())
 
   /** q260 — fp-store ERASE-COMMIT: q220 served from durable spills. The
     * holder-keyed ledger spills as kind `fpstore`; the request reloads
@@ -708,17 +678,11 @@ object Erasure {
     * pre-erasure spill (the `resurrected` witness). */
   def q260(spark: SparkSession, dir: String, mod: Int = 10, lt: Int = 7,
            modK: Long = 10L): DataFrame = {
-    val root = graft.core.DurableState.rootFor(dir)
     val (v0, eV) = ensureFpErased(spark, dir, mod, lt, modK)
     val fpAll = Dedup.wordSets(spark, dir)
       .select(col("doc_id"), md5(array_join(col("words"), " ")).as("fp"))
-    val (pre, post) = graft.core.StandingState.of(
-      s"durablefperaseload|${appOf(spark)}|$dir|$mod|$lt|$modK") {
-      (graft.core.DurableState.load(spark, root, "fpstore", v0, "ledger")
-        .localCheckpoint(),
-        graft.core.DurableState.load(spark, root, s"fpstore-erased$modK",
-          eV, "ledger").localCheckpoint())
-    }
+    val pre = reloadedTable(spark, dir, "fpstore", v0, "ledger")
+    val post = reloadedTable(spark, dir, s"fpstore-erased$modK", eV, "ledger")
     q220Serve(pre, post, fpAll, mod, lt).localCheckpoint()
   }
 
@@ -726,25 +690,20 @@ object Erasure {
     * process each (registry-guarded); returns (v0, erasedVersion). */
   private[graft] def ensureFpErased(spark: SparkSession, dir: String,
       mod: Int, lt: Int, modK: Long): (Long, Long) = {
-    val root = graft.core.DurableState.rootFor(dir)
+    val store = graft.core.DurableState.Store(spark, dir)
     val kind = "fpstore"
-    val v0 = graft.core.StandingState.of(
-      s"durablefpspill|${appOf(spark)}|$dir|$mod|$lt") {
+    val v0 = store.spillOnce(kind, mod, lt) { _ =>
       val fpAll = Dedup.wordSets(spark, dir)
         .select(col("doc_id"), md5(array_join(col("words"), " ")).as("fp"))
-      java.lang.Long.valueOf(graft.core.DurableState.persistAll(root,
-        kind, Seq("ledger" -> fpAll.where(col("doc_id") % mod < lt))))
-    }.longValue()
-    val eV = graft.core.StandingState.of(
-      s"durablefperase|${appOf(spark)}|$dir|$mod|$lt|$modK") {
-      val ledger = graft.core.DurableState.load(spark, root, kind, v0,
-        "ledger")
+      Seq("ledger" -> fpAll.where(col("doc_id") % mod < lt))
+    }
+    val eV = store.spillOnce(s"fpstore-erased$modK", mod, lt) { _ =>
+      val ledger = store.load(kind, v0, "ledger")
       val erased = ledger.where(isErased(col("doc_id"), modK))
         .select(col("doc_id")).distinct()
-      java.lang.Long.valueOf(graft.core.DurableState.persistAll(root,
-        s"fpstore-erased$modK", Seq("ledger" ->
-          ledger.join(broadcast(erased), Seq("doc_id"), "left_anti"))))
-    }.longValue()
+      Seq("ledger" ->
+        ledger.join(broadcast(erased), Seq("doc_id"), "left_anti"))
+    }
     (v0, eV)
   }
 
@@ -759,17 +718,12 @@ object Erasure {
     * q221's. */
   def q261(spark: SparkSession, dir: String, mod: Int = 10, lt: Int = 7,
            modK: Long = 10L, exactThreshold: Double = 0.7): DataFrame = {
-    val root = graft.core.DurableState.rootFor(dir)
     val sets = Dedup.shingleHashes(spark, dir)
     val banded = Dedup.bandedSignatures(Dedup.minhashSignatures(sets))
     val (v0, eV) = ensureBandErased(spark, dir, mod, lt, modK)
-    val (preBands, erasedBands) = graft.core.StandingState.of(
-      s"durablebanderaseload|${appOf(spark)}|$dir|$mod|$lt|$modK") {
-      (graft.core.DurableState.load(spark, root, "bandindex", v0, "bands")
-        .localCheckpoint(),
-        graft.core.DurableState.load(spark, root,
-          s"bandindex-erased$modK", eV, "bands").localCheckpoint())
-    }
+    val preBands = reloadedTable(spark, dir, "bandindex", v0, "bands")
+    val erasedBands =
+      reloadedTable(spark, dir, s"bandindex-erased$modK", eV, "bands")
     q221Serve(spark, dir, sets, banded, preBands, erasedBands, mod, lt,
       exactThreshold).localCheckpoint()
   }
@@ -778,25 +732,20 @@ object Erasure {
     * per process each; returns (v0, erasedVersion). */
   private[graft] def ensureBandErased(spark: SparkSession, dir: String,
       mod: Int, lt: Int, modK: Long): (Long, Long) = {
-    val root = graft.core.DurableState.rootFor(dir)
+    val store = graft.core.DurableState.Store(spark, dir)
     val kind = "bandindex"
-    val v0 = graft.core.StandingState.of(
-      s"durablebandspill|${appOf(spark)}|$dir|$mod|$lt") {
+    val v0 = store.spillOnce(kind, mod, lt) { _ =>
       val banded = Dedup.bandedSignatures(
         Dedup.minhashSignatures(Dedup.shingleHashes(spark, dir)))
-      java.lang.Long.valueOf(graft.core.DurableState.persistAll(root,
-        kind, Seq("bands" -> banded.where(col("doc_id") % mod < lt))))
-    }.longValue()
-    val eV = graft.core.StandingState.of(
-      s"durablebanderase|${appOf(spark)}|$dir|$mod|$lt|$modK") {
-      val bands = graft.core.DurableState.load(spark, root, kind, v0,
-        "bands")
+      Seq("bands" -> banded.where(col("doc_id") % mod < lt))
+    }
+    val eV = store.spillOnce(s"bandindex-erased$modK", mod, lt) { _ =>
+      val bands = store.load(kind, v0, "bands")
       val erased = bands.select(col("doc_id")).distinct()
         .where(isErased(col("doc_id"), modK))
-      java.lang.Long.valueOf(graft.core.DurableState.persistAll(root,
-        s"bandindex-erased$modK", Seq("bands" ->
-          bands.join(broadcast(erased), Seq("doc_id"), "left_anti"))))
-    }.longValue()
+      Seq("bands" ->
+        bands.join(broadcast(erased), Seq("doc_id"), "left_anti"))
+    }
     (v0, eV)
   }
 
@@ -870,58 +819,40 @@ object Erasure {
   private[graft] def ensureGraphErased(spark: SparkSession, dir: String,
       baseRounds: Int, maxDf: Int, minShared: Int, modK: Long)
       : (Long, Long) = {
-    val root = graft.core.DurableState.rootFor(dir)
+    val store = graft.core.DurableState.Store(spark, dir)
     val kind = s"graph$maxDf-$minShared-$baseRounds"
     val v0 = GraphRank.ensureGraphSpilled(spark, dir, baseRounds, maxDf,
       minShared)
-    def ld(t: String): DataFrame =
-      graft.core.DurableState.load(spark, root, kind, v0, t)
-    val eV = graft.core.StandingState.of(
-      s"durablegrapherase|${appOf(spark)}|$dir|$maxDf|$minShared|" +
-        s"$baseRounds|$modK") {
-      Pins.scope { pins =>
-        val erased = pins.pin(Tables(spark, dir, "documents")
-          .where(col("doc_id") % 10 < 7 && isErased(col("doc_id"), modK))
-          .select(col("doc_id")))
-        // un-pinned Δ: persistAll executes the DAG straight into the
-        // committed version
-        val (ePost, eDf, ePairs) = eraseStandingPairs(
-          ld("postings"), ld("df"), ld("pairs"), erased, maxDf,
-          minShared, identity)
-        val eLabels = ld("labels")
-          .join(broadcast(erased), Seq("doc_id"), "left_anti")
-          .join(broadcast(erased.select(col("doc_id").as("label"))
-            .withColumn("lbl_gone", lit(1))), Seq("label"), "left_outer")
-          .select(col("doc_id"),
-            when(col("lbl_gone").isNotNull, col("doc_id"))
-              .otherwise(col("label")).as("label"))
-        java.lang.Long.valueOf(graft.core.DurableState.persistAll(root,
-          s"$kind-erased$modK", Seq("postings" -> ePost, "df" -> eDf,
-            "pairs" -> ePairs, "labels" -> eLabels)))
-      }
-    }.longValue()
+    val eV = store.spillOnce(s"$kind-erased$modK") { pins =>
+      val erased = pins.pin(Tables(spark, dir, "documents")
+        .where(col("doc_id") % 10 < 7 && isErased(col("doc_id"), modK))
+        .select(col("doc_id")))
+      // un-pinned Δ: the spill executes the DAG straight into the
+      // committed version
+      val (ePost, eDf, ePairs) = eraseStandingPairs(
+        store.load(kind, v0, "postings"), store.load(kind, v0, "df"),
+        store.load(kind, v0, "pairs"), erased, maxDf, minShared, identity)
+      val eLabels = store.load(kind, v0, "labels")
+        .join(broadcast(erased), Seq("doc_id"), "left_anti")
+        .join(broadcast(erased.select(col("doc_id").as("label"))
+          .withColumn("lbl_gone", lit(1))), Seq("label"), "left_outer")
+        .select(col("doc_id"),
+          when(col("lbl_gone").isNotNull, col("doc_id"))
+            .otherwise(col("label")).as("label"))
+      Seq("postings" -> ePost, "df" -> eDf, "pairs" -> ePairs,
+        "labels" -> eLabels)
+    }
     (v0, eV)
   }
 
   def q262(spark: SparkSession, dir: String, baseRounds: Int = 5,
            incrRounds: Int = 3, maxDf: Int = 3, minShared: Int = 3,
            modK: Long = 7L): DataFrame = {
-    val root = graft.core.DurableState.rootFor(dir)
-    val kind = s"graph$maxDf-$minShared-$baseRounds"
-    val eKind = s"$kind-erased$modK"
     val eV = ensureGraphErased(spark, dir, baseRounds, maxDf, minShared,
       modK)._2
-    def ld(k: String, v: Long, t: String): DataFrame =
-      graft.core.DurableState.load(spark, root, k, v, t)
     // boot: reload the ERASED spill once per process and pin
-    val (ePost, eDf, ePairs, eLabels) = graft.core.StandingState.of(
-      s"durablegrapheraseload|${appOf(spark)}|$dir|$maxDf|$minShared|" +
-        s"$baseRounds|$modK") {
-      (ld(eKind, eV, "postings").localCheckpoint(),
-        ld(eKind, eV, "df").localCheckpoint(),
-        ld(eKind, eV, "pairs").localCheckpoint(),
-        ld(eKind, eV, "labels").localCheckpoint())
-    }
+    val (ePost, eDf, ePairs, eLabels) = GraphRank.reloadedGraph(spark, dir,
+      s"graph$maxDf-$minShared-$baseRounds-erased$modK", eV)
     // ---- the next ingest over the ERASED spill (q223's q218 leg) ----
     GraphRank.lpaIngestFrom(spark, dir, ePost, eDf, ePairs, eLabels,
       incrRounds, maxDf, minShared)
@@ -941,7 +872,7 @@ object Erasure {
     * (registry-guarded), so the per-invocation cost is the bounded
     * count aggregates. */
   def q264(spark: SparkSession, dir: String): DataFrame = {
-    val root = graft.core.DurableState.rootFor(dir)
+    val store = graft.core.DurableState.Store(spark, dir)
     val (fpV0, fpEV) = ensureFpErased(spark, dir, 10, 7, 10L)
     val (bdV0, bdEV) = ensureBandErased(spark, dir, 10, 7, 10L)
     val (gV0, gEV) = ensureGraphErased(spark, dir, 5, 3, 3, 7L)
@@ -949,24 +880,22 @@ object Erasure {
     val cfEV = ensureCfErased(spark, dir, 256, 10L)
     val (pqV0, pqEV) = graft.similarity.Pq.ensurePqErased(spark, dir,
       8, 16, 3, 10, 10L)
-    def ld(kind: String, v: Long, t: String): DataFrame =
-      graft.core.DurableState.load(spark, root, kind, v, t)
     def one(state: String, metric: String, df: DataFrame): DataFrame =
       df.agg(count(lit(1)).cast(LongType).as("value"))
         .select(lit(state).as("state"), lit(metric).as("metric"),
           col("value"))
-    val fp0 = ld("fpstore", fpV0, "ledger")
-    val fpE = ld("fpstore-erased10", fpEV, "ledger")
-    val bd0 = ld("bandindex", bdV0, "bands")
-    val bdE = ld("bandindex-erased10", bdEV, "bands")
+    val fp0 = store.load("fpstore", fpV0, "ledger")
+    val fpE = store.load("fpstore-erased10", fpEV, "ledger")
+    val bd0 = store.load("bandindex", bdV0, "bands")
+    val bdE = store.load("bandindex-erased10", bdEV, "bands")
     val gKind = "graph3-3-5"
-    val g0 = (t: String) => ld(gKind, gV0, t)
-    val gE = (t: String) => ld(s"$gKind-erased7", gEV, t)
-    val cf0 = ld("cf256", cfV0, "basket")
-    val cfE = ld("cf256erased10", cfEV, "basket")
-    val cfECo = ld("cf256erased10", cfEV, "co")
-    val pq0 = ld("pq8-16-3-10", pqV0, "codes")
-    val pqE = ld("pq8-16-3-10-erased10", pqEV, "codes")
+    val g0 = (t: String) => store.load(gKind, gV0, t)
+    val gE = (t: String) => store.load(s"$gKind-erased7", gEV, t)
+    val cf0 = store.load("cf256", cfV0, "basket")
+    val cfE = store.load("cf256erased10", cfEV, "basket")
+    val cfECo = store.load("cf256erased10", cfEV, "co")
+    val pq0 = store.load("pq8-16-3-10", pqV0, "codes")
+    val pqE = store.load("pq8-16-3-10-erased10", pqEV, "codes")
     val er7 = (c: Column) => isErased(c, 7L)
     val er10 = (c: Column) => isErased(c, 10L)
     Seq(

@@ -68,8 +68,7 @@ object GraphRank {
     * Registry-owned — callers must NOT free. */
   private[queries] def fullGraphStanding(spark: SparkSession, dir: String,
       maxDf: Int, minShared: Int): DataFrame =
-    graft.core.StandingState.of(
-      s"fullgraph|${spark.sparkContext.applicationId}|$dir|$maxDf|$minShared") {
+    graft.core.StandingState.of(spark, "fullgraph", dir, maxDf, minShared) {
       rareTrigramEdges(Tables(spark, dir, "documents"), maxDf, minShared)
     }
 
@@ -270,8 +269,7 @@ object GraphRank {
     * — callers must NOT free them. */
   private[queries] def graphStanding(spark: SparkSession, dir: String,
       maxDf: Int, minShared: Int): (DataFrame, DataFrame, DataFrame) =
-    graft.core.StandingState.of(
-      s"graph|${spark.sparkContext.applicationId}|$dir|$maxDf|$minShared") {
+    graft.core.StandingState.of(spark, "graph", dir, maxDf, minShared) {
       val base = Tables(spark, dir, "documents")
         .where(col("doc_id") % 10 < 7)
       val basePost = Ranking.gramCountsOf(base)
@@ -287,8 +285,8 @@ object GraphRank {
     * size — process-pinned like [[graphStanding]]; never freed. */
   private def prStanding(spark: SparkSession, dir: String, baseIters: Int,
       maxDf: Int, minShared: Int): (DataFrame, Long) =
-    graft.core.StandingState.of(
-      s"q160|${spark.sparkContext.applicationId}|$dir|$baseIters|$maxDf|$minShared") {
+    graft.core.StandingState.of(spark, "q160", dir, baseIters, maxDf,
+        minShared) {
       val (_, _, basePairs) = graphStanding(spark, dir, maxDf, minShared)
       val base = Tables(spark, dir, "documents")
         .where(col("doc_id") % 10 < 7)
@@ -303,8 +301,8 @@ object GraphRank {
         iterateRanks(baseVerts, baseEdges,
           baseVerts.select(col("doc_id"), lit(r0b).as("r")), baseIters)
       }
-      (baseRanks, java.lang.Long.valueOf(nBase))
-    } match { case (r, n) => (r, n.longValue()) }
+      (baseRanks, nBase)
+    }
 
   def q160(spark: SparkSession, dir: String, baseIters: Int = 5,
            incrIters: Int = 3, maxDf: Int = 50, minShared: Int = 3)
@@ -542,8 +540,8 @@ object GraphRank {
     * process-pinned like [[graphStanding]]; never freed. */
   private[queries] def lpaStanding(spark: SparkSession, dir: String,
       baseRounds: Int, maxDf: Int, minShared: Int): DataFrame =
-    graft.core.StandingState.of(
-      s"lpa|${spark.sparkContext.applicationId}|$dir|$baseRounds|$maxDf|$minShared") {
+    graft.core.StandingState.of(spark, "lpa", dir, baseRounds, maxDf,
+        minShared) {
       val (_, _, basePairs) = graphStanding(spark, dir, maxDf, minShared)
       // build-local edge pin; the labels are the registry's
       Pins.scope { pins =>
@@ -618,43 +616,40 @@ object GraphRank {
       minShared)
   }
 
-  /** Spill the graph tier's standing state once per process and reload
-    * it as lineage-free parquet scans — the restart face q249 serves
-    * from. */
+  /** Spill the graph tier's standing state once per process; returns
+    * the committed version. */
   private[queries] def ensureGraphSpilled(spark: SparkSession, dir: String,
       baseRounds: Int, maxDf: Int, minShared: Int): Long =
-    graft.core.StandingState.of(
-      s"durablegraph|${spark.sparkContext.applicationId}|$dir|" +
-        s"$maxDf|$minShared|$baseRounds") {
-      val (basePost, dfBase, basePairs) =
-        graphStanding(spark, dir, maxDf, minShared)
-      val baseLabels = lpaStanding(spark, dir, baseRounds, maxDf, minShared)
-      java.lang.Long.valueOf(graft.core.DurableState.persistAll(
-        graft.core.DurableState.rootFor(dir),
-        s"graph$maxDf-$minShared-$baseRounds",
+    graft.core.DurableState.Store(spark, dir)
+      .spillOnce(s"graph$maxDf-$minShared-$baseRounds") { _ =>
+        val (basePost, dfBase, basePairs) =
+          graphStanding(spark, dir, maxDf, minShared)
+        val baseLabels =
+          lpaStanding(spark, dir, baseRounds, maxDf, minShared)
         Seq("postings" -> basePost, "df" -> dfBase, "pairs" -> basePairs,
-          "labels" -> baseLabels)))
-    }.longValue()
+          "labels" -> baseLabels)
+      }
 
+  /** Reload the standing graph spill once per process as lineage-free
+    * parquet scans — the restart face q249 serves from. */
   private def reloadedGraphState(spark: SparkSession, dir: String,
       baseRounds: Int, maxDf: Int, minShared: Int)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val version =
-      ensureGraphSpilled(spark, dir, baseRounds, maxDf, minShared)
-    val root = graft.core.DurableState.rootFor(dir)
-    val kind = s"graph$maxDf-$minShared-$baseRounds"
-    // boot-once reload: a rebooted deployment pays the reload once and
-    // serves every ingest from the warm state (the q247 note) — the
-    // spilled parquet, not the registry builder, remains the lineage
-    graft.core.StandingState.of(
-      s"durablegraphload|${spark.sparkContext.applicationId}|$dir|" +
-        s"$maxDf|$minShared|$baseRounds") {
-      def ld(t: String): DataFrame =
-        graft.core.DurableState.load(spark, root, kind, version, t)
-          .localCheckpoint()
-      (ld("postings"), ld("df"), ld("pairs"), ld("labels"))
+      : (DataFrame, DataFrame, DataFrame, DataFrame) =
+    reloadedGraph(spark, dir, s"graph$maxDf-$minShared-$baseRounds",
+      ensureGraphSpilled(spark, dir, baseRounds, maxDf, minShared))
+
+  /** Boot-once reload of a graph spill (postings, df, pairs, labels),
+    * each pinned: a rebooted deployment pays the reload once and serves
+    * every ingest from the warm state (the q247 note). Registry-owned. */
+  private[queries] def reloadedGraph(spark: SparkSession, dir: String,
+      kind: String, version: Long)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) =
+    graft.core.DurableState.Store(spark, dir).reloadOnce(kind, version) {
+      table =>
+        (table("postings").localCheckpoint(), table("df").localCheckpoint(),
+          table("pairs").localCheckpoint(),
+          table("labels").localCheckpoint())
     }
-  }
 
   /** q226 — HITS hubs & authorities (Kleinberg 1999, "Authoritative
     * sources in a hyperlinked environment" — public literature) over the

@@ -187,40 +187,19 @@ object Layout {
     * (Spark only elides the exchange when the output partitionings match). */
   private[queries] val Q161Buckets = 8
 
-  /** Per-process nonce for the layout demo tables' catalog names and tmp
-    * paths: two concurrent sessions benching the same data dir (or two
-    * dirs whose hashCode collides) must never overwrite each other's
-    * tables mid-query. pid + JVM start time is unique across concurrent
-    * and rapidly-recycled processes alike. */
-  private val ProcNonce: String = {
-    val rt = java.lang.management.ManagementFactory.getRuntimeMXBean
-    s"${ProcessHandle.current().pid()}_${java.lang.Long.toHexString(rt.getStartTime)}"
-  }
-
-  /** Write-once registry: the one-time layout write is genuinely
-    * one-time WITHIN a process — re-invocations (bench warm-up + 3
-    * passes, repeated specs) reuse the already-written table, which is
-    * the amortization the bucketed/partitioned posture claims ("write
-    * once, every later scan benefits"). Cross-process there is nothing
-    * to reuse (catalog + nonce are process-scoped), so each process
-    * pays the write exactly once. computeIfAbsent serializes concurrent
-    * first-writers of the same (dir, table) key. */
-  private val writtenTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  private def layoutTag(dir: String): String =
-    java.lang.Long.toHexString(
-      java.lang.Integer.toUnsignedLong(dir.hashCode)) + "_" + ProcNonce
-
   /** Write `df` as a catalog-backed bucketed+sorted parquet table and
-    * return its name (write-once per process, see [[writtenTables]]).
+    * return its name — write-once per SparkContext: re-invocations (bench
+    * warm-up + 3 passes, repeated specs) reuse the already-written table,
+    * which is the amortization the bucketed/partitioned posture claims
+    * ("write once, every later scan benefits"); a new context has a new
+    * catalog, so it writes the table again ([[graft.core.StandingState]]).
     * The `repartition(n, key)` before the write uses the SAME
     * Murmur3-mod-n function as the bucket-id assignment, so each task
     * holds exactly one bucket's rows → one file per bucket (the layout
     * under which Spark also trusts the sortBy order at scan time). */
   private def writeBucketed(spark: SparkSession, base: java.io.File,
       name: String, df: DataFrame, key: String, tag: String): String =
-    writtenTables.computeIfAbsent(s"bucketed|$tag|$name", { _ =>
+    graft.core.StandingState.of(spark, "bucketed", tag, name) {
       val tbl = s"graft_b_${name}_$tag"
       spark.sql(s"DROP TABLE IF EXISTS $tbl")
       df.repartition(Q161Buckets, col(key))
@@ -229,7 +208,7 @@ object Layout {
         .option("path", new java.io.File(base, name).getAbsolutePath)
         .mode("overwrite").saveAsTable(tbl)
       tbl
-    })
+    }
 
   /** The join+aggregate subtree of q161, exposed so the plan spec can
     * assert the scale claim on exactly the part it covers: with both
@@ -237,7 +216,7 @@ object Layout {
     * per-custkey aggregate run with ZERO Exchange nodes — the only
     * shuffle in all of q161 is the final cosmetic orderBy. */
   private[graft] def q161Agg(spark: SparkSession, dir: String): DataFrame = {
-    val tag = layoutTag(dir)
+    val tag = graft.core.StandingState.processTag(dir)
     val base = new java.io.File(
       sys.props("java.io.tmpdir"), s"graft_bucketed_$tag")
     val o = t(spark, dir, "orders").select(col("o_custkey"), col("o_totalprice"))
@@ -282,10 +261,10 @@ object Layout {
     * scanning the 2 the dimension's predicate selects, decided at
     * RUNTIME from the dim side's build. */
   private[graft] def q171Agg(spark: SparkSession, dir: String): DataFrame = {
-    val tag = layoutTag(dir)
+    val tag = graft.core.StandingState.processTag(dir)
     val base = new java.io.File(
       sys.props("java.io.tmpdir"), s"graft_part_$tag")
-    val tbl = writtenTables.computeIfAbsent(s"part|$tag|orders", { _ =>
+    val tbl = graft.core.StandingState.of(spark, "part", tag, "orders") {
       val name = s"graft_p_orders_$tag"
       val o = t(spark, dir, "orders").select(
         col("o_orderkey"), col("o_totalprice"),
@@ -296,7 +275,7 @@ object Layout {
         .option("path", new java.io.File(base, "orders").getAbsolutePath)
         .mode("overwrite").saveAsTable(name)
       name
-    })
+    }
     // dim side: a small year-attribute table whose PREDICATE (not the
     // fact's) decides which partitions matter — the DPP trigger shape
     val dim = t(spark, dir, "orders")
@@ -525,12 +504,13 @@ object Layout {
   private[graft] def q178Agg(spark: SparkSession, dir: String,
       seqLen: Int = 128, shards: Int = 16, focusMod: Int = 4,
       focusRes: Int = 1): DataFrame = {
-    val tag = layoutTag(dir)
+    val tag = graft.core.StandingState.processTag(dir)
     val base = new java.io.File(
       sys.props("java.io.tmpdir"), s"graft_manifest_$tag")
     // one-time layout write #1: the packed manifest, PARTITIONED by the
     // serpentine shard and BUCKETED on doc_id
-    val tman = writtenTables.computeIfAbsent(s"manifest|$tag|$seqLen|$shards", { _ =>
+    val tman = graft.core.StandingState.of(spark, "manifest", tag, seqLen,
+        shards) {
       val name = s"graft_m_manifest_$tag"
       Pins.scope { pins =>
         val man = pins.own(Curation.q87(spark, dir, seqLen))
@@ -547,7 +527,7 @@ object Layout {
           .mode("overwrite").saveAsTable(name)
       }
       name
-    })
+    }
     // one-time layout write #2: the doc-fetch side, bucketed on the SAME
     // key/count so the epoch's fetch join is co-located
     val tdoc = writeBucketed(spark, base, "docsrc",
@@ -558,7 +538,7 @@ object Layout {
     // per-shard summary persisted once; the epoch's focus predicate
     // (shard ≡ focusRes mod focusMod — stand-in for "the shards this
     // trainer rank owns") selects a subset at RUNTIME
-    val tdim = writtenTables.computeIfAbsent(s"sharddir|$tag|$shards", { _ =>
+    val tdim = graft.core.StandingState.of(spark, "sharddir", tag, shards) {
       val name = s"graft_m_sharddir_$tag"
       Pins.scope { pins =>
         val df = pins.own(q173(spark, dir, shards))
@@ -569,7 +549,7 @@ object Layout {
           .mode("overwrite").saveAsTable(name)
       }
       name
-    })
+    }
     val focus = spark.table(tdim)
       .where(pmod(col("d_shard"), lit(focusMod)) === focusRes)
       .select(col("d_shard"))

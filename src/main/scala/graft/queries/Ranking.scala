@@ -481,8 +481,7 @@ object Ranking {
     * many analytics). Registry-owned; callers must NOT free. */
   private def cosineEdgesStanding(spark: SparkSession, dir: String,
       tau: Double, maxDf: Int): DataFrame =
-    graft.core.StandingState.of(
-      s"cosedges|${spark.sparkContext.applicationId}|$dir|$tau|$maxDf") {
+    graft.core.StandingState.of(spark, "cosedges", dir, tau, maxDf) {
       sparsePairs(spark, dir, maxDf)
         .where(col("cosine") >= tau)
         .select(col("d1"), col("d2"))

@@ -151,8 +151,7 @@ object Recommend {
     * Registry-owned — callers must NOT free. */
   private[graft] def cfStanding(spark: SparkSession, dir: String,
       cap: Int): (DataFrame, DataFrame) =
-    graft.core.StandingState.of(
-      s"cfstate|${spark.sparkContext.applicationId}|$dir|$cap") {
+    graft.core.StandingState.of(spark, "cfstate", dir, cap) {
       // pinned WITH their serving layout (r13): the basket is consumed
       // keyed on c (novelty anti-probe, room count, pair legs, erasure
       // semi/anti) and the co matrix keyed on (p1, p2) (the ledger
@@ -169,12 +168,23 @@ object Recommend {
     }
 
   /** The standing co-occurrence matrix over a (c, p) basket frame —
-    * per-customer pair work bounded at cap²/2 by the basket cap. */
-  private[graft] def coMatrixOf(base: DataFrame): DataFrame =
+    * per-customer pair work bounded at cap²/2 by the basket cap. Over an
+    * erased subject's basket it is the erasure decrement (`as` = "dec"). */
+  private[graft] def coMatrixOf(base: DataFrame,
+      as: String = "co_base"): DataFrame =
     base.as("a").join(base.as("b"),
         col("a.c") === col("b.c") && col("a.p") < col("b.p"))
       .groupBy(col("a.p").as("p1"), col("b.p").as("p2"))
-      .agg(count(lit(1)).as("co_base"))
+      .agg(count(lit(1)).as(as))
+
+  /** The standing co matrix after an erasure: `dec` (the erased baskets'
+    * own pairs, [[coMatrixOf]] as "dec") subtracted; pairs at 0 go. */
+  private[graft] def decrementedCo(co: DataFrame, dec: DataFrame)
+      : DataFrame =
+    co.join(dec, Seq("p1", "p2"), "left_outer")
+      .select(col("p1"), col("p2"),
+        (col("co_base") - coalesce(col("dec"), lit(0L))).as("co_base"))
+      .where(col("co_base") > 0)
 
   /** The batch's ADMITTED novel edges against a standing basket frame:
     * anti-probe for novelty, then room-capped admission (per customer,
@@ -253,45 +263,58 @@ object Recommend {
     * scale); the spill is once per rebuild. At 100 TB the root is shared
     * storage and the reload is the boot path every executor already has. */
   def q247(spark: SparkSession, dir: String, cap: Int = 256): DataFrame = {
-    val (base, coBase) = reloadedCfState(spark, dir, cap)
+    val (base, coBase) =
+      reloadedCf(spark, dir, s"cf$cap", ensureCfSpilled(spark, dir, cap))
     Pins.result(pins => ingestLedger(pins, spark, dir, base, coBase, cap))
   }
 
-  /** Spill the CF standing state once per process (the deployment's
-    * rebuild+publish path, registry-guarded), then reload it ONCE AT
-    * BOOT and pin — the restart face every consumer (q247, q259)
-    * serves from. A rebooted deployment pays the reload once, then
-    * serves every ingest from the warm state; registry-pinning the
-    * loaded frames makes the bench measure exactly that (the spilled
-    * parquet, not the builder, is still the only lineage). */
+  /** Spill the CF standing state (kind `cf<cap>`) once per process —
+    * the deployment's rebuild+publish path, which q247 reloads at boot
+    * ([[reloadedCf]]) and q259 erases; returns the committed version. */
   private[graft] def ensureCfSpilled(spark: SparkSession, dir: String, cap: Int)
       : Long =
-    graft.core.StandingState.of(
-      s"durablecf|${spark.sparkContext.applicationId}|$dir|$cap") {
-      // one pinned basket derivation feeds both spilled tables (the
-      // q241 share-the-derivation discipline), freed after the write
-      Pins.scope { pins =>
-        val b = pins.pin(cappedBaseEdges(spark, dir, cap))
-        java.lang.Long.valueOf(graft.core.DurableState.persistAll(
-          graft.core.DurableState.rootFor(dir), s"cf$cap",
-          Seq("basket" -> b, "co" -> coMatrixOf(b))))
-      }
-    }.longValue()
+    cfBaseSpilled(spark, dir, cap, s"cf$cap", 7)
 
-  private def reloadedCfState(spark: SparkSession, dir: String, cap: Int)
-      : (DataFrame, DataFrame) = {
-    val version = ensureCfSpilled(spark, dir, cap)
-    val root = graft.core.DurableState.rootFor(dir)
-    graft.core.StandingState.of(
-      s"durablecfload|${spark.sparkContext.applicationId}|$dir|$cap") {
-      // boot-pinned in the serving layout (the cfStanding r13 note)
-      val B = org.apache.spark.sql.graftbridge.Bridge
-      (B.checkpointPartitioned(graft.core.DurableState.load(spark, root,
-        s"cf$cap", version, "basket"), Seq("c"), Seq("c", "p")),
-        B.checkpointPartitioned(graft.core.DurableState.load(spark, root,
-          s"cf$cap", version, "co"), Seq("p1", "p2"), Seq("p1", "p2")))
+  /** Spill the capped baskets of the base orders (`o_orderkey % 10 <
+    * baseLt`) and their co matrix as `kind`, once per process; returns
+    * the committed version. One pinned basket derivation feeds both
+    * spilled tables (the q241 share-the-derivation discipline), freed
+    * after the write. */
+  private def cfBaseSpilled(spark: SparkSession, dir: String, cap: Int,
+      kind: String, baseLt: Int): Long =
+    graft.core.DurableState.Store(spark, dir).spillOnce(kind, cap, baseLt) {
+      pins =>
+        val b = pins.pin(cappedBaseEdges(spark, dir, cap,
+          col("o_orderkey") % 10 < baseLt))
+        Seq("basket" -> b, "co" -> coMatrixOf(b))
     }
-  }
+
+  /** Reload a CF spill (basket + co) ONCE AT BOOT and pin it in the
+    * serving layout (the cfStanding r13 note). A rebooted deployment pays
+    * the reload once, then serves every ingest from the warm state;
+    * registry-pinning the loaded frames makes the bench measure exactly
+    * that (the spilled parquet, not the builder, is still the only
+    * lineage). Registry-owned. */
+  private[graft] def reloadedCf(spark: SparkSession, dir: String,
+      kind: String, version: Long): (DataFrame, DataFrame) =
+    graft.core.DurableState.Store(spark, dir).reloadOnce(kind, version) {
+      table =>
+        val B = org.apache.spark.sql.graftbridge.Bridge
+        (B.checkpointPartitioned(table("basket"), Seq("c"), Seq("c", "p")),
+          B.checkpointPartitioned(table("co"), Seq("p1", "p2"),
+            Seq("p1", "p2")))
+    }
+
+  /** A CF state after ingesting `novel` (admitted against `base`): the
+    * basket gains the novel edges, the co matrix merges the pair delta
+    * (full outer) — the tables of the next committed version. */
+  private def mergedBatch(base: DataFrame, co: DataFrame, novel: DataFrame)
+      : Seq[(String, DataFrame)] =
+    Seq("basket" -> base.unionByName(novel),
+      "co" -> co.join(pairDelta(novel, base), Seq("p1", "p2"), "full_outer")
+        .select(col("p1"), col("p2"),
+          (coalesce(col("co_base"), lit(0L)) +
+            coalesce(col("delta_co"), lit(0L))).as("co_base")))
 
   /** q250 — MULTI-VERSION DURABLE INGEST CHAIN: the full lifecycle a
     * deployment actually runs, version by version. q247 proves one
@@ -319,50 +342,24 @@ object Recommend {
     * bounded pair legs; state size O(customers·cap), never corpus-
     * scale. */
   def q250(spark: SparkSession, dir: String, cap: Int = 256): DataFrame = {
-    val B = org.apache.spark.sql.graftbridge.Bridge
-    val root = graft.core.DurableState.rootFor(dir)
+    val store = graft.core.DurableState.Store(spark, dir)
     val kind = s"cfchain$cap"
-    val filterA =
-      col("o_orderkey") % 10 >= 5 && col("o_orderkey") % 10 < 7
-    val v2 = graft.core.StandingState.of(
-      s"durablecfchain|${spark.sparkContext.applicationId}|$dir|$cap") {
-      // ---- v1: the old base's state, spilled ----
-      val v1 = Pins.scope { pins =>
-        val b0 = pins.pin(cappedBaseEdges(spark, dir, cap,
-          col("o_orderkey") % 10 < 5))
-        graft.core.DurableState.persistAll(root, kind,
-          Seq("basket" -> b0, "co" -> coMatrixOf(b0)))
-      }
-      // ---- v2: reload v1, ingest batch A, merge, spill ----
-      val base1 = graft.core.DurableState.load(spark, root, kind, v1,
-        "basket")
-      val co1 = graft.core.DurableState.load(spark, root, kind, v1, "co")
-      Pins.scope { pins =>
-        val novelA = pins.pin(admittedNovel(spark, dir, base1, cap, filterA))
-        val basket2 = base1.unionByName(novelA)
-        val co2 = co1.join(pairDelta(novelA, base1), Seq("p1", "p2"),
-            "full_outer")
-          .select(col("p1"), col("p2"),
-            (coalesce(col("co_base"), lit(0L)) +
-              coalesce(col("delta_co"), lit(0L))).as("co_base"))
-        // CONDITIONAL commit: v2 is derived from v1, so publish only if
-        // v1 is still latest — a concurrent committer (rebuild, another
-        // ingest) would otherwise be silently overwritten (q265 forces
-        // this conflict and proves the retry path)
-        java.lang.Long.valueOf(graft.core.DurableState.persistAllIf(root,
-          kind, Some(v1), Seq("basket" -> basket2, "co" -> co2)))
-      }
-    }.longValue()
+    // ---- v1: the old base's state, spilled ----
+    val v1 = cfBaseSpilled(spark, dir, cap, kind, 5)
+    // ---- v2: reload v1, ingest batch A, merge, spill — a CONDITIONAL
+    //      commit: v2 is derived from v1, so publish only if v1 is still
+    //      latest; a concurrent committer (rebuild, another ingest)
+    //      would otherwise be silently overwritten (q265 forces this
+    //      conflict and proves the retry path) ----
+    val v2 = store.spillOnceOver(kind, v1, cap) { pins =>
+      val base1 = store.load(kind, v1, "basket")
+      val co1 = store.load(kind, v1, "co")
+      mergedBatch(base1, co1, pins.pin(admittedNovel(spark, dir, base1, cap,
+        col("o_orderkey") % 10 >= 5 && col("o_orderkey") % 10 < 7)))
+    }
     // ---- boot: reload v2 once per process and pin; per invocation:
     //      the batch-B ingest only ----
-    val (base2, co2) = graft.core.StandingState.of(
-      s"durablecfchainload|${spark.sparkContext.applicationId}|$dir|$cap") {
-      // boot-pinned in the serving layout (the cfStanding r13 note)
-      (B.checkpointPartitioned(graft.core.DurableState.load(spark, root,
-        kind, v2, "basket"), Seq("c"), Seq("c", "p")),
-        B.checkpointPartitioned(graft.core.DurableState.load(spark, root,
-          kind, v2, "co"), Seq("p1", "p2"), Seq("p1", "p2")))
-    }
+    val (base2, co2) = reloadedCf(spark, dir, kind, v2)
     Pins.result(pins => ingestLedger(pins, spark, dir, base2, co2, cap))
   }
 
@@ -404,85 +401,44 @@ object Recommend {
     * validate+mark holds the per-kind commit lock for the marker instant
     * only, never for a spill. */
   def q265(spark: SparkSession, dir: String, cap: Int = 256): DataFrame = {
-    val B = org.apache.spark.sql.graftbridge.Bridge
-    val root = graft.core.DurableState.rootFor(dir)
+    val store = graft.core.DurableState.Store(spark, dir)
     val kind = s"cfcas$cap"
     val filterA =
       col("o_orderkey") % 10 >= 5 && col("o_orderkey") % 10 < 7
-    val v3 = graft.core.StandingState.of(
-      s"durablecfcas|${spark.sparkContext.applicationId}|$dir|$cap") {
+    val v3 = graft.core.StandingState.of(spark, "cfcas", dir, cap) {
       // ---- v1: the old base's state, committed ----
-      val v1 = Pins.scope { pins =>
-        val b0 = pins.pin(cappedBaseEdges(spark, dir, cap,
-          col("o_orderkey") % 10 < 5))
-        graft.core.DurableState.persistAll(root, kind,
-          Seq("basket" -> b0, "co" -> coMatrixOf(b0)))
-      }
+      val v1 = cfBaseSpilled(spark, dir, cap, kind, 5)
       // ---- the ingest writer loads v1 and derives its merge (about
       //      to be stale) ----
-      val base1 = graft.core.DurableState.load(spark, root, kind, v1,
-        "basket")
-      val co1 = graft.core.DurableState.load(spark, root, kind, v1, "co")
+      val base1 = store.load(kind, v1, "basket")
+      val co1 = store.load(kind, v1, "co")
       Pins.scope { pins =>
-        val novelA = pins.pin(admittedNovel(spark, dir, base1, cap, filterA))
-        val staleBasket = base1.unionByName(novelA)
-        val staleCo = co1.join(pairDelta(novelA, base1), Seq("p1", "p2"),
-            "full_outer")
-          .select(col("p1"), col("p2"),
-            (coalesce(col("co_base"), lit(0L)) +
-              coalesce(col("delta_co"), lit(0L))).as("co_base"))
+        val stale = mergedBatch(base1, co1,
+          pins.pin(admittedNovel(spark, dir, base1, cap, filterA)))
         // ---- the erasure, also derived from v1, commits FIRST ----
-        val erased = base1.where(col("c") % 10 === 0)
-        val dec = erased.as("a").join(erased.as("b"),
-            col("a.c") === col("b.c") && col("a.p") < col("b.p"))
-          .groupBy(col("a.p").as("p1"), col("b.p").as("p2"))
-          .agg(count(lit(1)).as("dec"))
-        val eCo = co1.join(dec, Seq("p1", "p2"), "left_outer")
-          .select(col("p1"), col("p2"),
-            (col("co_base") - coalesce(col("dec"), lit(0L)))
-              .as("co_base"))
-          .where(col("co_base") > 0)
-        val v2 = graft.core.DurableState.persistAllIf(root, kind,
-          Some(v1),
+        val eCo = decrementedCo(co1,
+          coMatrixOf(base1.where(col("c") % 10 === 0), "dec"))
+        val v2 = store.persistAllIf(kind, Some(v1),
           Seq("basket" -> base1.where(col("c") % 10 =!= 0), "co" -> eCo))
         // ---- the stale commit MUST lose: validate-under-lock rejects
         //      the v1 base, publishes nothing ----
         val conflicted =
-          try {
-            graft.core.DurableState.persistAllIf(root, kind, Some(v1),
-              Seq("basket" -> staleBasket, "co" -> staleCo))
-            false
-          } catch { case _: graft.core.CommitConflictException => true }
+          try { store.persistAllIf(kind, Some(v1), stale); false }
+          catch { case _: graft.core.CommitConflictException => true }
         require(conflicted, "lost-update protection failed: a commit " +
           s"derived from v$v1 was accepted over the erasure at v$v2")
-        require(graft.core.DurableState.latestVersion(root, kind)
-            .contains(v2),
+        require(store.latestVersion(kind).contains(v2),
           "stale commit published state despite the conflict")
         // ---- retry: re-derive batch A from the ERASED latest ----
-        val base2 = graft.core.DurableState.load(spark, root, kind, v2,
-          "basket")
-        val co2 = graft.core.DurableState.load(spark, root, kind, v2, "co")
-        val novelA2 = pins.pin(admittedNovel(spark, dir, base2, cap, filterA))
-        val basket3 = base2.unionByName(novelA2)
-        val co3 = co2.join(pairDelta(novelA2, base2), Seq("p1", "p2"),
-            "full_outer")
-          .select(col("p1"), col("p2"),
-            (coalesce(col("co_base"), lit(0L)) +
-              coalesce(col("delta_co"), lit(0L))).as("co_base"))
-        java.lang.Long.valueOf(graft.core.DurableState.persistAllIf(
-          root, kind, Some(v2), Seq("basket" -> basket3, "co" -> co3)))
+        val base2 = store.load(kind, v2, "basket")
+        val co2 = store.load(kind, v2, "co")
+        store.persistAllIf(kind, Some(v2), mergedBatch(base2, co2,
+          pins.pin(admittedNovel(spark, dir, base2, cap, filterA))))
       }
-    }.longValue()
+    }
     // ---- boot: reload v3 once per process and pin; per invocation:
     //      the batch-B ingest only ----
-    val (base3, co3) = graft.core.StandingState.of(
-      s"durablecfcasload|${spark.sparkContext.applicationId}|$dir|$cap") {
-      // boot-pinned in the serving layout (the cfStanding r13 note)
-      (B.checkpointPartitioned(graft.core.DurableState.load(spark, root,
-        kind, v3, "basket"), Seq("c"), Seq("c", "p")),
-        B.checkpointPartitioned(graft.core.DurableState.load(spark, root,
-          kind, v3, "co"), Seq("p1", "p2"), Seq("p1", "p2")))
-    }
+    val (base3, co3) = reloadedCf(spark, dir, kind, v3)
     Pins.result(pins => ingestLedger(pins, spark, dir, base3, co3, cap))
   }
 

@@ -327,8 +327,7 @@ object Pq {
 
   private[graft] def pqStanding(spark: SparkSession, dir: String, m: Int,
       k: Int, iters: Int, cells: Int): PqStanding =
-    graft.core.StandingState.of(
-      s"pq|${spark.sparkContext.applicationId}|$dir|$m|$k|$iters|$cells") {
+    graft.core.StandingState.of(spark, "pq", dir, m, k, iters, cells) {
       import graft.queries.EmbeddingQueries.vecs
       val isBase = pmod(col("vec_id"), lit(10L)) < 7L
       val corpus = vecsNorm(spark, dir).where(col("u").isNotNull)
@@ -579,27 +578,20 @@ object Pq {
   private[graft] def ensurePqErased(spark: SparkSession, dir: String,
       m: Int, k: Int, iters: Int, cells: Int, modK: Long): (Long, Long) = {
     val st = pqStanding(spark, dir, m, k, iters, cells)
-    val root = graft.core.DurableState.rootFor(dir)
+    val store = graft.core.DurableState.Store(spark, dir)
     val kind = s"pq$m-$k-$iters-$cells"
-    val app = spark.sparkContext.applicationId
-    val v0 = graft.core.StandingState.of(s"durablepqspill|$app|$dir|$kind") {
-      java.lang.Long.valueOf(graft.core.DurableState.persistAll(root,
-        kind, Seq("model" -> st.model, "codebook" -> st.codebook,
-          "codes" -> st.standing)))
-    }.longValue()
-    def ld(t: String): DataFrame =
-      graft.core.DurableState.load(spark, root, kind, v0, t)
-    val eV = graft.core.StandingState.of(
-      s"durablepqerase|$app|$dir|$kind|$modK") {
-      val codes = ld("codes")
+    val v0 = store.spillOnce(kind) { _ =>
+      Seq("model" -> st.model, "codebook" -> st.codebook,
+        "codes" -> st.standing)
+    }
+    val eV = store.spillOnce(s"$kind-erased$modK") { _ =>
+      val codes = store.load(kind, v0, "codes")
       val erased = codes.select(col("vec_id")).distinct()
         .where(pmod(col("vec_id"), lit(modK)) === 0L)
-      java.lang.Long.valueOf(graft.core.DurableState.persistAll(root,
-        s"$kind-erased$modK", Seq("model" -> ld("model"),
-          "codebook" -> ld("codebook"),
-          "codes" -> codes.join(broadcast(erased), Seq("vec_id"),
-            "left_anti"))))
-    }.longValue()
+      Seq("model" -> store.load(kind, v0, "model"),
+        "codebook" -> store.load(kind, v0, "codebook"),
+        "codes" -> codes.join(broadcast(erased), Seq("vec_id"), "left_anti"))
+    }
     (v0, eV)
   }
 
@@ -609,19 +601,14 @@ object Pq {
     import graft.queries.EmbeddingQueries.vecs
     val isBase = pmod(col("vec_id"), lit(10L)) < 7L
     val st = pqStanding(spark, dir, m, k, iters, cells)
-    val root = graft.core.DurableState.rootFor(dir)
-    val kind = s"pq$m-$k-$iters-$cells"
-    val eKind = s"$kind-erased$modK"
-    val app = spark.sparkContext.applicationId
     val eV = ensurePqErased(spark, dir, m, k, iters, cells, modK)._2
-    def ld(kd: String, v: Long, t: String): DataFrame =
-      graft.core.DurableState.load(spark, root, kd, v, t)
-    val (eModel, eCodebook, eCodes) = graft.core.StandingState.of(
-      s"durablepqeraseload|$app|$dir|$kind|$modK") {
-      (ld(eKind, eV, "model").localCheckpoint(),
-        ld(eKind, eV, "codebook").localCheckpoint(),
-        ld(eKind, eV, "codes").localCheckpoint())
-    }
+    val (eModel, eCodebook, eCodes) = graft.core.DurableState
+      .Store(spark, dir).reloadOnce(s"pq$m-$k-$iters-$cells-erased$modK", eV) {
+        table =>
+          (table("model").localCheckpoint(),
+            table("codebook").localCheckpoint(),
+            table("codes").localCheckpoint())
+      }
     val batch = encodeCodes(st.corpus.where(!isBase), eCodebook, m, st.sub)
       .join(KMeans.assign(vecs(spark, dir).where(!isBase),
           eModel.select(col("cluster"), col("centroid")))

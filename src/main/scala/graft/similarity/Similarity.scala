@@ -38,8 +38,7 @@ object Similarity {
     * Registry-owned — callers must NOT free. */
   private[graft] def annTruthStanding(spark: SparkSession, dir: String,
       k: Int, nQueries: Int): DataFrame =
-    graft.core.StandingState.of(
-      s"anntruth|${spark.sparkContext.applicationId}|$dir|$k|$nQueries") {
+    graft.core.StandingState.of(spark, "anntruth", dir, k, nQueries) {
       annTopK(spark, dir, k, nQueries)
         .select(col("q_id"), col("n_id")).localCheckpoint()
     }

@@ -68,17 +68,6 @@ object Formats {
     spark.read.jdbc(url, table, partitionColumn, lower, upper, numPartitions,
       new java.util.Properties)
 
-  /** Per-process nonce + write-once registry for the schema-evolution
-    * demo layout (the Layout.scala discipline: concurrent sessions must
-    * not clobber each other's files, and re-invocations reuse the
-    * already-written generations). */
-  private val ProcNonce: String = {
-    val rt = java.lang.management.ManagementFactory.getRuntimeMXBean
-    s"${ProcessHandle.current().pid()}_${java.lang.Long.toHexString(rt.getStartTime)}"
-  }
-  private val writtenDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** q205 — SCHEMA EVOLUTION read: a table whose files were written by
     * two pipeline generations — the old writer emitted (orderkey,
     * totalprice), the upgraded writer added `o_orderpriority` — read
@@ -100,11 +89,12 @@ object Formats {
   def q205(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    val base = writtenDirs.computeIfAbsent(s"evo|$dir", { _ =>
-      val tag = java.lang.Long.toHexString(
-        java.lang.Integer.toUnsignedLong(dir.hashCode)) + "_" + ProcNonce
-      val rootFile = new java.io.File(
-        sys.props("java.io.tmpdir"), s"graft_evo_$tag")
+    // the two generations are written once per SparkContext
+    // (StandingState) under a per-(dir, process) path, so concurrent
+    // processes never clobber each other's files
+    val base = graft.core.StandingState.of(spark, "evo", dir) {
+      val rootFile = new java.io.File(sys.props("java.io.tmpdir"),
+        s"graft_evo_${graft.core.StandingState.processTag(dir)}")
       val root = rootFile.getAbsolutePath
       // the registry guarantees the layout is only needed for the process
       // lifetime — remove it on exit so repeated q205 runs don't strand a
@@ -120,7 +110,7 @@ object Formats {
           col("o_orderpriority"))
         .write.mode("overwrite").parquet(s"$root/gen=2")
       root
-    })
+    }
     spark.read.option("mergeSchema", "true")
       .parquet(s"$base/gen=1", s"$base/gen=2")
       .groupBy(coalesce(col("o_orderpriority"), lit("(pre-upgrade)"))

@@ -10,8 +10,10 @@ import org.apache.spark.sql.SparkSession
   * FRESH session with a loud diagnostic instead of the corpse. Suites
   * capture the session lazily at their first test, so a rebuild bounds
   * the damage to suites already mid-flight when the context died.
-  * Registry state (StandingState) keys on applicationId, so a rebuilt
-  * session rebuilds its pins rather than touching dead RDDs. */
+  * Registry state needs nothing here: `StandingState.of` keys every
+  * entry on its session's applicationId, so a rebuilt session rebuilds
+  * its pins and write-once tables rather than touching dead ones
+  * (SessionRestartSpec runs that restart in a child JVM). */
 object SparkTest {
   // local[4,2]: 4 threads, maxFailures=2 — lets the chaos spec exercise
   // task retry (the reference's crash-test semantics, test-mr.sh:283-330)

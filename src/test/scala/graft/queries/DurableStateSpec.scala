@@ -277,26 +277,6 @@ class DurableStateSpec extends AnyFunSuite {
       "two datasets share a version stream")
   }
 
-  test("loadOrBuild warm-starts: first call builds and returns the " +
-      "RE-READ frames; second call reloads without rebuilding") {
-    val root = freshRoot("warm")
-    var builds = 0
-    def build(): Seq[(String, DataFrame)] = {
-      builds += 1
-      Seq("t" -> spark.range(9).select(col("id"), (col("id") + 1).as("v")))
-    }
-    val (v1, m1) = DurableState.loadOrBuild(spark, root, "k", Seq("t"))(build())
-    assert(v1 == 1L && builds == 1)
-    assertRoundTrip(
-      spark.range(9).select(col("id"), (col("id") + 1).as("v")),
-      m1("t"), "first boot")
-    // restart: the builder must NOT run again
-    val (v2, m2) = DurableState.loadOrBuild(spark, root, "k", Seq("t"))(
-      sys.error("rebuilt on restart"))
-    assert(v2 == 1L)
-    assertRoundTrip(m1("t"), m2("t"), "warm start")
-  }
-
   // ---- tier 1: capped CF basket + co-matrix (q244/q247) ----
 
   test("CF tier: restart (q247, reloaded parquet) equals continuous " +
