@@ -2,6 +2,7 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.graftbridge.Bridge
@@ -18,23 +19,37 @@ object PlanCapture {
   final case class Plan(action: String, sparkPlan: SparkPlan,
                         executedPlan: SparkPlan)
 
-  /** Runs `body` and returns its result with the plans of every action
-    * it ran, in completion order. */
-  def during[T](spark: SparkSession)(body: => T): (T, Seq[Plan]) = {
+  /** What `body` returned, the plans of every action it ran (in
+    * completion order), and the number of Spark jobs it started — more
+    * than the actions when a job runs outside any action's own plan
+    * (range-partition sampling, schema inference, broadcast collects). */
+  final case class Captured[T](value: T, plans: Seq[Plan], jobs: Int)
+
+  /** Runs `body` and captures its actions' plans and its job count. */
+  def during[T](spark: SparkSession)(body: => T): Captured[T] = {
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[Plan]
-    val listener = new QueryExecutionListener {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val onAction = new QueryExecutionListener {
       def onSuccess(action: String, qe: QueryExecution, ns: Long): Unit =
         plans.add(Plan(action, qe.sparkPlan, qe.executedPlan))
       def onFailure(action: String, qe: QueryExecution,
                     e: Exception): Unit = ()
     }
-    // events of earlier actions must not reach this listener
+    val onJob = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    // events of earlier actions must not reach these listeners
     Bridge.drainListenerBus(spark)
-    spark.listenerManager.register(listener)
+    spark.listenerManager.register(onAction)
+    spark.sparkContext.addSparkListener(onJob)
     try {
       val out = body
       Bridge.drainListenerBus(spark)
-      (out, plans.asScala.toSeq)
-    } finally spark.listenerManager.unregister(listener)
+      Captured(out, plans.asScala.toSeq, jobs.get)
+    } finally {
+      spark.sparkContext.removeSparkListener(onJob)
+      spark.listenerManager.unregister(onAction)
+    }
   }
 }

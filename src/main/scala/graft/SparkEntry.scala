@@ -55,11 +55,12 @@ object SparkEntry {
     "q27_dedup_fingerprint"  -> (Dedup.fingerprintDups _),
     "q28_dedup_jaccard"      -> ((s, d) => Dedup.jaccardPairs(s, d, 0.8)),
     "q29_dedup_minhash"      -> ((s, d) => Dedup.q29(s, d)),
-    "q30_dedup_simhash"      -> ((s, d) => Dedup.simhashPairs(s, d, 3)),
-    "q31_embed_neardup"      -> ((s, d) => Similarity.nearDupPairs(s, d, 0.4)),
+    "q30_dedup_simhash"      -> ((s, d) => Dedup.simhashPairs(s, d, 3).orderBy("d1", "d2")),
+    "q31_embed_neardup"      -> ((s, d) => Similarity.nearDupPairs(s, d, 0.4).orderBy("d1", "d2")),
     "q32_ann_topk"           -> ((s, d) => Similarity.annTopK(s, d)),
     "q33_ann_ivf"            -> ((s, d) => Similarity.annIvf(s, d)),
-    "q34_ann_lsh"            -> ((s, d) => Similarity.lshNearDup(s, d, 0.3, tables = 16, bits = 6)),
+    "q34_ann_lsh"            -> ((s, d) =>
+      Similarity.lshNearDup(s, d, 0.3, tables = 16, bits = 6).orderBy("d1", "d2")),
     "q35_media_meta"         -> (Multimodal.mediaMeta _),
     "q36_media_features"     -> (Multimodal.mediaFeatures _),
     "q37_sessionize"         -> (graft.streaming.EventStreams.q37 _),
@@ -72,7 +73,8 @@ object SparkEntry {
     "q44_curation_pipeline"  -> (graft.queries.Curation.q44 _),
     "q45_train_split"        -> (graft.queries.Curation.q45 _),
     "q46_column_profile"     -> (graft.queries.Curation.q46 _),
-    "q47_dedup_verified"     -> ((s, d) => Dedup.minhashVerifiedPairs(s, d, 0.5, 0.7)),
+    "q47_dedup_verified"     -> ((s, d) =>
+      Dedup.minhashVerifiedPairs(s, d, 0.5, 0.7).orderBy("d1", "d2")),
     "q48_kmeans"             -> ((s, d) => graft.similarity.KMeans.q48(s, d)),
     "q49_cube"               -> (Relational.q49 _),
     "q50_ann_ivf_kmeans"     -> ((s, d) => Similarity.annIvfKmeans(s, d)),
@@ -90,7 +92,7 @@ object SparkEntry {
     "q62_json_schema"        -> (TextQueries.q62 _),
     "q63_ann_ivf_multiprobe" -> ((s, d) => Similarity.annIvfKmeans(s, d, nprobe = 3)),
     "q64_interval_join"      -> (graft.streaming.EventStreams.q64 _),
-    "q65_winnow_containment" -> ((s, d) => Dedup.winnowPairs(s, d)),
+    "q65_winnow_containment" -> ((s, d) => Dedup.winnowPairs(s, d).orderBy("d1", "d2")),
     "q66_dedup_clusters"     -> (graft.dedup.Components.q66 _),
     "q67_embed_quantize"     -> (EmbeddingQueries.q67 _),
     "q68_freq_items"         -> (graft.queries.Curation.q68 _),

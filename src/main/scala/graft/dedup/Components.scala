@@ -50,11 +50,15 @@ object Components {
     Pins.result { pins =>
       // materialize the (possibly expensive) upstream edge pipeline ONCE —
       // the per-round join would otherwise re-run it every iteration.
-      // (Measured: the union's two branches ride the SAME upstream exchange
-      // via ReusedExchange — pre-checkpointing the edges before the union
-      // only adds a barrier and reads slower, q103 4.7s -> 5.8s.)
-      val sym = pins.pin(edges.select(col("src"), col("dst"))
-        .union(edges.select(col("dst").as("src"), col("src").as("dst"))))
+      // Both directions come from ONE pass over `edges`: each edge row
+      // explodes into (src, dst) and (dst, src). A union would evaluate
+      // the edge pipeline once per branch wherever no exchange is left
+      // for the second branch to reuse (an unsorted pair producer ends in
+      // a join, not an exchange).
+      val sym = pins.pin(edges
+        .select(inline(array(
+          struct(col("src"), col("dst")),
+          struct(col("dst").as("src"), col("src").as("dst"))))))
       val init = sym.select(col("src").as("id")).distinct()
         .withColumn("comp", col("id"))
       val spark = sym.sparkSession

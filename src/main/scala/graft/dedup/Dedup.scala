@@ -447,8 +447,10 @@ object Dedup {
   def q29(spark: SparkSession, dir: String,
           threshold: Double = 0.7): DataFrame =
     minhashVerifiedPairs(spark, dir, candidateEst = 0.0,
-      exactThreshold = threshold)
+      exactThreshold = threshold).orderBy(col("d1"), col("d2"))
 
+  /** MinHash-LSH candidate pairs whose signature estimate reaches
+    * `estThreshold`. Unordered; queries order at presentation. */
   def minhashPairs(spark: SparkSession, dir: String, estThreshold: Double): DataFrame = {
     val sig = minhashSignatures(shingleHashes(spark, dir))
     val banded = bandedSignatures(sig)
@@ -466,7 +468,6 @@ object Dedup {
             .cast(DoubleType) / MinhashSigSize, 4))
       .where(col("est_jaccard") >= estThreshold)
       .select(col("d1"), col("d2"), col("est_jaccard"))
-      .orderBy(col("d1"), col("d2"))
   }
 
   /** Scale-safe EXACT near-dup detection: minhash-LSH candidate pairs,
@@ -474,7 +475,8 @@ object Dedup {
     * array_intersect on the two (bounded) shingle-hash sets — no
     * inverted-index self-join, so cost is O(candidates × doc shingles),
     * never quadratic in the corpus. This is the production shape of
-    * q28/q43's all-pairs verifiers. */
+    * q28/q43's all-pairs verifiers. Unordered; queries order at
+    * presentation. */
   def minhashVerifiedPairs(spark: SparkSession, dir: String,
                            candidateEst: Double, exactThreshold: Double): DataFrame = {
     val sets = shingleHashes(spark, dir)
@@ -490,7 +492,6 @@ object Dedup {
           (col("n1") + col("n2") - col("inter")), 4))
       .where(col("jaccard") >= exactThreshold)
       .select(col("d1"), col("d2"), col("jaccard"))
-      .orderBy(col("d1"), col("d2"))
   }
 
   /** 64-bit SimHash: each occurrence of a token contributes ±1 to each of
@@ -520,7 +521,7 @@ object Dedup {
     * exactly equal — so block-equality candidate generation is COMPLETE
     * for hamming <= 3 (2 half-blocks would NOT be: a (1,2) error split
     * matches neither half). No all-pairs join; keys are (block index,
-    * 16-bit value, id). */
+    * 16-bit value, id). Unordered; queries order at presentation. */
   def simhashPairs(spark: SparkSession, dir: String, maxHamming: Int): DataFrame = {
     require(maxHamming <= 3, "16-bit-block blocking is complete only for hamming <= 3")
     val sig = simhashSignatures(spark, dir)
@@ -543,7 +544,6 @@ object Dedup {
       .where(col("hamming") <= maxHamming)
       .dropDuplicates("d1", "d2")
       .select(col("d1"), col("d2"), col("hamming").cast(IntegerType).as("hamming"))
-      .orderBy(col("d1"), col("d2"))
   }
 
   /** Winnowing (MOSS-style) local fingerprints — the SUBSTRING-overlap
@@ -587,7 +587,8 @@ object Dedup {
     * deliberate trade. Per-doc fingerprints are deduplicated
     * (array_distinct upstream), so n_shared counts distinct shared
     * fingerprints. Hash-dependent output (xxhash64): rows-only driver
-    * check; the winnowing guarantee is spec-proven. */
+    * check; the winnowing guarantee is spec-proven. Unordered; queries
+    * order at presentation. */
   def winnowPairs(spark: SparkSession, dir: String,
                   minShared: Int = 8, maxDocFreq: Int = 20): DataFrame = {
     // The stop-fingerprint filter is a WINDOW count over fp, not a
@@ -609,7 +610,6 @@ object Dedup {
       .groupBy(col("a.doc_id").as("d1"), col("b.doc_id").as("d2"))
       .agg(count(lit(1)).cast(IntegerType).as("n_shared"))
       .where(col("n_shared") >= minShared)
-      .orderBy(col("d1"), col("d2"))
   }
 
   /** q209 — EDIT-DISTANCE entity dedup (FastSS, Bocek et al. 2007):

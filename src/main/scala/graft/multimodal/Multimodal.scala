@@ -302,6 +302,7 @@ object Multimodal {
     }.toDF("media_id", "png")
     val feat = dHashFeatures(pins, spark, pngs)
     verifiedImagePairs(feat, side, maxHamming, maxDist)
+      .orderBy(col("d1"), col("d2"))
   }
 
   /** (media_id, png) → (media_id, gray grid, dHash) feature table, pinned
@@ -323,7 +324,8 @@ object Multimodal {
   /** Banding + exact verify over a pinned feature table: 16-bit-block
     * candidates (pigeonhole-COMPLETE for hamming ≤ 3), each candidate
     * verified by exact integer pixel distance. The q112 kernel, shared
-    * with the q159 manifest tier. */
+    * with the q159 manifest tier. Unordered; queries order at
+    * presentation. */
   private def verifiedImagePairs(feat: DataFrame, side: Int,
                                  maxHamming: Int, maxDist: Double): DataFrame = {
     require(maxHamming <= 3,
@@ -342,7 +344,7 @@ object Multimodal {
       .select(col("d1"), col("d2"))
       .distinct()
     val sadMax = (maxDist * side * side).toLong // integer-exact threshold
-    val out = cand
+    cand
       .join(feat.select(col("media_id").as("d1"), col("gray").as("g1"),
         col("dhash").as("h1")), Seq("d1"))
       .join(feat.select(col("media_id").as("d2"), col("gray").as("g2"),
@@ -355,8 +357,6 @@ object Multimodal {
       .where(col("hamming") <= maxHamming && col("sad") <= sadMax)
       .select(col("d1"), col("d2"), col("hamming"),
         round(col("sad").cast(DoubleType) / (side * side), 4).as("mean_dist"))
-      .orderBy(col("d1"), col("d2"))
-    out
   }
 
   /** Image near-dup DROP set over the documents' media tier, for the
@@ -685,6 +685,7 @@ object Multimodal {
       val feat = wavFeatures(pins, spark,
         audioCorpus(spark, dir, nDocs, plantEvery, sr), frame)
       verifiedAudioPairs(feat, frame, maxHamming, maxSad)
+        .orderBy(col("d1"), col("d2"))
     }
   }
 
@@ -721,7 +722,8 @@ object Multimodal {
   /** Banding + exact verify over a pinned audio feature table: 8-bit
     * bands keyed with the clip length (pigeonhole-complete for hamming
     * ≤ 1 — every fingerprint here spans ≥ 2 bands), SAD-verified. The
-    * q168 kernel, shared with the q172 manifest tier. */
+    * q168 kernel, shared with the q172 manifest tier. Unordered; queries
+    * order at presentation. */
   private def verifiedAudioPairs(feat: DataFrame, frame: Int,
                                  maxHamming: Int, maxSad: Long): DataFrame = {
     require(maxHamming <= 1,
@@ -751,7 +753,6 @@ object Multimodal {
       .where(col("hamming") <= maxHamming && col("sad") <= maxSad)
       .select(col("d1"), col("d2"), col("hamming"),
         round(col("sad").cast(DoubleType) / col("n"), 4).as("mean_dist"))
-      .orderBy(col("d1"), col("d2"))
   }
 
   /** Audio near-dup DROP set over the documents' media tier, for the

@@ -72,7 +72,8 @@ object Similarity {
     * ~2.1 s; the "cleaner" project-then-filter form gets the filter
     * pushed back into the condition REORDERED as `dot >= t && d1 < d2`,
     * running the kernel on every ordered pair — ~4.3 s. The projection
-    * re-computes the dot only for the handful of matched rows. */
+    * re-computes the dot only for the handful of matched rows.
+    * Unordered; queries order at presentation. */
   def nearDupPairs(spark: SparkSession, dir: String, threshold: Double): DataFrame =
     nearDupPairsOf(vecsNorm(spark, dir), threshold)
 
@@ -83,7 +84,6 @@ object Similarity {
     a.join(b, col("d1") < col("d2") &&
         round(dot(col("v1"), col("v2")), 4) >= threshold)
       .select(col("d1"), col("d2"), round(dot(col("v1"), col("v2")), 4).as("sim"))
-      .orderBy(col("d1"), col("d2"))
   }
 
   /** LSH-bucketed near-dup: candidates from `tables` independent
@@ -91,7 +91,8 @@ object Similarity {
     * graft.functions.HyperplaneLshExpr), verified with exact cosine.
     * Per-bucket self-join keys are (table, bucket) — shuffle on small
     * fixed-width keys, pair generation bounded by bucket size; AQE handles
-    * skewed buckets. Recall = 1-(1-(1-θ/π)^bits)^tables. */
+    * skewed buckets. Recall = 1-(1-(1-θ/π)^bits)^tables.
+    * Unordered; queries order at presentation. */
   def lshNearDup(spark: SparkSession, dir: String, threshold: Double,
                  tables: Int = 16, bits: Int = 8): DataFrame =
     lshNearDupOf(vecs(spark, dir), vecsNorm(spark, dir),
@@ -122,7 +123,6 @@ object Similarity {
       .join(vn.select(col("vec_id").as("d2"), col("u").as("v2")), Seq("d2"))
       .select(col("d1"), col("d2"), round(dot(col("v1"), col("v2")), 4).as("sim"))
       .where(col("sim") >= threshold)
-      .orderBy(col("d1"), col("d2"))
   }
 
   /** IVF-style search: centroids = per-label mean vector (elementwise

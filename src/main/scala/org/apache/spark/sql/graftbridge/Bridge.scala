@@ -20,6 +20,38 @@ object Bridge {
       .sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
 
+  /** The schema `spark.read.parquet(path)` infers, read on the driver from
+    * one footer — no Spark job. `path` is a parquet file or a directory of
+    * part-files; the footer is the first data file's by name (names
+    * starting with `_` or `.` are not data), the file Spark's non-merging
+    * inference reads, converted by Spark's own footer reader under the
+    * session's conf (so `nanosAsLong`, NTZ inference and binary-as-string
+    * apply as they would there). */
+  def parquetSchema(spark: org.apache.spark.sql.SparkSession,
+                    path: String): org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet._
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState
+    val conf = state.newHadoopConf()
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(conf)
+    val top = fs.getFileStatus(p)
+    val file =
+      if (!top.isDirectory) top
+      else fs.listStatus(p).filter { s =>
+        val n = s.getPath.getName
+        s.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }.sortBy(_.getPath.toString).headOption.getOrElse(
+        throw new IllegalArgumentException(s"no parquet data file in $path"))
+    val footer = new org.apache.parquet.hadoop.Footer(file.getPath,
+      ParquetFooterReader.readFooter(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf),
+        org.apache.parquet.format.converter.ParquetMetadataConverter
+          .SKIP_ROW_GROUPS))
+    ParquetFileFormat.readSchemaFromFooter(footer,
+      new ParquetToSparkSchemaConverter(state.conf))
+  }
+
   /** Block until every event already posted to the context's listener
     * bus has been delivered (`listenerBus` is `private[spark]`), so a
     * [[graft.PlanCapture]] listener has seen every finished action. */

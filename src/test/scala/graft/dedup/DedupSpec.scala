@@ -1,12 +1,11 @@
 package graft.dedup
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTest
+import graft.{PlanCapture, SparkTest}
 
 class DedupSpec extends AnyFunSuite {
   private lazy val spark = SparkTest.spark
@@ -33,18 +32,8 @@ class DedupSpec extends AnyFunSuite {
 
   /** `body`'s value and the number of Spark jobs started while it ran. */
   private def jobsDuring[T](body: => T): (T, Int) = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    Bridge.drainListenerBus(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = body
-      Bridge.drainListenerBus(spark)
-      (out, jobs.get)
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val run = PlanCapture.during(spark)(body)
+    (run.value, run.jobs)
   }
 
   private def chain(n: Long): DataFrame = {
@@ -125,6 +114,54 @@ class DedupSpec extends AnyFunSuite {
       assert(got == want)
       // min-label canonical keeper: every component label is its own member
       assert(got.forall { case (_, c) => got(c) == c })
+    }
+  }
+
+  test("connected components equal the two-branch union formulation on sorted, duplicate, self-loop and null-id edges") {
+    import spark.implicits._
+    // the reference: the edge list made symmetric by a UNION of the two
+    // directions, then the same synchronous min-label rounds, each round
+    // collected so the plan stays shallow
+    def reference(edges: DataFrame): Set[(Any, Any)] = {
+      val sym = edges.select(col("src"), col("dst"))
+        .union(edges.select(col("dst").as("src"), col("src").as("dst")))
+      var labels = sym.select(col("src").as("id")).distinct()
+        .withColumn("comp", col("id")).collect().map(r => (r.get(0), r.get(1))).toSet
+      var done = false
+      while (!done) {
+        val cur = spark.createDataFrame(
+          java.util.Arrays.asList(labels.toSeq.map(l => Row(l._1, l._2)): _*),
+          sym.select(col("src").as("id"), col("src").as("comp")).schema)
+        val nbr = sym.join(cur.select(col("id").as("src"), col("comp")), Seq("src"))
+          .groupBy(col("dst").as("id")).agg(min(col("comp")).as("nbr"))
+        val next = cur.join(nbr, Seq("id"), "left_outer")
+          .select(col("id"), least(col("comp"), coalesce(col("nbr"), col("comp"))))
+          .collect().map(r => (r.get(0), r.get(1))).toSet
+        done = next == labels
+        labels = next
+      }
+      labels
+    }
+    val verified = Dedup.minhashVerifiedPairs(spark, dir, 0.5, 0.7)
+      .select(col("d1").as("src"), col("d2").as("dst"))
+    val small = Seq((5L, 3L), (3L, 5L), (3L, 5L), (7L, 7L), (9L, 7L), (1L, 2L))
+    val cases = Seq(
+      "globally sorted" -> verified.orderBy(col("src"), col("dst")),
+      "duplicate edges" -> small.toDF("src", "dst"),
+      "self-loops" -> Seq((4L, 4L), (4L, 6L), (8L, 8L)).toDF("src", "dst"),
+      "null id" -> Seq[(java.lang.Long, java.lang.Long)](
+        (1L, 2L), (null, 3L), (2L, null), (3L, 4L)).toDF("src", "dst"))
+    for ((what, edges) <- cases) {
+      val want = reference(edges)
+      assert(want.nonEmpty, what)
+      val (inMemory, distributed) = onBothPaths {
+        val labels = Components.connectedComponents(edges)
+        val got = labels.collect().map(r => (r.get(0), r.get(1))).toSet
+        Bridge.unpersistLocalCheckpoint(labels)
+        got
+      }
+      assert(inMemory == want, s"$what, in memory")
+      assert(distributed == want, s"$what, distributed")
     }
   }
 

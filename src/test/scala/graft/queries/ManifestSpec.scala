@@ -205,7 +205,7 @@ class ManifestSpec extends AnyFunSuite {
         (id, n, start, start / seqLen, (start + n - 1) / seqLen,
           (start + n - 1) / seqLen - start / seqLen + 1)
       }
-    val (q110, q110Plans) =
+    val graft.PlanCapture.Captured(q110, q110Plans, _) =
       graft.PlanCapture.during(spark)(Curation.q110(spark, dir))
     val got = q110.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),

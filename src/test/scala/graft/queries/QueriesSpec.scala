@@ -24,11 +24,12 @@ class QueriesSpec extends AnyFunSuite {
       name -> scala.util.Try {
         val sc = spark.sparkContext
         val before = sc.getPersistentRDDs.keySet.toSet
-        val ((columns, ck), plans) = PlanCapture.during(spark) {
-          val df = fn(spark, dir)
-          df.write.format("noop").mode("overwrite").save()
-          (df.columns.length, Bridge.freeIfDirectCheckpoint(df))
-        }
+        val PlanCapture.Captured((columns, ck), plans, _) =
+          PlanCapture.during(spark) {
+            val df = fn(spark, dir)
+            df.write.format("noop").mode("overwrite").save()
+            (df.columns.length, Bridge.freeIfDirectCheckpoint(df))
+          }
         // registry builds a query triggered own their pins for the
         // process; anything else still persistent is the query's leak
         val leaked = sc.getPersistentRDDs.keySet.toSet -- before --
@@ -67,6 +68,47 @@ class QueriesSpec extends AnyFunSuite {
     val leaks = ok.collect { case (name, s) if s.leaked.nonEmpty =>
       s"$name: ${s.leaked.toSeq.sorted.mkString(",")}" }
     assert(leaks.isEmpty, s"queries left persistent RDDs: ${leaks.mkString("; ")}")
+  }
+
+  test("connected components pin their edges without a global sort or a union") {
+    // An edge pin — a localCheckpoint whose output is (src, dst): the
+    // symmetric edge list every connectedComponents call pins, and the
+    // pair lists q179/q180/q182 pin before running it twice. A global
+    // sort in it costs a range-sampling job that reruns the whole pair
+    // pipeline; a union at its top (the two directions as two branches)
+    // evaluates that pipeline once per branch. (A union further down
+    // belongs to the pair producer: q111's corpus is real ∪ planted.)
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution._
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec,
+      AdaptiveSparkPlanHelper}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    val helper = new AdaptiveSparkPlanHelper {}
+    def top(p: SparkPlan): SparkPlan = p match {
+      case a: AdaptiveSparkPlanExec => top(a.executedPlan)
+      case w @ (_: WholeStageCodegenExec | _: InputAdapter | _: ProjectExec) =>
+        top(w.children.head)
+      case other => other
+    }
+    val ok = shipped.collect { case (n, scala.util.Success(s)) => n -> s }
+    assert(ok.size == SparkEntry.queries.size, "smoke pass had failures")
+    val edgePins = ok.flatMap { case (name, s) =>
+      s.plans.collect { case p if p.action == "localCheckpoint" &&
+          p.executedPlan.output.map(_.name) == Seq("src", "dst") => name -> p }
+    }
+    val callers = edgePins.map(_._1).toSet
+    assert(Set("q66_dedup_clusters", "q105_semantic_dedup",
+      "q179_takedown_keepers").subsetOf(callers),
+      s"edge pins not found; queries with edge pins: $callers")
+    val offenders = edgePins.collect { case (name, p) if
+        top(p.executedPlan).isInstanceOf[UnionExec] ||
+          helper.find(p.executedPlan) {
+            case e: ShuffleExchangeLike =>
+              e.outputPartitioning.isInstanceOf[RangePartitioning]
+            case _ => false
+          }.nonEmpty => name }
+    assert(offenders.isEmpty,
+      s"edge pins with a range exchange or a union: ${offenders.distinct.mkString(", ")}")
   }
 
   test("entry flagship returns rows") {
