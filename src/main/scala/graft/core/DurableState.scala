@@ -360,7 +360,8 @@ object DurableState {
     * face: this is all a rebooted process has). */
   def load(spark: SparkSession, root: String, kind: String, version: Long,
       table: String): DataFrame =
-    spark.read.parquet(versionDir(root, kind, version).resolve(table).toString)
+    Tables.parquet(spark,
+      versionDir(root, kind, version).resolve(table).toString)
 
   /** One data dir's durable state at its default root ([[rootFor]]) —
     * the face the queries use. A spill through [[spillOnce]] /

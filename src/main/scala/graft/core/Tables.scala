@@ -26,9 +26,13 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") events(spark, dir) else read(spark, s"$dir/$name.parquet")
+    if (name == "events") events(spark, dir) else parquet(spark, s"$dir/$name.parquet")
 
-  private def read(spark: SparkSession, path: String): DataFrame =
+  /** The one parquet reader: `path` (a file, or a directory of
+    * part-files) under the schema of one footer read on the driver — the
+    * schema `spark.read.parquet(path)` infers, without its one-task
+    * inference job. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(Bridge.parquetSchema(spark, path)).parquet(path)
 
   /** `events.ts` is parquet TIMESTAMP(NANOS), which Spark's vectorized
@@ -38,7 +42,7 @@ object Tables {
     * timestamps are unaffected by the conf). */
   private def events(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = read(spark, s"$dir/events.parquet")
+    val df = parquet(spark, s"$dir/events.parquet")
     if (df.schema("ts").dataType == LongType)
       df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
     else df

@@ -16,10 +16,9 @@ import graft.queries.EmbeddingQueries
   *    argmax cosine is a fold over that array inside a single projection —
   *    map-only, no per-vector window shuffle, ties broken toward the lower
   *    cluster id (strict `>` over an id-sorted array)
-  *  - update: per-(cluster, dimension) DECIMAL sums via posexplode — exact
-  *    and therefore ORDER-INDEPENDENT (no sorted collect_list fold, whose
-  *    per-cluster array would not fit one task at 100 TB); the centroid
-  *    array is reassembled from the 64 per-dim means
+  *  - update: [[groupMeans]] — per-(cluster, dimension) DECIMAL sums,
+  *    exact and therefore ORDER-INDEPENDENT; the same update trains Pq's
+  *    product codebook and builds Similarity's per-label centroids
   *  - each iteration's k-row centroid table is localCheckpoint'ed, so plan
   *    depth stays O(1) in the iteration count instead of O(iters)
   *
@@ -27,18 +26,9 @@ import graft.queries.EmbeddingQueries
   */
 object KMeans {
 
-  private val SumDec = DecimalType(38, 14)
-
-  /** Returns (cluster, centroid: array<double>) after `iters` Lloyd steps.
-    * `sumType` picks the per-dimension reduction arithmetic: the default
-    * DECIMAL(38,14) is exact and therefore order-independent (bit-stable
-    * under any partitioning / AQE re-plan / task retry — the property the
-    * determinism specs pin); DoubleType sums are faster but their value
-    * depends on reduction order, so only the decimal form is the library
-    * default. Measured at sf0.1 (see ARCHITECTURE.md): the decimal tax is
-    * well under the 2× line, so exactness wins. */
-  def fit(vecs: DataFrame, k: Int, iters: Int,
-          sumType: NumericType = SumDec): DataFrame = {
+  /** Returns (cluster, centroid: array<double>) after `iters` Lloyd steps
+    * of [[assign]] + [[groupMeans]]. */
+  def fit(vecs: DataFrame, k: Int, iters: Int): DataFrame = {
     var centroids = vecs.orderBy(col("vec_id")).limit(k)
       .select(col("vec_id"), col("v"))
       .withColumn("cluster",
@@ -49,16 +39,8 @@ object KMeans {
     // is the caller's (a direct checkpoint once iters > 0)
     Pins.scope { pins =>
       (1 to iters).foreach { i =>
-        val next = assign(vecs, centroids)
-          .select(col("cluster"), posexplode(col("v")))
-          .groupBy(col("cluster"), col("pos"))
-          .agg(sum(col("col").cast(sumType)).as("s"), count(lit(1)).as("cnt"))
-          .groupBy(col("cluster"))
-          .agg(array_sort(collect_list(struct(
-            col("pos"),
-            (col("s").cast(DoubleType) / col("cnt")).as("m")))).as("dims"))
-          .select(col("cluster"),
-            transform(col("dims"), d => d.getField("m")).as("centroid"))
+        val next = groupMeans(assign(vecs, centroids), Seq("cluster"), "v",
+          "centroid")
         val ck = pins.pin(next) // eager: prior round no longer referenced
         // free the superseded round's checkpoint storage
         if (i > 1) pins.release(centroids)
@@ -67,6 +49,29 @@ object KMeans {
       pins.disown(centroids)
     }
   }
+
+  /** The exact per-group mean-vector update: (keys…, `out`) with `out`
+    * the elementwise mean of the array column `vec` over each group of
+    * `rows`. Per-(group, dimension) DECIMAL(38,14) sums via posexplode are
+    * exact and therefore ORDER-INDEPENDENT — bit-stable under any
+    * partitioning, AQE re-plan or task retry (the property the
+    * determinism specs pin); a double sum's value would follow the
+    * reduction order. Per-group state is one decimal per dim, never a
+    * collected array, and the mean array is reassembled from the per-dim
+    * means. The one update behind [[fit]], Pq's codebook training and
+    * `Similarity.labelCentroids`. Measured at sf0.1 (see
+    * ARCHITECTURE.md): the decimal tax is well under the 2× line. */
+  private[graft] def groupMeans(rows: DataFrame, keys: Seq[String],
+      vec: String, out: String): DataFrame =
+    rows.select(keys.map(col(_)) :+ posexplode(col(vec)): _*)
+      .groupBy((keys :+ "pos").map(col(_)): _*)
+      .agg(sum(col("col").cast(DecimalType(38, 14))).as("sm"),
+        count(lit(1)).as("cnt"))
+      .groupBy(keys.map(col(_)): _*)
+      .agg(array_sort(collect_list(struct(col("pos"),
+        (col("sm").cast(DoubleType) / col("cnt")).as("v")))).as("dims"))
+      .select(keys.map(col(_)) :+
+        transform(col("dims"), d => d.getField("v")).as(out): _*)
 
   /** Nearest-centroid assignment: (vec_id, v, cluster, sim). Map-only:
     * the k centroids ride along as one broadcast array-of-structs row and

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.core.Pins
-import graft.queries.EmbeddingQueries.vecsNorm
+import graft.queries.EmbeddingQueries.{vecs, vecsNorm}
 
 /** Product quantization ANN (Jégou, Douze, Schmid 2011, "Product
   * Quantization for Nearest Neighbor Search" — public literature): split
@@ -24,6 +24,23 @@ import graft.queries.EmbeddingQueries.vecsNorm
   * the IVF-PQ layout every production vector store runs): coarse cells
   * bound the candidate set, PQ codes price each candidate.
   *
+  * ONE FUNCTION PER DECISION. Every query here (q164, q167, q177, q222,
+  * q263; q225 reads the same registry state) is built from: [[corpusOf]]
+  * (the normalized corpus and its subvector width), [[frozen]] (coarse
+  * cells + product codebook trained on a row predicate), [[IvfPq.index]]
+  * (encode + cell-assign a row predicate's vectors) and
+  * [[KMeans.groupMeans]] (the exact mean update of both k-means fits).
+  * The process-registry state ([[pqStanding]]) and a query's own scope
+  * differ only in who takes the checkpoints — the `own` materializer
+  * they pass (`identity` or `pins.own`), never a flag.
+  *
+  * The two references, [[q177Monolithic]] and [[q222Monolithic]], exist
+  * for the specs (PqSpec, EraseStateSpec) to compare the shipped queries
+  * against: each trains the same frozen state in its own scope and
+  * encodes the rows its shipped query serves in ONE `index` pass, where
+  * the shipped query unions the registry's standing index with a batch
+  * encode (and, for q222, first deletes the erased rows from it).
+  *
   * Scale shape: codebook training touches only subvectors (k·m centroid
   * rows of state, decimal-exact means — the annIvf update discipline);
   * encoding is map-only against the broadcast codebook; the ADC scan is
@@ -36,14 +53,31 @@ import graft.queries.EmbeddingQueries.vecsNorm
   */
 object Pq {
 
+  /** The standing-state tier's base/batch split: vec_id % 10 < 7 is the
+    * standing corpus, the rest the arriving batch. */
+  private val isBase = pmod(col("vec_id"), lit(10L)) < 7L
+
+  /** Every row — the training and encoding predicate of the queries that
+    * do not split base from batch. */
+  private val allRows = lit(true)
+
+  /** q222's erasure request: the base vectors with vec_id ≡ 0 (mod modK). */
+  private def isErased(modK: Long): Column =
+    isBase && pmod(col("vec_id"), lit(modK)) === 0L
+
   /** Squared L2 between two equal-length double arrays — an in-order
     * fold, deterministic per pair. */
   private def l2sq(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
       lit(0.0d), (acc, v) => acc + v)
 
-  /** Subvector `s` of the unit vector column `u`. */
-  private def subCol(s: Int, sub: Int): Column = slice(col("u"), s * sub + 1, sub)
+  /** `frame`'s unit vectors `u` cut into `m` subvectors of width `sub`:
+    * one (id, s, `name`) row per subspace. */
+  private def subvectors(frame: DataFrame, id: Column, m: Int, sub: Int,
+      name: String): DataFrame =
+    frame.select(id, posexplode(array((0 until m).map(s =>
+        slice(col("u"), s * sub + 1, sub)): _*)))
+      .withColumnsRenamed(Map("pos" -> "s", "col" -> name))
 
   /** The nearest sub-centroid's code for `sv` over a PER-SUBSPACE
     * (code, cent) array — an in-order fold, ties to the lowest code
@@ -74,17 +108,15 @@ object Pq {
   /** Train the m×k product codebook over `corpus` (vec_id, u) — ALL m
     * subspaces in ONE dataflow: the corpus explodes once into
     * (vec_id, s, sv) rows, each round is a single broadcast-assign pass
-    * + one (s, code, dim)-keyed decimal-exact mean (the annIvf update
-    * discipline), so `iters` rounds cost `iters` jobs regardless of m —
-    * the per-subspace sequential form ran m·iters rounds and was the
-    * bench's slowest query at m = 8. Deterministic init: each
-    * subspace's first k vectors by vec_id (the KMeans.fit convention).
-    * Returns (s, code, cent) as a direct checkpoint the caller owns. */
+    * + one (s, code)-keyed [[KMeans.groupMeans]] update, so `iters`
+    * rounds cost `iters` jobs regardless of m — the per-subspace
+    * sequential form ran m·iters rounds and was the bench's slowest
+    * query at m = 8. Deterministic init: each subspace's first k vectors
+    * by vec_id (the KMeans.fit convention). Returns (s, code, cent) as a
+    * direct checkpoint the caller owns. */
   private def trainCodebook(corpus: DataFrame, m: Int, sub: Int, k: Int,
       iters: Int): DataFrame = {
-    val subRows = corpus.select(col("vec_id"),
-      posexplode(array((0 until m).map(subCol(_, sub)): _*)))
-      .withColumnsRenamed(Map("pos" -> "s", "col" -> "sv"))
+    val subRows = subvectors(corpus, col("vec_id"), m, sub, "sv")
     val ws = Window.partitionBy(col("s")).orderBy(col("vec_id"))
     Pins.scope { pins =>
       var cents = pins.pin(subRows
@@ -93,18 +125,10 @@ object Pq {
         .select(col("s"), (col("rn") - 1).cast(IntegerType).as("code"),
           col("sv").as("cent")))
       for (_ <- 1 to iters) {
-        val next = pins.pin(
+        val next = pins.pin(KMeans.groupMeans(
           subRows.join(broadcast(packPerSubspace(cents)), Seq("s"))
-            .select(col("s"), nearestCode(col("cbs")).as("code"), col("sv"))
-            .select(col("s"), col("code"), posexplode(col("sv")))
-            .groupBy(col("s"), col("code"), col("pos"))
-            .agg(sum(col("col").cast(DecimalType(28, 14))).as("sm"),
-              count(lit(1)).as("cnt"))
-            .groupBy(col("s"), col("code"))
-            .agg(array_sort(collect_list(struct(col("pos"),
-              (col("sm").cast(DoubleType) / col("cnt")).as("v")))).as("dims"))
-            .select(col("s"), col("code"),
-              transform(col("dims"), d => d.getField("v")).as("cent")))
+            .select(col("s"), nearestCode(col("cbs")).as("code"), col("sv")),
+          Seq("s", "code"), "sv", "cent"))
         pins.release(cents)
         cents = next
       }
@@ -116,9 +140,7 @@ object Pq {
     * against the broadcast packed codebook. */
   private[graft] def encodeCodes(corpus: DataFrame, codebook: DataFrame, m: Int,
       sub: Int): DataFrame =
-    corpus.select(col("vec_id"),
-      posexplode(array((0 until m).map(subCol(_, sub)): _*)))
-      .withColumnsRenamed(Map("pos" -> "s", "col" -> "sv"))
+    subvectors(corpus, col("vec_id"), m, sub, "sv")
       .join(broadcast(packPerSubspace(codebook)), Seq("s"))
       .select(col("vec_id"), col("s"), nearestCode(col("cbs")).as("code"))
 
@@ -126,23 +148,64 @@ object Pq {
     * rounded entry per (query, subspace, sub-centroid). */
   private def distTable(queries: DataFrame, codebook: DataFrame, m: Int,
       sub: Int): DataFrame =
-    queries.select(col("vec_id").as("q_id"),
-      posexplode(array((0 until m).map(subCol(_, sub)): _*)))
-      .withColumnsRenamed(Map("pos" -> "s", "col" -> "qsv"))
+    subvectors(queries, col("vec_id").as("q_id"), m, sub, "qsv")
       .join(broadcast(codebook), Seq("s"))
       .select(col("q_id"), col("s"), col("code"),
         round(l2sq(col("qsv"), col("cent")), 9)
           .cast(DecimalType(18, 9)).as("d2"))
 
+  /** The unit-normalized corpus (vec_id, u), checkpointed and handed to
+    * `own`, and its subvector width dim / m. */
+  private def corpusOf(spark: SparkSession, dir: String, m: Int,
+      own: DataFrame => DataFrame): (DataFrame, Int) = {
+    val corpus = own(vecsNorm(spark, dir).where(col("u").isNotNull)
+      .select(col("vec_id"), col("u")).localCheckpoint())
+    val dim = corpus.select(size(col("u"))).head().getInt(0)
+    require(dim % m == 0, s"dim $dim not divisible by m=$m")
+    (corpus, dim / m)
+  }
+
+  /** Frozen IVF-PQ state: the normalized corpus, the raw vectors `v` the
+    * coarse cells assign, the coarse k-means `model` (cluster, centroid),
+    * the m×k product `codebook` (s, code, cent) and the subvector width. */
+  private[graft] final case class IvfPq(corpus: DataFrame, v: DataFrame,
+      model: DataFrame, codebook: DataFrame, m: Int, sub: Int) {
+
+    /** The index rows (vec_id, s, code, cell) of the vectors matching
+      * `rows`: encoded map-only against the broadcast codebook and
+      * assigned to their nearest coarse cell by one broadcast argmax.
+      * Both are per-row given the frozen state, so the indexes of
+      * disjoint row sets union to the index of their union. */
+    def index(rows: Column): DataFrame =
+      encodeCodes(corpus.where(rows), codebook, m, sub)
+        .join(KMeans.assign(v.where(rows),
+            model.select(col("cluster"), col("centroid")))
+          .select(col("vec_id"), col("cluster").as("cell")),
+          Seq("vec_id"))
+  }
+
+  /** The frozen state trained on the rows matching `train`: coarse cells
+    * on the raw vectors (the q50 posture), the product codebook on the
+    * unit vectors. `own` takes every checkpoint built here — `pins.own`
+    * in a query's scope, `identity` for process-registry state. */
+  private def frozen(spark: SparkSession, dir: String, m: Int, k: Int,
+      iters: Int, cells: Int, train: Column,
+      own: DataFrame => DataFrame): IvfPq = {
+    val (corpus, sub) = corpusOf(spark, dir, m, own)
+    val v = vecs(spark, dir)
+    val model = own(KMeans.fit(v.where(train), cells, iters))
+    val codebook = own(trainCodebook(corpus.where(train), m, sub, k, iters))
+    IvfPq(corpus, v, model, codebook, m, sub)
+  }
+
   /** Shortlist-then-refine + recall accounting shared by q164/q167:
     * ADC top-`shortlist` per query → exact re-rank on the original
-    * vectors → recall@kTop against brute force. Returns the MATERIALIZED
-    * ledger (the pinned inputs may be freed after this returns). */
-  private def refineAndScore(spark: SparkSession, dir: String,
-      corpus: DataFrame, queries: DataFrame, adc: DataFrame, kTop: Int,
-      nQueries: Int, shortlist: Int,
-      bruteOverride: Option[DataFrame] = None,
-      materialize: Boolean = true): DataFrame = {
+    * vectors → recall@kTop against the ground truth `truth` (q_id, n_id).
+    * Returns the MATERIALIZED ledger (the pinned inputs may be freed
+    * after this returns). */
+  private def refineAndScore(corpus: DataFrame, queries: DataFrame,
+      adc: DataFrame, truth: DataFrame, kTop: Int,
+      shortlist: Int): DataFrame = {
     val wAdc = Window.partitionBy(col("q_id"))
       .orderBy(col("adc").asc, col("vec_id").asc)
     val cand = adc
@@ -163,15 +226,13 @@ object Pq {
       .where(col("rank") <= kTop)
       .select(col("q_id"), col("vec_id").as("n_id"))
 
-    val brute = bruteOverride
-      .getOrElse(Similarity.annTruthStanding(spark, dir, kTop, nQueries))
-      .select(col("q_id"), col("n_id"))
+    val brute = truth.select(col("q_id"), col("n_id"))
     val hits = brute.join(approx, Seq("q_id", "n_id"))
       .groupBy(col("q_id")).agg(count(lit(1)).as("n_hit"))
     // materialize (tiny: one row per query) BEFORE the pinned
     // codebook/corpus are freed — their lineage is truncated, so a
     // lazy result referencing them could not recompute after free
-    val ledger = brute.groupBy(col("q_id")).agg(count(lit(1)).as("n_true"))
+    brute.groupBy(col("q_id")).agg(count(lit(1)).as("n_true"))
       .join(hits, Seq("q_id"), "left_outer")
       .select(col("q_id"),
         coalesce(col("n_hit"), lit(0L)).cast(IntegerType).as("n_hit"),
@@ -179,7 +240,7 @@ object Pq {
         round(coalesce(col("n_hit"), lit(0L)).cast(DoubleType) /
           col("n_true"), 4).as("recall"))
       .orderBy(col("q_id"))
-    if (materialize) ledger.localCheckpoint() else ledger
+      .localCheckpoint()
   }
 
   /** q164 — PQ-ADC recall ledger: encode the (unit-normalized) corpus
@@ -195,11 +256,7 @@ object Pq {
   def q164(spark: SparkSession, dir: String, m: Int = 8, k: Int = 16,
            iters: Int = 3, kTop: Int = 10, nQueries: Int = 20,
            shortlistFactor: Int = 10): DataFrame = Pins.scope { pins =>
-    val corpus = pins.pin(vecsNorm(spark, dir).where(col("u").isNotNull)
-      .select(col("vec_id"), col("u")))
-    val dim = corpus.select(size(col("u"))).head().getInt(0)
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val sub = dim / m
+    val (corpus, sub) = corpusOf(spark, dir, m, pins.own)
     val codebook = pins.own(trainCodebook(corpus, m, sub, k, iters))
     val codes = encodeCodes(corpus, codebook, m, sub)
     val queries = corpus.where(col("vec_id") < nQueries)
@@ -208,8 +265,46 @@ object Pq {
       .where(col("vec_id") =!= col("q_id"))
       .groupBy(col("q_id"), col("vec_id"))
       .agg(sum(col("d2")).as("adc"))
-    refineAndScore(spark, dir, corpus, queries, adc, kTop, nQueries,
+    refineAndScore(corpus, queries, adc,
+      Similarity.annTruthStanding(spark, dir, kTop, nQueries), kTop,
       shortlistFactor * kTop)
+  }
+
+  /** The probe→ADC→refine tail shared by q167/q177/q222: `codes` is the
+    * cell-assigned encoded index (vec_id, s, code, cell); each query
+    * probes its `nprobe` nearest cells by centroid cosine and prices
+    * ONLY those cells' codes with its broadcast distance table; the
+    * shortlist refines exactly as q164. */
+  private def ivfPqLedger(fz: IvfPq, codes: DataFrame, truth: DataFrame,
+      kTop: Int, nQueries: Int, nprobe: Int, shortlist: Int): DataFrame = {
+    import graft.queries.EmbeddingQueries.cosine
+    val queries = fz.corpus.where(col("vec_id") < nQueries)
+    // probe list: nprobe nearest cells per query by centroid cosine
+    val wc = Window.partitionBy(col("q_id"))
+      .orderBy(col("c_sim").desc, col("cell"))
+    val probes = queries.select(col("vec_id").as("q_id"), col("u"))
+      .crossJoin(broadcast(fz.model
+        .select(col("cluster").as("cell"), col("centroid"))))
+      .select(col("q_id"), col("cell"),
+        cosine(col("u"), col("centroid")).as("c_sim"))
+      .withColumn("rnk", row_number().over(wc))
+      .where(col("rnk") <= nprobe)
+      .select(col("q_id"), col("cell"))
+    val dtable = distTable(queries, fz.codebook, fz.m, fz.sub)
+    // ADC restricted to probed cells: the (s, code) lookup join also
+    // carries the probe's cell equality, so non-probed cells never
+    // reach the aggregate
+    val adc = codes
+      .join(broadcast(dtable.join(probes, Seq("q_id"))),
+        Seq("s", "code", "cell"))
+      .where(col("vec_id") =!= col("q_id"))
+      .groupBy(col("q_id"), col("vec_id"))
+      .agg(sum(col("d2")).as("adc"), count(lit(1)).as("n_sub"))
+      // a candidate is priced only if ALL m subspaces were looked up
+      // inside a probed cell (they are — cell rides the vec row)
+      .where(col("n_sub") === fz.m)
+      .select(col("q_id"), col("vec_id"), col("adc"))
+    refineAndScore(fz.corpus, queries, adc, truth, kTop, shortlist)
   }
 
   /** q167 — IVF-PQ: the composed production layout. A coarse k-means
@@ -226,70 +321,30 @@ object Pq {
     * a broadcast of (q_id, cell) probe pairs against the cell-assigned
     * corpus — the 100 TB posture where cells are partitions and a query
     * reads nprobe of them. */
-  /** The probe→ADC→refine tail shared by q167/q177: `codes` is the
-    * cell-assigned encoded index (vec_id, s, code, cell); each query
-    * probes its `nprobe` nearest cells by centroid cosine and prices
-    * ONLY those cells' codes with its broadcast distance table; the
-    * shortlist refines exactly as q164. */
-  private def ivfPqLedger(spark: SparkSession, dir: String,
-      corpus: DataFrame, codes: DataFrame, model: DataFrame,
-      codebook: DataFrame, m: Int, sub: Int, kTop: Int, nQueries: Int,
-      nprobe: Int, shortlist: Int,
-      bruteOverride: Option[DataFrame] = None,
-      materialize: Boolean = true): DataFrame = {
-    import graft.queries.EmbeddingQueries.cosine
-    val queries = corpus.where(col("vec_id") < nQueries)
-    // probe list: nprobe nearest cells per query by centroid cosine
-    val wc = Window.partitionBy(col("q_id"))
-      .orderBy(col("c_sim").desc, col("cell"))
-    val probes = queries.select(col("vec_id").as("q_id"), col("u"))
-      .crossJoin(broadcast(model
-        .select(col("cluster").as("cell"), col("centroid"))))
-      .select(col("q_id"), col("cell"),
-        cosine(col("u"), col("centroid")).as("c_sim"))
-      .withColumn("rnk", row_number().over(wc))
-      .where(col("rnk") <= nprobe)
-      .select(col("q_id"), col("cell"))
-    val dtable = distTable(queries, codebook, m, sub)
-    // ADC restricted to probed cells: the (s, code) lookup join also
-    // carries the probe's cell equality, so non-probed cells never
-    // reach the aggregate
-    val adc = codes
-      .join(broadcast(dtable.join(probes, Seq("q_id"))),
-        Seq("s", "code", "cell"))
-      .where(col("vec_id") =!= col("q_id"))
-      .groupBy(col("q_id"), col("vec_id"))
-      .agg(sum(col("d2")).as("adc"), count(lit(1)).as("n_sub"))
-      // a candidate is priced only if ALL m subspaces were looked up
-      // inside a probed cell (they are — cell rides the vec row)
-      .where(col("n_sub") === m)
-      .select(col("q_id"), col("vec_id"), col("adc"))
-    refineAndScore(spark, dir, corpus, queries, adc, kTop, nQueries,
-      shortlist, bruteOverride, materialize)
-  }
-
   def q167(spark: SparkSession, dir: String, m: Int = 8, k: Int = 16,
            iters: Int = 3, kTop: Int = 10, nQueries: Int = 20,
            cells: Int = 10, nprobe: Int = 3,
            shortlistFactor: Int = 10): DataFrame = Pins.scope { pins =>
-    import graft.queries.EmbeddingQueries.vecs
-    val corpus = pins.pin(vecsNorm(spark, dir).where(col("u").isNotNull)
-      .select(col("vec_id"), col("u")))
-    val dim = corpus.select(size(col("u"))).head().getInt(0)
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val sub = dim / m
-    // coarse quantizer on the raw vectors (the q50 posture)
-    val v = vecs(spark, dir)
-    val model = pins.own(KMeans.fit(v, cells, iters))
-    val codebook = pins.own(trainCodebook(corpus, m, sub, k, iters))
-    val assigned = KMeans
-      .assign(v, model.select(col("cluster"), col("centroid")))
-      .select(col("vec_id"), col("cluster").as("cell"))
-    val codes = encodeCodes(corpus, codebook, m, sub)
-      .join(assigned, Seq("vec_id"))
-    ivfPqLedger(spark, dir, corpus, codes, model, codebook, m, sub,
-      kTop, nQueries, nprobe, shortlistFactor * kTop)
+    val fz = frozen(spark, dir, m, k, iters, cells, allRows, pins.own)
+    ivfPqLedger(fz, fz.index(allRows),
+      Similarity.annTruthStanding(spark, dir, kTop, nQueries), kTop,
+      nQueries, nprobe, shortlistFactor * kTop)
   }
+
+  /** The frozen standing vector-store state shared by q177/q222/q225/
+    * q263 — the frozen state trained on the base corpus and the encoded
+    * standing index over it (`index(isBase)`), built ONCE PER PROCESS
+    * via [[graft.core.StandingState]] (a deployment persists this; only
+    * the ingest/erasure leg belongs to each invocation's cost). Never
+    * freed by callers. */
+  private[graft] final case class PqStanding(ivf: IvfPq, standing: DataFrame)
+
+  private[graft] def pqStanding(spark: SparkSession, dir: String, m: Int,
+      k: Int, iters: Int, cells: Int): PqStanding =
+    graft.core.StandingState.of(spark, "pq", dir, m, k, iters, cells) {
+      val ivf = frozen(spark, dir, m, k, iters, cells, isBase, identity)
+      PqStanding(ivf, ivf.index(isBase).localCheckpoint())
+    }
 
   /** q177 — INCREMENTAL IVF-PQ ingest: q167 at the q106/q160 standing-
     * state posture. A production vector store does NOT retrain its
@@ -306,77 +361,39 @@ object Pq {
     *
     * The bind (PqSpec): union(standing, batch-encode) must equal the
     * MONOLITHIC one-pass encode of the full corpus against the same
-    * frozen codebook/cells, row-for-row through the whole ledger —
-    * encoding is per-row and state-free given the codebook, so ingest
-    * ≡ rebuild (q160's batch==from-scratch discipline; a from-scratch
-    * q167 would RETRAIN on the full corpus and is deliberately not the
-    * bind — retraining is a different model, not a different path to
-    * the same index).
+    * frozen codebook/cells ([[q177Monolithic]]), row-for-row through the
+    * whole ledger — encoding is per-row and state-free given the
+    * codebook, so ingest ≡ rebuild (q160's batch==from-scratch
+    * discipline; a from-scratch q167 would RETRAIN on the full corpus
+    * and is deliberately not the bind — retraining is a different
+    * model, not a different path to the same index).
     *
     * Scale shape: per ingest, everything new is O(batch) — the base is
     * touched only through its pinned codes; at 100 TB the standing
     * index is the table and this query is the loader's append path. */
-  /** The frozen standing vector-store state shared by q177/q222 — the
-    * pinned normalized corpus, coarse cells, product codebook, and the
-    * encoded standing index, built ONCE PER PROCESS via
-    * [[graft.core.StandingState]] (VERDICT r10 #2: a deployment persists
-    * this; only the ingest/erasure leg belongs to each invocation's
-    * cost). Never freed by callers. */
-  private[graft] final case class PqStanding(corpus: DataFrame,
-      model: DataFrame, codebook: DataFrame, standing: DataFrame, sub: Int)
-
-  private[graft] def pqStanding(spark: SparkSession, dir: String, m: Int,
-      k: Int, iters: Int, cells: Int): PqStanding =
-    graft.core.StandingState.of(spark, "pq", dir, m, k, iters, cells) {
-      import graft.queries.EmbeddingQueries.vecs
-      val isBase = pmod(col("vec_id"), lit(10L)) < 7L
-      val corpus = vecsNorm(spark, dir).where(col("u").isNotNull)
-        .select(col("vec_id"), col("u")).localCheckpoint()
-      val dim = corpus.select(size(col("u"))).head().getInt(0)
-      require(dim % m == 0, s"dim $dim not divisible by m=$m")
-      val sub = dim / m
-      val v = vecs(spark, dir)
-      val model = KMeans.fit(v.where(isBase), cells, iters)
-      val codebook = trainCodebook(corpus.where(isBase), m, sub, k, iters)
-      val standing = encodeCodes(corpus.where(isBase), codebook, m, sub)
-        .join(KMeans.assign(v.where(isBase),
-            model.select(col("cluster"), col("centroid")))
-          .select(col("vec_id"), col("cluster").as("cell")),
-          Seq("vec_id"))
-        .localCheckpoint()
-      PqStanding(corpus, model, codebook, standing, sub)
-    }
-
   def q177(spark: SparkSession, dir: String, m: Int = 8, k: Int = 16,
            iters: Int = 3, kTop: Int = 10, nQueries: Int = 20,
            cells: Int = 10, nprobe: Int = 3,
            shortlistFactor: Int = 10): DataFrame = {
-    import graft.queries.EmbeddingQueries.vecs
-    val isBase = pmod(col("vec_id"), lit(10L)) < 7L
     val st = pqStanding(spark, dir, m, k, iters, cells)
-    // the ingest leg (batch-scale — the per-invocation cost): encode +
-    // assign the batch against the frozen broadcast state, union with
-    // the standing index, probe the merged index
-    val batch = encodeCodes(st.corpus.where(!isBase), st.codebook, m, st.sub)
-      .join(KMeans.assign(vecs(spark, dir).where(!isBase),
-          st.model.select(col("cluster"), col("centroid")))
-        .select(col("vec_id"), col("cluster").as("cell")),
-        Seq("vec_id"))
-    ivfPqLedger(spark, dir, st.corpus, st.standing.unionByName(batch),
-      st.model, st.codebook, m, st.sub, kTop, nQueries, nprobe,
-      shortlistFactor * kTop)
+    // the ingest leg (batch-scale — the per-invocation cost)
+    ivfPqLedger(st.ivf, st.standing.unionByName(st.ivf.index(!isBase)),
+      Similarity.annTruthStanding(spark, dir, kTop, nQueries), kTop,
+      nQueries, nprobe, shortlistFactor * kTop)
   }
 
-  /** The spec twin: identical frozen codebook/cells (trained on the
-    * base), but the index built by ONE encode pass over the full
-    * corpus — no standing pin, no union. PqSpec asserts q177 ≡ this,
-    * bit for bit. */
+  /** q177's reference: the same frozen state trained on the base in its
+    * own scope, the whole corpus indexed in ONE pass — no standing pin,
+    * no union. PqSpec asserts q177 ≡ this, bit for bit. */
   private[graft] def q177Monolithic(spark: SparkSession, dir: String,
       m: Int = 8, k: Int = 16, iters: Int = 3, kTop: Int = 10,
       nQueries: Int = 20, cells: Int = 10, nprobe: Int = 3,
-      shortlistFactor: Int = 10): DataFrame =
-    incrementalIvfPq(spark, dir, m, k, iters, kTop, nQueries, cells,
-      nprobe, shortlistFactor, monolithic = true)
+      shortlistFactor: Int = 10): DataFrame = Pins.scope { pins =>
+    val fz = frozen(spark, dir, m, k, iters, cells, isBase, pins.own)
+    ivfPqLedger(fz, fz.index(allRows),
+      Similarity.annTruthStanding(spark, dir, kTop, nQueries), kTop,
+      nQueries, nprobe, shortlistFactor * kTop)
+  }
 
   /** q222 — ERASE FROM THE STANDING IVF-PQ INDEX, then ingest. q177's
     * standing state (frozen coarse cells + product codebook + the pinned
@@ -386,7 +403,7 @@ object Pq {
     * per-vector state; encoding is row-local, so nothing else must be
     * recomputed) — and the next batch then ingests exactly as q177:
     * map-only encode against the frozen broadcast codebook, one
-    * broadcast cell argmax, union with the ERASED index.
+    * broadcast cell argmax, union with the ERASED index ([[q222Index]]).
     *
     * The MODEL (cells + codebook) deliberately stays: it was trained
     * before the request and is a model, not the subject's data — the
@@ -398,10 +415,10 @@ object Pq {
     * brute force over the ERASED corpus — an erased vector is not a
     * legitimate neighbor — with the probe set unchanged.
     *
-    * The bind (EraseStateSpec, the q177 discipline inverted): the
-    * erased-then-ingested index must equal the MONOLITHIC one-pass
-    * encode of the surviving corpus against the same frozen model, and
-    * no erased vec_id may appear in the index or any shortlist.
+    * The bind (EraseStateSpec, the q177 discipline inverted): the index
+    * this query probes must equal the MONOLITHIC one-pass encode of the
+    * surviving corpus against the same frozen model
+    * ([[q222MonolithicIndex]]), and no erased vec_id may appear in it.
     * Differential ledger → rows-only driver check (the q164 pattern).
     * Scale shape: q177's — everything O(batch) + O(request); the erased
     * index is the standing pin minus a broadcast anti-join. */
@@ -409,10 +426,23 @@ object Pq {
            iters: Int = 3, kTop: Int = 10, nQueries: Int = 20,
            cells: Int = 10, nprobe: Int = 3, shortlistFactor: Int = 10,
            modK: Long = 10L): DataFrame =
-    erasedIvfPq(spark, dir, m, k, iters, kTop, nQueries, cells, nprobe,
-      shortlistFactor, modK, monolithic = false)
+    erasedLedger(pqStanding(spark, dir, m, k, iters, cells).ivf,
+      q222Index(spark, dir, m, k, iters, cells, modK), modK, kTop,
+      nQueries, nprobe, shortlistFactor)
 
-  /** The spec twin: identical frozen model and erased-corpus truth, but
+  /** The index q222 probes (vec_id, s, code, cell): the registry's
+    * standing index minus the erased base vectors, union the batch
+    * encoded against the frozen state. */
+  private[graft] def q222Index(spark: SparkSession, dir: String,
+      m: Int = 8, k: Int = 16, iters: Int = 3, cells: Int = 10,
+      modK: Long = 10L): DataFrame = {
+    val st = pqStanding(spark, dir, m, k, iters, cells)
+    val erased = st.ivf.corpus.where(isErased(modK)).select(col("vec_id"))
+    st.standing.join(broadcast(erased), Seq("vec_id"), "left_anti")
+      .unionByName(st.ivf.index(!isBase))
+  }
+
+  /** q222's reference: the same frozen model and erased-corpus truth,
     * the index built by ONE encode pass over the surviving rows — no
     * standing pin, no delete, no union. EraseStateSpec asserts
     * q222 ≡ this, bit for bit. */
@@ -420,121 +450,30 @@ object Pq {
       m: Int = 8, k: Int = 16, iters: Int = 3, kTop: Int = 10,
       nQueries: Int = 20, cells: Int = 10, nprobe: Int = 3,
       shortlistFactor: Int = 10, modK: Long = 10L): DataFrame =
-    erasedIvfPq(spark, dir, m, k, iters, kTop, nQueries, cells, nprobe,
-      shortlistFactor, modK, monolithic = true)
-
-  /** The frozen model over the erased merged index — `standing` is the
-    * index (vec_id, s, code, cell), pinned in `pins` with the corpus,
-    * model and codebook it was built from. EraseStateSpec's residual probe
-    * (no erased id may remain) and equality surface. */
-  private[graft] def q222Index(pins: Pins, spark: SparkSession, dir: String,
-      m: Int = 8, k: Int = 16, iters: Int = 3, cells: Int = 10,
-      modK: Long = 10L, monolithic: Boolean = false): PqStanding = {
-    import graft.queries.EmbeddingQueries.vecs
-    val isBase = pmod(col("vec_id"), lit(10L)) < 7L
-    val isEr = isBase && pmod(col("vec_id"), lit(modK)) === 0L
-    val corpus = pins.pin(vecsNorm(spark, dir).where(col("u").isNotNull)
-      .select(col("vec_id"), col("u")))
-    val dim = corpus.select(size(col("u"))).head().getInt(0)
-    require(dim % m == 0, s"dim $dim not divisible by m=$m")
-    val sub = dim / m
-    val v = vecs(spark, dir)
-    // FROZEN pre-request state: learned on the full standing corpus
-    val model = pins.own(KMeans.fit(v.where(isBase), cells, iters))
-    val codebook =
-      pins.own(trainCodebook(corpus.where(isBase), m, sub, k, iters))
-    val cents = model.select(col("cluster"), col("centroid"))
-    def index(part: DataFrame, partV: DataFrame): DataFrame =
-      encodeCodes(part, codebook, m, sub)
-        .join(KMeans.assign(partV, cents)
-          .select(col("vec_id"), col("cluster").as("cell")),
-          Seq("vec_id"))
-    val merged =
-      if (monolithic) pins.pin(index(corpus.where(!isEr), v.where(!isEr)))
-      else {
-        val standing = pins.pin(index(corpus.where(isBase), v.where(isBase)))
-        val erased = corpus.where(isEr).select(col("vec_id"))
-        val erasedStanding = standing
-          .join(broadcast(erased), Seq("vec_id"), "left_anti")
-        val out = pins.pin(erasedStanding
-          .unionByName(index(corpus.where(!isBase), v.where(!isBase))))
-        pins.release(standing)
-        out
-      }
-    PqStanding(corpus, model, codebook, merged, sub)
-  }
-
-  private def erasedIvfPq(spark: SparkSession, dir: String, m: Int,
-      k: Int, iters: Int, kTop: Int, nQueries: Int, cells: Int,
-      nprobe: Int, shortlistFactor: Int, modK: Long,
-      monolithic: Boolean): DataFrame = {
-    import graft.queries.EmbeddingQueries.vecs
-    val isBase = pmod(col("vec_id"), lit(10L)) < 7L
-    val isEr = isBase && pmod(col("vec_id"), lit(modK)) === 0L
-    if (monolithic) Pins.scope { pins =>
-      // spec twin: fresh one-pass build in its own scope
-      val ix = q222Index(pins, spark, dir, m, k, iters, cells, modK,
-        monolithic = true)
-      val truth = Similarity.annTopKOf(
-        ix.corpus.where(!isEr),
-        ix.corpus.where(col("vec_id") < nQueries), kTop)
-        .select(col("q_id"), col("n_id"))
-      ivfPqLedger(spark, dir, ix.corpus, ix.standing, ix.model, ix.codebook,
-        m, ix.sub, kTop, nQueries, nprobe, shortlistFactor * kTop,
-        Some(truth))
-    } else {
-      // the shipped path: erasure + ingest over the PROCESS-PINNED
-      // standing state (the q177 registry — shared key, built once)
-      val st = pqStanding(spark, dir, m, k, iters, cells)
-      val erased = st.corpus.where(isEr).select(col("vec_id"))
-      val erasedStanding = st.standing
-        .join(broadcast(erased), Seq("vec_id"), "left_anti")
-      val batch = encodeCodes(st.corpus.where(!isBase), st.codebook, m,
-          st.sub)
-        .join(KMeans.assign(vecs(spark, dir).where(!isBase),
-            st.model.select(col("cluster"), col("centroid")))
-          .select(col("vec_id"), col("cluster").as("cell")),
-          Seq("vec_id"))
-      val truth = Similarity.annTopKOf(
-        st.corpus.where(!isEr),
-        st.corpus.where(col("vec_id") < nQueries), kTop)
-        .select(col("q_id"), col("n_id"))
-      ivfPqLedger(spark, dir, st.corpus,
-        erasedStanding.unionByName(batch), st.model, st.codebook, m,
-        st.sub, kTop, nQueries, nprobe, shortlistFactor * kTop,
-        Some(truth))
-    }
-  }
-
-  /** The spec twin's fresh one-pass build: identical frozen model
-    * (trained on the base), index encoded over the FULL corpus in one
-    * pass. PqSpec asserts q177 ≡ this. */
-  private def incrementalIvfPq(spark: SparkSession, dir: String, m: Int,
-      k: Int, iters: Int, kTop: Int, nQueries: Int, cells: Int,
-      nprobe: Int, shortlistFactor: Int, monolithic: Boolean): DataFrame = {
-    require(monolithic, "the shipped incremental path is q177 (registry)")
-    import graft.queries.EmbeddingQueries.vecs
-    val isBase = pmod(col("vec_id"), lit(10L)) < 7L
     Pins.scope { pins =>
-      val corpus = pins.pin(vecsNorm(spark, dir).where(col("u").isNotNull)
-        .select(col("vec_id"), col("u")))
-      val dim = corpus.select(size(col("u"))).head().getInt(0)
-      require(dim % m == 0, s"dim $dim not divisible by m=$m")
-      val sub = dim / m
-      val v = vecs(spark, dir)
-      // FROZEN state: cells + codebook learned on the standing corpus only
-      val model = pins.own(KMeans.fit(v.where(isBase), cells, iters))
-      val codebook =
-        pins.own(trainCodebook(corpus.where(isBase), m, sub, k, iters))
-      val codes = encodeCodes(corpus, codebook, m, sub)
-        .join(KMeans.assign(v,
-            model.select(col("cluster"), col("centroid")))
-          .select(col("vec_id"), col("cluster").as("cell")),
-          Seq("vec_id"))
-      ivfPqLedger(spark, dir, corpus, codes, model, codebook, m, sub,
-        kTop, nQueries, nprobe, shortlistFactor * kTop)
+      val (fz, index) =
+        q222MonolithicIndex(pins, spark, dir, m, k, iters, cells, modK)
+      erasedLedger(fz, index, modK, kTop, nQueries, nprobe, shortlistFactor)
     }
+
+  /** [[q222Monolithic]]'s frozen state, owned by `pins`, and its index:
+    * the surviving corpus encoded in one pass. */
+  private[graft] def q222MonolithicIndex(pins: Pins, spark: SparkSession,
+      dir: String, m: Int = 8, k: Int = 16, iters: Int = 3,
+      cells: Int = 10, modK: Long = 10L): (IvfPq, DataFrame) = {
+    val fz = frozen(spark, dir, m, k, iters, cells, isBase, pins.own)
+    (fz, fz.index(!isErased(modK)))
   }
+
+  /** q222's ledger over `index`, with ground truth over the erased
+    * corpus. */
+  private def erasedLedger(fz: IvfPq, index: DataFrame, modK: Long,
+      kTop: Int, nQueries: Int, nprobe: Int,
+      shortlistFactor: Int): DataFrame =
+    ivfPqLedger(fz, index,
+      Similarity.annTopKOf(fz.corpus.where(!isErased(modK)),
+        fz.corpus.where(col("vec_id") < nQueries), kTop),
+      kTop, nQueries, nprobe, shortlistFactor * kTop)
 
   /** q263 — IVF-PQ ERASE-COMMIT (VERDICT r12 #4, the learned kind): the
     * frozen vector-store state (coarse model, product codebook, encoded
@@ -556,8 +495,7 @@ object Pq {
     * erased+ingested index equals the monolithic one-pass encode of the
     * surviving corpus, bit for bit. */
   def q263(spark: SparkSession, dir: String, m: Int = 8, k: Int = 16,
-           iters: Int = 3, cells: Int = 10, modK: Long = 10L): DataFrame = {
-    val isBase = pmod(col("vec_id"), lit(10L)) < 7L
+           iters: Int = 3, cells: Int = 10, modK: Long = 10L): DataFrame =
     q263Index(spark, dir, m, k, iters, cells, modK)
       .groupBy(col("vec_id"))
       .agg(count(lit(1)).as("n_codes"),
@@ -567,11 +505,7 @@ object Pq {
         col("n_codes"), col("n_cells"))
       .orderBy(col("vec_id"))
       .localCheckpoint()
-  }
 
-  /** q263's merged index (vec_id, s, code, cell) — the erased spill's
-    * reloaded codes unioned with the batch encoded against the RELOADED
-    * frozen state. EraseStateSpec's equality surface. */
   /** Spill the IVF-PQ kind (frozen model + codebook + standing codes)
     * and commit its erased version, once per process each; returns
     * (v0, erasedVersion). */
@@ -581,7 +515,7 @@ object Pq {
     val store = graft.core.DurableState.Store(spark, dir)
     val kind = s"pq$m-$k-$iters-$cells"
     val v0 = store.spillOnce(kind) { _ =>
-      Seq("model" -> st.model, "codebook" -> st.codebook,
+      Seq("model" -> st.ivf.model, "codebook" -> st.ivf.codebook,
         "codes" -> st.standing)
     }
     val eV = store.spillOnce(s"$kind-erased$modK") { _ =>
@@ -595,11 +529,12 @@ object Pq {
     (v0, eV)
   }
 
+  /** q263's merged index (vec_id, s, code, cell) — the erased spill's
+    * reloaded codes unioned with the batch encoded against the RELOADED
+    * frozen state. EraseStateSpec's equality surface. */
   private[graft] def q263Index(spark: SparkSession, dir: String,
       m: Int = 8, k: Int = 16, iters: Int = 3, cells: Int = 10,
       modK: Long = 10L): DataFrame = {
-    import graft.queries.EmbeddingQueries.vecs
-    val isBase = pmod(col("vec_id"), lit(10L)) < 7L
     val st = pqStanding(spark, dir, m, k, iters, cells)
     val eV = ensurePqErased(spark, dir, m, k, iters, cells, modK)._2
     val (eModel, eCodebook, eCodes) = graft.core.DurableState
@@ -609,11 +544,7 @@ object Pq {
             table("codebook").localCheckpoint(),
             table("codes").localCheckpoint())
       }
-    val batch = encodeCodes(st.corpus.where(!isBase), eCodebook, m, st.sub)
-      .join(KMeans.assign(vecs(spark, dir).where(!isBase),
-          eModel.select(col("cluster"), col("centroid")))
-        .select(col("vec_id"), col("cluster").as("cell")),
-        Seq("vec_id"))
-    eCodes.unionByName(batch)
+    eCodes.unionByName(
+      st.ivf.copy(model = eModel, codebook = eCodebook).index(!isBase))
   }
 }

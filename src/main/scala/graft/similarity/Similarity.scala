@@ -138,25 +138,15 @@ object Similarity {
     ivfSearch(cells, centroids, k, nQueries)
   }
 
-  /** Per-label mean vectors via per-(label, dim) EXACT DECIMAL sums —
+  /** Per-label mean vectors (cell, centroid) through the shared exact
+    * update [[KMeans.groupMeans]]: per-(label, dim) decimal sums,
     * order-independent, so centroids are bit-stable under any
     * partitioning. (A collect_list fold of double additions is not: its
     * accumulation order follows task scheduling, and the run-to-run
-    * centroid jitter can flip nearest-cell assignments.) Also the
-    * KMeans.fit update shape — per-group state is one decimal per dim,
-    * never a whole collected array. */
+    * centroid jitter can flip nearest-cell assignments.) */
   private[graft] def labelCentroids(v: DataFrame): DataFrame =
-    v.select(col("label"), posexplode(col("v")))
-      .groupBy(col("label"), col("pos"))
-      .agg(
-        sum(col("col").cast(DecimalType(28, 14))).as("s"),
-        count(lit(1)).as("cnt"))
-      .groupBy(col("label"))
-      .agg(array_sort(collect_list(struct(
-        col("pos"),
-        (col("s").cast(DoubleType) / col("cnt")).as("m")))).as("dims"))
-      .select(col("label").as("cell"),
-        transform(col("dims"), d => d.getField("m")).as("centroid"))
+    KMeans.groupMeans(v, Seq("label"), "v", "centroid")
+      .withColumnRenamed("label", "cell")
 
   /** IVF over LEARNED cells: k-means centroids (similarity.KMeans) as the
     * coarse quantizer, corpus partitioned by its k-means assignment.

@@ -15,7 +15,7 @@ object Formats {
   def writeParquet(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").parquet(path)
   def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    graft.core.Tables.parquet(spark, path)
 
   def writeOrc(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").orc(path)
@@ -101,7 +101,7 @@ object Formats {
       // new graft_evo_* directory per process under tmpdir (ADVICE r10)
       Runtime.getRuntime.addShutdownHook(new Thread(() =>
         deleteRecursively(rootFile)))
-      val o = spark.read.parquet(s"$dir/orders.parquet")
+      val o = graft.core.Tables(spark, dir, "orders")
       o.where(year(col("o_orderdate")) < 1998)
         .select(col("o_orderkey"), col("o_totalprice"))
         .write.mode("overwrite").parquet(s"$root/gen=1")
@@ -111,6 +111,8 @@ object Formats {
         .write.mode("overwrite").parquet(s"$root/gen=2")
       root
     }
+    // mergeSchema: the generations' schemas differ, so every footer is
+    // read — the one-footer reader cannot give the merged schema
     spark.read.option("mergeSchema", "true")
       .parquet(s"$base/gen=1", s"$base/gen=2")
       .groupBy(coalesce(col("o_orderpriority"), lit("(pre-upgrade)"))

@@ -542,7 +542,7 @@ object EventStreams {
       // a crash mid-erase re-runs the same anti-joins.
       BatchStore.committedDirs(fpStorePath).foreach { d =>
         val tmp = d + "_erased_gen"
-        spark.read.parquet(d)
+        Tables.parquet(spark, d)
           .join(req, Seq("src_id"), "left_anti")
           .write.mode("overwrite").parquet(tmp)
         java.nio.file.Files.createFile(
@@ -640,6 +640,7 @@ object EventStreams {
     def read(spark: SparkSession, root: String): DataFrame = {
       val dirs = committedDirs(root)
       require(dirs.nonEmpty, s"batch store $root has no committed batches")
+      // many directories in one read: the footer reader takes one path
       spark.read.parquet(dirs: _*)
     }
 
@@ -653,6 +654,7 @@ object EventStreams {
       if (dirs.isEmpty)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      // many directories in one read: the footer reader takes one path
       else spark.read.parquet(dirs: _*)
     }
 

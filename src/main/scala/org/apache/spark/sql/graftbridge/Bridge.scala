@@ -145,29 +145,38 @@ object Bridge {
   def declareHashPartitioned(df: org.apache.spark.sql.Dataset[_],
       partCols: Seq[String], n: Int,
       sortCols: Seq[String] = Nil): org.apache.spark.sql.DataFrame = {
-    val classic = df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-    val spark = classic.sparkSession
-    classic.queryExecution.analyzed match {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        val attr = l.output.map(a => a.name -> a).toMap
-        val part = org.apache.spark.sql.catalyst.plans.physical
-          .HashPartitioning(partCols.map(attr(_)), n)
-        val ord = sortCols.map(c =>
-          org.apache.spark.sql.catalyst.expressions.SortOrder(attr(c),
-            org.apache.spark.sql.catalyst.expressions.Ascending))
-        // not l.copy: the curried (session, originStats, originConstraints)
-        // list is constructor-only — rebuild, carrying the EFFECTIVE stats
-        // and constraints through the public accessors so downstream size
-        // estimation (broadcast decisions) is unchanged
-        val rewrapped = new org.apache.spark.sql.execution.LogicalRDD(
-          l.output, l.rdd, part, ord, l.isStreaming, l.stream)(
-          spark, Some(l.stats), Some(l.constraints))
-        org.apache.spark.sql.classic.Dataset.ofRows(spark, rewrapped)
-      case other => throw new IllegalArgumentException(
-        "declareHashPartitioned expects a Dataset returned directly by " +
-          s"localCheckpoint(); got plan root ${other.nodeName}")
-    }
+    val l = directCheckpoint(df, "declareHashPartitioned")
+    val spark =
+      df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].sparkSession
+    val attr = l.output.map(a => a.name -> a).toMap
+    val part = org.apache.spark.sql.catalyst.plans.physical
+      .HashPartitioning(partCols.map(attr(_)), n)
+    val ord = sortCols.map(c =>
+      org.apache.spark.sql.catalyst.expressions.SortOrder(attr(c),
+        org.apache.spark.sql.catalyst.expressions.Ascending))
+    // not l.copy: the curried (session, originStats, originConstraints)
+    // list is constructor-only — rebuild, carrying the EFFECTIVE stats
+    // and constraints through the public accessors so downstream size
+    // estimation (broadcast decisions) is unchanged
+    val rewrapped = new org.apache.spark.sql.execution.LogicalRDD(
+      l.output, l.rdd, part, ord, l.isStreaming, l.stream)(
+      spark, Some(l.stats), Some(l.constraints))
+    org.apache.spark.sql.classic.Dataset.ofRows(spark, rewrapped)
   }
+
+  /** The checkpoint's LogicalRDD at the root of a Dataset returned
+    * DIRECTLY by `localCheckpoint()` — the argument contract of
+    * [[declareHashPartitioned]], [[unpersistLocalCheckpoint]] and
+    * [[pinnedBytes]]; any other plan root is rejected, naming `caller`. */
+  private def directCheckpoint(df: org.apache.spark.sql.Dataset[_],
+      caller: String): org.apache.spark.sql.execution.LogicalRDD =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
+      .queryExecution.analyzed match {
+        case l: org.apache.spark.sql.execution.LogicalRDD => l
+        case other => throw new IllegalArgumentException(
+          s"$caller expects a Dataset returned directly by " +
+            s"localCheckpoint(); got plan root ${other.nodeName}")
+      }
 
   /** Free the storage behind a `localCheckpoint()`ed Dataset. Iterative
     * algorithms (connected components, k-means) checkpoint every round;
@@ -183,30 +192,19 @@ object Bridge {
     * failure would surface later as an unrelated action dying on missing
     * blocks. */
   def unpersistLocalCheckpoint(df: org.apache.spark.sql.Dataset[_]): Unit =
-    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-      .queryExecution.analyzed match {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.rdd.unpersist(blocking = false)
-        case other => throw new IllegalArgumentException(
-          "unpersistLocalCheckpoint expects a Dataset returned directly by " +
-            s"localCheckpoint(); got plan root ${other.nodeName}")
-      }
+    directCheckpoint(df, "unpersistLocalCheckpoint").rdd
+      .unpersist(blocking = false)
 
   /** Bytes the block manager holds (memory + disk) for the storage
     * behind a `localCheckpoint()`ed Dataset — read from the context's
     * storage info, no job (the filtered `getRDDStorageInfo` is
     * `private[spark]`). Same argument contract as
     * [[unpersistLocalCheckpoint]]. */
-  def pinnedBytes(df: org.apache.spark.sql.Dataset[_]): Long =
-    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]
-      .queryExecution.analyzed match {
-        case l: org.apache.spark.sql.execution.LogicalRDD =>
-          l.rdd.sparkContext.getRDDStorageInfo(_.id == l.rdd.id)
-            .map(i => i.memSize + i.diskSize).sum
-        case other => throw new IllegalArgumentException(
-          "pinnedBytes expects a Dataset returned directly by " +
-            s"localCheckpoint(); got plan root ${other.nodeName}")
-      }
+  def pinnedBytes(df: org.apache.spark.sql.Dataset[_]): Long = {
+    val rdd = directCheckpoint(df, "pinnedBytes").rdd
+    rdd.sparkContext.getRDDStorageInfo(_.id == rdd.id)
+      .map(i => i.memSize + i.diskSize).sum
+  }
 
   /** Best-effort harness-side companion: free the frame's storage IFF its
     * plan root is a direct local checkpoint (queries like q66/q80/q103/

@@ -130,8 +130,10 @@ class EraseStateSpec extends AnyFunSuite {
   test("q222 erased-then-ingested index equals the monolithic encode of " +
       "the surviving corpus, with no residual erased ids") {
     graft.core.Pins.scope { pins =>
-      val merged = similarityIndex(pins, monolithic = false)
-      val mono = similarityIndex(pins, monolithic = true)
+      // the index the shipped q222 probes: the registry's standing index
+      // minus the erased ids, union the batch
+      val merged = graft.similarity.Pq.q222Index(spark, dir)
+      val mono = monolithicIndex(pins)
       val a = merged.collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getInt(3)))
         .toSet
@@ -153,10 +155,9 @@ class EraseStateSpec extends AnyFunSuite {
     } finally { B.unpersistLocalCheckpoint(l1); B.unpersistLocalCheckpoint(l2) }
   }
 
-  private def similarityIndex(pins: graft.core.Pins, monolithic: Boolean)
-      : DataFrame =
-    graft.similarity.Pq.q222Index(pins, spark, dir, monolithic = monolithic)
-      .standing
+  /** The reference's one-pass encode of the surviving corpus. */
+  private def monolithicIndex(pins: graft.core.Pins): DataFrame =
+    graft.similarity.Pq.q222MonolithicIndex(pins, spark, dir)._2
 
   // ---- q223: the rare-gram graph + LPA labels ----
 
@@ -397,7 +398,7 @@ class EraseStateSpec extends AnyFunSuite {
       "the monolithic one-pass encode of the surviving corpus") {
     val got = rows(graft.similarity.Pq.q263Index(spark, dir))
     val want = graft.core.Pins.scope(pins =>
-      rows(similarityIndex(pins, monolithic = true)))
+      rows(monolithicIndex(pins)))
     assert(got.nonEmpty && got == want,
       s"q263 index ${got.size} rows vs monolithic ${want.size}")
     assert(!got.exists(r => r.head.asInstanceOf[Long] % 10 == 0),
