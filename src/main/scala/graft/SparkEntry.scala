@@ -5591,15 +5591,19 @@ object SparkEntry {
     // match(POS) fragment for symbol list t and the b{k} scalars l, r
     def m(pos: String) =
       s"($pos < len(t) AND t[$pos] = l AND t[$pos + 1] = r)"
+    // rounds MATERIALIZED: each m_k reads the previous vocab alongside
+    // b_k's subtree (which reads it again) — inlined, the plan doubles
+    // per round (the q165 oracle's shape)
     def iter(k: Int): String = {
       val prev = s"r${k - 1}"
-      s"""p$k AS (SELECT l, r, SUM(cnt) AS n FROM (
+      s"""p$k AS MATERIALIZED (SELECT l, r, SUM(cnt) AS n FROM (
          |    SELECT cnt,
          |      unnest(list_transform(range(1, len(t)), i -> t[i])) AS l,
          |      unnest(list_transform(range(1, len(t)), i -> t[i + 1])) AS r
          |    FROM $prev)
          |  GROUP BY l, r),
-         |b$k AS (SELECT l, r, n FROM p$k ORDER BY n DESC, l, r LIMIT 1),
+         |b$k AS MATERIALIZED (SELECT l, r, n FROM p$k
+         |  ORDER BY n DESC, l, r LIMIT 1),
          |m$k AS (SELECT cnt, t,
          |    list_transform(range(1, len(t) + 1), i ->
          |      ${m("i")}
@@ -5607,7 +5611,7 @@ object SparkEntry {
          |        ELSE COALESCE(list_max(list_filter(range(1, i),
          |          j -> NOT ${m("j")})), 0) END) % 2 = 0)) AS mf
          |  FROM $prev, b$k),
-         |r$k AS (SELECT cnt,
+         |r$k AS MATERIALIZED (SELECT cnt,
          |    list_filter(list_transform(range(1, len(t) + 1), i ->
          |      CASE WHEN mf[i] THEN l || r
          |           WHEN i > 1 AND mf[i - 1] THEN NULL
@@ -5624,7 +5628,7 @@ object SparkEntry {
     }.mkString("\nUNION ALL\n")
     s"""WITH $augWordsSql,
        |v0 AS (SELECT word, COUNT(*) AS cnt FROM aw GROUP BY word),
-       |r0 AS (SELECT cnt, string_split(word, '') AS t FROM v0),
+       |r0 AS MATERIALIZED (SELECT cnt, string_split(word, '') AS t FROM v0),
        |$chains
        |$unions
        |ORDER BY rank""".stripMargin
@@ -6304,17 +6308,21 @@ object SparkEntry {
     * renormalization `x DIV max(1, S DIV 1e12)` — identical arithmetic
     * to the engine at any partitioning. */
   private def hitsOracleSql: String = {
+    // half-rounds MATERIALIZED: each score reads its raw sums twice
+    // (values and L1 total) — inlined, the plan doubles per half-round
     val rounds = (1 to 4).map { i =>
       val ph = if (i == 1) "h0" else s"h${i - 1}"
-      s"""ar$i AS (SELECT e.p, SUM(h.h) AS s
+      s"""ar$i AS MATERIALIZED (SELECT e.p, SUM(h.h) AS s
          |  FROM e JOIN $ph h ON e.c = h.c GROUP BY e.p),
          |at$i AS (SELECT SUM(s) AS t FROM ar$i),
-         |a$i AS (SELECT p, s // GREATEST(1, t // 1000000000000) AS a
+         |a$i AS MATERIALIZED (SELECT p,
+         |  s // GREATEST(1, t // 1000000000000) AS a
          |  FROM ar$i, at$i),
-         |hr$i AS (SELECT e.c, SUM(a.a) AS s
+         |hr$i AS MATERIALIZED (SELECT e.c, SUM(a.a) AS s
          |  FROM e JOIN a$i a ON e.p = a.p GROUP BY e.c),
          |ht$i AS (SELECT SUM(s) AS t FROM hr$i),
-         |h$i AS (SELECT c, s // GREATEST(1, t // 1000000000000) AS h
+         |h$i AS MATERIALIZED (SELECT c,
+         |  s // GREATEST(1, t // 1000000000000) AS h
          |  FROM hr$i, ht$i)""".stripMargin
     }.mkString(",\n")
     s"""WITH e AS (SELECT DISTINCT o.o_custkey AS c, l.l_partkey AS p

@@ -30,12 +30,18 @@ object Dedup {
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_set(col("word"))).as("words"))
 
-  /** Canonical-content fingerprint dedup: md5 of the sorted distinct word
-    * set. One narrow shuffle on a 32-byte key; finds reordered copies that
-    * byte-exact dedup misses. */
-  def fingerprintDups(spark: SparkSession, dir: String): DataFrame =
+  /** Per-doc canonical-content fingerprint `(doc_id, fp)`: md5 of the
+    * sorted distinct word set — the one fingerprint every exact-dedup
+    * probe, curation keeper and fp-store ledger keys on. */
+  def fingerprints(spark: SparkSession, dir: String): DataFrame =
     wordSets(spark, dir)
       .select(col("doc_id"), md5(array_join(col("words"), " ")).as("fp"))
+
+  /** Canonical-content fingerprint dedup over [[fingerprints]]. One
+    * narrow shuffle on a 32-byte key; finds reordered copies that
+    * byte-exact dedup misses. */
+  def fingerprintDups(spark: SparkSession, dir: String): DataFrame =
+    fingerprints(spark, dir)
       .groupBy(col("fp"))
       .agg(
         count(lit(1)).as("n_docs"),
@@ -64,8 +70,7 @@ object Dedup {
     * corpus — which is the irreducible cost of exact incremental dedup. */
   def q90(spark: SparkSession, dir: String,
           mod: Int = 10, lt: Int = 7): DataFrame = {
-    val fp = wordSets(spark, dir)
-      .select(col("doc_id"), md5(array_join(col("words"), " ")).as("fp"))
+    val fp = fingerprints(spark, dir)
     val corpus = fp.where(col("doc_id") % mod < lt)
       .select(col("fp")).distinct()
       .withColumn("in_corpus", lit(1))
@@ -108,8 +113,7 @@ object Dedup {
   def q109(spark: SparkSession, dir: String,
            mod: Int = 10, lt: Int = 7): DataFrame = {
     import org.apache.spark.sql.graftbridge.Bridge
-    val fp = wordSets(spark, dir)
-      .select(col("doc_id"), md5(array_join(col("words"), " ")).as("fp"))
+    val fp = fingerprints(spark, dir)
     val corpus = fp.where(col("doc_id") % mod < lt)
       .select(col("fp")).distinct()
     val bloom = corpus.agg(

@@ -569,8 +569,7 @@ object Curation {
   private def curatedCounts(spark: SparkSession, dir: String,
                             benchMod: Int): DataFrame = {
     val docs = Tables(spark, dir, "documents")
-    val keepers = Dedup.wordSets(spark, dir)
-      .select(col("doc_id"), md5(array_join(col("words"), " ")).as("fp"))
+    val keepers = Dedup.fingerprints(spark, dir)
       .groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"))
     // ONE benchMod drives both the slice exclusion below and the
@@ -942,8 +941,7 @@ object Curation {
                          benchMod: Int, mod: Int, lt: Int): DataFrame = {
     import org.apache.spark.sql.graftbridge.Bridge
     val docs = Tables(spark, dir, "documents")
-    val fp = Dedup.wordSets(spark, dir)
-      .select(col("doc_id"), md5(array_join(col("words"), " ")).as("fp"))
+    val fp = Dedup.fingerprints(spark, dir)
     val corpusFp = fp.where(col("doc_id") % mod < lt)
       .select(col("fp")).distinct()
     val incomingFp = fp.where(col("doc_id") % mod >= lt)
@@ -982,8 +980,7 @@ object Curation {
   def q44(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables(spark, dir, "documents")
 
-    val fp = Dedup.wordSets(spark, dir)
-      .select(col("doc_id"), md5(array_join(col("words"), " ")).as("fp"))
+    val fp = Dedup.fingerprints(spark, dir)
     val keep = fp
       .withColumn("rn",
         row_number().over(Window.partitionBy(col("fp")).orderBy(col("doc_id"))))

@@ -58,6 +58,28 @@ object Erasure {
   private[queries] def isErased(c: Column, modK: Long): Column =
     pmod(c, lit(modK)) === 0L
 
+  /** ERASE for every keyed standing table: drop the subjects' rows by a
+    * broadcast anti-join on `key` — surviving rows are untouched, so the
+    * erased table is the one a from-scratch build over the erased corpus
+    * writes (the fp ledger, the band index, the graph postings and
+    * labels). */
+  private def eraseRows(state: DataFrame, subjects: DataFrame,
+      key: String = "doc_id"): DataFrame =
+    state.join(broadcast(subjects), Seq(key), "left_anti")
+
+  // ---- fp store: derivation, request, serve ----
+
+  /** The fp kind's standing table: the holder-keyed (doc_id, fp) ledger
+    * of the base corpus (doc_id % mod < lt). */
+  private def fpLedger(spark: SparkSession, dir: String, mod: Int, lt: Int)
+      : DataFrame =
+    Dedup.fingerprints(spark, dir).where(col("doc_id") % mod < lt)
+
+  /** The request's subjects in an fp ledger — one ledger row per doc, so
+    * the id list needs no distinct. */
+  private def fpSubjects(ledger: DataFrame, modK: Long): DataFrame =
+    ledger.where(isErased(col("doc_id"), modK)).select(col("doc_id"))
+
   /** q220 — ERASE FROM THE STANDING FINGERPRINT STORE, then ingest.
     * The standing state is the holder-keyed (doc_id, fp) ledger of the
     * base corpus (doc_id % 10 < 7). The erasure request (base ids ≡ 0
@@ -80,15 +102,10 @@ object Erasure {
     * the erasure itself is a broadcast anti-join on the request. */
   def q220(spark: SparkSession, dir: String, mod: Int = 10, lt: Int = 7,
            modK: Long = 10L): DataFrame = Pins.result { pins =>
-    val fp = Dedup.wordSets(spark, dir)
-      .select(col("doc_id"), md5(array_join(col("words"), " ")).as("fp"))
     // the standing HOLDER-KEYED store — pinned, as a deployment persists it
-    val ledger = pins.pin(fp.where(col("doc_id") % mod < lt))
-    val erased = ledger.where(isErased(col("doc_id"), modK))
-      .select(col("doc_id"))
-    q220Serve(ledger,
-      ledger.join(broadcast(erased), Seq("doc_id"), "left_anti"),
-      fp, mod, lt)
+    val ledger = pins.pin(fpLedger(spark, dir, mod, lt))
+    q220Serve(ledger, eraseRows(ledger, fpSubjects(ledger, modK)),
+      Dedup.fingerprints(spark, dir), mod, lt)
   }
 
   /** q220's ingest labeling against EXPLICIT pre/post store frames —
@@ -138,71 +155,86 @@ object Erasure {
   def q221(spark: SparkSession, dir: String, mod: Int = 10, lt: Int = 7,
            modK: Long = 10L, exactThreshold: Double = 0.7): DataFrame =
     Pins.result { pins =>
-      val isCorpus = col("doc_id") % mod < lt
-      val sets = Dedup.shingleHashes(spark, dir)
-      val banded = Dedup.bandedSignatures(Dedup.minhashSignatures(sets))
       // the standing bucket table a deployment persists between ingests
-      val corpusBands = pins.pin(banded.where(isCorpus))
-      q221From(spark, dir, sets, banded, corpusBands, mod, lt, modK,
-        exactThreshold)
+      val corpusBands = pins.pin(bandsOf(spark, dir, col("doc_id") % mod < lt))
+      q221Serve(spark, dir, corpusBands, bandSubjects(corpusBands, modK),
+        mod, lt, exactThreshold)
     }
 
-  private def q221From(spark: SparkSession, dir: String, sets: DataFrame,
-      banded: DataFrame, corpusBands: DataFrame, mod: Int, lt: Int,
-      modK: Long, exactThreshold: Double): DataFrame = {
+  // ---- banded index: derivation, request, serve ----
+
+  /** The band kind's bucket rows (band, bh, doc_id) — q106's banded
+    * minhash — over the docs `keep` selects: the standing index is the
+    * base slice, the ingest batch the rest. */
+  private def bandsOf(spark: SparkSession, dir: String, keep: Column)
+      : DataFrame =
+    Dedup.bandedSignatures(Dedup.minhashSignatures(
+      Dedup.shingleHashes(spark, dir))).where(keep)
+
+  /** The request's subjects in a band index (32 rows per doc). */
+  private def bandSubjects(bands: DataFrame, modK: Long): DataFrame =
+    bands.select(col("doc_id")).distinct()
+      .where(isErased(col("doc_id"), modK))
+
+  /** q221's ingest labeling against the PRE-erasure index `preBands` and
+    * the `erased` doc ids — the serve step q221 (in-memory erase) and
+    * q261 (the reloaded durable spills) share. One bucket-keyed probe of
+    * the pre-erasure index prices both faces: the post-erasure matches
+    * are the verified pairs whose corpus side is not erased, because
+    * candidates are per-(doc, doc) facts. */
+  private def q221Serve(spark: SparkSession, dir: String,
+      preBands: DataFrame, erased: DataFrame, mod: Int, lt: Int,
+      exactThreshold: Double): DataFrame = {
     val isCorpus = col("doc_id") % mod < lt
-    val erased = corpusBands.select(col("doc_id")).distinct()
-        .where(isErased(col("doc_id"), modK))
-      val inBands = banded.where(!isCorpus)
-      // exact per-candidate verify keeping BOTH endpoints
-      def verifiedPairs(cand: DataFrame): DataFrame =
-        cand
-          .join(sets.select(col("doc_id").as("in_id"), col("items").as("i1")),
-            Seq("in_id"))
-          .join(sets.select(col("doc_id").as("other_id"), col("items").as("i2")),
-            Seq("other_id"))
-          .select(col("in_id"), col("other_id"),
-            size(array_intersect(col("i1"), col("i2"))).as("inter"),
-            size(col("i1")).as("n1"), size(col("i2")).as("n2"))
-          .where(round(col("inter").cast(DoubleType) /
-            (col("n1") + col("n2") - col("inter")), 4) >= exactThreshold)
-          .select(col("in_id"), col("other_id"))
-      val candCorpus = inBands
-        .select(col("band"), col("bh"), col("doc_id").as("in_id"))
-        .join(corpusBands.select(col("band"), col("bh"),
-          col("doc_id").as("other_id")), Seq("band", "bh"))
-        .select(col("in_id"), col("other_id")).distinct()
-      val vCorpus = verifiedPairs(candCorpus)
-      val dupPre = vCorpus.select(col("in_id")).distinct()
-        .withColumn("pc_pre", lit(1))
-      val dupPost = vCorpus
-        .join(broadcast(erased.select(col("doc_id").as("other_id"))),
-          Seq("other_id"), "left_anti")
-        .select(col("in_id")).distinct()
-        .withColumn("pc_post", lit(1))
-      val candBatch = inBands
-        .select(col("band"), col("bh"), col("doc_id").as("in_id"))
-        .join(inBands.select(col("band"), col("bh"),
-          col("doc_id").as("other_id")), Seq("band", "bh"))
-        .where(col("other_id") < col("in_id"))
-        .select(col("in_id"), col("other_id")).distinct()
-      val dupBatch = verifiedPairs(candBatch)
-        .select(col("in_id")).distinct().withColumn("db", lit(1))
-      Tables(spark, dir, "documents")
-        .where(!isCorpus)
-        .select(col("doc_id").cast(LongType))
-        .join(dupPost.withColumnRenamed("in_id", "doc_id"),
-          Seq("doc_id"), "left_outer")
-        .join(dupPre.withColumnRenamed("in_id", "doc_id"),
-          Seq("doc_id"), "left_outer")
-        .join(dupBatch.withColumnRenamed("in_id", "doc_id"),
-          Seq("doc_id"), "left_outer")
-        .select(col("doc_id"),
-          when(col("pc_post").isNotNull, "neardup_corpus")
-            .when(col("db").isNotNull, "neardup_batch")
-            .otherwise("new").as("status"),
-          (col("pc_pre").isNotNull && col("pc_post").isNull).as("freed"))
-        .orderBy(col("doc_id"))
+    val sets = Dedup.shingleHashes(spark, dir)
+    val inBands = bandsOf(spark, dir, !isCorpus)
+    // exact per-candidate verify keeping BOTH endpoints
+    def verifiedPairs(cand: DataFrame): DataFrame =
+      cand
+        .join(sets.select(col("doc_id").as("in_id"), col("items").as("i1")),
+          Seq("in_id"))
+        .join(sets.select(col("doc_id").as("other_id"),
+          col("items").as("i2")), Seq("other_id"))
+        .select(col("in_id"), col("other_id"),
+          size(array_intersect(col("i1"), col("i2"))).as("inter"),
+          size(col("i1")).as("n1"), size(col("i2")).as("n2"))
+        .where(round(col("inter").cast(DoubleType) /
+          (col("n1") + col("n2") - col("inter")), 4) >= exactThreshold)
+        .select(col("in_id"), col("other_id"))
+    val candCorpus = inBands
+      .select(col("band"), col("bh"), col("doc_id").as("in_id"))
+      .join(preBands.select(col("band"), col("bh"),
+        col("doc_id").as("other_id")), Seq("band", "bh"))
+      .select(col("in_id"), col("other_id")).distinct()
+    // both faces from ONE aggregate over the verified pairs: an
+    // anti-join here would be pushed below the verify and the probe,
+    // planning a second probe of the index minus the erased docs
+    val dupCorpus = verifiedPairs(candCorpus)
+      .join(broadcast(erased.select(col("doc_id").as("other_id"))
+        .withColumn("gone", lit(1))), Seq("other_id"), "left_outer")
+      .groupBy(col("in_id").as("doc_id"))
+      .agg(lit(1).as("pc_pre"),
+        max(when(col("gone").isNull, lit(1))).as("pc_post"))
+    val candBatch = inBands
+      .select(col("band"), col("bh"), col("doc_id").as("in_id"))
+      .join(inBands.select(col("band"), col("bh"),
+        col("doc_id").as("other_id")), Seq("band", "bh"))
+      .where(col("other_id") < col("in_id"))
+      .select(col("in_id"), col("other_id")).distinct()
+    val dupBatch = verifiedPairs(candBatch)
+      .select(col("in_id")).distinct().withColumn("db", lit(1))
+    Tables(spark, dir, "documents")
+      .where(!isCorpus)
+      .select(col("doc_id").cast(LongType))
+      .join(dupCorpus, Seq("doc_id"), "left_outer")
+      .join(dupBatch.withColumnRenamed("in_id", "doc_id"),
+        Seq("doc_id"), "left_outer")
+      .select(col("doc_id"),
+        when(col("pc_post").isNotNull, "neardup_corpus")
+          .when(col("db").isNotNull, "neardup_batch")
+          .otherwise("new").as("status"),
+        (col("pc_pre").isNotNull && col("pc_post").isNull).as("freed"))
+      .orderBy(col("doc_id"))
   }
 
   /** The ERASURE Δ of the standing rare-gram pair state — the exact
@@ -234,8 +266,7 @@ object Erasure {
       dfBase: DataFrame, basePairs: DataFrame, erased: DataFrame,
       maxDf: Int, minShared: Int, pin: DataFrame => DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
-    val ePost = pin(basePost
-      .join(broadcast(erased), Seq("doc_id"), "left_anti"))
+    val ePost = pin(eraseRows(basePost, erased))
     val touched = basePost
       .join(broadcast(erased), Seq("doc_id"), "left_semi")
       .groupBy(col("gram")).agg(count(lit(1)).as("n_gone"))
@@ -281,20 +312,49 @@ object Erasure {
     (ePost, eDf, ePairs)
   }
 
+  // ---- rare-gram graph + LPA labels: request, erase ----
+
+  /** The graph kind's request: the base docs (doc_id % 10 < 7) whose id
+    * is ≡ 0 mod `modK`, read off the corpus (an erased doc may hold no
+    * posting). Callers pin it: every erase step broadcasts it. */
+  private def graphSubjects(spark: SparkSession, dir: String, modK: Long)
+      : DataFrame =
+    Tables(spark, dir, "documents")
+      .where(col("doc_id") % 10 < 7 && isErased(col("doc_id"), modK))
+      .select(col("doc_id"))
+
+  /** ERASE for the graph kind: [[eraseStandingPairs]]'s Δ (postings, df,
+    * pairs, materialized by `pin`), then the standing labels drop erased
+    * rows and survivors whose community label IS an erased doc relabel
+    * to self — no erased id persists anywhere in the standing state (the
+    * residual rule every artifact obeys after q180). Returns (postings,
+    * df, pairs, labels); the labels stay un-pinned (read once). */
+  private def eraseGraph(basePost: DataFrame, dfBase: DataFrame,
+      basePairs: DataFrame, baseLabels: DataFrame, erased: DataFrame,
+      maxDf: Int, minShared: Int, pin: DataFrame => DataFrame)
+      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+    val (ePost, eDf, ePairs) = eraseStandingPairs(basePost, dfBase,
+      basePairs, erased, maxDf, minShared, pin)
+    val eLabels = eraseRows(baseLabels, erased)
+      .join(broadcast(erased.select(col("doc_id").as("label"))
+        .withColumn("lbl_gone", lit(1))), Seq("label"), "left_outer")
+      .select(col("doc_id"),
+        when(col("lbl_gone").isNotNull, col("doc_id"))
+          .otherwise(col("label")).as("label"))
+    (ePost, eDf, ePairs, eLabels)
+  }
+
   /** q223 — ERASE FROM THE STANDING GRAPH + LPA LABELS, then ingest.
     * q218's standing state (pinned posting index, gram df, pair list,
     * converged communities over the base corpus) serves an erasure
     * request, then the NEXT batch arrives — both legs request/batch-
     * scale, never a corpus re-scan:
     *
-    *  1. erasure: [[eraseStandingPairs]] assembles the post-erasure
-    *     graph addition-only (df shrinks → edges can APPEAR between
+    *  1. erasure: [[eraseGraph]] assembles the post-erasure graph
+    *     addition-only (df shrinks → edges can APPEAR between
     *     survivors — the mirror of the ingest Δ, non-vacuous on this
-    *     fixture at maxDf=3/modK=7 and asserted in EraseStateSpec);
-    *     standing labels drop erased rows, and survivors whose
-    *     community label IS an erased doc relabel to self — no erased
-    *     id persists anywhere in the standing state (the residual rule
-    *     every artifact obeys after q180);
+    *     fixture at maxDf=3/modK=7 and asserted in EraseStateSpec) and
+    *     relabels the standing communities off the erased ids;
     *  2. ingest: the q218 leg verbatim — [[GraphRank.deltaFullPairs]]
     *     over the ERASED standing state, warm start from the erased
     *     labels, `incrRounds` synchronous rounds.
@@ -311,7 +371,6 @@ object Erasure {
   def q223(spark: SparkSession, dir: String, baseRounds: Int = 5,
            incrRounds: Int = 3, maxDf: Int = 3, minShared: Int = 3,
            modK: Long = 7L): DataFrame = Pins.scope { pins =>
-    val base = Tables(spark, dir, "documents").where(col("doc_id") % 10 < 7)
     // ---- standing state (persists between ingests; the q218 shape,
     //      process-pinned via the StandingState registry — never freed) ----
     val (basePost, dfBase, basePairs) =
@@ -319,18 +378,9 @@ object Erasure {
     val baseLabels =
       GraphRank.lpaStanding(spark, dir, baseRounds, maxDf, minShared)
     // ---- the erasure round (request-scale) ----
-    val erased = pins.pin(base.select(col("doc_id"))
-      .where(isErased(col("doc_id"), modK)))
-    val (ePost, eDf, ePairs) =
-      eraseStandingPairs(basePost, dfBase, basePairs, erased, maxDf,
-        minShared, pins.pin)
-    val eLabels = baseLabels
-      .join(broadcast(erased), Seq("doc_id"), "left_anti")
-      .join(broadcast(erased.select(col("doc_id").as("label"))
-        .withColumn("lbl_gone", lit(1))), Seq("label"), "left_outer")
-      .select(col("doc_id"),
-        when(col("lbl_gone").isNotNull, col("doc_id"))
-          .otherwise(col("label")).as("label"))
+    val (ePost, eDf, ePairs, eLabels) = eraseGraph(basePost, dfBase,
+      basePairs, baseLabels, pins.pin(graphSubjects(spark, dir, modK)),
+      maxDf, minShared, pins.pin)
     // ---- the next ingest over the ERASED state (the q218 leg; the
     //      erasure pins above live until its result materializes) ----
     GraphRank.lpaIngestFrom(spark, dir, ePost, eDf, ePairs, eLabels,
@@ -349,7 +399,9 @@ object Erasure {
     *    cap²/2 per erased customer, the q241 structural bound);
     *  - co_erased = co_base − dec; pairs falling to 0 DISAPPEAR from
     *    the standing state (their co-evidence is fully forgotten);
-    *  - the basket table drops the subjects' rows (broadcast anti).
+    *  - the basket table drops the subjects' rows (a map-side filter).
+    *
+    * [[Recommend.erasedCf]] is that erase, shared with q259 and q265.
     *
     * Then the NEXT batch ingests against the ERASED state — q244's leg
     * verbatim ([[Recommend.ingestLedger]]), which yields the CF tier's
@@ -370,28 +422,13 @@ object Erasure {
     //      face) — never freed here ----
     val (base, coBase) = Recommend.cfStanding(spark, dir, cap)
     // ---- the erasure round (request-scale) ----
-    val erased = base.select(col("c")).distinct()
-      .where(isErased(col("c"), modK))
-    val dec = Recommend.coMatrixOf(
-      base.join(broadcast(erased), Seq("c"), "left_semi"), "dec")
+    val (eBase, dec, coE) =
+      Recommend.erasedCf(base, coBase, isErased(col("c"), modK))
     val eTouched = pins.own(B.checkpointPartitioned(
       coBase.join(dec, Seq("p1", "p2"))
         .select(col("p1"), col("p2"), col("co_base").as("eb"),
           (col("co_base") - col("dec")).as("ee")),
       Seq("p1", "p2"), Seq("p1", "p2")))
-    // the erased standing state the ingest runs against — eBase stays
-    // an UN-pinned broadcast-anti filter over the pinned base scan
-    // (each of its three consumers re-runs a map-side filter, cheaper
-    // than materializing a corpus-scale copy per erasure request)
-    val eBase = base.join(broadcast(erased), Seq("c"), "left_anti")
-    // ONE pair-keyed left join in place of the former
-    // touched-branch ∪ untouched-anti-branch union (r13): identical
-    // rows — a touched pair keeps co−dec when > 0 (dec ≤ co by
-    // construction), an untouched pair keeps co — but the join
-    // PRESERVES the standing co matrix's declared (p1, p2) layout,
-    // which a Union discards, so the ingest's ledger merge downstream
-    // plans exchange-free on this side
-    val coE = Recommend.decrementedCo(coBase, dec)
     // ---- the next ingest over the ERASED state (q244's leg) ----
     val ingest = Recommend.ingestLedger(pins, spark, dir, eBase, coE, cap)
     eTouched
@@ -410,8 +447,8 @@ object Erasure {
     * served against the SPILLED state itself — the lifecycle face q248
     * (in-memory decrement) and q247/q250 (spill/reload/chain) meet at.
     * The request: (1) reloads the committed CF spill, (2) applies the
-    * q248 decrement REQUEST-SCALE (subject rows dropped by broadcast
-    * anti; co counts decremented by the erased baskets' own pairs;
+    * q248 decrement REQUEST-SCALE ([[Recommend.erasedCf]]: subject rows
+    * dropped; co counts decremented by the erased baskets' own pairs;
     * pairs at 0 disappear), and (3) RE-COMMITS the erased state as the
     * next version under [[graft.core.DurableState]]'s marker protocol —
     * so a crash mid-erasure leaves the pre-erasure version intact and
@@ -440,18 +477,15 @@ object Erasure {
   private[graft] def ensureCfErased(spark: SparkSession, dir: String,
       cap: Int, modK: Long): Long = {
     val store = graft.core.DurableState.Store(spark, dir)
-    store.spillOnce(s"cf${cap}erased$modK") { pins =>
+    store.spillOnce(s"cf${cap}erased$modK") { _ =>
       // serve the request against the RELOADED spill, once per process
       val v0 = Recommend.ensureCfSpilled(spark, dir, cap)
-      val base = store.load(s"cf$cap", v0, "basket")
-      val coBase = store.load(s"cf$cap", v0, "co")
-      val erased = pins.pin(base.select(col("c")).distinct()
-        .where(isErased(col("c"), modK)))
+      val (eBase, _, eCo) = Recommend.erasedCf(
+        store.load(s"cf$cap", v0, "basket"), store.load(s"cf$cap", v0, "co"),
+        isErased(col("c"), modK))
       // atomic publish: the erased state becomes the next committed
       // version; a reader never sees a half-erased spill
-      Seq("basket" -> base.join(broadcast(erased), Seq("c"), "left_anti"),
-        "co" -> Recommend.decrementedCo(coBase, Recommend.coMatrixOf(
-          base.join(broadcast(erased), Seq("c"), "left_semi"), "dec")))
+      Seq("basket" -> eBase, "co" -> eCo)
     }
   }
 
@@ -485,16 +519,20 @@ object Erasure {
           cols.tail.zipWithIndex.map { case (c, i) => c.as(s"c${i + 1}") }: _*)
         .select(explode(array(
           (0 until cols.size).map(i => col(s"c$i")): _*)).as("r"))
+    // the subjects' rows still in a state after its erase — must be 0
+    def residual(kind: String, state: DataFrame, subjects: DataFrame,
+        key: String): DataFrame =
+      rows(eraseRows(state, subjects, key)
+          .join(broadcast(subjects), Seq(key), "left_semi"),
+        row(kind, "residual_subject_rows", count(lit(1))))
 
     // ---- fp store (q220: holder-keyed ledger, erased = base ids % 10 == 0)
     // the corpus-derived ledger is PINNED for the invocation (r13: its
-    // wordSets+md5 derivation fed three branches — the row metrics, the
+    // fingerprint derivation fed three branches — the row metrics, the
     // erased-id broadcast and the residual probe — so the corpus was
     // tokenized three times per certificate; one materialization now
     // feeds all three, freed with the result like every other pin)
-    val fp = Dedup.wordSets(spark, dir)
-      .select(col("doc_id"), md5(array_join(col("words"), " ")).as("fp"))
-    val ledger = pins.pin(fp.where(col("doc_id") % 10 < 7))
+    val ledger = pins.pin(fpLedger(spark, dir, 10, 7))
     val er10 = isErased(col("doc_id"), 10L)
     // row metrics and holder kinds fused into ONE aggregate over the
     // holder rollup (r13): rows_before = Σ(gone+kept) — count(*) of the
@@ -511,35 +549,25 @@ object Erasure {
         sum(when(col("gone") > 0 && col("kept") === 0, 1L).otherwise(0L))),
       row("fp_store", "fps_retained_shared",
         sum(when(col("gone") > 0 && col("kept") > 0, 1L).otherwise(0L))))
-    val erasedDocs = ledger.where(er10).select(col("doc_id")).distinct()
-    val fpResidual = rows(
-      ledger.join(broadcast(erasedDocs), Seq("doc_id"), "left_anti")
-        .join(broadcast(erasedDocs), Seq("doc_id"), "left_semi"),
-      row("fp_store", "residual_subject_rows", count(lit(1))))
+    val fpResidual =
+      residual("fp_store", ledger, fpSubjects(ledger, 10L), "doc_id")
 
     // ---- banded near-dup index (q221: 32 band rows per corpus doc) —
     // pinned for the invocation like the ledger (r13: the minhash
     // pipeline fed the row metrics, the erased-id broadcast and the
     // residual probe — three corpus-scale recomputes per certificate)
-    val bands = pins.pin(Dedup.bandedSignatures(
-        Dedup.minhashSignatures(Dedup.shingleHashes(spark, dir)))
-      .where(col("doc_id") % 10 < 7))
+    val bands = pins.pin(bandsOf(spark, dir, col("doc_id") % 10 < 7))
     val bandRows = rows(bands.select(er10.as("e")),
       row("band_index", "rows_before", count(lit(1))),
       row("band_index", "rows_removed", sum(when(col("e"), 1L).otherwise(0L))),
       row("band_index", "rows_after", sum(when(col("e"), 0L).otherwise(1L))))
-    val erasedBandDocs = bands.where(er10).select(col("doc_id")).distinct()
-    val bandResidual = rows(
-      bands.join(broadcast(erasedBandDocs), Seq("doc_id"), "left_anti")
-        .join(broadcast(erasedBandDocs), Seq("doc_id"), "left_semi"),
-      row("band_index", "residual_subject_rows", count(lit(1))))
+    val bandResidual =
+      residual("band_index", bands, bandSubjects(bands, 10L), "doc_id")
 
     // ---- rare-gram graph (q223: maxDf=3, minShared=3, modK=7)
     val (basePost, dfBase, basePairs) =
       GraphRank.graphStanding(spark, dir, 3, 3)
-    val erased7 = pins.pin(Tables(spark, dir, "documents")
-      .where(col("doc_id") % 10 < 7 && isErased(col("doc_id"), 7L))
-      .select(col("doc_id")))
+    val erased7 = pins.pin(graphSubjects(spark, dir, 7L))
     // the certificate derives the erased-graph Δ PER INVOCATION (r14:
     // the r13 registry promotion of this Δ was adjudicated memoization —
     // deriving it IS part of the audit's declared work); the pins are
@@ -587,12 +615,9 @@ object Erasure {
           sum(when(col("e"), 0L).otherwise(1L))))
       // co from the REGISTRY matrix (pinned once per process — no
       // per-invocation pair rebuild); dec from the erased baskets only
-      // (request-scale self-join), folded in by a pair-keyed left join
-      val cfEBasket = cfBase.where(erC)
-      val cfDec = cfEBasket.as("a").join(cfEBasket.as("b"),
-          col("a.c") === col("b.c") && col("a.p") < col("b.p"))
-        .groupBy(col("a.p").as("p1"), col("b.p").as("p2"))
-        .agg(count(lit(1)).as("dec"))
+      // (the CF erase's request-scale self-join), folded in by a
+      // pair-keyed left join
+      val (_, cfDec, _) = Recommend.erasedCf(cfBase, cfCoBase, erC)
       val cfCo = cfCoBase
         .join(cfDec, Seq("p1", "p2"), "left_outer")
         .select(col("co_base").as("co"),
@@ -606,11 +631,8 @@ object Erasure {
             .otherwise(0L))),
         row("cf_state", "pairs_after",
           sum(when(col("dec") < col("co"), 1L).otherwise(0L))))
-      val erasedCust = cfBase.where(erC).select(col("c")).distinct()
-      val cfResidual = rows(
-        cfBase.join(broadcast(erasedCust), Seq("c"), "left_anti")
-          .join(broadcast(erasedCust), Seq("c"), "left_semi"),
-        row("cf_state", "residual_subject_rows", count(lit(1))))
+      val cfResidual = residual("cf_state", cfBase,
+        cfBase.where(erC).select(col("c")).distinct(), "c")
 
       // ---- IVF-PQ codes (q222: m rows per indexed vector)
       val st = graft.similarity.Pq.pqStanding(spark, dir, m, k, iters,
@@ -622,12 +644,8 @@ object Erasure {
           sum(when(col("e"), 1L).otherwise(0L))),
         row("ivfpq_codes", "rows_after",
           sum(when(col("e"), 0L).otherwise(1L))))
-      val erasedVecs = st.standing.where(erv).select(col("vec_id"))
-        .distinct()
-      val pqResidual = rows(
-        st.standing.join(broadcast(erasedVecs), Seq("vec_id"), "left_anti")
-          .join(broadcast(erasedVecs), Seq("vec_id"), "left_semi"),
-        row("ivfpq_codes", "residual_subject_rows", count(lit(1))))
+      val pqResidual = residual("ivfpq_codes", st.standing,
+        st.standing.where(erv).select(col("vec_id")).distinct(), "vec_id")
 
       fpRows.unionByName(fpResidual)
         .unionByName(bandRows).unionByName(bandResidual)
@@ -654,9 +672,10 @@ object Erasure {
   //      re-commits the erased state as the next marker-committed
   //      version (atomic publish: a crash mid-erasure leaves the
   //      pre-erasure version readable; never in-place mutation),
-  //   3. serves the NEXT INGEST from a fresh scan of the ERASED spill
-  //      (the restart face — no lineage back to any builder).
-  // Outputs equal the in-memory erasure queries' (q220/q221/q223) —
+  //   3. serves the NEXT INGEST from fresh scans of the committed
+  //      spills (the restart face — no lineage back to any builder).
+  // Each kind derives, erases and serves through the same builders as
+  // its in-memory query, so outputs equal q220/q221/q223's —
   // restart ≡ continuous, so the same oracles apply; EraseStateSpec
   // binds each reloaded erased spill to the from-scratch erased state.
   // (q263, the IVF-PQ kind, lives in similarity/Pq.scala with its
@@ -679,11 +698,10 @@ object Erasure {
   def q260(spark: SparkSession, dir: String, mod: Int = 10, lt: Int = 7,
            modK: Long = 10L): DataFrame = {
     val (v0, eV) = ensureFpErased(spark, dir, mod, lt, modK)
-    val fpAll = Dedup.wordSets(spark, dir)
-      .select(col("doc_id"), md5(array_join(col("words"), " ")).as("fp"))
     val pre = reloadedTable(spark, dir, "fpstore", v0, "ledger")
     val post = reloadedTable(spark, dir, s"fpstore-erased$modK", eV, "ledger")
-    q220Serve(pre, post, fpAll, mod, lt).localCheckpoint()
+    q220Serve(pre, post, Dedup.fingerprints(spark, dir), mod, lt)
+      .localCheckpoint()
   }
 
   /** Spill the fp-store kind and commit its erased version, once per
@@ -693,16 +711,11 @@ object Erasure {
     val store = graft.core.DurableState.Store(spark, dir)
     val kind = "fpstore"
     val v0 = store.spillOnce(kind, mod, lt) { _ =>
-      val fpAll = Dedup.wordSets(spark, dir)
-        .select(col("doc_id"), md5(array_join(col("words"), " ")).as("fp"))
-      Seq("ledger" -> fpAll.where(col("doc_id") % mod < lt))
+      Seq("ledger" -> fpLedger(spark, dir, mod, lt))
     }
     val eV = store.spillOnce(s"fpstore-erased$modK", mod, lt) { _ =>
       val ledger = store.load(kind, v0, "ledger")
-      val erased = ledger.where(isErased(col("doc_id"), modK))
-        .select(col("doc_id")).distinct()
-      Seq("ledger" ->
-        ledger.join(broadcast(erased), Seq("doc_id"), "left_anti"))
+      Seq("ledger" -> eraseRows(ledger, fpSubjects(ledger, modK)))
     }
     (v0, eV)
   }
@@ -710,22 +723,26 @@ object Erasure {
   /** q261 — banded-index ERASE-COMMIT: q221 served from durable spills.
     * The corpus bucket table spills as kind `bandindex`; the request
     * reloads it, anti-joins the subjects out, and commits the erased
-    * index; the ingest labeling probes the RELOADED ERASED index for the
-    * post face and the reloaded pre-erasure index for the `freed`
-    * witness (two bucket-keyed probes — the durable variant pays the
-    * second probe q221's one-probe trick avoids, priced here as its own
-    * query). Banding is per-doc deterministic, so the output equals
-    * q221's. */
+    * index; the ingest labeling is q221's one bucket-keyed probe of the
+    * reloaded pre-erasure index, with the erased ids read off the
+    * committed spills — the docs the pre-erasure index holds and the
+    * RELOADED ERASED index does not. Banding is per-doc deterministic,
+    * so the output equals q221's. */
   def q261(spark: SparkSession, dir: String, mod: Int = 10, lt: Int = 7,
            modK: Long = 10L, exactThreshold: Double = 0.7): DataFrame = {
-    val sets = Dedup.shingleHashes(spark, dir)
-    val banded = Dedup.bandedSignatures(Dedup.minhashSignatures(sets))
     val (v0, eV) = ensureBandErased(spark, dir, mod, lt, modK)
     val preBands = reloadedTable(spark, dir, "bandindex", v0, "bands")
     val erasedBands =
       reloadedTable(spark, dir, s"bandindex-erased$modK", eV, "bands")
-    q221Serve(spark, dir, sets, banded, preBands, erasedBands, mod, lt,
-      exactThreshold).localCheckpoint()
+    // the request as the committed spills record it: the docs the
+    // pre-erasure index holds and the erased index does not, in one
+    // doc-keyed aggregate over both spills
+    val erased = preBands.select(col("doc_id"), lit(1).as("pre"))
+      .unionByName(erasedBands.select(col("doc_id"), lit(0).as("pre")))
+      .groupBy(col("doc_id")).agg(min(col("pre")).as("pre"))
+      .where(col("pre") === 1).select(col("doc_id"))
+    q221Serve(spark, dir, preBands, erased, mod, lt, exactThreshold)
+      .localCheckpoint()
   }
 
   /** Spill the banded-index kind and commit its erased version, once
@@ -735,87 +752,28 @@ object Erasure {
     val store = graft.core.DurableState.Store(spark, dir)
     val kind = "bandindex"
     val v0 = store.spillOnce(kind, mod, lt) { _ =>
-      val banded = Dedup.bandedSignatures(
-        Dedup.minhashSignatures(Dedup.shingleHashes(spark, dir)))
-      Seq("bands" -> banded.where(col("doc_id") % mod < lt))
+      Seq("bands" -> bandsOf(spark, dir, col("doc_id") % mod < lt))
     }
     val eV = store.spillOnce(s"bandindex-erased$modK", mod, lt) { _ =>
       val bands = store.load(kind, v0, "bands")
-      val erased = bands.select(col("doc_id")).distinct()
-        .where(isErased(col("doc_id"), modK))
-      Seq("bands" ->
-        bands.join(broadcast(erased), Seq("doc_id"), "left_anti"))
+      Seq("bands" -> eraseRows(bands, bandSubjects(bands, modK)))
     }
     (v0, eV)
-  }
-
-  /** q221's labeling against EXPLICIT pre/post index frames — the serve
-    * tail q261 runs over the reloaded durable spills: the post face
-    * probes `erasedBands`, the `freed` witness probes `preBands`. */
-  private def q221Serve(spark: SparkSession, dir: String, sets: DataFrame,
-      banded: DataFrame, preBands: DataFrame, erasedBands: DataFrame,
-      mod: Int, lt: Int, exactThreshold: Double): DataFrame = {
-    val isCorpus = col("doc_id") % mod < lt
-    val inBands = banded.where(!isCorpus)
-    def verifiedPairs(cand: DataFrame): DataFrame =
-      cand
-        .join(sets.select(col("doc_id").as("in_id"), col("items").as("i1")),
-          Seq("in_id"))
-        .join(sets.select(col("doc_id").as("other_id"),
-          col("items").as("i2")), Seq("other_id"))
-        .select(col("in_id"), col("other_id"),
-          size(array_intersect(col("i1"), col("i2"))).as("inter"),
-          size(col("i1")).as("n1"), size(col("i2")).as("n2"))
-        .where(round(col("inter").cast(DoubleType) /
-          (col("n1") + col("n2") - col("inter")), 4) >= exactThreshold)
-        .select(col("in_id"), col("other_id"))
-    def candAgainst(idx: DataFrame): DataFrame = inBands
-      .select(col("band"), col("bh"), col("doc_id").as("in_id"))
-      .join(idx.select(col("band"), col("bh"),
-        col("doc_id").as("other_id")), Seq("band", "bh"))
-      .select(col("in_id"), col("other_id")).distinct()
-    val dupPre = verifiedPairs(candAgainst(preBands))
-      .select(col("in_id")).distinct().withColumn("pc_pre", lit(1))
-    val dupPost = verifiedPairs(candAgainst(erasedBands))
-      .select(col("in_id")).distinct().withColumn("pc_post", lit(1))
-    val candBatch = inBands
-      .select(col("band"), col("bh"), col("doc_id").as("in_id"))
-      .join(inBands.select(col("band"), col("bh"),
-        col("doc_id").as("other_id")), Seq("band", "bh"))
-      .where(col("other_id") < col("in_id"))
-      .select(col("in_id"), col("other_id")).distinct()
-    val dupBatch = verifiedPairs(candBatch)
-      .select(col("in_id")).distinct().withColumn("db", lit(1))
-    Tables(spark, dir, "documents")
-      .where(!isCorpus)
-      .select(col("doc_id").cast(LongType))
-      .join(dupPost.withColumnRenamed("in_id", "doc_id"),
-        Seq("doc_id"), "left_outer")
-      .join(dupPre.withColumnRenamed("in_id", "doc_id"),
-        Seq("doc_id"), "left_outer")
-      .join(dupBatch.withColumnRenamed("in_id", "doc_id"),
-        Seq("doc_id"), "left_outer")
-      .select(col("doc_id"),
-        when(col("pc_post").isNotNull, "neardup_corpus")
-          .when(col("db").isNotNull, "neardup_batch")
-          .otherwise("new").as("status"),
-        (col("pc_pre").isNotNull && col("pc_post").isNull).as("freed"))
-      .orderBy(col("doc_id"))
   }
 
   /** q262 — graph-tier ERASE-COMMIT: q223 served from durable spills.
     * The standing graph (postings, gram df, pair list, converged LPA
     * labels) spills via [[GraphRank]]'s durable kind; the request
-    * reloads it, runs [[eraseStandingPairs]]'s addition-only Δ plus the
-    * q223 label relabel, and commits all four erased tables as the next
+    * reloads it, runs [[eraseGraph]] (q223's addition-only Δ and label
+    * relabel), and commits all four erased tables as the next
     * marker-committed version; the NEXT ingest (q218's deltaFullPairs +
     * warm LPA) then runs from a fresh scan of the ERASED spill. Output
     * equals q223's (restart ≡ continuous — EraseStateSpec binds the
     * reloaded erased spill to the from-scratch erased state). */
   /** Spill the graph kind (via [[GraphRank.ensureGraphSpilled]]) and
     * commit its erased version (postings/df/pairs/labels after
-    * [[eraseStandingPairs]] + the q223 label relabel), once per process
-    * each; returns (v0, erasedVersion). */
+    * [[eraseGraph]]), once per process each; returns (v0,
+    * erasedVersion). */
   private[graft] def ensureGraphErased(spark: SparkSession, dir: String,
       baseRounds: Int, maxDf: Int, minShared: Int, modK: Long)
       : (Long, Long) = {
@@ -824,21 +782,13 @@ object Erasure {
     val v0 = GraphRank.ensureGraphSpilled(spark, dir, baseRounds, maxDf,
       minShared)
     val eV = store.spillOnce(s"$kind-erased$modK") { pins =>
-      val erased = pins.pin(Tables(spark, dir, "documents")
-        .where(col("doc_id") % 10 < 7 && isErased(col("doc_id"), modK))
-        .select(col("doc_id")))
       // un-pinned Δ: the spill executes the DAG straight into the
       // committed version
-      val (ePost, eDf, ePairs) = eraseStandingPairs(
+      val (ePost, eDf, ePairs, eLabels) = eraseGraph(
         store.load(kind, v0, "postings"), store.load(kind, v0, "df"),
-        store.load(kind, v0, "pairs"), erased, maxDf, minShared, identity)
-      val eLabels = store.load(kind, v0, "labels")
-        .join(broadcast(erased), Seq("doc_id"), "left_anti")
-        .join(broadcast(erased.select(col("doc_id").as("label"))
-          .withColumn("lbl_gone", lit(1))), Seq("label"), "left_outer")
-        .select(col("doc_id"),
-          when(col("lbl_gone").isNotNull, col("doc_id"))
-            .otherwise(col("label")).as("label"))
+        store.load(kind, v0, "pairs"), store.load(kind, v0, "labels"),
+        pins.pin(graphSubjects(spark, dir, modK)), maxDf, minShared,
+        identity)
       Seq("postings" -> ePost, "df" -> eDf, "pairs" -> ePairs,
         "labels" -> eLabels)
     }

@@ -307,27 +307,8 @@ object GraphRank {
   def q160(spark: SparkSession, dir: String, baseIters: Int = 5,
            incrIters: Int = 3, maxDf: Int = 50, minShared: Int = 3)
       : DataFrame = Pins.result { pins =>
-    val (basePost, dfBase, basePairs) =
-      graphStanding(spark, dir, maxDf, minShared)
-    val (baseRanks, nBase) =
-      prStanding(spark, dir, baseIters, maxDf, minShared)
-    // ---- the ingest leg (batch-scale — the per-invocation cost) ----
-    val docs = Tables(spark, dir, "documents")
-    val batch = docs.where(col("doc_id") % 10 >= 7)
-    val nFull = docs.count()
-    require(nFull > nBase, s"q160: degenerate base/batch split")
-    val batchPost = pins.pin(Ranking.gramCountsOf(batch)
-      .select(col("doc_id"), col("gram")))
-    val fullEdges = pins.own(edgesFromPairs(
-      deltaFullPairs(basePost, dfBase, basePairs, batchPost, maxDf,
-        minShared)))
-    val r0f = Scale / nFull
-    val fullVerts = pins.pin(docs
-      .select(col("doc_id"), lit((15L * r0f) / 100L).as("tel")))
-    val warm = fullVerts
-      .join(baseRanks.select(col("doc_id"), col("r").as("rb")),
-        Seq("doc_id"), "left_outer")
-      .select(col("doc_id"), coalesce(col("rb"), lit(r0f)).as("r"))
+    val (fullEdges, warm, fullVerts) =
+      q160Internals(pins, spark, dir, baseIters, maxDf, minShared)
     val ranks = pins.own(iterateRanks(fullVerts, fullEdges, warm, incrIters))
     ranks
       .join(fullEdges.select(col("src").as("doc_id"), col("deg"))
@@ -339,38 +320,27 @@ object GraphRank {
       .orderBy(col("doc_id"))
   }
 
-  /** q160's state after the ingest round, BEFORE the warm iterations:
-    * the incrementally-assembled full edge list, the warm-start vector,
-    * and the full vertex/teleport table, all pinned in `pins`. Exposed
-    * so IncrementalPageRankSpec can assert the Δ-graph equals a
-    * from-scratch [[rareTrigramEdges]] build and drive the iteration
-    * engine itself. */
+  /** q160's INGEST LEG over the registry standing state
+    * ([[graphStanding]], [[prStanding]]): the incrementally-assembled
+    * full edge list, the warm-start vector and the full vertex/teleport
+    * table, pinned in `pins` — everything before the warm iterations.
+    * q160 iterates exactly these; IncrementalPageRankSpec asserts the
+    * Δ-graph equals a from-scratch [[rareTrigramEdges]] build and drives
+    * the iteration engine over it itself. */
   private[queries] def q160Internals(pins: Pins, spark: SparkSession,
                                      dir: String, baseIters: Int = 5,
                                      maxDf: Int = 50, minShared: Int = 3)
       : (DataFrame, DataFrame, DataFrame) = {
+    val (basePost, dfBase, basePairs) =
+      graphStanding(spark, dir, maxDf, minShared)
+    val (baseRanks, nBase) =
+      prStanding(spark, dir, baseIters, maxDf, minShared)
+    // ---- the ingest round (batch-scale — the per-invocation cost) ----
     val docs = Tables(spark, dir, "documents")
-    val base = docs.where(col("doc_id") % 10 < 7)
     val batch = docs.where(col("doc_id") % 10 >= 7)
-    val nBase = base.count()
     val nFull = docs.count()
-    require(nBase > 0 && nFull > nBase,
+    require(nFull > nBase,
       s"q160: degenerate base/batch split ($nBase of $nFull)")
-
-    // ---- standing state (persists between ingests) ----
-    val basePost = pins.pin(Ranking.gramCountsOf(base)
-      .select(col("doc_id"), col("gram")))
-    val dfBase = pins.pin(basePost.groupBy(col("gram"))
-      .agg(count(lit(1)).as("df_base")))
-    val basePairs = pins.pin(rarePairsOf(basePost, maxDf, minShared))
-    val baseEdges = pins.own(edgesFromPairs(basePairs))
-    val r0b = Scale / nBase
-    val baseVerts = pins.pin(base
-      .select(col("doc_id"), lit((15L * r0b) / 100L).as("tel")))
-    val baseRanks = pins.own(iterateRanks(baseVerts, baseEdges,
-      baseVerts.select(col("doc_id"), lit(r0b).as("r")), baseIters))
-
-    // ---- the ingest round (batch-scale from here on) ----
     val batchPost = pins.pin(Ranking.gramCountsOf(batch)
       .select(col("doc_id"), col("gram")))
     val fullEdges = pins.own(edgesFromPairs(

@@ -177,14 +177,35 @@ object Recommend {
       .groupBy(col("a.p").as("p1"), col("b.p").as("p2"))
       .agg(count(lit(1)).as(as))
 
-  /** The standing co matrix after an erasure: `dec` (the erased baskets'
-    * own pairs, [[coMatrixOf]] as "dec") subtracted; pairs at 0 go. */
-  private[graft] def decrementedCo(co: DataFrame, dec: DataFrame)
-      : DataFrame =
-    co.join(dec, Seq("p1", "p2"), "left_outer")
+  /** ERASE for the CF kind: the request names the subject customers by
+    * `subject` (a predicate on c). Each subject's basket contributed
+    * exactly its own pairs to the co counts, so `dec` = [[coMatrixOf]]
+    * over the subjects' baskets, and the erased state is (the basket
+    * minus the subjects' rows, co − dec with pairs at 0 gone). Returns
+    * (erased basket, dec, erased co) — in-memory (q248), erase-commit
+    * (q259) and the conflict chain (q265) all erase through it. */
+  private[graft] def erasedCf(base: DataFrame, co: DataFrame,
+      subject: org.apache.spark.sql.Column)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val dec = coMatrixOf(base.where(subject), "dec")
+    // the erased basket stays an UN-pinned filter over the standing
+    // basket scan (each of q248's three consumers re-runs a map-side
+    // filter, cheaper than materializing a corpus-scale copy per erasure
+    // request)
+    val eBase = base.where(!subject)
+    // ONE pair-keyed left join in place of the former
+    // touched-branch ∪ untouched-anti-branch union (r13): identical
+    // rows — a touched pair keeps co−dec when > 0 (dec ≤ co by
+    // construction), an untouched pair keeps co — but the join
+    // PRESERVES the standing co matrix's declared (p1, p2) layout,
+    // which a Union discards, so the ingest's ledger merge downstream
+    // plans exchange-free on this side
+    val eCo = co.join(dec, Seq("p1", "p2"), "left_outer")
       .select(col("p1"), col("p2"),
         (col("co_base") - coalesce(col("dec"), lit(0L))).as("co_base"))
       .where(col("co_base") > 0)
+    (eBase, dec, eCo)
+  }
 
   /** The batch's ADMITTED novel edges against a standing basket frame:
     * anti-probe for novelty, then room-capped admission (per customer,
@@ -416,10 +437,10 @@ object Recommend {
         val stale = mergedBatch(base1, co1,
           pins.pin(admittedNovel(spark, dir, base1, cap, filterA)))
         // ---- the erasure, also derived from v1, commits FIRST ----
-        val eCo = decrementedCo(co1,
-          coMatrixOf(base1.where(col("c") % 10 === 0), "dec"))
+        val (eBase, _, eCo) =
+          erasedCf(base1, co1, Erasure.isErased(col("c"), 10L))
         val v2 = store.persistAllIf(kind, Some(v1),
-          Seq("basket" -> base1.where(col("c") % 10 =!= 0), "co" -> eCo))
+          Seq("basket" -> eBase, "co" -> eCo))
         // ---- the stale commit MUST lose: validate-under-lock rejects
         //      the v1 base, publishes nothing ----
         val conflicted =

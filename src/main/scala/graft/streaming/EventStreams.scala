@@ -496,7 +496,7 @@ object EventStreams {
 
   /** Initialize the standing fingerprint store for [[manifestIngest]]:
     * the corpus slice's canonical word-set fingerprints (q110's corpus
-    * probe set — Dedup.wordSets md5, so token-less corpus docs contribute
+    * probe set — Dedup.fingerprints, so token-less corpus docs contribute
     * no fingerprint, exactly as in the batch q110).
     *
     * HOLDER-KEYED (src_id, fp), not a bare fp set — the q220 lesson: an
@@ -509,10 +509,9 @@ object EventStreams {
                           fpStorePath: String,
                           mod: Int = 10, lt: Int = 7): Unit =
     BatchStore.write(
-      graft.dedup.Dedup.wordSets(spark, dir)
+      graft.dedup.Dedup.fingerprints(spark, dir)
         .where(col("doc_id") % mod < lt)
-        .select(col("doc_id").cast(LongType).as("src_id"),
-          md5(array_join(col("words"), " ")).as("fp")),
+        .select(col("doc_id").cast(LongType).as("src_id"), col("fp")),
       fpStorePath, "init", 0L)
 
   /** Serve an erasure request against the standing fingerprint store:

@@ -26,30 +26,39 @@ class IncrementalPageRankSpec extends AnyFunSuite {
   private val dir = SparkTest.sf0001
 
   test("incremental edge list equals the from-scratch full-corpus build") {
-    val (incr, want) = graft.core.Pins.scope { pins =>
-      val (fullEdges, _, _) = GraphRank.q160Internals(pins, spark, dir)
-      val scratch = pins.own(GraphRank.rareTrigramEdges(
-        graft.core.Tables(spark, dir, "documents"), 50, 3))
-      (fullEdges.collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet,
-        scratch.collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet)
-    }
+    val docs = graft.core.Tables(spark, dir, "documents")
     val b = org.apache.spark.sql.graftbridge.Bridge
-    assert(incr.nonEmpty, "incremental graph is empty — fixture degenerate")
-    assert((incr diff want).isEmpty,
-      s"incremental edges not in rebuild: ${(incr diff want).take(5)}")
-    assert((want diff incr).isEmpty,
-      s"rebuild edges missed incrementally: ${(want diff incr).take(5)}")
-    // non-vacuity of the Δ machinery itself: the batch really added
-    // edges relative to the standing base graph
-    val baseOnly = GraphRank.rareTrigramEdges(
-      graft.core.Tables(spark, dir, "documents")
-        .where(col("doc_id") % 10 < 7), 50, 3)
-    val nBase = baseOnly.count()
-    b.unpersistLocalCheckpoint(baseOnly)
-    assert(want.size > nBase,
-      "batch added no edges — incremental path untested")
+    def edgeSet(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    // q160's maxDf, and a cap inside this fixture's trigram df spectrum
+    // (it tops out at 6) so the batch pushes standing grams over it
+    for (maxDf <- Seq(50, 3)) {
+      val (incr, want) = graft.core.Pins.scope { pins =>
+        val (fullEdges, _, _) =
+          GraphRank.q160Internals(pins, spark, dir, maxDf = maxDf)
+        val scratch =
+          pins.own(GraphRank.rareTrigramEdges(docs, maxDf, 3))
+        (edgeSet(fullEdges), edgeSet(scratch))
+      }
+      assert(incr.nonEmpty, "incremental graph is empty — fixture degenerate")
+      assert((incr diff want).isEmpty,
+        s"incremental edges not in rebuild: ${(incr diff want).take(5)}")
+      assert((want diff incr).isEmpty,
+        s"rebuild edges missed incrementally: ${(want diff incr).take(5)}")
+      // non-vacuity of the Δ machinery itself: the batch really added
+      // edges relative to the standing base graph
+      val baseOnly = GraphRank.rareTrigramEdges(
+        docs.where(col("doc_id") % 10 < 7), maxDf, 3)
+      val baseEdges = edgeSet(baseOnly).map(e => (e._1, e._2))
+      b.unpersistLocalCheckpoint(baseOnly)
+      assert(want.size > baseEdges.size,
+        "batch added no edges — incremental path untested")
+      // and at the low cap the removal path too: some standing base↔base
+      // edge is gone from the full graph (its shared grams went over cap)
+      if (maxDf == 3)
+        assert((baseEdges diff want.map(e => (e._1, e._2))).nonEmpty,
+          "no standing edge lost to the batch — removal path untested")
+    }
   }
 
   test("cold start over the incremental graph reproduces q129 exactly") {
