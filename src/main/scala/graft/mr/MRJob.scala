@@ -1,8 +1,13 @@
 package graft.mr
 
+import java.nio.charset.StandardCharsets
+import java.nio.file.{Files, LinkOption, Paths, StandardCopyOption}
+
 import scala.collection.immutable.ArraySeq
 import scala.collection.mutable
 
+import org.apache.commons.io.FileUtils
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,8 +26,11 @@ import org.apache.spark.sql.functions._
   *  - ihash(key) % R partition (worker.go:30-44) → repartition(R, key) [Murmur3 —
   *    semantically equivalent co-location; bucket assignment is invisible in
   *    merged output, see test-mr.sh:103]
-  *  - intermediate files + rename commit (worker.go:46-70) → Spark shuffle
-  *    (attempt-scoped files: fixes the reference's append-on-retry bug)
+  *  - temp file + rename commit (worker.go:46-70) → intermediate files:
+  *    Spark shuffle (attempt-scoped files: fixes the reference's
+  *    append-on-retry bug); output files: `runToDir`, where each reduce task
+  *    writes `.mr-out-<r>.<attempt>` and atomically renames it onto
+  *    `mr-out-<r>`
   *  - per-partition sort + adjacent-key group (worker.go:117-131) →
   *    sortWithinPartitions + mapPartitions run-length scan
   *  - reduce apply (worker.go:131)           → called once per distinct key,
@@ -75,7 +83,7 @@ object MRJob {
     // F7/F8/F9: adjacent-key run scan (worker.go:121-131 semantics) + reduce
     // + output line format "key value" (worker.go:134).
     bucketed.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
+      val pid = TaskContext.getPartitionId()
       new Iterator[(Int, String)] {
         private val buf = it.buffered
         def hasNext: Boolean = buf.hasNext
@@ -95,37 +103,51 @@ object MRJob {
 
   /** Run and write R text files `mr-out-<r>` under outDir — the
     * reference's exact sink layout (worker.go:118: one file per reduce
-    * partition, named by partition id). The job writes through the normal
-    * committed text sink (attempt-scoped temp files + rename on commit,
-    * so task retry can't produce torn output), then a driver-side rename
-    * pass maps each committed `part-<r>-*` file to `mr-out-<r>`: the text
-    * writer emits at most one file per partition and numbers it with the
-    * partition index, so the mapping is total. Reduce partitions that
-    * produced no keys get an empty `mr-out-<r>` — the reference worker
-    * creates every output file unconditionally too. */
+    * partition, named by partition id) and its commit (worker.go:46-70).
+    * outDir is a local directory, a plain path or a `file:` URI; any other
+    * scheme is an `IllegalArgumentException` before a job starts (write
+    * `run`'s Dataset with Spark's writer to reach distributed storage). On a
+    * cluster it must be a mount every executor shares.
+    *
+    * The driver deletes and re-creates outDir. Each reduce task — every
+    * partition runs one, so an empty partition writes an empty file, as the
+    * reference worker does — writes its lines to the hidden, attempt-scoped
+    * `.mr-out-<r>.<taskAttemptId>` and atomically renames it onto
+    * `mr-out-<r>`: a retried or speculative attempt replaces the file whole,
+    * and a failed attempt deletes its temp file. A JVM killed mid-write can
+    * leave a hidden temp file behind, as a crashed reference worker does.
+    * Plain java.nio file calls: Hadoop's local file system forks a `chmod`
+    * process per file it creates when its native library is absent. */
   def runToDir(spark: SparkSession, inputPaths: Seq[String], mapf: MapF,
                reducef: ReduceF, nReduce: Int, outDir: String): Unit = {
-    import spark.implicits._
-    run(spark, inputPaths, mapf, reducef, nReduce)
-      .map(_._2)
-      .write.mode("overwrite").text(outDir)
+    val uri = new org.apache.hadoop.fs.Path(outDir).toUri
+    require(uri.getScheme == null || uri.getScheme == "file",
+      s"runToDir writes a local directory (a path or a file: URI), got $outDir")
+    val dir = Paths.get(uri.getPath).toAbsolutePath
+    if (Files.exists(dir, LinkOption.NOFOLLOW_LINKS)) FileUtils.forceDelete(dir.toFile)
+    Files.createDirectories(dir)
 
-    val out = new org.apache.hadoop.fs.Path(outDir)
-    val fs = out.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val part = "part-(\\d+)-.*".r
-    fs.listStatus(out).foreach { st =>
-      st.getPath.getName match {
-        case part(idx) =>
-          val dest = new org.apache.hadoop.fs.Path(out, s"mr-out-${idx.toInt}")
-          fs.delete(dest, false)
-          fs.rename(st.getPath, dest)
-        case _ => ()
-      }
-    }
-    (0 until nReduce).foreach { r =>
-      val f = new org.apache.hadoop.fs.Path(out, s"mr-out-$r")
-      if (!fs.exists(f)) fs.create(f).close()
-    }
+    val target = dir.toString // tasks get a String: java.nio Paths do not serialize
+    run(spark, inputPaths, mapf, reducef, nReduce)
+      .foreachPartition((lines: Iterator[(Int, String)]) => commitPartition(target, lines))
+    val missing = (0 until nReduce).filterNot(r => Files.exists(dir.resolve(s"mr-out-$r")))
+    if (missing.nonEmpty)
+      throw new IllegalStateException(s"runToDir: no mr-out-<r> for r in $missing under $dir")
+  }
+
+  /** One reduce task's `runToDir` output: write the attempt's temp file,
+    * then rename it atomically onto `mr-out-<r>`. */
+  private def commitPartition(dir: String, lines: Iterator[(Int, String)]): Unit = {
+    val tc = TaskContext.get()
+    val out = Paths.get(dir)
+    val tmp = out.resolve(s".mr-out-${tc.partitionId()}.${tc.taskAttemptId()}")
+    try {
+      val w = Files.newBufferedWriter(tmp, StandardCharsets.UTF_8)
+      try lines.foreach { case (_, line) => w.write(line); w.write('\n') }
+      finally w.close()
+      Files.move(tmp, out.resolve(s"mr-out-${tc.partitionId()}"),
+        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
   }
 
   /** Merged, lexicographically sorted output lines — the comparison form

@@ -1,9 +1,13 @@
 package graft.mr
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.atomic.AtomicLong
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+import scala.jdk.CollectionConverters._
+
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -141,6 +145,71 @@ class MRJobSpec extends AnyFunSuite {
       try src.getLines().toList finally src.close()
     }.sorted
     assert(lines == goldenWordCount)
+  }
+
+  /** File names directly under `dir`, hidden ones included, sorted. */
+  private def listing(dir: String): Seq[String] =
+    new java.io.File(dir).listFiles().map(_.getName).sorted.toSeq
+
+  private def mergedLines(dir: String): Seq[String] =
+    listing(dir).flatMap(n => Files.readAllLines(Paths.get(dir, n)).asScala).sorted
+
+  test("runToDir leaves exactly mr-out-0..R-1 in outDir: no markers, checksums or temp files") {
+    val (dir, _) = corpus
+    val out = Files.createTempDirectory("mr-out-exact").toString + "/wc"
+    MRJob.runToDir(spark, Seq(dir.toString + "/*.txt"),
+      Apps.WordCount.map, Apps.WordCount.reduce, nReduce = 5, out)
+    assert(listing(out) == (0 until 5).map(r => s"mr-out-$r").sorted)
+    assert(mergedLines(out) == goldenWordCount)
+  }
+
+  test("runToDir into the same outDir with a smaller R leaves exactly the new R files") {
+    val (dir, _) = corpus
+    val out = Files.createTempDirectory("mr-out-rerun").toString + "/wc"
+    val glob = Seq(dir.toString + "/*.txt")
+    MRJob.runToDir(spark, glob, Apps.WordCount.map, Apps.WordCount.reduce, nReduce = 7, out)
+    MRJob.runToDir(spark, glob, Apps.WordCount.map, Apps.WordCount.reduce, nReduce = 3, out)
+    assert(listing(out) == Seq("mr-out-0", "mr-out-1", "mr-out-2"))
+    assert(mergedLines(out) == goldenWordCount)
+  }
+
+  test("runToDir rejects a non-local outDir before any Spark job starts") {
+    val (dir, _) = corpus
+    val jobs = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    Bridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try intercept[IllegalArgumentException] {
+      MRJob.runToDir(spark, Seq(dir.toString + "/*.txt"),
+        Apps.WordCount.map, Apps.WordCount.reduce, nReduce = 2, "hdfs://localhost:8020/mr/wc")
+    } finally {
+      Bridge.drainListenerBus(spark)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.get == 0, s"${jobs.get} Spark jobs started for a rejected outDir")
+  }
+
+  test("runToDir forks no process that names its output directory (JFR jdk.ProcessStart)") {
+    // Hadoop's local file system forks `chmod` per file it creates when its
+    // native library is absent; runToDir's commit must not go through it.
+    val (dir, _) = corpus
+    val out = Files.createTempDirectory("mr-out-nofork").toString + "/wc"
+    val rec = new Recording()
+    val jfr = Files.createTempFile("mr-out-nofork", ".jfr")
+    val commands = try {
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      try MRJob.runToDir(spark, Seq(dir.toString + "/*.txt"),
+        Apps.WordCount.map, Apps.WordCount.reduce, nReduce = 4, out)
+      finally rec.stop()
+      rec.dump(jfr)
+      RecordingFile.readAllEvents(jfr).asScala.map(_.getString("command")).toSeq
+    } finally { rec.close(); Files.deleteIfExists(jfr) }
+    val named = commands.filter(_.contains(out))
+    assert(named.isEmpty, s"${named.size} processes forked on $out, e.g. ${named.take(3)}")
+    assert(mergedLines(out) == goldenWordCount)
   }
 
   // the reference's wc test corpus shape: 8 Gutenberg files, 3,301,104
