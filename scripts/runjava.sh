@@ -1,7 +1,9 @@
 #!/bin/bash
 # Run a graft main class directly on the compiled classes (fast iteration,
 # no sbt lock). Usage: SPARK_GRAFT_BENCH_ONLY=q46_column_profile scripts/runjava.sh graft.Bench
+# The classes are the ones compiled in this script's own checkout.
 MAIN=$1; shift
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
 exec java \
   --add-opens=java.base/java.lang=ALL-UNNAMED \
   --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
@@ -18,5 +20,5 @@ exec java \
   --add-opens=java.base/sun.util.calendar=ALL-UNNAMED \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx${SPARK_DRIVER_MEM:-8g} \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" \
   "$MAIN" "$@"

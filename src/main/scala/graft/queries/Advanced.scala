@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Tables
+import graft.core.{Pins, Prefix, Tables}
 
 /** Round-2 operator additions beyond SURVEY.md §2.4: as-of join, range
   * (band) join, GROUPING SETS, pivot, lag/lead, distribution windows,
@@ -182,56 +182,31 @@ object Advanced {
       .orderBy(col("c_custkey"))
   }
 
-  /** Q61 — q57's distribution windows at 100 TB shape: range-partitioned
-    * TWO-PASS global ranking instead of a single-task global window.
-    *
-    *  1. `repartitionByRange` on the sort key + `sortWithinPartitions`:
-    *     each of P tasks holds a sorted, disjoint, ordered slice.
-    *  2. Local pass: per-partition row index via a mapPartitions zip —
-    *     no shuffle, order preserved from step 1.
-    *  3. A P-row aggregate of partition counts → running-sum offsets
-    *     (a window over ≤P rows — trivially single-task by design),
-    *     broadcast back; global rank = offset + local index + 1.
-    *  4. ntile/percent_rank/cume_dist derived ARITHMETICALLY from
-    *     (rank, n): the ORDER BY key (c_acctbal, c_custkey) is unique, so
-    *     rank = row_number, cume_dist = rank/n, percent_rank =
-    *     (rank-1)/(n-1), and ntile(k) is the standard
-    *     first-(n mod k)-buckets-get-one-extra split.
+  /** Q61 — q57's distribution windows at 100 TB shape: the global rank is
+    * [[graft.core.Prefix.before]] keyed by (c_acctbal, c_custkey) instead
+    * of a single-task global window, and ntile/percent_rank/cume_dist are
+    * derived ARITHMETICALLY from (rank, n): the ORDER BY key is unique,
+    * so rank = row_number, cume_dist = rank/n, percent_rank =
+    * (rank-1)/(n-1), and ntile(k) is the standard
+    * first-(n mod k)-buckets-get-one-extra split.
     *
     * Every task touches at most ~n/P rows; the only global structures are
     * the P-row offset table and the 1-row total. Output is IDENTICAL to
     * q57 (same oracle SQL) — the equivalence is also spec-asserted. */
-  def q61(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
+  def q61(spark: SparkSession, dir: String): DataFrame = Pins.result { pins =>
     val k = 4
     // P follows the session's shuffle parallelism (NOT a literal pinned to
     // this box's core count) — on a cluster the range partitioning scales
     // with the configured shuffle width; correctness is P-invariant
-    // (spec-asserted at P ∈ {4, 32})
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val parted = t(spark, dir, "customer")
-      .select(col("c_custkey").cast(LongType), col("c_acctbal").cast(DoubleType))
-      .repartitionByRange(p, col("c_acctbal"), col("c_custkey"))
-      .sortWithinPartitions(col("c_acctbal"), col("c_custkey"))
-      .as[(Long, Double)]
-    val indexed = parted.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      it.zipWithIndex.map { case ((ck, bal), i) => (pid, i.toLong, ck, bal) }
-    }.toDF("pid", "li", "c_custkey", "c_acctbal")
+    // (spec-asserted at P ∈ {4, 32} and with exchange reuse off)
+    val ranked = Prefix.before(pins,
+      t(spark, dir, "customer").select(col("c_custkey").cast(LongType),
+        col("c_acctbal").cast(DoubleType)),
+      Nil, Seq(col("c_acctbal"), col("c_custkey")), lit(1L))
+    val total = ranked.agg(count(lit(1)).as("n"))
 
-    val counts = indexed.groupBy(col("pid")).agg(count(lit(1)).as("cnt"))
-    val offsets = counts.select(
-      col("pid"), col("cnt"),
-      coalesce(
-        sum(col("cnt")).over(
-          Window.orderBy(col("pid"))
-            .rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)).as("offset"))
-    val total = offsets.agg(sum(col("cnt")).as("n"))
-
-    val rnk = col("offset") + col("li") + lit(1L)
-    indexed
-      .join(broadcast(offsets.select(col("pid"), col("offset"))), Seq("pid"))
+    val rnk = col("before") + lit(1L)
+    ranked
       .crossJoin(broadcast(total))
       .select(
         col("c_custkey"), col("c_acctbal"),

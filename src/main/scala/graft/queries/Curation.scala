@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{Pins, Tables}
+import graft.core.{Pins, Prefix, Tables}
 import graft.dedup.Dedup
 import graft.text.TextAnalysis
 
@@ -389,13 +389,11 @@ object Curation {
     * global token offset where it starts, and the first/last/count of the
     * training sequences it spans.
     *
-    * The global running sum is the q61 TWO-PASS shape, not a partition-less
-    * window: `repartitionByRange` on doc_id gives P disjoint ordered
-    * slices, a per-partition linear scan accumulates LOCAL prefix sums, a
-    * P-row offset table (the only global structure) shifts them to global
-    * offsets via a broadcast join. Every task touches ~n/P rows at any
-    * corpus size; the single-task q57-style `Window.orderBy` this replaces
-    * would funnel the whole corpus through one reducer. */
+    * The global running sum is [[graft.core.Prefix.before]] keyed by
+    * doc_id, not a partition-less window: the single-task q57-style
+    * `Window.orderBy` it replaces would funnel the whole corpus through
+    * one reducer, while the prefix engine's only global structure is a
+    * P-row offset table. */
   def q87(spark: SparkSession, dir: String, seqLen: Int = 128): DataFrame =
     pack(spark,
       Tables(spark, dir, "documents")
@@ -404,67 +402,29 @@ object Curation {
       seqLen)
 
   /** The q87 packing engine over any `(doc_id, n_tok)` frame (q100 runs
-    * it over the CURATED subset): range partition on doc_id, local prefix
-    * sums, P-row broadcast offsets, arithmetic sequence spans. The
-    * internal range-partitioned pass is pinned only while the manifest
-    * materializes. */
+    * it over the CURATED subset): token prefix sums in doc_id order,
+    * arithmetic sequence spans. The prefix pass is pinned only while the
+    * manifest materializes. */
   private[graft] def pack(spark: SparkSession, counts: DataFrame,
                             seqLen: Int): DataFrame =
     Pins.result(pins => packPlan(pins, spark, counts, seqLen))
 
-  /** The pack plan BEFORE the result checkpoint, over a range-partitioned
-    * local pass pinned in `pins`.
-    *
-    * The local pass is PINNED (localCheckpoint) because the offsets
-    * branch and the join branch both consume it keyed on the physical
-    * TaskContext partition id: two independently-planned range exchanges
-    * would sample distinct boundaries and silently mis-correlate the
-    * offsets (the shape otherwise held together only by ReusedExchange —
-    * with spark.sql.exchange.reuse=false, or any future canonical
-    * divergence between the two branches, start_tok would be wrong with
-    * no error). Materializing the pass once makes the pid correlation
-    * structural, the same pinned-model move as q104's bigram table. */
+  /** The pack plan BEFORE the result checkpoint; the prefix pass is pinned
+    * in `pins` (see [[graft.core.Prefix.before]] for why a pin, not
+    * exchange reuse, holds the offsets to the rows they shift). */
   private[queries] def packPlan(pins: Pins, spark: SparkSession,
-                                counts: DataFrame, seqLen: Int): DataFrame = {
-    import spark.implicits._
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val tc = counts
-      .where(col("n_tok") > 0)
-      .repartitionByRange(p, col("doc_id"))
-      .sortWithinPartitions(col("doc_id"))
-      .as[(Long, Long)]
-    // local pass: per-partition prefix sums, order preserved from the range
-    // partitioning; no shuffle — pinned for structural pid consistency
-    val local = pins.pin(tc.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      var acc = 0L
-      it.map { case (id, n) => val before = acc; acc += n; (pid, id, n, before) }
-    }.toDF("pid", "doc_id", "n_tok", "local_before"))
-
-    val totals = local.groupBy(col("pid"))
-      .agg(sum(col("n_tok")).as("ptok"))
-    val offsets = totals.select(
-      col("pid"),
-      coalesce(
-        sum(col("ptok")).over(
-          Window.orderBy(col("pid"))
-            .rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)).as("offset"))
-
-    local
-      .join(broadcast(offsets), Seq("pid"))
-      .select(col("doc_id"), col("n_tok"),
-        (col("offset") + col("local_before")).as("start_tok"))
+                                counts: DataFrame, seqLen: Int): DataFrame =
+    Prefix.before(pins, counts.where(col("n_tok") > 0), Nil,
+        Seq(col("doc_id")), col("n_tok"))
       .select(
-        col("doc_id"), col("n_tok"), col("start_tok"),
+        col("doc_id"), col("n_tok"), col("before").as("start_tok"),
         // integral `div`: exact floor for the non-negative offsets here
-        expr(s"start_tok div $seqLen").cast(LongType).as("first_seq"),
-        expr(s"(start_tok + n_tok - 1) div $seqLen").cast(LongType)
+        expr(s"before div $seqLen").cast(LongType).as("first_seq"),
+        expr(s"(before + n_tok - 1) div $seqLen").cast(LongType)
           .as("last_seq"))
       .withColumn("n_seqs",
         (col("last_seq") - col("first_seq") + 1L).cast(LongType))
       .orderBy(col("doc_id"))
-  }
 
   /** q88 — source-mix design: per-source token accounting turned into
     * temperature-based sampling weights (`w ∝ tokens^(1/2)`, the
@@ -647,7 +607,7 @@ object Curation {
     * Scale shape: the codec runs once into a pinned feature table
     * (bounded by the media tier, not the corpus); banding buckets are
     * 16-bit blocks (never all-pairs); the drop set is doc_id-slim; the
-    * pack is the reused two-pass range-partition engine. Every stage is
+    * pack is the reused [[pack]] prefix pass. Every stage is
     * integer/md5-exact and banding is pigeonhole-complete, so the WHOLE
     * composition carries a DuckDB oracle (pixels from the closed-form
     * synth formula, components by recursive CTE — no codec, no recall
@@ -758,50 +718,24 @@ object Curation {
     * compute identically, reshuffled in production by salting the
     * digest with the epoch number.
     *
-    * Third instance of the two-pass range-partition prefix-sum engine
-    * (q87 keyed doc_id, q107 keyed (nll, doc_id), here keyed by the
-    * digest): range exchange on the 32-char key — uniformly distributed
-    * BY CONSTRUCTION, so the range partitions are balanced regardless of
-    * doc_id clustering — per-partition linear accumulation, P-row
-    * broadcast offset table. No partition-less data window at any
-    * corpus size. The local pass is pinned for the [[packPlan]]
-    * reason. */
+    * The running sum is [[graft.core.Prefix.before]] keyed by the
+    * digest: a 32-char key uniformly distributed BY CONSTRUCTION, so the
+    * range partitions are balanced regardless of doc_id clustering. No
+    * partition-less data window at any corpus size. */
   def q115(spark: SparkSession, dir: String, seqLen: Int = 128): DataFrame =
     Pins.result { pins =>
-      import spark.implicits._
-      val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
       val keyed = Tables(spark, dir, "documents")
         .select(col("doc_id").cast(LongType),
           size(TextAnalysis.toks(col("text"))).cast(LongType).as("n_tok"))
         .where(col("n_tok") > 0)
         .select(md5(col("doc_id").cast(StringType)).as("shuffle_key"),
           col("doc_id"), col("n_tok"))
-        .repartitionByRange(p, col("shuffle_key"))
-        .sortWithinPartitions(col("shuffle_key"))
-        .as[(String, Long, Long)]
-      val local = pins.pin(keyed.mapPartitions { it =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        var acc = 0L
-        it.map { case (k, id, n) =>
-          val before = acc; acc += n; (pid, k, id, n, before)
-        }
-      }.toDF("pid", "shuffle_key", "doc_id", "n_tok", "local_before"))
-      val offsets = local.groupBy(col("pid"))
-        .agg(sum(col("n_tok")).as("ptok"))
-        .select(col("pid"),
-          coalesce(
-            sum(col("ptok")).over(
-              Window.orderBy(col("pid"))
-                .rowsBetween(Window.unboundedPreceding, -1)),
-            lit(0L)).as("offset"))
-      local
-        .join(broadcast(offsets), Seq("pid"))
-        .select(col("doc_id"), col("n_tok"), col("shuffle_key"),
-          (col("offset") + col("local_before")).as("start_tok"))
+      Prefix.before(pins, keyed, Nil, Seq(col("shuffle_key")), col("n_tok"))
         .select(
-          col("doc_id"), col("n_tok"), col("shuffle_key"), col("start_tok"),
-          expr(s"start_tok div $seqLen").cast(LongType).as("first_seq"),
-          expr(s"(start_tok + n_tok - 1) div $seqLen").cast(LongType)
+          col("doc_id"), col("n_tok"), col("shuffle_key"),
+          col("before").as("start_tok"),
+          expr(s"before div $seqLen").cast(LongType).as("first_seq"),
+          expr(s"(before + n_tok - 1) div $seqLen").cast(LongType)
             .as("last_seq"))
         .withColumn("n_seqs",
           (col("last_seq") - col("first_seq") + 1L).cast(LongType))
@@ -819,7 +753,7 @@ object Curation {
     * (its length). Every sequence except the final one is exactly
     * `seqLen` tokens of concatenated slices (spec-asserted).
     *
-    * Scale shape: the q87 two-pass range-partition engine computes the
+    * Scale shape: q87's [[graft.core.Prefix.before]] pass computes the
     * offsets (no partition-less window at any corpus size); the
     * slice explosion is a map-only `sequence`/`explode` whose output is
     * ~(total_tokens/seqLen + n_docs) rows — the artifact itself, not a
@@ -857,51 +791,23 @@ object Curation {
     * ascending bigram-LM nll order (q94's scorer — most-typical text
     * first, the CCNet-style perplexity filter) until a token budget
     * fills. The canonical "keep the best N tokens" curation cut, as a
-    * SCALE shape: ranking + running total over the whole corpus is the
-    * q61/q87 two-pass form keyed by (nll, doc_id) — range partition on
-    * the ORDER, per-partition prefix sums, P-row broadcast offsets —
-    * never a partition-less window. Greedy admit semantics: a document
+    * SCALE shape: ranking + running total over the whole corpus is
+    * [[graft.core.Prefix.before]] keyed by (nll, doc_id) — never a
+    * partition-less window. Greedy admit semantics: a document
     * enters iff tokens consumed before it are `< budgetTokens` (the last
     * admitted doc may overshoot the budget; documented, matches the
     * oracle's windowed form). q94 filters to docs with ≥ 2 tokens, so
     * every scored doc has `n_tok = n_bigrams + 1` — no second tokenize.
-    * Unscoreable (< 2 token) docs are not selectable, by design.
-    *
-    * The range-partitioned local pass is pinned while the budget-bounded
-    * selection materializes — the same structural pid-consistency move
-    * as [[packPlan]] (the offsets branch
-    * and the join branch must see ONE physical partitioning, not two
-    * independently-sampled range exchanges held together by
-    * ReusedExchange). */
+    * Unscoreable (< 2 token) docs are not selectable, by design. */
   def q107(spark: SparkSession, dir: String,
            budgetTokens: Long = 10000L): DataFrame = Pins.result { pins =>
-    import spark.implicits._
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val scored = Ranking.q94(spark, dir)
       .select(col("doc_id"), col("nll"),
         (col("n_bigrams") + 1L).cast(LongType).as("n_tok"))
-      .repartitionByRange(p, col("nll"), col("doc_id"))
-      .sortWithinPartitions(col("nll"), col("doc_id"))
-      .as[(Long, Double, Long)]
-    val local = pins.pin(scored.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      var acc = 0L
-      it.map { case (id, nll, n) =>
-        val before = acc; acc += n; (pid, id, nll, n, before)
-      }
-    }.toDF("pid", "doc_id", "nll", "n_tok", "local_before"))
-    val offsets = local.groupBy(col("pid"))
-      .agg(sum(col("n_tok")).as("ptok"))
-      .select(col("pid"),
-        coalesce(
-          sum(col("ptok")).over(
-            Window.orderBy(col("pid"))
-              .rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)).as("offset"))
-    local
-      .join(broadcast(offsets), Seq("pid"))
+    Prefix.before(pins, scored, Nil, Seq(col("nll"), col("doc_id")),
+        col("n_tok"))
       .select(col("doc_id"), col("nll"), col("n_tok"),
-        (col("offset") + col("local_before")).as("start_tok"))
+        col("before").as("start_tok"))
       .where(col("start_tok") < budgetTokens)
       .orderBy(col("nll"), col("doc_id"))
   }
@@ -1013,7 +919,7 @@ object Curation {
     * is an attention-masking/fragmentation cost downstream) and how full
     * the final partial sequence is (the only padded compute in this
     * packing style). All integer aggregates over q87's per-doc layout
-    * (itself the two-pass range-partition engine — nothing here adds a
+    * (itself a [[graft.core.Prefix.before]] pass — nothing here adds a
     * corpus-scale shuffle: ONE bounded aggregate over the doc-count-sized
     * layout table); the two ratios are final divisions with the q101
     * zero-denominator guard, rounded to 6. Consumes q87's direct
@@ -1194,22 +1100,19 @@ object Curation {
     *     to the lexicographically smaller source. Windows here run over
     *     #strata rows — bounded at any corpus size.
     *  2. The within-stratum pick: docs rank by (md5(doc_id), doc_id)
-    *     inside their stratum and rank < quota wins. The rank is the
-    *     q107/q173 TWO-PASS shape — range-partition + per-partition local
-    *     index + a (P×S)-row broadcast offset table — never a per-stratum
-    *     global window (which would serialize each stratum through one
-    *     task at 100 TB). Partition boundaries cannot leak into the
-    *     result: the composed rank is the same total order under any
-    *     range split (P-sweep in SampleSpec).
+    *     inside their stratum and rank < quota wins. The rank is
+    *     [[graft.core.Prefix.before]] grouped by source — a (P×S)-row
+    *     offset table, never a per-stratum global window (which would
+    *     serialize each stratum through one task at 100 TB). Partition
+    *     boundaries cannot leak into the result: the composed rank is
+    *     the same total order under any range split (P-sweep in
+    *     SampleSpec).
     *
     * Output: the per-source receipt (size, quota, picked count, boundary
     * hash). n_sampled ≡ quota by construction — asserted, not assumed,
-    * in SampleSpec. The internal local pass is pinned while both its
-    * consumers materialize. */
+    * in SampleSpec. */
   def q208(spark: SparkSession, dir: String, pct: Int = 10): DataFrame =
     Pins.result { pins =>
-      import spark.implicits._
-      val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
       val docs = Tables(spark, dir, "documents")
         .select(col("source"), col("doc_id"),
           md5(col("doc_id").cast(StringType)).as("h"))
@@ -1232,40 +1135,10 @@ object Curation {
           (col("base") + when(col("seat") <= col("extra"), 1L).otherwise(0L))
             .as("quota"))
 
-      // 2. two-pass within-stratum rank (no per-stratum global window).
-      // The local pass is PINNED before branching: the offsets aggregate
-      // and the rank join both consume it keyed on the physical partition
-      // id, and two independently-executed range exchanges could sample
-      // different boundaries — materializing once makes the pid
-      // correlation structural (the q87/q193 prefix-engine move) instead
-      // of a ReuseExchange reliance (ADVICE r10).
-      val local = pins.pin(docs
-        .repartitionByRange(p, col("source"), col("h"), col("doc_id"))
-        .sortWithinPartitions(col("source"), col("h"), col("doc_id"))
-        .as[(String, Long, String)]
-        .mapPartitions { it =>
-          val pid = org.apache.spark.TaskContext.getPartitionId()
-          var cur: String = null
-          var idx = 0L
-          it.map { case (src, id, h) =>
-            if (src != cur) { cur = src; idx = 0L }
-            val out = (pid, src, id, h, idx)
-            idx += 1L
-            out
-          }
-        }.toDF("pid", "source", "doc_id", "h", "local_idx"))
-      val offsets = local.groupBy(col("pid"), col("source"))
-        .agg(count(lit(1)).as("c"))
-        .select(col("pid"), col("source"),
-          coalesce(
-            sum(col("c")).over(Window.partitionBy(col("source"))
-              .orderBy(col("pid"))
-              .rowsBetween(Window.unboundedPreceding, -1)),
-            lit(0L)).as("offset"))
-      val sampled = local
-        .join(broadcast(offsets), Seq("pid", "source"))
-        .select(col("source"), col("h"),
-          (col("offset") + col("local_idx")).as("rk"))
+      // 2. within-stratum rank (no per-stratum global window)
+      val sampled = Prefix.before(pins, docs, Seq("source"),
+          Seq(col("h"), col("doc_id")), lit(1L))
+        .select(col("source"), col("h"), col("before").as("rk"))
         .join(broadcast(quotas.select(col("source"), col("quota"))),
           Seq("source"))
         .where(col("rk") < col("quota"))

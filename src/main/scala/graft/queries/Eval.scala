@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Tables
+import graft.core.{Pins, Prefix, Tables}
 import graft.functions.TokenHashExpr.tokenHash
 
 /** Evaluation & monitoring operators — the ledger a pipeline owner reads
@@ -175,36 +175,19 @@ object Eval {
     * ascending (rank i = 1..n, ties broken by doc_id — a unique total
     * order, so both engines agree exactly).
     *
-    * Scale shape: the global rank is the q61 TWO-PASS range-partition
-    * engine (range exchange on (tok, doc_id), per-partition local index
-    * via mapPartitions zip, P-row broadcast offsets) — never a
-    * partition-less window; Σ(i·xᵢ) accumulates in DECIMAL(38,0)
+    * Scale shape: the global rank is [[graft.core.Prefix.before]] keyed
+    * by (tok, doc_id) — never a partition-less window; Σ(i·xᵢ)
+    * accumulates in DECIMAL(38,0)
     * (rank·count products overflow BIGINT at 100 TB row counts — the
     * q228 sufficient-statistics discipline); the final expression is
     * two double divisions in pinned order. */
-  def q253(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val parted = t(spark, dir, "documents")
+  def q253(spark: SparkSession, dir: String): DataFrame = Pins.result { pins =>
+    val toks = t(spark, dir, "documents")
       .select(col("doc_id").cast(LongType),
         size(graft.text.TextAnalysis.toks(col("text")))
           .cast(LongType).as("tok"))
-      .repartitionByRange(p, col("tok"), col("doc_id"))
-      .sortWithinPartitions(col("tok"), col("doc_id"))
-      .as[(Long, Long)]
-    val indexed = parted.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      it.zipWithIndex.map { case ((id, tok), i) => (pid, i.toLong, id, tok) }
-    }.toDF("pid", "li", "doc_id", "tok")
-    val counts = indexed.groupBy(col("pid")).agg(count(lit(1)).as("cnt"))
-    val offsets = counts.select(col("pid"),
-      coalesce(sum(col("cnt")).over(
-        Window.orderBy(col("pid"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
-        .as("offset"))
-    val rnk = col("offset") + col("li") + lit(1L)
-    indexed
-      .join(broadcast(offsets), Seq("pid"))
+    val rnk = col("before") + lit(1L)
+    Prefix.before(pins, toks, Nil, Seq(col("tok"), col("doc_id")), lit(1L))
       .agg(count(lit(1)).as("n"),
         sum(col("tok").cast(DecimalType(38, 0))).as("s0"),
         // cast BOTH operands to decimal BEFORE multiplying — a Long

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.{Pins, Tables}
+import graft.core.{Pins, Prefix, Tables}
 
 /** Storage-layout and table-maintenance tier: the operations that decide
   * WHERE rows live, not what they compute. The reference engine writes its
@@ -322,14 +322,12 @@ object Layout {
     * second sweep (vs plain round-robin, whose spread accumulates the
     * sorted-order bias of every sweep).
     *
-    * Scale shape: the ONLY global structure is the q87 pack discipline —
-    * `repartitionByRange` on the sort key gives P disjoint ordered
-    * slices, a per-partition local rank costs no shuffle, and a P-row
-    * count table broadcast back shifts local ranks to global ones; no
-    * global window ever materializes. The per-shard summary is an
-    * S-row hash aggregate. Oracle: rank + snake arithmetic + group-by
-    * is exactly expressible in DuckDB (ROW_NUMBER over the same total
-    * order — ties broken by doc_id, so the rank is deterministic). */
+    * Scale shape: the ONLY global structure is the rank's P-row offset
+    * table ([[graft.core.Prefix.before]]); no global window ever
+    * materializes. The per-shard summary is an S-row hash aggregate.
+    * Oracle: rank + snake arithmetic + group-by is exactly expressible in
+    * DuckDB (ROW_NUMBER over the same total order — ties broken by
+    * doc_id, so the rank is deterministic). */
   def q173(spark: SparkSession, dir: String, shards: Int = 16): DataFrame =
     Pins.result { pins =>
       snakeAssign(pins, spark, dir, shards).groupBy(col("shard"))
@@ -342,42 +340,18 @@ object Layout {
 
   /** The per-document serpentine assignment (doc_id, n_tok, shard) —
     * q173's engine before its summary aggregate, exposed so q178 can
-    * WRITE the assignment into a physical layout. The range-partitioned
-    * local pass both the offsets branch and the join branch consume is
-    * pinned in `pins` (the packPlan pin discipline). */
+    * WRITE the assignment into a physical layout. The size-descending
+    * rank's prefix pass is pinned in `pins`. */
   private[queries] def snakeAssign(pins: Pins, spark: SparkSession,
       dir: String, shards: Int): DataFrame = {
-    import spark.implicits._
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
     val counts = t(spark, dir, "documents")
       .select(col("doc_id").cast(LongType),
         size(graft.text.TextAnalysis.toks(col("text")))
           .cast(LongType).as("n_tok"))
-    // global size-desc rank without a global window: range-partition on
-    // the sort key, rank locally, broadcast P-row count offsets back
-    val tc = counts
-      .repartitionByRange(p, col("n_tok").desc, col("doc_id").asc)
-      .sortWithinPartitions(col("n_tok").desc, col("doc_id").asc)
-      .as[(Long, Long)]
-    val local = pins.pin(tc.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      var i = 0L
-      it.map { case (id, n) => i += 1; (pid, id, n, i) }
-    }.toDF("pid", "doc_id", "n_tok", "local_rank"))
-    val offsets = local.groupBy(col("pid"))
-      .agg(count(lit(1)).as("pn"))
-      .select(col("pid"), coalesce(
-        sum(col("pn")).over(
-          org.apache.spark.sql.expressions.Window.orderBy(col("pid"))
-            .rowsBetween(
-              org.apache.spark.sql.expressions.Window.unboundedPreceding,
-              -1)),
-        lit(0L)).as("before"))
-    local
-      .join(broadcast(offsets), Seq("pid"))
+    Prefix.before(pins, counts, Nil,
+        Seq(col("n_tok").desc, col("doc_id").asc), lit(1L))
       .select(col("doc_id"), col("n_tok"),
-        pmod(col("before") + col("local_rank") - 1L, lit(2L * shards))
-          .as("rr"))
+        pmod(col("before"), lit(2L * shards)).as("rr"))
       .select(col("doc_id"), col("n_tok"),
         when(col("rr") < shards, col("rr"))
           .otherwise(lit(2L * shards - 1) - col("rr"))
@@ -598,98 +572,33 @@ object Layout {
     * keeps any doc_id-clustered downstream scan clustered.
     *
     * Scale shape: the ONLY global structure is the running byte offset,
-    * computed without a global window — range-partition on doc_id, a
-    * per-partition local prefix sum (mapPartitions, zero shuffle), and a
-    * P-row total table broadcast back as offsets (the q173/q87 two-pass
-    * prefix discipline). The plan is one range Exchange + map work + an
-    * S-row hash aggregate; a 10⁹-file manifest costs the same three
-    * stages. Output: per planned output file — member count, bytes,
-    * doc_id span, fill ratio, and the over-cap flag (true iff a member
-    * straddles the boundary). */
+    * computed without a global window ([[prefixOffsets]]). The plan is
+    * one range Exchange + map work + an S-row hash aggregate; a 10⁹-file
+    * manifest costs the same three stages. Output: per planned output
+    * file — member count, bytes, doc_id span, fill ratio, and the
+    * over-cap flag (true iff a member straddles the boundary). */
   def q193(spark: SparkSession, dir: String, capBytes: Long = 4096L): DataFrame =
     Pins.result { pins =>
-      import spark.implicits._
-      val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
       val files = t(spark, dir, "documents")
-        .select(col("doc_id").cast(LongType),
-          col("n_chars").cast(LongType).as("bytes"))
-        .repartitionByRange(p, col("doc_id").asc)
-        .sortWithinPartitions(col("doc_id").asc)
-        .as[(Long, Long)]
-      val local = pins.pin(files.mapPartitions { it =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        var acc = 0L
-        it.map { case (id, b) =>
-          val before = acc; acc += b; (pid, id, b, before)
-        }
-      }.toDF("pid", "doc_id", "bytes", "local_before"))
-      // P-row partition totals; the window runs over P rows, not the data
-      val offsets = local.groupBy(col("pid"))
-          .agg(sum(col("bytes")).as("pb"))
-          .select(col("pid"), coalesce(
-            sum(col("pb")).over(
-              org.apache.spark.sql.expressions.Window.orderBy(col("pid"))
-                .rowsBetween(
-                  org.apache.spark.sql.expressions.Window.unboundedPreceding,
-                  -1)),
-            lit(0L)).as("part_before"))
-      val binned = local.join(broadcast(offsets), Seq("pid"))
-          .select(col("doc_id"), col("bytes"),
-            (col("part_before") + col("local_before")).as("strt"))
-          // integer DIV: exact at any corpus size (no double rounding)
-          .withColumn("bin", expr(s"strt DIV ${capBytes}L"))
-      binned.groupBy(col("bin"))
-          .agg(count(lit(1)).as("n_files"),
-            sum(col("bytes")).as("bytes"),
-            min(col("doc_id")).as("first_doc"),
-            max(col("doc_id")).as("last_doc"),
-            max(col("strt") + col("bytes")).as("max_end"))
-          .select(col("bin"), col("n_files"), col("bytes"),
-            col("first_doc"), col("last_doc"),
-            round(col("bytes").cast(DoubleType) / capBytes.toDouble, 6)
-              .as("fill"),
-            // a bin overshoots cap iff its last member crosses the boundary
-            (col("max_end") > (col("bin") + 1L) * capBytes).as("over_cap"))
-          .orderBy(col("bin"))
+        .select(col("doc_id"), col("n_chars").as("bytes"))
+      binLedger(prefixOffsets(pins, files), capBytes)
+        .select(col("bin"), col("n_files"), col("bytes"),
+          col("first_doc"), col("last_doc"),
+          round(col("bytes").cast(DoubleType) / capBytes.toDouble, 6)
+            .as("fill"),
+          // a bin overshoots cap iff its last member crosses the boundary
+          (col("max_end") > (col("bin") + 1L) * capBytes).as("over_cap"))
+        .orderBy(col("bin"))
     }
 
   /** The q193/q196 prefix-bin kernel: files (doc_id, bytes) → per-file
-    * (doc_id, bytes, strt) running start offsets in doc_id order,
-    * shifted by `base` (a 1-row DataFrame with column `base` — lit(0)
-    * for a from-scratch plan, the standing corpus's byte total for an
-    * incremental one). The q87/q173 two-pass prefix discipline: range
-    * partition, per-partition local sums, P-row broadcast offsets.
-    * The local pass is pinned in `pins`. */
-  private def prefixOffsets(pins: Pins, spark: SparkSession,
-      files: DataFrame, base: DataFrame): DataFrame = {
-    import spark.implicits._
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val sorted = files
-      .select(col("doc_id").cast(LongType), col("bytes").cast(LongType))
-      .repartitionByRange(p, col("doc_id").asc)
-      .sortWithinPartitions(col("doc_id").asc)
-      .as[(Long, Long)]
-    val local = pins.pin(sorted.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      var acc = 0L
-      it.map { case (id, b) =>
-        val before = acc; acc += b; (pid, id, b, before)
-      }
-    }.toDF("pid", "doc_id", "bytes", "local_before"))
-    val offsets = local.groupBy(col("pid"))
-      .agg(sum(col("bytes")).as("pb"))
-      .select(col("pid"), coalesce(
-        sum(col("pb")).over(
-          org.apache.spark.sql.expressions.Window.orderBy(col("pid"))
-            .rowsBetween(
-              org.apache.spark.sql.expressions.Window.unboundedPreceding,
-              -1)),
-        lit(0L)).as("part_before"))
-    local.join(broadcast(offsets), Seq("pid"))
-      .crossJoin(broadcast(base))
-      .select(col("doc_id"), col("bytes"),
-        (col("base") + col("part_before") + col("local_before")).as("strt"))
-  }
+    * (doc_id, bytes, strt) running start offsets in doc_id order, from 0.
+    * The prefix pass is pinned in `pins`. */
+  private def prefixOffsets(pins: Pins, files: DataFrame): DataFrame =
+    Prefix.before(pins,
+        files.select(col("doc_id").cast(LongType), col("bytes").cast(LongType)),
+        Nil, Seq(col("doc_id").asc), col("bytes"))
+      .select(col("doc_id"), col("bytes"), col("before").as("strt"))
 
   /** Per-bin ledger over prefix offsets: bin = strt DIV cap (integer
     * division — exact at any corpus size), with the raw max_end kept
@@ -732,8 +641,7 @@ object Layout {
           col("n_chars").cast(LongType).as("bytes"))
       val standing = counts.where(pmod(col("doc_id"), lit(10L)) < 7L)
       val batch = counts.where(pmod(col("doc_id"), lit(10L)) >= 7L)
-      val zero = standing.sparkSession.range(1).select(lit(0L).as("base"))
-      val sLedger = binLedger(prefixOffsets(pins, spark, standing, zero), capBytes)
+      val sLedger = binLedger(prefixOffsets(pins, standing), capBytes)
         .select(col("bin"), col("n_files").as("s_files"),
           col("bytes").as("s_bytes"), col("first_doc").as("s_first"),
           col("last_doc").as("s_last"), col("max_end").as("s_end"))
@@ -742,7 +650,9 @@ object Layout {
       val standingTotal = standing.agg(
         coalesce(sum(col("bytes")), lit(0L)).as("base"))
       val bLedger =
-        binLedger(prefixOffsets(pins, spark, batch, standingTotal), capBytes)
+        binLedger(prefixOffsets(pins, batch).crossJoin(broadcast(standingTotal))
+          .select(col("doc_id"), col("bytes"),
+            (col("base") + col("strt")).as("strt")), capBytes)
           .select(col("bin"), col("n_files").as("b_files"),
             col("bytes").as("b_bytes"), col("first_doc").as("b_first"),
             col("last_doc").as("b_last"), col("max_end").as("b_end"))
@@ -773,9 +683,8 @@ object Layout {
       .where(pmod(col("doc_id"), lit(10L)) < 7L)
       .select(col("doc_id").cast(LongType),
         col("n_chars").cast(LongType).as("bytes"))
-    val zero = spark.range(1).select(lit(0L).as("base"))
     Pins.result(pins =>
-      binLedger(prefixOffsets(pins, spark, standing, zero), capBytes)
+      binLedger(prefixOffsets(pins, standing), capBytes)
         .orderBy(col("bin")))
   }
 

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Tables
+import graft.core.{Pins, Prefix, Tables}
 
 /** Relational query inventory Q1–Q17 (SURVEY.md §2.4).
   *
@@ -251,59 +251,30 @@ object Relational {
   /** q83 — q51's EXACT discrete percentiles with BOUNDED state: the third
     * leg of the percentile story (q51 = oracle-parity ordered collect,
     * single task per group; q60 = approximate sketch; q83 = exact AND
-    * scale-safe). q61's two-pass global-rank machinery generalized to
-    * grouped data:
-    *
-    *  1. `repartitionByRange` on (group, value) + sortWithinPartitions:
-    *     P tasks hold sorted, disjoint slices; a group larger than one
-    *     partition SPANS partitions instead of funnelling one task.
-    *  2. Per-partition pass: local index within each (partition, group)
-    *     run — no shuffle, order preserved.
-    *  3. A (P·G)-row count table → per-group running offsets + target
-    *     ranks ceil(p·n), broadcast back; rank = offset + local idx + 1.
-    *  4. Keep only rows whose rank hits a target; one tiny final pivot.
+    * scale-safe). The per-group rank is [[graft.core.Prefix.before]]
+    * grouped by flag: a group larger than one range partition SPANS
+    * partitions instead of funnelling one task, and per-group state
+    * everywhere else is one count per (partition, group). Only rows whose
+    * rank hits a target ceil(p·n) survive into one tiny final pivot.
     *
     * Selection ranks need any total order per group — ties in value rank
     * arbitrarily but the k-th smallest VALUE is unique, so the result is
     * deterministic and byte-identical to q51 (same oracle SQL;
-    * equivalence is also spec-asserted at P ∈ {4, 32}). Every task
-    * touches ~n/P rows; per-group state everywhere else is one count per
-    * (partition, group). */
-  def q83(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val parted = t(spark, dir, "lineitem")
-      .select(col("l_returnflag"), col("l_extendedprice").cast(DoubleType))
-      .repartitionByRange(p, col("l_returnflag"), col("l_extendedprice"))
-      .sortWithinPartitions(col("l_returnflag"), col("l_extendedprice"))
-      .as[(String, Double)]
-    val indexed = parted.mapPartitions { it =>
-      val pid = org.apache.spark.TaskContext.getPartitionId()
-      var cur: String = null
-      var i = -1L
-      it.map { case (flag, v) =>
-        if (flag != cur) { cur = flag; i = 0L } else i += 1L
-        (pid, flag, i, v)
-      }
-    }.toDF("pid", "flag", "li", "v")
-    val counts = indexed.groupBy(col("pid"), col("flag"))
-      .agg(count(lit(1)).as("cnt"))
-    val offsets = counts.select(col("pid"), col("flag"), col("cnt"),
-      coalesce(
-        sum(col("cnt")).over(
-          Window.partitionBy(col("flag")).orderBy(col("pid"))
-            .rowsBetween(Window.unboundedPreceding, -1)),
-        lit(0L)).as("offset"))
-    val targets = offsets.groupBy(col("flag"))
-      .agg(sum(col("cnt")).as("n"))
+    * equivalence is also spec-asserted at P ∈ {4, 32} and with exchange
+    * reuse off). */
+  def q83(spark: SparkSession, dir: String): DataFrame = Pins.result { pins =>
+    val ranked = Prefix.before(pins,
+        t(spark, dir, "lineitem").select(col("l_returnflag").as("flag"),
+          col("l_extendedprice").cast(DoubleType).as("v")),
+        Seq("flag"), Seq(col("v")), lit(1L))
+    val targets = ranked.groupBy(col("flag"))
+      .agg(count(lit(1)).as("n"))
       .select(col("flag"),
         ceil(col("n") * lit(0.5d)).cast(LongType).as("k50"),
         ceil(col("n") * lit(0.95d)).cast(LongType).as("k95"))
-    indexed
-      .join(broadcast(offsets.select(col("pid"), col("flag"), col("offset"))),
-        Seq("pid", "flag"))
+    ranked
       .join(broadcast(targets), Seq("flag"))
-      .select(col("flag"), (col("offset") + col("li") + 1L).as("rnk"),
+      .select(col("flag"), (col("before") + 1L).as("rnk"),
         col("v"), col("k50"), col("k95"))
       .where(col("rnk") === col("k50") || col("rnk") === col("k95"))
       .groupBy(col("flag"))

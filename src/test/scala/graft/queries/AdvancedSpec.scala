@@ -90,18 +90,22 @@ class AdvancedSpec extends AnyFunSuite {
   }
 
   test("q61 two-pass scaled ranking equals q57's single-window output at P=4 and P=32") {
-    val exact = Advanced.q57(spark, dir).collect().map(_.toSeq).toSeq
     // q61 derives its range-partition count from the session conf; the
     // output must be P-invariant (partition boundaries shift, ranks don't)
-    val key = "spark.sql.shuffle.partitions"
-    val saved = spark.conf.get(key)
+    // and must not depend on Spark reusing one range exchange for both
+    // consumers of the local pass (sf0.01 P=4 is where that showed)
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.exchange.reuse")
+    val saved = keys.map(k => k -> spark.conf.get(k))
     try {
-      for (p <- Seq("4", "32")) {
-        spark.conf.set(key, p)
-        val scaled = Advanced.q61(spark, dir).collect().map(_.toSeq).toSeq
-        assert(scaled == exact, s"mismatch at P=$p")
+      for ((d, p, reuse) <- Seq((dir, "4", "true"), (dir, "32", "true"),
+                                (SparkTest.sf001, "4", "false"))) {
+        spark.conf.set(keys(0), p)
+        spark.conf.set(keys(1), reuse)
+        val exact = Advanced.q57(spark, d).collect().map(_.toSeq).toSeq
+        val scaled = Advanced.q61(spark, d).collect().map(_.toSeq).toSeq
+        assert(scaled == exact, s"mismatch at $d P=$p reuse=$reuse")
       }
-    } finally spark.conf.set(key, saved)
+    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
   test("q59 bag identity: common + only_orders = per-key order multiplicity") {

@@ -180,15 +180,18 @@ class ApproxSpec extends AnyFunSuite {
     val exact = Relational.q51(spark, dir)
       .select(col("l_returnflag"), col("p50"), col("p95"))
       .collect().map(_.toSeq).toSeq
-    val key = "spark.sql.shuffle.partitions"
-    val saved = spark.conf.get(key)
+    // the last input turns exchange reuse off: the rank must not depend
+    // on Spark reusing one range exchange for both consumers of the pass
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.exchange.reuse")
+    val saved = keys.map(k => k -> spark.conf.get(k))
     try {
-      for (p <- Seq("4", "32")) {
-        spark.conf.set(key, p)
+      for ((p, reuse) <- Seq(("4", "true"), ("32", "true"), ("4", "false"))) {
+        spark.conf.set(keys(0), p)
+        spark.conf.set(keys(1), reuse)
         val scaled = Relational.q83(spark, dir).collect().map(_.toSeq).toSeq
-        assert(scaled == exact, s"mismatch at P=$p")
+        assert(scaled == exact, s"mismatch at P=$p reuse=$reuse")
       }
-    } finally spark.conf.set(key, saved)
+    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
   test("q60 approx percentiles agree with q51 exact within the rank bound") {

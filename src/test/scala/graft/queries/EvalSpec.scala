@@ -109,14 +109,16 @@ class EvalSpec extends AnyFunSuite {
 
   test("q253 two-pass Gini equals the single-window form, is partition-" +
       "invariant, and sits in [0, 1)") {
-    val key = "spark.sql.shuffle.partitions"
-    val saved = spark.conf.get(key)
+    // every (P, exchange reuse) input must give the same row
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.exchange.reuse")
+    val saved = keys.map(k => k -> spark.conf.get(k))
     try {
-      val runs = Seq("3", "7").map { p =>
-        spark.conf.set(key, p)
+      val runs = for (p <- Seq("3", "7"); reuse <- Seq("true", "false")) yield {
+        spark.conf.set(keys(0), p)
+        spark.conf.set(keys(1), reuse)
         Eval.q253(spark, dir).collect().head
       }
-      assert(runs(0) == runs(1), "gini not partition-invariant")
+      assert(runs.distinct.size == 1, s"gini not partition-invariant: $runs")
       val (n, tot, gini) =
         (runs(0).getLong(0), runs(0).getLong(1), runs(0).getDouble(2))
       assert(gini >= 0.0 && gini < 1.0)
@@ -133,7 +135,7 @@ class EvalSpec extends AnyFunSuite {
         2.0 * s1 / (n.toDouble * tot.toDouble) - (n + 1.0) / n)
         .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
       assert(gini == want, s"gini $gini vs replay $want")
-    } finally spark.conf.set(key, saved)
+    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
   }
 
   test("q255 strata partition the pooled counts exactly and every " +

@@ -351,8 +351,11 @@ class QueriesSpec extends AnyFunSuite {
   }
 
   test("q61 scaled ranking plans a range exchange, not a global window") {
-    val plan = graft.queries.Advanced.q61(spark, dir)
-      .queryExecution.executedPlan.toString
+    // q61 returns its result checkpoint: the ranking runs in the actions
+    // that build it, so read every plan it executed
+    val cap = PlanCapture.during(spark)(graft.queries.Advanced.q61(spark, dir))
+    Bridge.unpersistLocalCheckpoint(cap.value)
+    val plan = cap.plans.map(_.executedPlan.toString).mkString("\n")
     assert(plan.contains("rangepartitioning"),
       "no range exchange:\n" + plan.take(1200))
     assert(plan.contains("MapPartitions"),
